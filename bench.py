@@ -70,7 +70,7 @@ HEADLINE = [
     "asof_click_attribution",
     "pipe_wordcount",
     "agg_long_sum",
-    "agg_long_sum_native",  # twin: agg_long_sum minus the line codec
+    "agg_long_sum_native",  # times the same aggregate_typed plan as agg_long_sum
     "agg_value_histogram",
     "fanout_two_branches",
     "dedup_minhash_lsh",

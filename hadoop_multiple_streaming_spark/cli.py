@@ -37,13 +37,7 @@ import argparse
 import sys
 
 from .plans.model import Branch, JobSpec
-from .plans.runner import (
-    EXIT_BAD_INPUT,
-    EXIT_INVALID_CONF,
-    EXIT_IO,
-    EXIT_USAGE,
-    run_job,
-)
+from .plans.runner import EXIT_INVALID_CONF, EXIT_USAGE, exit_code_for, run_job
 from .session import EngineConfig, get_spark
 
 
@@ -198,9 +192,7 @@ def main(argv: list[str] | None = None) -> int:
     except Exception as e:  # plan-time failures (before branch isolation)
         msg = str(e)
         print(f"error: {msg.splitlines()[0] if msg else e!r}", file=sys.stderr)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return EXIT_BAD_INPUT
-        return EXIT_IO
+        return exit_code_for(msg)
     finally:
         if owned:
             spark.stop()

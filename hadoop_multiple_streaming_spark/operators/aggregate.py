@@ -14,56 +14,103 @@ Supported (same menu as hadoop mapred.lib.aggregate):
 Malformed descriptors fail loudly (Hadoop's ValueAggregator path throws
 on an unknown aggregator type rather than dropping records): a key
 without an ``AggType:`` prefix or with an unrecognized type raises at
-execution time via ``raise_error`` unless ``strict=False``.
+execution time via ``raise_error``, once per (agg_type, key) group.
 
-Scale notes: one shuffle for all scalar aggregators (single
-groupBy with conditional aggregates); ValueHistogram adds its own
-two-level aggregation (distinct-value counts then moments) and
-collects the per-key count list for the exact median — for
-billion-distinct-value keys switch the median to percentile_approx.
-For billion-key UniqValueCount use ``approx=True`` (HLL sketch,
-approx_count_distinct) — exact distinct at 100 TB is a full shuffle of
-(key, value) pairs.
+Three plans share one sum/max/min menu (``_MENU``); the two
+descriptor plans also share one strict fallthrough
+(``_strict_otherwise``):
+
+* ``aggregate_reduce`` on descriptor lines — the generic two-level
+  plan (a (agg_type, key, value) frequency level, then one small
+  aggregation that serves every type);
+* ``aggregate_reduce(types=...)`` with a pure sum/max/min menu — one
+  direct aggregation off the parsed lines;
+* ``aggregate_typed`` — a declared (type, key column, value column)
+  planned straight from typed columns, with no descriptor text at all.
+
+ValueHistogram collects the per-key count list for the exact median —
+for billion-distinct-value keys switch the median to percentile_approx.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Collection
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
-SCALAR_TYPES = [
-    "LongValueSum",
-    "DoubleValueSum",
-    "LongValueMax",
-    "LongValueMin",
-    "StringValueMax",
-    "StringValueMin",
-    "UniqValueCount",
-]
 HISTOGRAM = "ValueHistogram"
-KNOWN_TYPES = [*SCALAR_TYPES, HISTOGRAM]
+UNIQ = "UniqValueCount"
 
+#: the sum/max/min aggregators, written once: type -> (buffer column,
+#: aggregate, value cast). A buffer renders to its output string by a
+#: cast, or as is when it already holds a value string (cast None).
+_MENU = {
+    "LongValueSum": ("_lsum", F.sum, "long"),
+    "DoubleValueSum": ("_dsum", F.sum, "double"),
+    "LongValueMax": ("_lmax", F.max, "long"),
+    "LongValueMin": ("_lmin", F.min, "long"),
+    "StringValueMax": ("_smax", F.max, None),
+    "StringValueMin": ("_smin", F.min, None),
+}
+
+#: types computable in ONE direct aggregation (no per-value distinct
+#: level needed): plain sums and max/min
+DIRECT_TYPES = frozenset(_MENU)
+KNOWN_TYPES = [*_MENU, UNIQ, HISTOGRAM]
 
 #: sentinel agg_type for lines without an 'AggType:' prefix — carried
 #: through the aggregation and raised on at GROUP level (see below)
 MISSING_PREFIX = "<missing-prefix>"
 
 
-def parse_agg_key(df_kv: DataFrame, strict: bool = True) -> DataFrame:
+def _buffers(
+    types: Collection[str], value: Column, t: Column | None = None, cnt: Column | None = None
+) -> list[Column]:
+    """The menu's aggregate buffers for ``types``, in menu order. Given
+    the agg_type column ``t``, each buffer only sees its own type's
+    rows; given a frequency column ``cnt``, sums weigh each distinct
+    value by its count."""
+    out = []
+    for ty, (name, agg, cast) in _MENU.items():
+        if ty not in types:
+            continue
+        v = value.cast(cast) if cast else value
+        if cnt is not None and agg is F.sum:
+            v = v * cnt
+        out.append(agg(v if t is None else F.when(t == ty, v)).alias(name))
+    return out
+
+
+def _rendered(ty: str) -> Column:
+    name, _, cast = _MENU[ty]
+    return F.col(name).cast("string") if cast else F.col(name)
+
+
+def _dispatch(t: Column, branches: list[tuple[str, Column]]) -> Column:
+    """``CASE WHEN t = type THEN column ...`` over (type, column) pairs."""
+    result = None
+    for ty, col in branches:
+        result = F.when(t == ty, col) if result is None else result.when(t == ty, col)
+    return result
+
+
+def parse_agg_key(df_kv: DataFrame) -> DataFrame:
     """Split ``AggType:key`` (first ':' only, matching the Hadoop
     ValueAggregatorDescriptor TYPE_SEPARATOR contract).
 
-    strict=True (default) keeps malformed rows under a sentinel type so
-    aggregate_scalars can fail loudly (Hadoop's ValueAggregator throws
-    on unknown descriptors); strict=False drops them. Validation is
-    deliberately NOT a per-row raise_error here: raise_error is
-    CodegenFallback in Spark, and one guard in this projection pushes
-    the whole text hot path into interpreted mode (~2.5x slower
-    measured). Instead the raise happens after aggregation, per
-    (agg_type, key) group — same loud failure, negligible cost.
+    Malformed rows are kept under the MISSING_PREFIX sentinel type so
+    the aggregation can fail loudly (Hadoop's ValueAggregator throws on
+    unknown descriptors). Validation is deliberately NOT a per-row
+    raise_error here: raise_error is CodegenFallback in Spark, and one
+    guard in this projection pushes the whole text hot path into
+    interpreted mode (~2.5x slower measured). Instead the raise happens
+    after aggregation, per (agg_type, key) group — same loud failure,
+    negligible cost.
     """
     has_sep = F.instr("key", ":") >= 1
-    parsed = df_kv.select(
+    return df_kv.select(
         F.when(has_sep, F.split_part("key", F.lit(":"), F.lit(1)))
         .otherwise(F.lit(MISSING_PREFIX))
         .alias("agg_type"),
@@ -72,78 +119,6 @@ def parse_agg_key(df_kv: DataFrame, strict: bool = True) -> DataFrame:
         .alias("key"),
         "value",
     )
-    if not strict:
-        parsed = parsed.where(F.col("agg_type").isin(KNOWN_TYPES))
-    return parsed
-
-
-def aggregate_scalars(
-    parsed: DataFrame, approx: bool = False, strict: bool = True
-) -> DataFrame:
-    """Scalar aggregators, planned for the hot path:
-
-    * the six non-distinct aggregators share ONE shuffle (a single
-      hash aggregation with per-type conditional buffers);
-    * UniqValueCount gets a SEPARATE filtered branch: a distinct
-      aggregate makes Catalyst first group by (agg_type, key, value) —
-      an |input|-sized hash table — so it must only ever see its own
-      rows, not every row of a multiplexed job (measured 3x otherwise);
-    * strict validation raises on unknown/malformed descriptors AFTER
-      aggregation, per group: the per-group CASE hits raise_error
-      (CodegenFallback — cheap on group-cardinality rows, ruinous
-      per input row).
-    """
-    t = F.col("agg_type")
-    long_v = F.col("value").cast("long")
-    dbl_v = F.col("value").cast("double")
-    non_uniq = [x for x in SCALAR_TYPES if x != "UniqValueCount"]
-    plain_in = (
-        # strict mode lets unknown types through to the post-agg raise
-        parsed.where(~t.isin(["UniqValueCount", HISTOGRAM]))
-        if strict
-        else parsed.where(t.isin(non_uniq))
-    )
-    plain = plain_in.groupBy("agg_type", "key").agg(
-        F.sum(F.when(t == "LongValueSum", long_v)).alias("_lsum"),
-        F.sum(F.when(t == "DoubleValueSum", dbl_v)).alias("_dsum"),
-        F.max(F.when(t == "LongValueMax", long_v)).alias("_lmax"),
-        F.min(F.when(t == "LongValueMin", long_v)).alias("_lmin"),
-        F.max(F.when(t == "StringValueMax", F.col("value"))).alias("_smax"),
-        F.min(F.when(t == "StringValueMin", F.col("value"))).alias("_smin"),
-    )
-    result = (
-        F.when(t == "LongValueSum", F.col("_lsum").cast("string"))
-        .when(t == "DoubleValueSum", F.col("_dsum").cast("string"))
-        .when(t == "LongValueMax", F.col("_lmax").cast("string"))
-        .when(t == "LongValueMin", F.col("_lmin").cast("string"))
-        .when(t == "StringValueMax", F.col("_smax"))
-        .when(t == "StringValueMin", F.col("_smin"))
-    )
-    if strict:
-        result = result.otherwise(
-            F.raise_error(
-                F.when(
-                    t == MISSING_PREFIX,
-                    F.concat(
-                        F.lit("aggregate: malformed descriptor (missing 'AggType:' prefix) "
-                              "for key: "),
-                        F.col("key"),
-                    ),
-                ).otherwise(
-                    F.concat(F.lit("aggregate: unknown aggregator type: "), t)
-                )
-            )
-        )
-    plain_out = plain.select("agg_type", "key", result.alias("value"))
-    uniq_agg = (
-        F.approx_count_distinct("value") if approx else F.countDistinct("value")
-    )
-    uniq_out = (
-        parsed.where(t == "UniqValueCount")
-        .groupBy("agg_type", "key")
-        .agg(uniq_agg.cast("string").alias("value"))
-    )
-    return plain_out.unionByName(uniq_out)
 
 
 def value_frequencies(parsed: DataFrame) -> DataFrame:
@@ -159,8 +134,8 @@ def value_frequencies(parsed: DataFrame) -> DataFrame:
 
 def histogram_stats(freqs: DataFrame, group_cols: list[str]) -> DataFrame:
     """The ValueHistogram statistics aggregation over a ``cnt``
-    frequency relation, factored out so the typed/fused query forms
-    and the descriptor path share ONE definition of the report math
+    frequency relation, factored out so the typed entry and the
+    descriptor path share ONE definition of the report math
     (Hadoop parity: median = sorted element at index n/2, NOT
     interpolated; avg/stddev from exact integer sums so the doubles
     are deterministic across engines)."""
@@ -196,40 +171,15 @@ def value_histogram(parsed: DataFrame) -> DataFrame:
     return histogram_stats(freqs, ["agg_type", "key"])
 
 
-def histogram_report_lines(hist: DataFrame) -> DataFrame:
-    """Serialize value_histogram output to the reference's tab-joined
-    report string (parity/pipe mode): counts as longs, moments as
-    doubles."""
-    value = F.concat_ws(
-        "\t",
-        F.col("distinct_values").cast("string"),
-        F.col("min_count").cast("string"),
-        F.col("median_count").cast("string"),
-        F.col("max_count").cast("string"),
-        F.col("avg_count").cast("string"),
-        F.col("stddev_count").cast("string"),
-    )
-    return hist.select("agg_type", "key", value.alias("value"))
+_MALFORMED = "aggregate: malformed descriptor (missing 'AggType:' prefix) for key: "
 
 
-#: types computable in ONE direct aggregation (no per-value distinct
-#: level needed): plain sums and max/min
-DIRECT_TYPES = frozenset(
-    {
-        "LongValueSum",
-        "DoubleValueSum",
-        "LongValueMax",
-        "LongValueMin",
-        "StringValueMax",
-        "StringValueMin",
-    }
-)
-
-
-def _strict_otherwise(result, t, menu: set[str] | None = None):
-    """Strict-mode fallthrough. With a declared ``menu``, a row whose
-    type is KNOWN but simply undeclared gets a 'not in the declared
-    types menu' diagnostic instead of the misleading 'unknown
+def _strict_otherwise(result: Column, t: Column, menu: set[str] | None = None) -> Column:
+    """Strict fallthrough of a descriptor dispatch on the agg_type
+    column ``t``: a group no branch claims fails the job, from one
+    raise per group (never per row). With a declared ``menu``, a row
+    whose type is KNOWN but simply undeclared gets a 'not in the
+    declared types menu' diagnostic instead of the misleading 'unknown
     aggregator type' (the type IS known — the caller just didn't
     declare it)."""
     unknown = F.concat(F.lit("aggregate: unknown aggregator type: "), t)
@@ -243,27 +193,19 @@ def _strict_otherwise(result, t, menu: set[str] | None = None):
                     t,
                     F.lit(
                         " is not in the declared types menu "
-                        f"{sorted(menu)} (add it to `types` or drop strict)"
+                        f"{sorted(menu)} (add it to `types`)"
                     ),
                 ),
             ).otherwise(unknown)
     return result.otherwise(
         F.raise_error(
-            F.when(
-                t == MISSING_PREFIX,
-                F.concat(
-                    F.lit(
-                        "aggregate: malformed descriptor (missing 'AggType:' "
-                        "prefix) for key: "
-                    ),
-                    F.col("key"),
-                ),
-            ).otherwise(unknown)
+            F.when(t == MISSING_PREFIX, F.concat(F.lit(_MALFORMED), F.col("key")))
+            .otherwise(unknown)
         )
     )
 
 
-def _aggregate_direct(parsed: DataFrame, menu: set[str], strict: bool) -> DataFrame:
+def _aggregate_direct(parsed: DataFrame, menu: set[str]) -> DataFrame:
     """Single-level plan for declared pure-scalar menus: groupBy
     (agg_type, key) straight off the parsed lines — ONE shuffle with
     map-side partial combine, no (type, key, value) frequency level.
@@ -276,47 +218,19 @@ def _aggregate_direct(parsed: DataFrame, menu: set[str], strict: bool) -> DataFr
     type), so a numeric-only menu must not carry them — numeric menus
     stay HashAggregate with whole-stage codegen."""
     t = F.col("agg_type")
-    long_v = F.col("value").cast("long")
-    dbl_v = F.col("value").cast("double")
-    buffers = {
-        "LongValueSum": F.sum(F.when(t == "LongValueSum", long_v)),
-        "DoubleValueSum": F.sum(F.when(t == "DoubleValueSum", dbl_v)),
-        "LongValueMax": F.max(F.when(t == "LongValueMax", long_v)),
-        "LongValueMin": F.min(F.when(t == "LongValueMin", long_v)),
-        "StringValueMax": F.max(F.when(t == "StringValueMax", F.col("value"))),
-        "StringValueMin": F.min(F.when(t == "StringValueMin", F.col("value"))),
-    }
-    declared = [ty for ty in buffers if ty in menu]
-    agg = parsed.groupBy("agg_type", "key").agg(
-        *[buffers[ty].alias(f"_b_{ty}") for ty in declared]
-    )
-    result = None
-    for ty in declared:
-        col = F.col(f"_b_{ty}")
-        rendered = col if ty.startswith("String") else col.cast("string")
-        result = (
-            F.when(t == ty, rendered)
-            if result is None
-            else result.when(t == ty, rendered)
-        )
-    if strict:
-        result = _strict_otherwise(result, t, menu)
-    return agg.select("key", result.alias("value"))
+    agg = parsed.groupBy("agg_type", "key").agg(*_buffers(menu, F.col("value"), t))
+    result = _dispatch(t, [(ty, _rendered(ty)) for ty in _MENU if ty in menu])
+    return agg.select("key", _strict_otherwise(result, t, menu).alias("value"))
 
 
-def aggregate_reduce(
-    df_kv: DataFrame,
-    approx: bool = False,
-    strict: bool = True,
-    types: list[str] | None = None,
-) -> DataFrame:
+def aggregate_reduce(df_kv: DataFrame, types: list[str] | None = None) -> DataFrame:
     """Full ``-reducer aggregate`` semantics: (key, value) lines where
     key = ``AggType:realkey`` -> aggregated (key, value) strings.
 
     Output key is the real key (the reducer strips the type prefix),
     matching the reference's final output layout (S8). Malformed or
-    unknown descriptors fail the job loudly in strict mode (raised
-    from the post-aggregation dispatch, per group — never per row).
+    unknown descriptors fail the job loudly (raised from the
+    post-aggregation dispatch, per group — never per row).
 
     Physical plan: ONE scan of the input, one shuffle on
     (agg_type, key, value) with map-side partial combine (the
@@ -330,40 +244,27 @@ def aggregate_reduce(
 
     collect_list (for the exact histogram median) only accumulates
     rows of ValueHistogram groups — conditional, so scalar aggregators
-    never pay for it. For billion-distinct-value histogram keys switch
-    the median to percentile_approx.
+    never pay for it.
 
     ``types``: optional declared menu (like a Hadoop job knowing which
     descriptors its mapper emits). When every declared type is a plain
     sum/max/min, the frequency level is skipped entirely — one direct
     shuffle (see _aggregate_direct). Rows violating the declaration
-    still fail loudly in strict mode.
+    still fail loudly.
     """
-    parsed = parse_agg_key(df_kv, strict=strict)
+    parsed = parse_agg_key(df_kv)
     # `types and`: an empty menu (dynamically-built list that came out
     # empty) must fall through to the generic plan, not build a
     # zero-buffer aggregation
     if types and set(types) <= DIRECT_TYPES:
-        return _aggregate_direct(parsed, set(types), strict)
+        return _aggregate_direct(parsed, set(types))
     freqs = value_frequencies(parsed)
     t = F.col("agg_type")
-    long_v = F.col("value").cast("long")
-    dbl_v = F.col("value").cast("double")
     cnt = F.col("cnt")
     h_cnt = F.when(t == HISTOGRAM, cnt)
-    uniq_buf = (
-        F.approx_count_distinct(F.when(t == "UniqValueCount", F.col("value")))
-        if approx
-        else F.count(F.when(t == "UniqValueCount", F.col("value")))
-    )
     agg = freqs.groupBy("agg_type", "key").agg(
-        F.sum(F.when(t == "LongValueSum", long_v * cnt)).alias("_lsum"),
-        F.sum(F.when(t == "DoubleValueSum", dbl_v * cnt)).alias("_dsum"),
-        F.max(F.when(t == "LongValueMax", long_v)).alias("_lmax"),
-        F.min(F.when(t == "LongValueMin", long_v)).alias("_lmin"),
-        F.max(F.when(t == "StringValueMax", F.col("value"))).alias("_smax"),
-        F.min(F.when(t == "StringValueMin", F.col("value"))).alias("_smin"),
-        uniq_buf.alias("_uniq"),
+        *_buffers(DIRECT_TYPES, F.col("value"), t, cnt),
+        F.count(F.when(t == UNIQ, F.col("value"))).alias("_uniq"),
         F.count(h_cnt).alias("_hn"),
         F.min(h_cnt).alias("_hmin"),
         F.max(h_cnt).alias("_hmax"),
@@ -388,16 +289,59 @@ def aggregate_reduce(
         h_avg.cast("string"),
         h_std.cast("string"),
     )
-    result = (
-        F.when(t == "LongValueSum", F.col("_lsum").cast("string"))
-        .when(t == "DoubleValueSum", F.col("_dsum").cast("string"))
-        .when(t == "LongValueMax", F.col("_lmax").cast("string"))
-        .when(t == "LongValueMin", F.col("_lmin").cast("string"))
-        .when(t == "StringValueMax", F.col("_smax"))
-        .when(t == "StringValueMin", F.col("_smin"))
-        .when(t == "UniqValueCount", F.col("_uniq").cast("string"))
-        .when(t == HISTOGRAM, hist_report)
+    result = _dispatch(
+        t,
+        [
+            *((ty, _rendered(ty)) for ty in _MENU),
+            (UNIQ, F.col("_uniq").cast("string")),
+            (HISTOGRAM, hist_report),
+        ],
     )
-    if strict:
-        result = _strict_otherwise(result, t)
-    return agg.select("key", result.alias("value"))
+    return agg.select("key", _strict_otherwise(result, t).alias("value"))
+
+
+def aggregate_typed(df: DataFrame, agg_type: str, key_col: str, value_col: str) -> DataFrame:
+    """One declared aggregator planned straight from typed columns: the
+    descriptor path's answer for ``agg_type:key \\t value`` lines built
+    from ``key_col`` and ``value_col``, without building or parsing
+    that text.
+
+    * sum/max/min types -> ``aggregate_reduce``'s (key, value) strings,
+      one aggregation on the key through the shared menu. A null key
+      fails the job, as the descriptor path fails on the missing-prefix
+      line it would become.
+    * ValueHistogram -> (key, distinct_values, min_count, median_count,
+      max_count, avg_count, stddev_count), i.e. ``value_histogram``
+      without agg_type: (key, value) frequencies straight off the
+      columns, then ``histogram_stats``. Null keys are dropped, as the
+      descriptor path drops their lines from the histogram.
+
+    The descriptor path compares values by their string render; the
+    typed plan by the values themselves. The two agree whenever the
+    render is injective and casts back exactly (integers, strings),
+    and the key column holds no tab (a tab would move the key/value
+    split of a text line).
+    """
+    key = F.col(key_col)
+    if not isinstance(df.schema[key_col].dataType, StringType):
+        # a cast on a string key would add a grouping projection
+        key = key.cast("string")
+    key = key.alias("key")
+    if agg_type == HISTOGRAM:
+        freqs = (
+            df.where(F.col(key_col).isNotNull())
+            .groupBy(key, F.col(value_col).alias("_v"))
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        return histogram_stats(freqs, ["key"])
+    if agg_type not in _MENU:
+        raise ValueError(
+            f"aggregate_typed: {agg_type!r} is not one of {[*_MENU, HISTOGRAM]}"
+        )
+    agg = df.groupBy(key).agg(*_buffers({agg_type}, F.col(value_col)))
+    # the type is declared, so a null key is the one failure left
+    null_key = F.concat(F.lit(_MALFORMED), F.coalesce(F.col("key"), F.lit("<null>")))
+    value = F.when(F.col("key").isNotNull(), _rendered(agg_type)).otherwise(
+        F.raise_error(null_key)
+    )
+    return agg.select("key", value.alias("value"))

@@ -91,12 +91,17 @@ class JobResult:
     def exit_code(self) -> int:
         if self.succeeded:
             return EXIT_OK
-        errs = " ".join(r.error or "" for r in self.results)
-        if "already exists" in errs:
-            return EXIT_OUTPUT_EXISTS
-        if "Path does not exist" in errs or "PATH_NOT_FOUND" in errs:
-            return EXIT_BAD_INPUT
-        return EXIT_IO
+        return exit_code_for(" ".join(r.error or "" for r in self.results))
+
+
+def exit_code_for(error: str) -> int:
+    """The exit code for a failed job's error text: output exists, bad
+    input path, or IO for anything else."""
+    if "already exists" in error:
+        return EXIT_OUTPUT_EXISTS
+    if "Path does not exist" in error or "PATH_NOT_FOUND" in error:
+        return EXIT_BAD_INPUT
+    return EXIT_IO
 
 
 #: file extensions Spark cannot range-split — the scan-level partition
@@ -219,19 +224,27 @@ def _apply_reducer(
     )
 
 
-def plan_branches(spark: SparkSession, spec: JobSpec) -> dict[str, DataFrame]:
-    """Build (but do not run) every branch's DataFrame — the plan IR is
-    the DataFrame itself, inspectable with .explain() (replaces the
-    reference's listJobConfProperties debugging surface, §3.2)."""
+def _scan_and_branches(
+    spark: SparkSession, spec: JobSpec, counters=None
+) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """The single scan (persisted when share_mode="persist") and every
+    branch's DataFrame over it, mapper then reducer."""
     lines = _load_input(spark, spec)
     if spec.share_mode == "persist":
         lines = lines.persist(StorageLevel.MEMORY_AND_DISK)
     out: dict[str, DataFrame] = {}
     for branch in spec.branches:
         opts = _pipe_options(spec, branch)
-        kv = _apply_mapper(branch, lines, spec, opts)
-        out[branch.dir_key] = _apply_reducer(branch, kv, spec, opts)
-    return out
+        kv = _apply_mapper(branch, lines, spec, opts, counters)
+        out[branch.dir_key] = _apply_reducer(branch, kv, spec, opts, counters)
+    return lines, out
+
+
+def plan_branches(spark: SparkSession, spec: JobSpec) -> dict[str, DataFrame]:
+    """Build (but do not run) every branch's DataFrame — the plan IR is
+    the DataFrame itself, inspectable with .explain() (replaces the
+    reference's listJobConfProperties debugging surface, §3.2)."""
+    return _scan_and_branches(spark, spec)[1]
 
 
 def _materialize_phase1(
@@ -361,16 +374,8 @@ def _run_job_planned(
             )
         shared = None
     else:
-        lines = _load_input(spark, spec)
-        shared = None
-        if spec.share_mode == "persist":
-            shared = lines.persist(StorageLevel.MEMORY_AND_DISK)
-            lines = shared
-        plans = {}
-        for branch in spec.branches:
-            opts = _pipe_options(spec, branch)
-            kv = _apply_mapper(branch, lines, spec, opts, counters)
-            plans[branch.dir_key] = _apply_reducer(branch, kv, spec, opts, counters)
+        lines, plans = _scan_and_branches(spark, spec, counters)
+        shared = lines if spec.share_mode == "persist" else None
 
     done: dict[str, BranchResult] = {}
     done_lock = threading.Lock()

@@ -42,163 +42,11 @@ def register(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], Que
     return deco
 
 
-# Driver-facing registration order. Correctness harnesses sample a
-# PREFIX of the catalog (the driver checks the first ~50 entries in
-# registration order), so the prefix is rotated each round by one rule:
-# WINDOW-ROTATION POLICY — a query belongs in the prefix if its latest
-# plan change postdates its latest driver-green row (new operators,
-# queries whose operators changed this round, and any family whose
-# performance claim is under review); queries that are driver-green on
-# an unchanged plan rotate to the tail, each annotated with the round
-# that proved it. Every operator family keeps at least one in-window
-# representative.
-_PRIORITY_ORDER = [
-    # ---- round-15 additions ----
-    "corpus_segment_dedup",  # NEW r15: repeated-passage removal + reassembly
-    "incremental_segment_dedup",  # NEW r15: arriving-batch form, seen-segment store
-    # ---- round-14 window (driver checks ~first 50) ----
-    "text_vocab_tokenize",  # NEW r14: greedy vocab tokenizer application
-    "text_vocab_token_counts",  # NEW r14: per-doc counts under the vocab
-    "corpus_health",  # CHANGED r14: rollup join disambiguated by grouping(lang); Arrow token kernel schema derived + min_count
-    "quota_sample",  # CHANGED r14: sampler kernel count collects cardinality-guarded
-    "temperature_sample",  # CHANGED r14: same kernel; alpha claim restricted
-    "mixture_sample_docs",  # CHANGED r14: same kernel
-    "selection_pipeline",  # CHANGED r14: composes the guarded sampler kernel
-    "stratified_sample",  # CHANGED r14 (kernel) + r11-stale
-    "ann_ivfpq_adc",  # CHANGED r14: refine query side now from queries; refine_metric param
-    "pipe_wordcount",  # pipe family rep (binary mode added r14 beside the string path)
-    # evidence-refresh: every remaining r11-latest-green query
-    # (41 stale rows led the r13 verdict task-7 list; q22 is
-    # re-proved at sf0.1 locally where its answer is non-empty)
-    "agg_long_max_min",  # r11 green, stalest block
-    "agg_string_max_min",  # r11 green, stalest block
-    "ann_ivf_index",  # r11 green, stalest block
-    "ann_ivf_topk",  # r11 green, stalest block
-    "ann_recall",  # r11 green, stalest block
-    "anti_join_dormant_customers",  # r11 green, stalest block
-    "curation_pipeline",  # r11 green, stalest block
-    "customer_order_counts",  # r11 green, stalest block
-    "dedup_ngram_jaccard",  # r11 green, stalest block
-    "duplicate_span_mining",  # r11 green, stalest block
-    "embedding_centroids",  # r11 green, stalest block
-    "embedding_sq8",  # r11 green, stalest block
-    "events_json_props",  # r11 green, stalest block
-    "first_event_per_user",  # r11 green, stalest block
-    "interval_click_errors",  # r11 green, stalest block
-    "ivf_assignment",  # r11 green, stalest block
-    "kmeans_refine",  # r11 green, stalest block
-    "lineitem_cube",  # r11 green, stalest block
-    "lineitem_rollup",  # r11 green, stalest block
-    "orders_priority_pivot",  # r11 green, stalest block
-    "pack_texts",  # r11 green, stalest block
-    "priority_sample_docs",  # r11 green, stalest block
-    "q10_returned_items",  # r11 green, stalest block
-    "q11_important_parts",  # r11 green, stalest block
-    "q12_priority_by_status",  # r11 green, stalest block
-    "q22_global_sales_opportunity",  # r11 green, stalest block
-    "q3_shipping_priority",  # r11 green, stalest block
-    "q4_order_priority",  # r11 green, stalest block
-    "q6_forecast_revenue",  # r11 green, stalest block
-    "quality_model_score",  # r11 green, stalest block
-    "set_ops_customers",  # r11 green, stalest block
-    "text_langid",  # r11 green, stalest block
-    "text_normalize",  # r11 green, stalest block
-    "text_repetition",  # r11 green, stalest block
-    "text_sentence_stats",  # r11 green, stalest block
-    "text_tfidf_top_terms",  # r11 green, stalest block
-    "text_top_bigrams",  # r11 green, stalest block
-    "text_winnowing",  # r11 green, stalest block
-    "top_quality_docs",  # r11 green, stalest block
-    "winnowing_pairs",  # r11 green, stalest block
-    # ---- tail: driver-green on an UNCHANGED plan (round noted) ----
-    "text_bpe_pairs",  # r13 green
-    "bloom_decontaminate",  # r13 green
-    "dedup_keep_best",  # r13 green
-    "q1_pricing_summary",  # r13 green
-    "agg_long_sum",  # r13 green
-    "agg_uniq_count",  # r13 green
-    "agg_value_histogram",  # r13 green
-    "ann_ivf_multiprobe",  # r13 green
-    "events_hourly_rollup",  # r13 green
-    "events_sessionize",  # r13 green
-    "events_exact_profile",  # r13 green
-    "secondary_sort_events",  # r13 green
-    "q13_customer_distribution",  # r13 green
-    "contamination_rate",  # r13 green
-    "q5_local_supplier_volume",  # r13 green
-    "asof_click_attribution",  # r13 green
-    "q18_large_orders",  # r13 green
-    "price_percentiles",  # r13 green
-    "q9_product_profit",  # r13 green
-    "ann_pq_adc",  # r13 green
-    "text_rare_words",  # r13 green
-    "text_profile",  # r13 green
-    "dedup_embedding_lsh_auto",  # r13 green
-    "upsample_epochs",  # r13 green
-    "chunk_documents",  # r13 green
-    "blocklist_screen",  # r13 green
-    "dedup_embedding_lsh",  # r13 green
-    "dedup_minhash_lsh",  # r13 green
-    "dedup_embedding_cosine",  # r13 green
-    "dedup_clusters",  # r13 green
-    "dedup_exact",  # r13 green
-    "dedup_simhash",  # r13 green
-    "decontaminate_docs",  # r13 green
-    "text_fingerprint",  # r13 green
-    "text_token_count",  # r13 green
-    "text_quality_score",  # r13 green
-    "multimodal_frame_sample",  # r13 green
-    "pack_sequences",  # r13 green
-    "dataset_split",  # r13 green
-    "fanout_two_branches",  # r13 green
-    "incremental_dedup",  # r13 green
-    "corpus_diff",  # r13 green
-    "cdc_apply",  # r13 green
-    "fuzzy_join_parts",  # r12 green
-    "grouped_holdout_split",  # r12 green
-    "dedup_containment",  # r12 green
-    "incremental_embedding_lsh",  # r12 green
-    "global_shuffle_docs",  # r12 green
-    "token_budget_pick",  # r12 green
-    "pack_sequences_global",  # r12 green
-    "agg_double_sum",  # r12 green
-    "agg_salted_sum",  # r12 green
-    "dedup_simhash_pairs",  # r12 green
-    "agg_long_sum_native",  # r12 green
-    "ann_pq_train_recall",  # r12 green
-    "salted_join_revenue",  # r12 green
-    "q2_min_cost_supplier",  # r12 green
-    "q7_nation_volume",  # r12 green
-    "q8_market_share",  # r12 green
-    "q14_promo_revenue",  # r12 green
-    "q15_top_supplier",  # r12 green
-    "q16_supplier_part_counts",  # r12 green
-    "q17_small_quantity_revenue",  # r12 green
-    "q19_disjunctive_revenue",  # r12 green
-    "q20_heavy_shippers",  # r12 green
-    "q21_sole_failing_supplier",  # r12 green
-    "orders_grouping_sets",  # r12 green
-    "multimodal_features",  # r12 green
-    "pipe_grouped_reduce",  # r12 green
-    "pipe_identity_cat",  # r12 green
-    "semantic_dedup_hier",  # r12 green
-    "semantic_dedup_auto",  # r12 green
-    "semantic_dedup",  # r12 green
-    "substring_decontamination",  # r12 green
-    "decontaminate_cut_spans",  # r12 green
-    "incremental_minhash_dedup",  # r12 green
-    "part_supplier_topn",  # r12 green
-    "text_pii_redact",  # r12 green
-    "text_boilerplate_removal",  # r12 green
-    "ann_cosine_topk",  # r12 green
-    "events_approx_profile",  # rows-only by nature (sketch); exact twin + pytest bounds
-]
-
-
 def load_all() -> None:
-    """Import every workload module, then fix the catalog order to
-    ``_PRIORITY_ORDER`` (dict insertion order IS the registration order
-    the driver iterates)."""
+    """Import every workload module, registering its queries. Catalog
+    order is not decided here: ``__spark_entry__.queries()`` orders by
+    staleness of the last oracle match, then name, and bench.py
+    iterates its own HEADLINE."""
     from . import aggregates  # noqa: F401
     from . import dedup  # noqa: F401
     from . import relational  # noqa: F401
@@ -207,14 +55,3 @@ def load_all() -> None:
     from . import similarity  # noqa: F401
     from . import streaming_compat  # noqa: F401
     from . import text  # noqa: F401
-
-    missing = set(_PRIORITY_ORDER) - set(QUERIES)
-    extra = set(QUERIES) - set(_PRIORITY_ORDER)
-    if missing or extra:
-        raise RuntimeError(
-            f"catalog/order mismatch: missing={sorted(missing)} extra={sorted(extra)}"
-        )
-    for d in (QUERIES, ORACLES):
-        ordered = {n: d[n] for n in _PRIORITY_ORDER if n in d}
-        d.clear()
-        d.update(ordered)

@@ -1,6 +1,8 @@
 """Queries exercising the ``-reducer aggregate`` family (SURVEY §2.5)
 through the real operator path: descriptor lines ``AggType:key \\t
-value`` -> operators.aggregate.aggregate_reduce -> (key, value) strings.
+value`` -> operators.aggregate.aggregate_reduce -> (key, value) strings,
+or, for a single aggregator over typed columns,
+operators.aggregate.aggregate_typed.
 
 Oracle caveat: every oracle serializes the aggregate to VARCHAR exactly
 like the operator does; doubles are only used where the data is
@@ -11,13 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.kv import to_lines, with_key_val
-from ..operators.aggregate import (
-    aggregate_reduce,
-    histogram_stats,
-    parse_agg_key,
-    value_histogram,
-)
+from ..operators.aggregate import aggregate_reduce, aggregate_typed
 from . import register
 from .tables import load
 
@@ -29,51 +25,6 @@ def _kv(df: DataFrame, agg_type: str, key_col, value_col) -> DataFrame:
     )
 
 
-def _fused_long_sum(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
-    """The equivalence-proven FUSED form of a single-type LongValueSum
-    descriptor job (optimization r16, VERDICT task 2): because the
-    descriptor lines are CONSTRUCTED from typed columns right here,
-    serialize -> splitKeyVal -> parse_agg_key is an identity on every
-    row this query can ever see, and the whole text round-trip folds
-    away into the direct columnar aggregation. Preconditions that make
-    the fold exact (both hold for the TPC-H columns fed in, and are
-    enforced loudly where cheap): the key column is tab-free (a tab
-    would shift the splitKeyVal boundary) and non-null (the descriptor
-    path raises on a null-key group — replicated below as a per-GROUP
-    raise_error, never per row). Sum math is identical: the text path
-    sums cast(cast(v AS string) AS long), an identity round-trip for
-    integral values. Pinned by
-    test_agg_fused_forms_match_text_path (row-identical to the
-    retained text-path reference on the real tables) and by the
-    unchanged DuckDB oracle hash at sf0.01/sf0.1."""
-    agg = df.groupBy(F.col(key_col).alias("key")).agg(
-        F.sum(F.col(value_col).cast("long")).alias("_s")
-    )
-    value = F.when(
-        F.col("key").isNotNull(), F.col("_s").cast("string")
-    ).otherwise(
-        F.raise_error(
-            F.lit(
-                "aggregate: malformed descriptor (missing 'AggType:'"
-                " prefix) for key: "
-            )
-        )
-    )
-    return agg.select("key", value.alias("value"))
-
-
-def _agg_long_sum_textpath(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r16 full text path of ``agg_long_sum`` — kept as the
-    equivalence reference for the pinned test (NOT registered)."""
-    li = load(spark, sf_dir, "lineitem").select(
-        F.concat(F.lit("LongValueSum:"), "l_returnflag").alias("k"),
-        F.col("l_linenumber").cast("string").alias("v"),
-    )
-    lines = to_lines(li, "\t")
-    kv = with_key_val(lines, "line", "\t", 1)
-    return aggregate_reduce(kv, types=["LongValueSum"])
-
-
 @register(
     "agg_long_sum",
     oracle="""
@@ -82,29 +33,14 @@ def _agg_long_sum_textpath(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_long_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LongValueSum over descriptor lines the query itself constructs
-    from the typed table. Optimization r16 (VERDICT task 2): the
-    serialize-to-lines -> splitKeyVal -> parse_agg_key round-trip this
-    query used to route through is an IDENTITY on self-constructed
-    well-formed lines, so the registered form is now the fused direct
-    aggregation (same rows, schema, and oracle hash — see
-    ``_fused_long_sum``); ``_agg_long_sum_textpath`` retains the full
-    text path as the pinned equivalence reference, and the pipe family
-    still exercises the line codec end to end through real
+    """LongValueSum of l_linenumber per l_returnflag, declared on the
+    typed columns (``aggregate_typed``): descriptor lines built from
+    these well-formed rows would parse straight back to the same
+    columns, so the operator plans the sum on them directly. The pipe
+    family exercises the line codec end to end through real
     subprocesses."""
     li = load(spark, sf_dir, "lineitem")
-    return _fused_long_sum(li, "l_returnflag", "l_linenumber")
-
-
-def _agg_long_sum_native_kvpath(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r16 typed-KV descriptor path of ``agg_long_sum_native``
-    — kept as the equivalence reference for the pinned test (NOT
-    registered)."""
-    li = load(spark, sf_dir, "lineitem")
-    return aggregate_reduce(
-        _kv(li, "LongValueSum", F.col("l_returnflag"), F.col("l_linenumber")),
-        types=["LongValueSum"],
-    )
+    return aggregate_typed(li, "LongValueSum", "l_returnflag", "l_linenumber")
 
 
 @register(
@@ -116,14 +52,10 @@ def _agg_long_sum_native_kvpath(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_long_sum_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LongValueSum fed typed KV columns — the form a reference user
-    migrating off text pipes writes. Optimization r16: the
-    ``AggType:key`` prefix this query concatenated only to split right
-    back off (parse_agg_key) folds away the same way as
-    ``agg_long_sum``'s line codec, leaving the direct columnar
-    aggregation (``_fused_long_sum``; equivalence pinned against the
-    retained ``_agg_long_sum_native_kvpath`` reference)."""
+    migrating off text pipes writes. It plans to the same
+    ``aggregate_typed`` aggregation as ``agg_long_sum``."""
     li = load(spark, sf_dir, "lineitem")
-    return _fused_long_sum(li, "l_returnflag", "l_linenumber")
+    return aggregate_typed(li, "LongValueSum", "l_returnflag", "l_linenumber")
 
 
 @register(
@@ -198,8 +130,9 @@ def agg_string_max_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_uniq_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UniqValueCount (exact). At 100 TB switch approx=True for the HLL
-    sketch — same query shape, no extra shuffle of distinct values."""
+    """UniqValueCount (exact): the count of distinct (key, value)
+    triples at the operator's frequency level, so no distinct-aggregate
+    Expand."""
     li = load(spark, sf_dir, "lineitem")
     return aggregate_reduce(_kv(li, "UniqValueCount", F.col("l_returnflag"), F.col("l_suppkey")))
 
@@ -227,32 +160,13 @@ def agg_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ValueHistogram, typed output: per-key stats over the frequencies
     of distinct values (Hadoop report semantics: non-interpolated
     median at sorted index n/2, counts as longs, moments from exact
-    integer sums). Optimization r16 (VERDICT task 2): the descriptor
-    concat/parse round-trip folds away exactly as in ``agg_long_sum``
-    — the fused form groups (event_type, user_id) directly. Two
-    equivalence notes, both pinned by
-    test_agg_fused_forms_match_text_path: grouping by the raw bigint
-    user_id instead of its string render is injective (same distinct
-    groups, same counts), and the explicit isNotNull filter replicates
-    the descriptor path's silent drop of null-key rows (a null key
-    never parses as ValueHistogram). The stats aggregation is the SAME
-    ``histogram_stats`` definition the descriptor path uses."""
+    integer sums), declared on the typed columns (``aggregate_typed``):
+    (event_type, user_id) frequencies straight off the table, then the
+    same ``histogram_stats`` the descriptor path uses. Grouping by the
+    bigint user_id instead of its string render is injective, so the
+    groups and counts are the descriptor path's."""
     ev = load(spark, sf_dir, "events")
-    freqs = (
-        ev.where(F.col("event_type").isNotNull())
-        .groupBy(F.col("event_type").alias("key"), F.col("user_id").alias("_v"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    return histogram_stats(freqs, ["key"])
-
-
-def _agg_value_histogram_kvpath(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r16 descriptor path of ``agg_value_histogram`` — kept as
-    the equivalence reference for the pinned test (NOT registered)."""
-    ev = load(spark, sf_dir, "events")
-    kv = _kv(ev, "ValueHistogram", F.col("event_type"), F.col("user_id"))
-    hist = value_histogram(parse_agg_key(kv))
-    return hist.drop("agg_type")
+    return aggregate_typed(ev, "ValueHistogram", "event_type", "user_id")
 
 
 @register(

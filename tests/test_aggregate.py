@@ -1,12 +1,25 @@
 """The aggregate reducer family (§2.5) vs hand-computed goldens."""
 
+import os
+
+import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from hadoop_multiple_streaming_spark.operators.aggregate import (
+    MISSING_PREFIX,
     aggregate_reduce,
+    aggregate_typed,
     parse_agg_key,
     value_histogram,
 )
+from hadoop_multiple_streaming_spark.workloads.aggregates import (
+    _kv,
+    agg_long_sum,
+    agg_long_sum_native,
+    agg_value_histogram,
+)
+from hadoop_multiple_streaming_spark.workloads.tables import load
 
 
 def kv_df(spark, pairs):
@@ -16,29 +29,30 @@ def kv_df(spark, pairs):
 def test_aggregate_strict_raises_on_missing_prefix(spark):
     # Hadoop's ValueAggregator path fails loudly on malformed
     # descriptors — a bare key must fail the job, not silently drop
-    import pytest
-
     df = kv_df(spark, [("LongValueSum:a", "1"), ("noprefix", "2")])
     with pytest.raises(Exception, match="missing 'AggType:' prefix"):
         aggregate_reduce(df).collect()
 
 
 def test_aggregate_strict_raises_on_unknown_type(spark):
-    import pytest
-
     df = kv_df(spark, [("LongValuesum:a", "1")])  # typo'd type
     with pytest.raises(Exception, match="unknown aggregator type"):
         aggregate_reduce(df).collect()
 
 
-def test_parse_agg_key_lenient_drops(spark):
+def test_parse_agg_key_splits_on_first_colon(spark):
     df = kv_df(
         spark,
         [("LongValueSum:a", "1"), ("noprefix", "2"), ("ValueHistogram:k:with:colons", "3")],
     )
-    rows = {(r.agg_type, r.key) for r in parse_agg_key(df, strict=False).collect()}
-    # no-colon lines dropped; only FIRST colon splits
-    assert rows == {("LongValueSum", "a"), ("ValueHistogram", "k:with:colons")}
+    rows = {(r.agg_type, r.key) for r in parse_agg_key(df).collect()}
+    # only the FIRST colon splits; a no-colon line is kept under the
+    # sentinel type so the aggregation can raise on it
+    assert rows == {
+        ("LongValueSum", "a"),
+        ("ValueHistogram", "k:with:colons"),
+        (MISSING_PREFIX, "noprefix"),
+    }
 
 
 def test_long_value_sum(spark):
@@ -127,19 +141,15 @@ def test_direct_scalar_path_strict_on_menu_violation(spark):
     # a KNOWN type that simply wasn't declared must say so — 'unknown
     # aggregator type' would send users debugging the parser instead of
     # their `types` menu
-    import pytest as _pytest
-
     pairs = [("LongValueSum:s", "1"), ("UniqValueCount:u", "x")]
-    with _pytest.raises(Exception, match="not in the declared types menu"):
+    with pytest.raises(Exception, match="not in the declared types menu"):
         aggregate_reduce(kv_df(spark, pairs), types=["LongValueSum"]).collect()
 
 
 def test_direct_scalar_path_strict_on_truly_unknown_type(spark):
     # a type no aggregator has ever heard of keeps the 'unknown' wording
-    import pytest as _pytest
-
     pairs = [("LongValueSum:s", "1"), ("NoSuchAgg:u", "x")]
-    with _pytest.raises(Exception, match="unknown aggregator type"):
+    with pytest.raises(Exception, match="unknown aggregator type"):
         aggregate_reduce(kv_df(spark, pairs), types=["LongValueSum"]).collect()
 
 
@@ -151,53 +161,72 @@ def test_direct_path_requires_pure_scalar_menu(spark):
     assert got == {"u": "2"}
 
 
-def test_agg_fused_forms_match_text_path(spark, sf_dir):
-    """r16 equivalence gate (VERDICT task 2): the fused columnar forms
-    of the agg descriptor queries must return IDENTICAL rows and
-    schema to the retained text/KV-path references on the real tables
-    — the fold of serialize -> splitKeyVal -> parse_agg_key is only
-    adoptable because it is an identity on these constructed lines."""
-    from hadoop_multiple_streaming_spark.workloads.aggregates import (
-        _agg_long_sum_native_kvpath,
-        _agg_long_sum_textpath,
-        _agg_value_histogram_kvpath,
-        agg_long_sum,
-        agg_long_sum_native,
-        agg_value_histogram,
+def test_aggregate_typed_matches_descriptor_path(spark, sf_dir):
+    """The queries planned by aggregate_typed must return IDENTICAL
+    rows and schema to the descriptor path built from the same typed
+    columns: aggregate_reduce on ``AggType:key`` lines for the sums,
+    value_histogram(parse_agg_key(...)) for the histogram."""
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(sf):
+        pytest.skip(f"no sf0.01 tables beside {sf_dir}")
+    li, ev = load(spark, sf, "lineitem"), load(spark, sf, "events")
+    long_sum = aggregate_reduce(
+        _kv(li, "LongValueSum", F.col("l_returnflag"), F.col("l_linenumber")),
+        types=["LongValueSum"],
     )
-
-    for fused_fn, ref_fn in (
-        (agg_long_sum, _agg_long_sum_textpath),
-        (agg_long_sum_native, _agg_long_sum_native_kvpath),
-        (agg_value_histogram, _agg_value_histogram_kvpath),
+    hist = value_histogram(
+        parse_agg_key(_kv(ev, "ValueHistogram", F.col("event_type"), F.col("user_id")))
+    ).drop("agg_type")
+    for query, ref in (
+        (agg_long_sum, long_sum),
+        (agg_long_sum_native, long_sum),
+        (agg_value_histogram, hist),
     ):
-        fused = fused_fn(spark, sf_dir)
-        ref = ref_fn(spark, sf_dir)
-        assert [ (f.name, f.dataType.simpleString()) for f in fused.schema.fields ] == [
+        got_df = query(spark, sf)
+        assert [(f.name, f.dataType.simpleString()) for f in got_df.schema.fields] == [
             (f.name, f.dataType.simpleString()) for f in ref.schema.fields
-        ], fused_fn.__name__
-        got = sorted(tuple(r) for r in fused.collect())
+        ], query.__name__
+        got = sorted(tuple(r) for r in got_df.collect())
         want = sorted(tuple(r) for r in ref.collect())
-        assert got == want, fused_fn.__name__
+        assert got and got == want, query.__name__
 
 
-def test_agg_fused_long_sum_raises_on_null_key(spark):
+def test_aggregate_typed_raises_on_null_key(spark):
     """The descriptor path raises loudly on a null key group (it parses
-    as a missing-prefix descriptor); the fused form must keep that loud
-    failure, not silently aggregate the null group."""
-    import pytest as _pytest
-
-    from hadoop_multiple_streaming_spark.workloads.aggregates import (
-        _fused_long_sum,
-    )
-
-    df = spark.createDataFrame(
-        [("a", 1), (None, 2)], "k string, v int"
-    )
-    with _pytest.raises(Exception, match="missing 'AggType:' prefix"):
-        _fused_long_sum(df, "k", "v").collect()
-    ok = {r.key: r.value for r in _fused_long_sum(
+    as a missing-prefix descriptor); the typed entry must keep that
+    loud failure and name the key, not silently aggregate the null
+    group."""
+    df = spark.createDataFrame([("a", 1), (None, 2)], "k string, v int")
+    with pytest.raises(Exception, match="missing 'AggType:' prefix") as err:
+        aggregate_typed(df, "LongValueSum", "k", "v").collect()
+    assert "for key: <null>" in str(err.value)
+    ok = {r.key: r.value for r in aggregate_typed(
         spark.createDataFrame([("a", 1), ("a", 2), ("b", 5)], "k string, v int"),
-        "k", "v",
+        "LongValueSum", "k", "v",
     ).collect()}
     assert ok == {"a": "3", "b": "5"}
+
+
+def test_aggregate_typed_menu_matches_descriptor_path(spark):
+    """Every sum/max/min type of the shared menu gives the descriptor
+    path's answer from typed columns (a non-string key is rendered to
+    a string, as the descriptor line would); other types are refused
+    at plan time."""
+    df = spark.createDataFrame(
+        [(1, 5, "x"), (1, 7, "b"), (2, -3, "m"), (2, 4, "a")], "k int, v long, s string"
+    )
+    for ty, col in (
+        ("LongValueSum", "v"),
+        ("DoubleValueSum", "v"),
+        ("LongValueMax", "v"),
+        ("LongValueMin", "v"),
+        ("StringValueMax", "s"),
+        ("StringValueMin", "s"),
+    ):
+        got = sorted(tuple(r) for r in aggregate_typed(df, ty, "k", col).collect())
+        want = sorted(
+            tuple(r) for r in aggregate_reduce(_kv(df, ty, F.col("k"), F.col(col))).collect()
+        )
+        assert got == want, ty
+    with pytest.raises(ValueError, match="UniqValueCount"):
+        aggregate_typed(df, "UniqValueCount", "k", "v")

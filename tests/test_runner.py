@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from hadoop_multiple_streaming_spark.cli import main as cli_main
 from hadoop_multiple_streaming_spark.plans.model import Branch, JobSpec
 from hadoop_multiple_streaming_spark.plans.runner import (
+    EXIT_BAD_INPUT,
     EXIT_OK,
     EXIT_OUTPUT_EXISTS,
     plan_branches,
@@ -141,6 +142,25 @@ def test_output_exists_exit_code(spark, textdir, tmp_path):
     assert run_job(spark, spec).succeeded
     res2 = run_job(spark, spec)  # same output -> errorifexists (O4 code 4)
     assert not res2.succeeded and res2.exit_code == EXIT_OUTPUT_EXISTS
+
+
+def test_cli_plan_time_failures_map_exit_codes(spark, textdir, tmp_path):
+    # materialize mode fails in phase 1, before branch isolation, so
+    # these codes come from cli.main's plan-time handler, which shares
+    # JobResult.exit_code's mapping
+    def run(inp):
+        return cli_main(
+            [
+                "-input", inp,
+                "-output", str(tmp_path / "out"),
+                "-mapred", "X|cat|NONE",
+                "-shareMode", "materialize",
+            ]
+        )
+
+    assert run(str(tmp_path / "missing")) == EXIT_BAD_INPUT
+    assert run(textdir) == EXIT_OK
+    assert run(textdir) == EXIT_OUTPUT_EXISTS
 
 
 def test_materialize_mode_writes_intermediate(spark, textdir, scripts, tmp_path):

@@ -16,7 +16,7 @@ SCRIPT = """#!/bin/sh
 # Registry smoke: a commit must never leave the workload catalog
 # inconsistent (round-9 failure mode). ~0.5s.
 python "$(git rev-parse --show-toplevel)/tools/registry_smoke.py" || {
-  echo "pre-commit: workload registry inconsistent — fix _PRIORITY_ORDER" >&2
+  echo "pre-commit: workload catalog failed the registry smoke (error above)" >&2
   exit 1
 }
 """
