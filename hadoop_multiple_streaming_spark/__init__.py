@@ -28,13 +28,12 @@ from .operators.asof import asof_join, interval_join  # noqa: E402,F401
 from .operators.pipe import grouped_pipe_reduce, pipe_map, pipe_reduce  # noqa: E402,F401
 from .plans.model import AGGREGATE, NONE, Branch, JobSpec  # noqa: E402,F401
 from .plans.runner import JobResult, plan_branches, run_job  # noqa: E402,F401
-from .session import EngineConfig, get_spark  # noqa: E402,F401
+from .session import get_spark  # noqa: E402,F401
 
 __all__ = [
     "AGGREGATE",
     "NONE",
     "Branch",
-    "EngineConfig",
     "JobResult",
     "JobSpec",
     "asof_join",

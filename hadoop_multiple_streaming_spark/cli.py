@@ -36,9 +36,26 @@ from __future__ import annotations
 import argparse
 import sys
 
+from .operators.pipe import PipeOptions
 from .plans.model import Branch, JobSpec
 from .plans.runner import EXIT_INVALID_CONF, EXIT_USAGE, exit_code_for, run_job
-from .session import EngineConfig, get_spark
+from .session import get_spark
+
+#: The reference's ``-D stream.*`` JobConf keys -> (JobSpec or
+#: PipeOptions, field, parser); parse_job pops each from the Spark conf
+#: (MultiPipeMapRed.java:162-163,232-241, MultiPipeMapper.java:117-124).
+STREAM_CONF = {
+    "stream.map.output.field.separator": (JobSpec, "separator", str),
+    "stream.num.map.output.key.fields": (JobSpec, "num_key_fields", int),
+    "stream.non.zero.exit.is.failure": (
+        PipeOptions,
+        "non_zero_exit_is_failure",
+        lambda v: v.strip().lower() != "false",
+    ),
+    "stream.minRecWrittenToEnableSkip_": (PipeOptions, "min_records_before_skip", int),
+    "stream.minrecwrittentoenableskip": (PipeOptions, "min_records_before_skip", int),
+    "stream.tmpdir": (PipeOptions, "tmpdir", str),
+}
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -87,8 +104,10 @@ def build_parser() -> argparse.ArgumentParser:
         "any DataSourceV2 format name (parquet/csv/json/orc/...) for the "
         "per-branch final sink (RedStreamJob.java:785-797)",
     )
-    p.add_argument("-separator", default="\t")
-    p.add_argument("-numKeyFields", type=int, default=1)
+    # None = take -D stream.map.output.field.separator /
+    # stream.num.map.output.key.fields, else the JobSpec default
+    p.add_argument("-separator", default=None)
+    p.add_argument("-numKeyFields", type=int, default=None)
     p.add_argument("-shareMode", default="persist", choices=["persist", "materialize", "none"])
     p.add_argument(
         "-minPartitions",
@@ -134,9 +153,18 @@ def parse_job(argv: list[str]) -> tuple[JobSpec, dict[str, str], str | None]:
         for b in branches:
             if b.num_reduce_tasks is None:
                 b.num_reduce_tasks = args.numReduceTasks
-    # the reference's stream.* JobConf keys route to engine knobs, not
-    # Spark conf (O6: -D passthrough, MapStreamJob.java:325-332)
-    engine = EngineConfig.from_conf(conf)
+    # the reference's stream.* JobConf keys route to the job and its
+    # pipes, not Spark conf (O6: -D passthrough,
+    # MapStreamJob.java:325-332); an explicit flag wins over its key
+    spec_kw: dict[str, object] = {}
+    pipe_kw: dict[str, object] = {}
+    for key, (owner, name, parse) in STREAM_CONF.items():
+        if key in conf:
+            (pipe_kw if owner is PipeOptions else spec_kw)[name] = parse(conf.pop(key))
+    if args.separator is not None:
+        spec_kw["separator"] = args.separator
+    if args.numKeyFields is not None:
+        spec_kw["num_key_fields"] = args.numKeyFields
     # G2/G5: key-field partitioner/comparator options (the 0.20.2
     # KeyFieldBasedPartitioner/Comparator surface)
     from .operators.shuffle import parse_key_field_options
@@ -156,20 +184,16 @@ def parse_job(argv: list[str]) -> tuple[JobSpec, dict[str, str], str | None]:
         input_format=args.inputformat,
         output_format=args.outputformat,
         input_columns=args.inputColumns.split(",") if args.inputColumns else None,
-        separator=args.separator,
-        num_key_fields=args.numKeyFields,
-        cmd_env=cmd_env,
+        pipe=PipeOptions(env=cmd_env, **pipe_kw),
         files=args.files,
         archives=args.archives,
         share_mode=args.shareMode,
         min_input_partitions=args.minPartitions,
         partition_fields=partition_fields,
         sort_fields=sort_fields,
-        non_zero_exit_is_failure=engine.non_zero_exit_is_failure,
-        min_records_before_skip=engine.min_records_before_skip,
-        tmpdir=engine.tmpdir,
         overwrite=args.overwrite,
         resume=args.resume,
+        **spec_kw,
     )
     return spec, conf, args.master
 
@@ -201,6 +225,3 @@ def main(argv: list[str] | None = None) -> int:
 
 if __name__ == "__main__":
     sys.exit(main())
-
-
-_ = EngineConfig  # re-export for API discoverability

@@ -171,7 +171,13 @@ def value_histogram(parsed: DataFrame) -> DataFrame:
     return histogram_stats(freqs, ["agg_type", "key"])
 
 
-_MALFORMED = "aggregate: malformed descriptor (missing 'AggType:' prefix) for key: "
+def _malformed_message() -> Column:
+    """The missing-prefix failure message, naming the group's key (a
+    null key renders as ``<null>``, so the message is never null)."""
+    return F.concat(
+        F.lit("aggregate: malformed descriptor (missing 'AggType:' prefix) for key: "),
+        F.coalesce(F.col("key"), F.lit("<null>")),
+    )
 
 
 def _strict_otherwise(result: Column, t: Column, menu: set[str] | None = None) -> Column:
@@ -199,7 +205,7 @@ def _strict_otherwise(result: Column, t: Column, menu: set[str] | None = None) -
             ).otherwise(unknown)
     return result.otherwise(
         F.raise_error(
-            F.when(t == MISSING_PREFIX, F.concat(F.lit(_MALFORMED), F.col("key")))
+            F.when(t == MISSING_PREFIX, _malformed_message())
             .otherwise(unknown)
         )
     )
@@ -340,8 +346,7 @@ def aggregate_typed(df: DataFrame, agg_type: str, key_col: str, value_col: str) 
         )
     agg = df.groupBy(key).agg(*_buffers({agg_type}, F.col(value_col)))
     # the type is declared, so a null key is the one failure left
-    null_key = F.concat(F.lit(_MALFORMED), F.coalesce(F.col("key"), F.lit("<null>")))
     value = F.when(F.col("key").isNotNull(), _rendered(agg_type)).otherwise(
-        F.raise_error(null_key)
+        F.raise_error(_malformed_message())
     )
     return agg.select("key", value.alias("value"))

@@ -251,13 +251,6 @@ def fused_minhash_signatures(
     )
 
 
-def minhash_seed_rows(signatures: DataFrame) -> DataFrame:
-    """(id, seed, mh) row view of the signature array (compat/debug)."""
-    return signatures.select(
-        "id", F.posexplode("sig").alias("seed", "mh")
-    )
-
-
 def minhash_band_buckets(
     signatures: DataFrame, rows_per_band: int = 2
 ) -> DataFrame:

@@ -66,19 +66,25 @@ COUNTER_PREFIX = "reporter:counter:"
 STATUS_PREFIX = "reporter:status:"
 
 
+#: Popen pipe buffer (reference BUFFER_SIZE, MultiPipeMapRed.java:79)
+_BUFSIZE = 128 * 1024
+
+
 @dataclass
 class PipeOptions:
-    """Knobs for one pipe invocation (reference stream.* conf surface)."""
+    """A job's pipe configuration (the reference's ``-D stream.*`` keys,
+    mapped by ``cli.parse_job``; ``JobSpec.pipe`` carries it to every
+    pipe of the job)."""
 
+    #: -cmdenv NAME=VALUE pairs exported to the child
     env: dict[str, str] = field(default_factory=dict)
-    #: exit!=0 fails the task when True (stream.non.zero.exit.is.failure)
+    #: exit!=0 fails the task when True (stream.non.zero.exit.is.failure,
+    #: MultiPipeMapRed.java:162-163)
     non_zero_exit_is_failure: bool = True
     #: skip records on write failure once this many records were written
     #: (stream.minRecWrittenToEnableSkip_, MultiPipeMapRed.java:232-241);
     #: default disables skipping (fail the task).
     min_records_before_skip: int = 2**63 - 1
-    #: export task/partition context env vars (mapred_task_partition etc.)
-    export_context: bool = True
     #: child TMPDIR. The reference ALWAYS exports
     #: TMPDIR=java.io.tmpdir to the child (MultiPipeMapRed.java:204-205);
     #: None (the default) mirrors that — parent TMPDIR, else the OS
@@ -87,7 +93,6 @@ class PipeOptions:
     #: stream.tmpdir (MapStreamJob.java:645) only staged client-side
     #: job jars and never reached the child env.
     tmpdir: str | None = None
-    bufsize: int = 128 * 1024  # reference BUFFER_SIZE MultiPipeMapRed.java:79
 
 
 def split_args(cmd: str) -> list[str]:
@@ -108,9 +113,8 @@ def _build_env(opts: PipeOptions, partition_id: int, spark_conf: dict[str, str])
         safe = "".join(c if c.isalnum() else "_" for c in k)
         env[safe] = v
     env.update(opts.env)
-    if opts.export_context:
-        env["mapred_task_partition"] = str(partition_id)
-        env["mapreduce_task_partition"] = str(partition_id)
+    env["mapred_task_partition"] = str(partition_id)
+    env["mapreduce_task_partition"] = str(partition_id)
     # Reference: TMPDIR is ALWAYS exported to the child
     # (MultiPipeMapRed.java:204-205 exports java.io.tmpdir). Extension:
     # stream.tmpdir (opts.tmpdir) overrides the exported value.
@@ -123,25 +127,29 @@ def _build_env(opts: PipeOptions, partition_id: int, spark_conf: dict[str, str])
 
 
 def _resolve_executable(argv: list[str]) -> list[str]:
-    """P5: relative program names resolve against the task's shipped
-    files (the reference resolves via PATH + task cwd and chmods shipped
-    scripts, MultiPipeMapRed.java:174-199). Absolute paths and
-    PATH-resolvable names pass through."""
-    prog = argv[0]
-    if "/" not in prog:
-        try:
-            from pyspark import SparkFiles
+    """P5: bare argv tokens that name a shipped file resolve against the
+    task's shipped files — the program (``wc_red.py``) as well as a
+    script handed to an interpreter (``python3 wc_red.py``). The
+    reference resolves via PATH + task cwd and chmods shipped scripts
+    (MultiPipeMapRed.java:174-199). Absolute paths, PATH-resolvable
+    names and every other token pass through."""
+    try:
+        from pyspark import SparkFiles
 
-            cand = os.path.join(SparkFiles.getRootDirectory(), prog)
-            if os.path.isfile(cand):
-                try:
-                    os.chmod(cand, 0o755)
-                except OSError:
-                    pass
-                return [cand, *argv[1:]]
-        except Exception:
-            pass
-    return argv
+        root = SparkFiles.getRootDirectory()
+    except Exception:
+        return argv
+    out = []
+    for tok in argv:
+        cand = os.path.join(root, tok)
+        if "/" not in tok and os.path.isfile(cand):
+            try:
+                os.chmod(cand, 0o755)
+            except OSError:
+                pass
+            tok = cand
+        out.append(tok)
+    return out
 
 
 #: lines per stdin write / per yielded output batch. Sub-chunking the
@@ -187,7 +195,7 @@ def _pipe_partition(
         stdin=subprocess.PIPE,
         stdout=subprocess.PIPE,
         stderr=subprocess.PIPE,
-        bufsize=opts.bufsize,
+        bufsize=_BUFSIZE,
         env=_build_env(opts, partition_id, spark_conf),
     )
 
@@ -569,20 +577,9 @@ def grouped_pipe_reduce(
                 f"grouped pipe {argv!r} exited {proc.returncode}: "
                 f"{proc.stderr.decode('utf-8', 'replace')[:500]}"
             )
-        keys, values = [], []
-        for line in proc.stdout.decode("utf-8", "replace").splitlines():
-            k, sep_found, v = line.partition(separator)
-            if num_key_fields > 1:
-                parts = line.split(separator)
-                if len(parts) > num_key_fields:
-                    k = separator.join(parts[:num_key_fields])
-                    v = separator.join(parts[num_key_fields:])
-                else:
-                    k, v = line, ""
-            elif not sep_found:
-                k, v = line, ""
-            keys.append(k)
-            values.append(v)
-        return pd.DataFrame({"key": keys, "value": values})
+        return pd.DataFrame(
+            {"line": proc.stdout.decode("utf-8", "replace").splitlines()}
+        )
 
-    return df_kv.groupBy("key").applyInPandas(run_group, schema="key string, value string")
+    out = df_kv.groupBy("key").applyInPandas(run_group, schema="line string")
+    return with_key_val(out, "line", separator, num_key_fields)

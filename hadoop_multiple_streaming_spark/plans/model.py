@@ -19,12 +19,20 @@ Mapper/reducer may each be:
         RedStreamJob.java:744-746,813-815)
   * reducer "aggregate"           -> the §2.5 aggregate family
         (RedStreamJob.java:747-749)
+
+The batch runner (``plans.runner``) runs a branch over the whole input.
+``streaming.fanout.stream_fanout`` runs the same branch plan once per
+micro-batch: a native mapper gets the batch's single column under its
+own name, and every reducer — pipe, ``aggregate`` or native — reduces
+that micro-batch alone; nothing carries over between batches.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 from typing import Callable, Union
+
+from ..operators.pipe import PipeOptions
 
 PipeCmd = Union[str, list[str]]
 Transform = Callable  # DataFrame -> DataFrame
@@ -40,10 +48,6 @@ class Branch:
     reducer: PipeCmd | Transform | None = None
     #: reducer parallelism == number of output files (G3)
     num_reduce_tasks: int | None = None
-    #: accepted for CLI compatibility; a no-op because Catalyst's hash
-    #: aggregation is already partial+final (G4, SURVEY §4.1)
-    combiner: str | None = None
-    env: dict[str, str] = field(default_factory=dict)
 
     @classmethod
     def parse(cls, spec: str, delimiter: str = "|") -> "Branch":
@@ -93,10 +97,15 @@ class JobSpec:
     #: G5 (KeyFieldBasedComparator): sort within partitions on these
     #: (field, ascending) pairs — Hadoop secondary sort
     sort_fields: list[tuple[int, bool]] | None = None
-    #: serialize typed inputs to lines with this separator before piping
+    #: the (key, value) split of every line (splitKeyVal): this
+    #: separator, and the key spans this many fields
+    #: (stream.map.output.field.separator /
+    #: stream.num.map.output.key.fields, MultiPipeMapper.java:117-124);
+    #: typed inputs are serialized to lines with the same separator
     separator: str = "\t"
     num_key_fields: int = 1
-    cmd_env: dict[str, str] = field(default_factory=dict)
+    #: every pipe's configuration (-cmdenv and the stream.* keys)
+    pipe: PipeOptions = field(default_factory=PipeOptions)
     files: list[str] = field(default_factory=list)  # -file shipping (S10)
     #: -cacheArchive: archives unpacked into task working dirs (S10)
     archives: list[str] = field(default_factory=list)
@@ -112,15 +121,6 @@ class JobSpec:
     #: (key, value) frame via write_table — the reflective
     #: class-for-name load, Spark-style.
     output_format: str = "text"
-    non_zero_exit_is_failure: bool = True
-    #: P8: skip records on subprocess write failure once this many were
-    #: written (stream.minRecWrittenToEnableSkip_,
-    #: MultiPipeMapRed.java:232-241); default = skipping disabled.
-    min_records_before_skip: int = 2**63 - 1
-    #: stream.tmpdir (extension): overrides the child's always-exported
-    #: TMPDIR (None = export parent TMPDIR / OS tempdir, matching the
-    #: reference's unconditional export, MultiPipeMapRed.java:204-205)
-    tmpdir: str | None = None
     overwrite: bool = False
     #: materialize mode only: branches whose mapoutput/<dirKey>/ already
     #: exists WITH a _SUCCESS marker skip phase 1 and reduce straight

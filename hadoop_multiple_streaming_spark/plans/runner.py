@@ -39,14 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.kv import with_key_val
 from ..operators.aggregate import aggregate_reduce
-from ..operators.pipe import (
-    PipeOptions,
-    make_counters,
-    pipe_lines,
-    pipe_map,
-    pipe_reduce,
-    read_counters,
-)
+from ..operators.pipe import make_counters, pipe_map, pipe_reduce, read_counters
 from ..sources.io import (
     read_key_value_text,
     read_table,
@@ -166,44 +159,32 @@ def _with_min_partitions(lines: DataFrame, spec: JobSpec) -> DataFrame:
     return lines
 
 
-def _pipe_options(spec: JobSpec, branch: Branch) -> PipeOptions:
-    return PipeOptions(
-        env={**spec.cmd_env, **branch.env},
-        non_zero_exit_is_failure=spec.non_zero_exit_is_failure,
-        min_records_before_skip=spec.min_records_before_skip,
-        tmpdir=spec.tmpdir,
-    )
-
-
-def _apply_mapper(
-    branch: Branch, lines: DataFrame, spec: JobSpec, opts: PipeOptions, counters=None
-) -> DataFrame:
-    """mapper -> DataFrame[key, value]."""
-    if branch.mapper is None:
-        return with_key_val(lines, "line", spec.separator, spec.num_key_fields)
+def _apply_mapper(branch: Branch, lines: DataFrame, spec: JobSpec, counters=None) -> DataFrame:
+    """mapper -> DataFrame[key, value]. ``lines`` has one column; a
+    native mapper sees it under its own name, and a single-column
+    result (or the input itself, for ``mapper=None``) is split with
+    splitKeyVal whatever that column is called."""
+    out = lines
     if callable(branch.mapper):
         out = branch.mapper(lines)
         if set(out.columns) == {"key", "value"}:
             return out
-        if len(out.columns) == 1:
-            return with_key_val(
-                out.withColumnRenamed(out.columns[0], "line"),
-                "line",
-                spec.separator,
-                spec.num_key_fields,
+        if len(out.columns) != 1:
+            raise ValueError(
+                f"native mapper for branch {branch.dir_key!r} must return "
+                f"(key, value) or a single line column, got {out.columns}"
             )
-        raise ValueError(
-            f"native mapper for branch {branch.dir_key!r} must return "
-            f"(key, value) or a single line column, got {out.columns}"
+    elif branch.mapper is not None:
+        return pipe_map(
+            lines, branch.mapper, spec.separator, spec.num_key_fields,
+            opts=spec.pipe, counters=counters,
         )
-    return pipe_map(
-        lines, branch.mapper, spec.separator, spec.num_key_fields, opts=opts, counters=counters
+    return with_key_val(
+        out.withColumnRenamed(out.columns[0], "line"), "line", spec.separator, spec.num_key_fields
     )
 
 
-def _apply_reducer(
-    branch: Branch, kv: DataFrame, spec: JobSpec, opts: PipeOptions, counters=None
-) -> DataFrame:
+def _apply_reducer(branch: Branch, kv: DataFrame, spec: JobSpec, counters=None) -> DataFrame:
     """reducer -> DataFrame[key, value] (or kv unchanged when map-only)."""
     if branch.is_map_only:
         return kv
@@ -217,27 +198,32 @@ def _apply_reducer(
         num_partitions=branch.num_reduce_tasks,
         separator=spec.separator,
         num_key_fields=spec.num_key_fields,
-        opts=opts,
+        opts=spec.pipe,
         counters=counters,
         partition_fields=spec.partition_fields,
         sort_fields=spec.sort_fields,
     )
 
 
+def build_branches(lines: DataFrame, spec: JobSpec, counters=None) -> dict[str, DataFrame]:
+    """Every branch's DataFrame over one line frame, mapper then reducer
+    — the whole input for the batch runner, one micro-batch for
+    ``streaming.fanout.stream_fanout``."""
+    return {
+        b.dir_key: _apply_reducer(b, _apply_mapper(b, lines, spec, counters), spec, counters)
+        for b in spec.branches
+    }
+
+
 def _scan_and_branches(
     spark: SparkSession, spec: JobSpec, counters=None
 ) -> tuple[DataFrame, dict[str, DataFrame]]:
     """The single scan (persisted when share_mode="persist") and every
-    branch's DataFrame over it, mapper then reducer."""
+    branch's DataFrame over it."""
     lines = _load_input(spark, spec)
     if spec.share_mode == "persist":
         lines = lines.persist(StorageLevel.MEMORY_AND_DISK)
-    out: dict[str, DataFrame] = {}
-    for branch in spec.branches:
-        opts = _pipe_options(spec, branch)
-        kv = _apply_mapper(branch, lines, spec, opts, counters)
-        out[branch.dir_key] = _apply_reducer(branch, kv, spec, opts, counters)
-    return lines, out
+    return lines, build_branches(lines, spec, counters)
 
 
 def plan_branches(spark: SparkSession, spec: JobSpec) -> dict[str, DataFrame]:
@@ -279,8 +265,7 @@ def _materialize_phase1(
         lines = _load_input(spark, spec).persist(StorageLevel.MEMORY_AND_DISK)
 
         def write_map_output(branch: Branch) -> None:
-            opts = _pipe_options(spec, branch)
-            kv = _apply_mapper(branch, lines, spec, opts, counters)
+            kv = _apply_mapper(branch, lines, spec, counters)
             write_kv_text(
                 kv,
                 f"{spec.output}/mapoutput/{branch.dir_key}",
@@ -366,12 +351,10 @@ def _run_job_planned(
     caller's finally regardless of where this raises)."""
     if spec.share_mode == "materialize":
         inter = _materialize_phase1(spark, spec, mode, counters)
-        plans = {}
-        for branch in spec.branches:
-            opts = _pipe_options(spec, branch)
-            plans[branch.dir_key] = _apply_reducer(
-                branch, inter[branch.dir_key], spec, opts, counters
-            )
+        plans = {
+            b.dir_key: _apply_reducer(b, inter[b.dir_key], spec, counters)
+            for b in spec.branches
+        }
         shared = None
     else:
         lines, plans = _scan_and_branches(spark, spec, counters)

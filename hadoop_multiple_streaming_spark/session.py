@@ -1,71 +1,20 @@
-"""SparkSession factory + engine configuration.
+"""SparkSession factory.
 
 The reference exposed its config surface as ``-D``/``-jobconf`` JobConf
 passthrough plus a handful of ``stream.*`` knobs
 (MapStreamJob.java:325-332, MultiPipeMapRed.java:157,162-163,232-241).
-Here the engine config is an explicit dataclass (no stringly smuggling)
-and the SparkSession is tuned for OLAP-at-scale defaults: AQE on
-(runtime re-plan, skew-join splitting, partition coalescing), UTC
-session timezone (oracle comparability), Arrow for pandas interchange.
+Here the ``stream.*`` keys land on the job's ``PipeOptions``
+(``cli.parse_job``) and everything else is Spark conf; the
+SparkSession is tuned for OLAP-at-scale defaults: AQE on (runtime
+re-plan, skew-join splitting, partition coalescing), UTC session
+timezone (oracle comparability), Arrow for pandas interchange.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
-
-
-@dataclass
-class EngineConfig:
-    """Engine-level knobs (reference: stream.* JobConf keys).
-
-    non_zero_exit_is_failure  <- stream.non.zero.exit.is.failure
-                                 (MultiPipeMapRed.java:162-163)
-    min_records_before_skip   <- stream.minRecWrittenToEnableSkip_
-                                 (MultiPipeMapRed.java:232-241)
-    field_separator           <- stream.map.output.field.separator
-                                 (MultiPipeMapper.java:117-122)
-    num_key_fields            <- stream.num.map.output.key.fields
-                                 (MultiPipeMapper.java:123-124)
-    """
-
-    non_zero_exit_is_failure: bool = True
-    min_records_before_skip: int = 2**63 - 1  # skip disabled by default
-    field_separator: str = "\t"
-    num_key_fields: int = 1
-    #: -D stream.tmpdir — ENGINE EXTENSION: overrides the child's
-    #: always-exported TMPDIR (the reference always exports
-    #: java.io.tmpdir, MultiPipeMapRed.java:204-205; its own
-    #: stream.tmpdir, MapStreamJob.java:645, only staged client-side
-    #: job jars). None = export parent TMPDIR / OS tempdir.
-    tmpdir: str | None = None
-    cmd_env: dict[str, str] = field(default_factory=dict)
-
-    @classmethod
-    def from_conf(cls, conf: dict[str, str]) -> "EngineConfig":
-        """Map the reference's ``-D stream.*`` keys onto engine knobs
-        (consumed by cli.parse_job -> JobSpec -> PipeOptions)."""
-        cfg = cls()
-        nz = conf.pop("stream.non.zero.exit.is.failure", None)
-        if nz is not None:
-            cfg.non_zero_exit_is_failure = nz.strip().lower() != "false"
-        skip = conf.pop("stream.minrecwrittentoenableskip", None)
-        if skip is not None:
-            cfg.min_records_before_skip = int(skip)
-        cfg.field_separator = conf.pop("stream.map.output.field.separator", cfg.field_separator)
-        nkf = conf.pop("stream.num.map.output.key.fields", None)
-        if nkf is not None:
-            cfg.num_key_fields = int(nkf)
-        cfg.tmpdir = conf.pop("stream.tmpdir", cfg.tmpdir)
-        return cfg
-    # scan sharing strategy for fan-out: "persist" (cache in executors,
-    # right for inputs that fit cluster memory+disk) or "materialize"
-    # (phase-1-style write of branch inputs, right at 100 TB where the
-    # cache cannot hold the scan — mirrors the reference's mapoutput/
-    # intermediate, MultiStreamJobRunner.java:48-73).
-    share_mode: str = "persist"
 
 
 def _default_driver_memory() -> str:

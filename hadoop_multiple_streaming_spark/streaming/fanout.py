@@ -30,7 +30,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..plans.model import Branch
+from ..plans.model import Branch, JobSpec
+from ..plans.runner import build_branches
+from ..sources.io import write_kv_text
 
 
 def stream_fanout(
@@ -41,49 +43,38 @@ def stream_fanout(
     available_now: bool = True,
 ):
     """Fan a streaming line DataFrame out to N branch directories
-    (``output/<dirKey>/``): each micro-batch is persisted once and
-    every branch's NATIVE transform (mapper/reducer callables on the
-    Branch) runs against it — one source read per batch for all N
+    (``output/<dirKey>/``): each micro-batch is persisted once and every
+    branch runs against it — one source read per batch for all N
     branches, the reference's phase-1 economy in streaming form.
 
-    Branch mappers may be native callables OR subprocess commands
-    (pipe semantics, like the batch runner). Caveat: a subprocess is
-    rerun on micro-batch replay, so exactly-once holds only if the
-    executable is deterministic.
+    Each micro-batch's branches are built by the batch runner's own
+    mapper -> reducer plan (``plans.runner.build_branches``, default
+    JobSpec framing and pipe options), so a branch computes per batch
+    exactly what ``run_job`` computes over the same lines. Mappers and
+    reducers may be subprocess commands, native callables or
+    ``aggregate``; a native mapper sees the batch's single column under
+    its own name. Every reducer reduces ONE micro-batch: nothing
+    carries over between batches, so a key spread over several batches
+    yields one output row per batch (``NONE`` stays map-only). A
+    subprocess is rerun on micro-batch replay, so exactly-once holds
+    only if the executable is deterministic.
 
-    Sink framing matches the BATCH runner byte for byte (asserted by
+    Sink framing matches the batch runner byte for byte (asserted by
     tests/test_streaming_equivalence.py::test_stream_fanout_equals_
-    batch_run_job): (key, value) and single-column branch outputs are
-    written as Hadoop-faithful ``key SEP value`` text lines — the
-    separator always present, empty value included — so a consumer can
-    switch a branch between run_job and stream_fanout without a format
-    change. Other multi-column outputs write parquet."""
+    batch_run_job): a (key, value) branch output is written as
+    Hadoop-faithful ``key SEP value`` text lines — the separator always
+    present, empty value included — so a consumer can switch a branch
+    between run_job and stream_fanout without a format change. Other
+    outputs of a native reducer write parquet."""
+    spec = JobSpec(inputs=[], output=output, branches=branches)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..functions.kv import join_key_val, with_key_val
-        from ..operators.pipe import pipe_map
-
         shared = batch_df.persist()
         try:
-            for branch in branches:
-                out = shared
-                if branch.mapper is not None:
-                    if callable(branch.mapper):
-                        out = branch.mapper(out)
-                    else:  # subprocess pipe branch (P1), per micro-batch
-                        lines = out.withColumnRenamed(out.columns[0], "line")
-                        out = pipe_map(lines, branch.mapper)
-                if branch.reducer is not None and callable(branch.reducer):
-                    out = branch.reducer(out)
-                path = f"{output}/{branch.dir_key}"
-                if len(out.columns) == 1:  # normalize like the batch runner
-                    out = with_key_val(
-                        out.withColumnRenamed(out.columns[0], "line"), "line"
-                    )
+            for key, out in build_branches(shared, spec).items():
+                path = f"{output}/{key}"
                 if set(out.columns) == {"key", "value"}:
-                    out.select(
-                        join_key_val("key", "value").alias("value")
-                    ).write.mode("append").text(path)
+                    write_kv_text(out, path, spec.separator, mode="append")
                 else:
                     out.write.mode("append").parquet(path)
         finally:

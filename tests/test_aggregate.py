@@ -207,6 +207,19 @@ def test_aggregate_typed_raises_on_null_key(spark):
     assert ok == {"a": "3", "b": "5"}
 
 
+def test_aggregate_reduce_names_null_key(spark):
+    """A null key on the descriptor path fails with the same message as
+    the typed entry, the key rendered as <null> (not a null message),
+    on both the generic and the declared-menu plan."""
+    kv = spark.createDataFrame(
+        [("LongValueSum:a", "1"), (None, "2")], "key string, value string"
+    )
+    for types in (None, ["LongValueSum"]):
+        with pytest.raises(Exception, match="missing 'AggType:' prefix") as err:
+            aggregate_reduce(kv, types).collect()
+        assert "for key: <null>" in str(err.value), types
+
+
 def test_aggregate_typed_menu_matches_descriptor_path(spark):
     """Every sum/max/min type of the shared menu gives the descriptor
     path's answer from typed columns (a non-string key is rendered to

@@ -136,6 +136,24 @@ def test_grouped_pipe_reduce_per_key_isolation(spark):
     # numbering restarts at 1 for key b — per-group process isolation
     assert got == {("a", "1:x"), ("a", "2:y"), ("b", "1:z")}
 
+    # the reducer's lines re-split with splitKeyVal: two key fields,
+    # and a line with too few fields is all key
+    numberer2 = [
+        _sys.executable,
+        "-c",
+        (
+            "import sys\n"
+            "for i, line in enumerate(sys.stdin, 1):\n"
+            "    k, _, v = line.rstrip('\\n').partition('\\t')\n"
+            "    print(f'{k}\\t{i}\\t{v}' if v != 'z' else k)\n"
+        ),
+    ]
+    got = {
+        (r.key, r.value)
+        for r in grouped_pipe_reduce(df, numberer2, num_key_fields=2).collect()
+    }
+    assert got == {("a\t1", "x"), ("a\t2", "y"), ("b", "")}
+
 
 def test_nonzero_exit_fails(spark):
     bad = py("import sys; sys.stdin.read(); sys.exit(3)")
@@ -157,6 +175,17 @@ def test_env_injection(spark):
     opts = PipeOptions(env={"MY_FLAG": "hello42"})
     out = pipe_lines(lines_df(spark, ["x"]).coalesce(1), script, opts=opts)
     assert [r.line for r in out.collect()] == ["hello42"]
+
+
+def test_task_partition_export(spark):
+    # P6: the task context always reaches the child env
+    script = py(
+        "import os,sys; sys.stdin.read(); "
+        "print(os.environ['mapred_task_partition'], os.environ['mapreduce_task_partition'])"
+    )
+    two_parts = spark.sparkContext.parallelize([Row(line="x"), Row(line="y")], 2)
+    out = pipe_lines(spark.createDataFrame(two_parts), script)
+    assert sorted(r.line for r in out.collect()) == ["0 0", "1 1"]
 
 
 def test_tmpdir_export(spark, tmp_path):

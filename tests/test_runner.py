@@ -224,6 +224,23 @@ def test_cli_end_to_end(spark, textdir, scripts, tmp_path):
     assert read_out(f"{out}/WC") == EXPECTED_WC
 
 
+def test_cli_file_shipped_script_as_interpreter_argument(spark, textdir, scripts, tmp_path):
+    # -file ships the scripts; the branch names them relative to the
+    # task's shipped files, as arguments to the interpreter (not argv[0])
+    out = str(tmp_path / "cli_out")
+    rc = cli_main(
+        [
+            "-input", textdir,
+            "-output", out,
+            "-mapred", f"WC|{sys.executable} {WC_MAP}|{sys.executable} {WC_RED}",
+            "-file", f"{scripts}/{WC_MAP}",
+            "-file", f"{scripts}/{WC_RED}",
+        ]
+    )
+    assert rc == EXIT_OK
+    assert read_out(f"{out}/WC") == EXPECTED_WC
+
+
 def test_materialize_resume_skips_completed_phase1(spark, tmp_path):
     """resume=True: a _SUCCESS-marked mapoutput/<dirKey>/ survives and
     is NOT recomputed (its content is reused even if the input since

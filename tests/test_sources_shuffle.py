@@ -148,6 +148,48 @@ def test_cli_partitioner_options(spark, tmp_path):
     assert "mapred.text.key.partitioner.options" not in conf
 
 
+def test_cli_stream_conf_keys_set_job_and_pipe_fields():
+    # each -D stream.* key (the reference's spellings, plus the
+    # lowercase skip key) sets its field and leaves the Spark conf
+    from hadoop_multiple_streaming_spark.cli import parse_job
+
+    base = ["-input", "in", "-output", "out", "-mapred", "X|cat|cat", "-D", "spark.x=1"]
+    cases = {
+        "stream.map.output.field.separator": (",", lambda s: s.separator, ","),
+        "stream.num.map.output.key.fields": ("2", lambda s: s.num_key_fields, 2),
+        "stream.non.zero.exit.is.failure": (
+            "false", lambda s: s.pipe.non_zero_exit_is_failure, False,
+        ),
+        "stream.minRecWrittenToEnableSkip_": (
+            "5", lambda s: s.pipe.min_records_before_skip, 5,
+        ),
+        "stream.minrecwrittentoenableskip": (
+            "7", lambda s: s.pipe.min_records_before_skip, 7,
+        ),
+        "stream.tmpdir": ("/tmp/stream", lambda s: s.pipe.tmpdir, "/tmp/stream"),
+    }
+    for key, (raw, get, want) in cases.items():
+        spec, conf, _ = parse_job([*base, "-D", f"{key}={raw}"])
+        assert get(spec) == want, key
+        assert conf == {"spark.x": "1"}, key
+    from hadoop_multiple_streaming_spark.cli import STREAM_CONF
+
+    assert set(cases) == set(STREAM_CONF)
+
+    # an explicit flag wins over its -D key
+    spec, conf, _ = parse_job(
+        [
+            *base,
+            "-D", "stream.map.output.field.separator=,",
+            "-D", "stream.num.map.output.key.fields=2",
+            "-separator", ";",
+            "-numKeyFields", "3",
+        ]
+    )
+    assert (spec.separator, spec.num_key_fields) == (";", 3)
+    assert conf == {"spark.x": "1"}
+
+
 def test_cli_parquet_input_with_column_pruning(spark, tmp_path):
     # S5 + pruned typed->lines bridge through the real CLI
     from hadoop_multiple_streaming_spark.cli import main as cli_main

@@ -329,6 +329,71 @@ def test_stream_fanout_equals_batch_run_job(spark, tmp_path):
         assert got == want, key
 
 
+def test_stream_fanout_reducers_equal_batch_run_job(spark, tmp_path):
+    """Pipe and aggregate reducers run per micro-batch: over a one-file
+    stream (one micro-batch) every branch writes what run_job writes
+    for the same file, and NONE stays map-only."""
+    import sys as _sys
+
+    from hadoop_multiple_streaming_spark.plans.model import AGGREGATE, NONE, Branch, JobSpec
+    from hadoop_multiple_streaming_spark.plans.runner import run_job
+    from hadoop_multiple_streaming_spark.streaming.fanout import stream_fanout
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    (indir / "f0.txt").write_text("the quick fox\nthe lazy dog\nthe fox\n")
+    wc_map = tmp_path / "wc_map.py"
+    wc_map.write_text(
+        "import sys\n"
+        "for line in sys.stdin:\n"
+        "    for w in line.split():\n"
+        "        print(w + '\\t1')\n"
+    )
+    wc_red = tmp_path / "wc_red.py"
+    wc_red.write_text(
+        "import sys\n"
+        "cur, tot = None, 0\n"
+        "for line in sys.stdin:\n"
+        "    k, v = line.rstrip('\\n').split('\\t', 1)\n"
+        "    if k != cur:\n"
+        "        if cur is not None: print(cur + '\\t' + str(tot))\n"
+        "        cur, tot = k, 0\n"
+        "    tot += int(v)\n"
+        "if cur is not None: print(cur + '\\t' + str(tot))\n"
+    )
+
+    def agg_mapper(df):  # single line column, whatever it is called
+        words = df.select(F.explode(F.split(df.columns[0], " ")).alias("w"))
+        return words.select(F.concat(F.lit("LongValueSum:"), "w", F.lit("\t1")))
+
+    def branches():
+        return [
+            Branch("WC", f"{_sys.executable} {wc_map}", f"{_sys.executable} {wc_red}"),
+            Branch("AGG", agg_mapper, AGGREGATE),
+            Branch("CAT", "cat", NONE),
+        ]
+
+    bout = str(tmp_path / "bout")
+    assert run_job(
+        spark, JobSpec(inputs=[str(indir)], output=bout, branches=branches())
+    ).succeeded
+    sout = str(tmp_path / "sout")
+    q = stream_fanout(
+        spark.readStream.format("text").load(str(indir)),
+        branches(),
+        output=sout,
+        checkpoint=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(180)
+
+    for key in ("WC", "AGG", "CAT"):
+        got = sorted(r.value for r in spark.read.text(f"{sout}/{key}").collect())
+        want = sorted(r.value for r in spark.read.text(f"{bout}/{key}").collect())
+        assert got == want, key
+        if key != "CAT":  # reduced, not just mapped
+            assert got == ["dog\t1", "fox\t2", "lazy\t1", "quick\t1", "the\t3"], key
+
+
 def test_streaming_incremental_minhash_equals_batch(spark, tmp_path):
     """The foreachBatch incremental MinHash screen must equal the
     BATCH composition of the same operators applied batch-after-batch:

@@ -1,8 +1,8 @@
 """Min-merge the round's bench runs into one judge-facing artifact
 (the r15 protocol): per-query min across every committed
-BENCH_LOCAL_<tag>_run*.json, total = sum of mins. Raw runs and their
-reps/ctrl sidecars stay committed alongside — the merge never hides a
-contended row, it only summarizes the quiet minima.
+runs/BENCH_LOCAL_<tag>_run*.json, total = sum of mins. Raw runs and
+their reps/ctrl sidecars stay committed in runs/ — the merge never
+hides a contended row, it only summarizes the quiet minima.
 
     python tools/merge_bench_runs.py TAG [OUT]
 
@@ -27,9 +27,9 @@ def main() -> int:
     out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
         REPO, f"BENCH_MERGE_{tag}.json"
     )
-    paths = sorted(glob.glob(os.path.join(REPO, f"BENCH_LOCAL_{tag}_run*.json")))
+    paths = sorted(glob.glob(os.path.join(REPO, "runs", f"BENCH_LOCAL_{tag}_run*.json")))
     if not paths:
-        print(f"no BENCH_LOCAL_{tag}_run*.json found")
+        print(f"no runs/BENCH_LOCAL_{tag}_run*.json found")
         return 1
     mins: dict[str, float] = {}
     sf = None
