@@ -375,6 +375,18 @@ def read_counters(counters) -> dict[str, int]:
     return totals
 
 
+def _conf_export(spark: SparkSession) -> dict[str, str]:
+    """Ship the engine to the executors and pick the conf exported to
+    every child: only engine-relevant keys (the full flattened conf
+    would be thousands of vars; the spirit of P6 without the bloat)."""
+    ensure_package_shipped(spark)
+    return {
+        k: v
+        for k, v in spark.sparkContext.getConf().getAll()
+        if k.startswith(("spark.app", "spark.master"))
+    }
+
+
 def pipe_lines(
     df: DataFrame,
     cmd: str | list[str],
@@ -412,15 +424,7 @@ def pipe_lines(
             f"encode(col, 'UTF-8') or read raw bytes"
         )
 
-    spark = df.sparkSession
-    ensure_package_shipped(spark)
-    # export only engine-relevant conf (full flattened conf would be
-    # thousands of vars); mirrors the spirit of P6 without the bloat.
-    conf_export = {
-        k: v
-        for k, v in spark.sparkContext.getConf().getAll()
-        if k.startswith(("spark.app", "spark.master"))
-    }
+    conf_export = _conf_export(df.sparkSession)
 
     def run(batches: Iterator) -> Iterator:
         from pyspark import TaskContext
@@ -551,35 +555,29 @@ def grouped_pipe_reduce(
     state it must not leak across keys, at the cost of one process
     spawn per key.
 
-    Grouped-map pandas path (Arrow batches both ways); the subprocess
-    contract is identical to pipe_reduce: `key SEP value` lines on
-    stdin (value-sorted within the group), stdout lines re-split by
-    splitKeyVal.
+    Grouped-map pandas path (Arrow batches both ways); each group runs
+    through the same subprocess driver as pipe_reduce, so the child
+    sees the same env (-cmdenv, TMPDIR, task partition) and exit-code
+    policy: `key SEP value` lines on stdin (value-sorted within the
+    group), stdout lines re-split by splitKeyVal.
     """
     opts = opts or PipeOptions()
     argv = split_args(cmd) if isinstance(cmd, str) else list(cmd)
-    ensure_package_shipped(df_kv.sparkSession)
+    conf_export = _conf_export(df_kv.sparkSession)
 
     def run_group(pdf):
         import pandas as pd
+        from pyspark import TaskContext
 
         pdf = pdf.sort_values(["key", "value"], kind="mergesort")
-        payload = "".join(
-            f"{k}{separator}{v}\n" for k, v in zip(pdf["key"], pdf["value"])
-        )
-        proc = subprocess.run(
-            _resolve_executable(argv),
-            input=payload.encode("utf-8"),
-            capture_output=True,
-        )
-        if proc.returncode != 0 and opts.non_zero_exit_is_failure:
-            raise IOError(
-                f"grouped pipe {argv!r} exited {proc.returncode}: "
-                f"{proc.stderr.decode('utf-8', 'replace')[:500]}"
+        lines = [f"{k}{separator}{v}" for k, v in zip(pdf["key"], pdf["value"])]
+        out = list(
+            _pipe_partition(
+                iter([pd.DataFrame({"line": lines})]),
+                argv, opts, TaskContext.get().partitionId(), conf_export, None,
             )
-        return pd.DataFrame(
-            {"line": proc.stdout.decode("utf-8", "replace").splitlines()}
         )
+        return pd.concat(out) if out else pd.DataFrame({"line": pd.Series([], dtype=object)})
 
     out = df_kv.groupBy("key").applyInPandas(run_group, schema="line string")
     return with_key_val(out, "line", separator, num_key_fields)

@@ -80,7 +80,6 @@ class JobSpec:
     output: str
     branches: list[Branch]
     input_format: str = "text"  # text | keyvalue | parquet | csv | json
-    input_options: dict[str, str] = field(default_factory=dict)
     #: for typed inputs: project to these columns BEFORE serializing to
     #: lines, so the pruning reaches the parquet scan (a scan that reads
     #: all columns for a 2-column pipe feed is wrong at 100 TB)

@@ -10,34 +10,41 @@ Spark translation: Catalyst does NOT share a scan across actions, so
 sharing is explicit (SURVEY §4.1):
 
 * share_mode="persist"    — cache the scan (memory-and-disk) and run
-  branch writes concurrently from a thread pool; FAIR scheduler pools
-  keep one branch from starving the rest. Right when the scan fits
+  the branch writes concurrently over it. Right when the scan fits
   cluster memory+disk.
-* share_mode="materialize" — reproduce the reference's phase 1: one
-  job pipes every record through all N mappers and writes
-  ``out/mapoutput/<dirKey>/`` in a single pass, then per-branch
-  shuffle+reduce jobs read those (restartable, and the only option at
-  100 TB where the cache can't hold the input).
+* share_mode="materialize" — reproduce the reference's phase 1: the
+  cached scan feeds all N mappers at once and each writes
+  ``out/mapoutput/<dirKey>/``, then per-branch shuffle+reduce jobs
+  read those (restartable, and the only option at 100 TB where the
+  cache can't hold the input).
 * share_mode="none"       — each branch re-reads the source. Right for
   columnar inputs where branches prune different columns: N cheap
   pruned scans beat one fat cached scan.
 
+``run_job`` is one function: the split confs live in one
+``session.scoped_conf``, one ``finally`` unpersists the cached scan
+however the job ends, and every concurrent wave (phase-1 map writes,
+final branch writes) runs through ``_each_branch`` — one thread pool,
+each branch in its own FAIR scheduler pool, polled from the calling
+thread with ``completed i/N`` progress lines.
+
 Failure isolation: one branch failing does not kill its siblings; per
 -branch success/fail is reported at the end and the job exit code
-reflects any failure (MultiStreamJobRunner.java:109-124, O4).
+reflects any failure (MultiStreamJobRunner.java:109-124, O4). A
+phase-1 mapper failure fails the job.
 """
 
 from __future__ import annotations
 
-import threading
+import os
 import time
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.kv import with_key_val
+from ..functions.kv import join_key_val, to_lines, with_key_val
 from ..operators.aggregate import aggregate_reduce
 from ..operators.pipe import make_counters, pipe_map, pipe_reduce, read_counters
 from ..sources.io import (
@@ -45,10 +52,10 @@ from ..sources.io import (
     read_table,
     read_text,
     ship_files,
-    table_to_lines,
     write_kv_text,
     write_table,
 )
+from ..session import scoped_conf
 from .model import AGGREGATE, Branch, JobSpec
 
 # exit-code contract (O4, MapStreamJob.java:997-1027)
@@ -113,27 +120,23 @@ def _load_input(spark: SparkSession, spec: JobSpec) -> DataFrame:
     tab-KV AFTER projection so the parquet scan stays pruned.
 
     The min_input_partitions floor is applied at the SCAN via the
-    split confs (set/restored by run_job); see _with_min_partitions
+    split confs (scoped by run_job); see _with_min_partitions
     for the non-splittable-input fallback."""
     if spec.input_format == "text":
         return _with_min_partitions(read_text(spark, spec.inputs), spec)
     if spec.input_format == "keyvalue":
         kv = read_key_value_text(spark, spec.inputs, spec.separator, spec.num_key_fields)
-        from ..functions.kv import join_key_val
-
         return _with_min_partitions(
             kv.select(join_key_val("key", "value", spec.separator).alias("line")), spec
         )
     # typed table -> lines bridge
-    dfs = [
-        read_table(spark, p, spec.input_format, **spec.input_options) for p in spec.inputs
-    ]
+    dfs = [read_table(spark, p, spec.input_format) for p in spec.inputs]
     df = dfs[0]
     for other in dfs[1:]:
         df = df.unionByName(other)
     if spec.input_columns:
         df = df.select(*spec.input_columns)  # pruning reaches the scan
-    return _with_min_partitions(table_to_lines(df, spec.separator), spec)
+    return _with_min_partitions(to_lines(df, spec.separator), spec)
 
 
 def _with_min_partitions(lines: DataFrame, spec: JobSpec) -> DataFrame:
@@ -215,75 +218,52 @@ def build_branches(lines: DataFrame, spec: JobSpec, counters=None) -> dict[str, 
     }
 
 
-def _scan_and_branches(
-    spark: SparkSession, spec: JobSpec, counters=None
-) -> tuple[DataFrame, dict[str, DataFrame]]:
-    """The single scan (persisted when share_mode="persist") and every
-    branch's DataFrame over it."""
+def _shared_scan(spark: SparkSession, spec: JobSpec) -> DataFrame:
+    """The single scan every branch reads, persisted when
+    share_mode="persist"."""
     lines = _load_input(spark, spec)
     if spec.share_mode == "persist":
         lines = lines.persist(StorageLevel.MEMORY_AND_DISK)
-    return lines, build_branches(lines, spec, counters)
+    return lines
 
 
 def plan_branches(spark: SparkSession, spec: JobSpec) -> dict[str, DataFrame]:
     """Build (but do not run) every branch's DataFrame — the plan IR is
     the DataFrame itself, inspectable with .explain() (replaces the
     reference's listJobConfProperties debugging surface, §3.2)."""
-    return _scan_and_branches(spark, spec)[1]
+    return build_branches(_shared_scan(spark, spec), spec)
 
 
-def _materialize_phase1(
-    spark: SparkSession, spec: JobSpec, mode: str, counters=None
-) -> dict[str, DataFrame]:
-    """Reference phase 1: run every branch's MAPPER over the single
-    scan and write out/mapoutput/<dirKey>/ in one concurrent wave; the
-    reduce phase then reads those files (restartability at 100 TB —
-    the cache can't hold the input, but HDFS can).
+def _each_branch(spark: SparkSession, branches: list[Branch], fn, progress_interval: float) -> list:
+    """Run ``fn(branch)`` for every branch at once, each in its branch's
+    FAIR pool (one branch's long stage does not starve its siblings),
+    and poll them like the reference's client, which submits its N jobs
+    and then reports completed/running counts until all are done
+    (MultiStreamJobRunner.java:48-108, O3). Results come back in branch
+    order once every branch has finished; the first exception in
+    branch order re-raises."""
+    sc = spark.sparkContext
 
-    The intermediate round-trips with ONE consistent framing: written
-    and re-read with spec.separator and spec.num_key_fields. (The
-    reference normalizes its intermediate to tab at
-    MultiPipeMapRed.java:462 but also re-splits it with the job's own
-    separator config in phase 2 — writing with the job separator keeps
-    both sides of our round-trip agreeing for any separator.)"""
-    import os
+    def in_pool(branch: Branch):
+        sc.setLocalProperty("spark.scheduler.pool", branch.dir_key)
+        try:
+            return fn(branch)
+        finally:
+            sc.setLocalProperty("spark.scheduler.pool", None)
 
-    def _is_complete(branch: Branch) -> bool:
-        # resume: a _SUCCESS-marked intermediate is phase-1 output that
-        # survived a previous run — reuse it; half-written dirs rewrite
-        return spec.resume and os.path.exists(
-            f"{spec.output}/mapoutput/{branch.dir_key}/_SUCCESS"
-        )
-
-    todo = [b for b in spec.branches if not _is_complete(b)]
-    skipped = [b.dir_key for b in spec.branches if _is_complete(b)]
-    if skipped:
-        print(f"[runner] resume: reusing phase-1 intermediate for {sorted(skipped)}")
-    inter: dict[str, DataFrame] = {}
-    if todo:
-        lines = _load_input(spark, spec).persist(StorageLevel.MEMORY_AND_DISK)
-
-        def write_map_output(branch: Branch) -> None:
-            kv = _apply_mapper(branch, lines, spec, counters)
-            write_kv_text(
-                kv,
-                f"{spec.output}/mapoutput/{branch.dir_key}",
-                spec.separator,
-                mode="overwrite" if spec.resume else mode,
-            )
-
-        with ThreadPoolExecutor(max_workers=min(len(todo), 8)) as pool:
-            list(pool.map(write_map_output, todo))
-        lines.unpersist()
-    for branch in spec.branches:
-        inter[branch.dir_key] = read_key_value_text(
-            spark,
-            f"{spec.output}/mapoutput/{branch.dir_key}",
-            spec.separator,
-            spec.num_key_fields,
-        )
-    return inter
+    with ThreadPoolExecutor(max_workers=min(len(branches), 8)) as pool:
+        futures = {pool.submit(in_pool, b): b.dir_key for b in branches}
+        pending = set(futures)
+        while pending:
+            _, pending = wait(pending, timeout=progress_interval)
+            if pending:
+                running = sorted(futures[f] for f in pending)
+                completed = sorted(k for f, k in futures.items() if f not in pending)
+                print(
+                    f"[runner] completed {len(completed)}/{len(branches)} "
+                    f"done={completed} running={running}"
+                )
+    return [f.result() for f in futures]
 
 
 def run_job(
@@ -291,10 +271,11 @@ def run_job(
     spec: JobSpec,
     progress_interval: float = 10.0,
 ) -> JobResult:
-    """Execute the fan-out: all branch writes run concurrently (the
-    reference submits all N reduce jobs then polls,
-    MultiStreamJobRunner.java:48-83); a progress reporter logs
-    completed/running branch keys (O3)."""
+    """Execute the fan-out. In materialize mode phase 1 writes every
+    branch's mapper output to ``out/mapoutput/<dirKey>/`` first (the
+    reference's phase 1: the cache can't hold a 100 TB input, but HDFS
+    can, and a resumed run reuses ``_SUCCESS``-marked intermediates);
+    then all branch writes run concurrently."""
     t0 = time.monotonic()
     if spec.files or spec.archives:
         ship_files(spark, spec.files, spec.archives)
@@ -310,106 +291,83 @@ def run_job(
     # scanning narrow and repartitioning. minPartitionNum alone is
     # advisory (the 4 MB open-cost floor wins on small files), so drop
     # openCostInBytes too — the floor is an explicit per-job opt-in.
-    # Originals restored in _restore_split_confs(); the setter sits
-    # INSIDE the try below so a failing plan build can't leak
-    # openCostInBytes=1 into the shared session (that conf makes every
-    # later scan plan pathological tiny splits).
-    _split_confs: dict[str, str | None] = {}
+    # The scope restores both however the job ends: openCostInBytes=1
+    # must never leak into the shared session (it makes every later
+    # scan plan pathological tiny splits).
+    split_confs = {
+        "spark.sql.files.minPartitionNum": str(spec.min_input_partitions),
+        "spark.sql.files.openCostInBytes": "1",
+    } if spec.min_input_partitions else {}
 
-    def _restore_split_confs() -> None:
-        for c, v in _split_confs.items():
-            if v is None:
-                spark.conf.unset(c)
-            else:
-                spark.conf.set(c, v)
+    def write_map_output(branch: Branch) -> None:
+        # one framing both ways: written and re-read with spec.separator
+        # and spec.num_key_fields (the reference normalizes to tab,
+        # MultiPipeMapRed.java:462, but re-splits with the job's own
+        # separator in phase 2)
+        write_kv_text(
+            _apply_mapper(branch, scan, spec, counters),
+            f"{spec.output}/mapoutput/{branch.dir_key}",
+            spec.separator,
+            mode="overwrite" if spec.resume else mode,
+        )
 
-    try:
-        if spec.min_input_partitions:
-            for c in (
-                "spark.sql.files.minPartitionNum",
-                "spark.sql.files.openCostInBytes",
-            ):
-                _split_confs[c] = spark.conf.get(c, None)
-            spark.conf.set(
-                "spark.sql.files.minPartitionNum", str(spec.min_input_partitions)
-            )
-            spark.conf.set("spark.sql.files.openCostInBytes", "1")
-        return _run_job_planned(spark, spec, mode, counters, t0, progress_interval)
-    finally:
-        _restore_split_confs()
-
-
-def _run_job_planned(
-    spark: SparkSession,
-    spec: JobSpec,
-    mode: str,
-    counters,
-    t0: float,
-    progress_interval: float,
-) -> JobResult:
-    """run_job body after conf setup (split confs restored by the
-    caller's finally regardless of where this raises)."""
-    if spec.share_mode == "materialize":
-        inter = _materialize_phase1(spark, spec, mode, counters)
-        plans = {
-            b.dir_key: _apply_reducer(b, inter[b.dir_key], spec, counters)
-            for b in spec.branches
-        }
-        shared = None
-    else:
-        lines, plans = _scan_and_branches(spark, spec, counters)
-        shared = lines if spec.share_mode == "persist" else None
-
-    done: dict[str, BranchResult] = {}
-    done_lock = threading.Lock()
-
-    def run_branch(branch: Branch) -> BranchResult:
-        # FAIR pools isolate branch scheduling (one branch's long stage
-        # doesn't starve siblings; reference runs N independent jobs)
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", branch.dir_key)
+    def write_branch(branch: Branch) -> BranchResult:
         path = f"{spec.output}/{branch.dir_key}"
         bt0 = time.monotonic()
         try:
+            df = plans[branch.dir_key]
             if spec.output_format == "text":
-                write_kv_text(plans[branch.dir_key], path, spec.separator, branch.num_reduce_tasks, mode)
+                write_kv_text(df, path, spec.separator, branch.num_reduce_tasks, mode)
             else:
                 # S9: typed final sink (-outputformat, the reference's
                 # reflective OutputFormat load RedStreamJob.java:785-797)
-                df = plans[branch.dir_key]
                 if branch.num_reduce_tasks is not None:
                     df = df.coalesce(branch.num_reduce_tasks)  # G3 parity
                 write_table(df, path, fmt=spec.output_format, mode=mode)
-            res = BranchResult(branch.dir_key, True, path, seconds=time.monotonic() - bt0)
+            return BranchResult(branch.dir_key, True, path, seconds=time.monotonic() - bt0)
         except Exception as e:  # failure isolation: siblings keep going
-            res = BranchResult(branch.dir_key, False, path, error=str(e)[:500], seconds=time.monotonic() - bt0)
-        finally:
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
-        with done_lock:
-            done[branch.dir_key] = res
-        return res
-
-    stop_reporting = threading.Event()
-
-    def report() -> None:  # O3 progress poller
-        while not stop_reporting.wait(progress_interval):
-            with done_lock:
-                completed = sorted(done)
-            running = sorted(set(b.dir_key for b in spec.branches) - set(completed))
-            print(
-                f"[runner] completed {len(completed)}/{len(spec.branches)} "
-                f"done={completed} running={running}"
+            return BranchResult(
+                branch.dir_key, False, path, error=str(e)[:500], seconds=time.monotonic() - bt0
             )
 
-    reporter = threading.Thread(target=report, daemon=True)
-    reporter.start()
-    try:
-        with ThreadPoolExecutor(max_workers=min(len(spec.branches), 8)) as pool:
-            results = list(pool.map(run_branch, spec.branches))
-    finally:
-        stop_reporting.set()
-        reporter.join()
-        if shared is not None:
-            shared.unpersist()
+    scan: DataFrame | None = None  # unpersisted below if it was persisted
+    with scoped_conf(spark, split_confs):
+        try:
+            if spec.share_mode == "materialize":
+                # resume: a _SUCCESS-marked intermediate survived a
+                # previous run — reuse it; half-written dirs rewrite
+                reused = {
+                    b.dir_key for b in spec.branches
+                    if spec.resume
+                    and os.path.exists(f"{spec.output}/mapoutput/{b.dir_key}/_SUCCESS")
+                }
+                if reused:
+                    print(f"[runner] resume: reusing phase-1 intermediate for {sorted(reused)}")
+                todo = [b for b in spec.branches if b.dir_key not in reused]
+                if todo:
+                    scan = _load_input(spark, spec).persist(StorageLevel.MEMORY_AND_DISK)
+                    _each_branch(spark, todo, write_map_output, progress_interval)
+                plans = {
+                    b.dir_key: _apply_reducer(
+                        b,
+                        read_key_value_text(
+                            spark,
+                            f"{spec.output}/mapoutput/{b.dir_key}",
+                            spec.separator,
+                            spec.num_key_fields,
+                        ),
+                        spec,
+                        counters,
+                    )
+                    for b in spec.branches
+                }
+            else:
+                scan = _shared_scan(spark, spec)
+                plans = build_branches(scan, spec, counters)
+            results = _each_branch(spark, spec.branches, write_branch, progress_interval)
+        finally:
+            if scan is not None and scan.is_cached:
+                scan.unpersist()
 
     result = JobResult(results=results, seconds=time.monotonic() - t0)
     for r in results:  # final verdict (reportSuccessful, O3/O4)

@@ -13,8 +13,20 @@ timezone (oracle comparability), Arrow for pandas interchange.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
+
+#: runtime-settable SQL defaults: the builder sets them on a new
+#: session, ``tune_session`` on one handed to us
+_SQL_DEFAULTS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
 
 
 def _default_driver_memory() -> str:
@@ -52,11 +64,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(map=_SQL_DEFAULTS)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.scheduler.mode", "FAIR")
         # static conf, read once at first codegen: the default 100-entry
@@ -155,13 +163,7 @@ def ensure_package_shipped(spark: SparkSession) -> None:
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply engine defaults to an externally-provided session (the
     driver harness hands us one); only runtime-settable confs."""
-    for k, v in {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-    }.items():
+    for k, v in _SQL_DEFAULTS.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -170,3 +172,23 @@ def tune_session(spark: SparkSession) -> SparkSession:
     # same reason get_spark ships it (see ensure_package_shipped)
     ensure_package_shipped(spark)
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set session confs for the body of a ``with`` block, then put each
+    back as it was: its previous value, or unset. ``get(k, None)``
+    tells "unset" from an explicit value; a bare ``get(k)`` would
+    resolve the built-in default and pin it on restore."""
+    conf = spark.conf
+    saved = {k: conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)

@@ -21,7 +21,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.kv import join_key_val, to_lines, with_key_val
+from ..functions.kv import join_key_val, with_key_val
+from ..session import scoped_conf
 
 # ---------------------------------------------------------------- sources
 
@@ -63,14 +64,6 @@ def read_table(
     load the reference did with ``-inputformat <class>``
     (MapStreamJob.java:730-738)."""
     return spark.read.format(fmt).options(**options).load(path)
-
-
-def table_to_lines(df: DataFrame, separator: str = "\t") -> DataFrame:
-    """The typed->text bridge (S4/M4): serialize any table to lines so
-    pipe branches can consume it. Column pruning happens BEFORE this
-    (select the columns you need first — the projection is pushed to
-    the parquet scan)."""
-    return to_lines(df, separator)
 
 
 def read_custom_framing(
@@ -146,18 +139,9 @@ def write_kv_text(
     ``mode='error'`` preserves the reference's output-exists failure
     (exit code 4, O4)."""
     lines = df_kv.select(join_key_val("key", "value", separator).alias("line"))
-    write_lines(lines, path, num_files=num_files, mode=mode)
-
-
-def write_lines(
-    df_lines: DataFrame,
-    path: str,
-    num_files: int | None = None,
-    mode: str = "error",
-) -> None:
     if num_files is not None:
-        df_lines = df_lines.coalesce(num_files)
-    df_lines.write.mode(mode).text(path)
+        lines = lines.coalesce(num_files)
+    lines.write.mode(mode).text(path)
 
 
 def write_demux(
@@ -261,32 +245,17 @@ def write_sized(
     concurrent advisory-sensitive write on the same session)."""
     if target_mb < 1:
         raise ValueError(f"write_sized: target_mb must be >= 1, got {target_mb}")
-    spark = df.sparkSession
-    conf = spark.conf
     scoped = {
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": f"{int(target_mb)}m",
         # allow AQE to emit partitions smaller than advisory when
         # coalescing — otherwise tiny tables refuse to split/merge
         "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
     }
-    saved: dict[str, str | None] = {}
-    for k, v in scoped.items():
-        # get(k, None) distinguishes "unset" (None -> unset on restore)
-        # from an explicit session value; bare get(k) would resolve the
-        # built-in default and pin it explicitly on restore
-        saved[k] = conf.get(k, None)
-        conf.set(k, v)
-    try:
+    with scoped_conf(df.sparkSession, scoped):
         w = df.hint("rebalance").write.format(fmt).options(**options).mode(mode)
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.save(path)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
 
 
 def write_training_shards(

@@ -385,7 +385,7 @@ def streaming_incremental_minhash(
     Replay/EXACTLY-ONCE: both writes are mode("overwrite") into a
     batch_id-keyed subdirectory (the demux sink's idempotent
     crash-restart layout, sources/io.py write_demux /
-    plans/runner._materialize_phase1), so re-running micro-batch N
+    plans.runner.run_job's phase 1), so re-running micro-batch N
     REPLACES its own output instead of appending duplicates. The store
     probe excludes the current batch's own subdirectory — a replay
     that crashed AFTER the store write would otherwise collide with

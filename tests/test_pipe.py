@@ -175,6 +175,13 @@ def test_env_injection(spark):
     opts = PipeOptions(env={"MY_FLAG": "hello42"})
     out = pipe_lines(lines_df(spark, ["x"]).coalesce(1), script, opts=opts)
     assert [r.line for r in out.collect()] == ["hello42"]
+    # the per-group reducer's children get the same env
+    from hadoop_multiple_streaming_spark.operators.pipe import grouped_pipe_reduce
+
+    kv = spark.createDataFrame([("k", "x")], "key string, value string")
+    grouped = py("import os,sys; sys.stdin.read(); print('k\\t' + os.environ['MY_FLAG'])")
+    out = grouped_pipe_reduce(kv, grouped, opts=opts)
+    assert [(r.key, r.value) for r in out.collect()] == [("k", "hello42")]
 
 
 def test_task_partition_export(spark):

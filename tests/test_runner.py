@@ -316,6 +316,37 @@ def test_split_confs_restored_on_bad_input(spark, tmp_path):
     assert spark.conf.get("spark.sql.files.openCostInBytes", None) == before
 
 
+def test_failed_job_leaves_no_cached_scan(spark, textdir, tmp_path):
+    # a job that raises, in phase 1 or while building its plans, must
+    # still release the scan it persisted
+    def three_columns(lines):
+        return lines.select(F.col("line").alias("a"), F.lit(1).alias("b"), F.lit(2).alias("c"))
+
+    def cache_state():
+        jss = spark._jsparkSession
+        return (
+            spark.sparkContext._jsc.getPersistentRDDs().size(),
+            jss.sharedState().cacheManager().isEmpty(),
+        )
+
+    cases = [
+        (Exception, Branch("X", mapper="false"), "materialize"),
+        (ValueError, Branch("X", mapper=three_columns), "persist"),
+    ]
+    spark.catalog.clearCache()
+    for i, (error, branch, share_mode) in enumerate(cases):
+        before = cache_state()
+        spec = JobSpec(
+            inputs=[textdir],
+            output=str(tmp_path / f"out{i}"),
+            branches=[branch],
+            share_mode=share_mode,
+        )
+        with pytest.raises(error):
+            run_job(spark, spec)
+        assert cache_state() == before, share_mode
+
+
 def test_materialize_crash_restart_exactly_once(spark, tmp_path):
     """Job-level crash recovery (the restartability story the
     materialize intermediate layout exists for; reference parity:
