@@ -65,6 +65,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.io import HadoopFS
+
 #: bitmap ceiling: 2^27 bits = 16 MiB — comfortably broadcastable and
 #: enough for ~10^7 probe keys at ~16 bits/key; raise explicitly for
 #: larger blocklists (128 MiB holds ~10^9 keys at 1e-3 FPR)
@@ -353,22 +355,14 @@ def compact_bloom_store(spark, store_path: str) -> BloomFilterSpec | None:
     # half-written bitmap or a malformed batch_id value
     target = min(batch_ids + [0]) - 1
     save_bloom(spark, merged, f"{store_path}/.compact.tmp")
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    src = jvm.org.apache.hadoop.fs.Path(f"{store_path}/.compact.tmp")
-    dst = jvm.org.apache.hadoop.fs.Path(f"{store_path}/batch_id={target}")
-    fs = src.getFileSystem(conf)
-    if not fs.rename(src, dst):
-        raise IOError(
-            f"compact_bloom_store: rename {src} -> {dst} failed"
-        )
+    fs = HadoopFS(spark, store_path)
+    fs.rename(f"{store_path}/.compact.tmp", f"{store_path}/batch_id={target}")
     # delete originals LAST: a crash anywhere here leaves merged +
     # originals coexisting, and OR-union is idempotent — readers get
     # the same answers; re-running the compaction finishes the cleanup
     for b in sorted(fold_ids):
-        p = jvm.org.apache.hadoop.fs.Path(f"{store_path}/batch_id={b}")
         try:
-            fs.delete(p, True)
+            fs.delete(f"{store_path}/batch_id={b}")
         except Exception:
             pass
     return merged

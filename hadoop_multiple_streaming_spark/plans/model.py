@@ -108,10 +108,11 @@ class JobSpec:
     files: list[str] = field(default_factory=list)  # -file shipping (S10)
     #: -cacheArchive: archives unpacked into task working dirs (S10)
     archives: list[str] = field(default_factory=list)
-    #: "persist" = cache the scan in executors; "materialize" = write
-    #: per-branch mapoutput/<dirKey>/ like the reference's phase 1
-    #: (right at 100 TB, SURVEY §4.1); "none" = re-scan per branch
-    #: (input already fast/columnar and branches prune differently).
+    #: "persist" = cache the scan in executors; "materialize" = one
+    #: map-only job over one scan writes every branch's
+    #: mapoutput/<dirKey>/, like the reference's phase 1 (right at
+    #: 100 TB, SURVEY §4.1); "none" = re-scan per branch (input
+    #: already fast/columnar and branches prune differently).
     share_mode: str = "persist"
     #: S9 (-outputformat, RedStreamJob.java:785-797): final sink format
     #: per branch output. "text" = the reference's TextOutputFormat

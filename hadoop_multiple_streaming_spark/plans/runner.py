@@ -12,46 +12,61 @@ sharing is explicit (SURVEY §4.1):
 * share_mode="persist"    — cache the scan (memory-and-disk) and run
   the branch writes concurrently over it. Right when the scan fits
   cluster memory+disk.
-* share_mode="materialize" — reproduce the reference's phase 1: the
-  cached scan feeds all N mappers at once and each writes
-  ``out/mapoutput/<dirKey>/``, then per-branch shuffle+reduce jobs
-  read those (restartable, and the only option at 100 TB where the
-  cache can't hold the input).
+* share_mode="materialize" — reproduce the reference's phase 1 as one
+  map-only job over one uncached scan: each input split feeds all pipe
+  mappers through one Arrow fence, native and identity mappers run
+  beside it, and one demux write lands every branch in
+  ``out/mapoutput/<dirKey>/`` (``_map_phase``); then per-branch
+  shuffle+reduce jobs read those (restartable, and the only option at
+  100 TB where the cache can't hold the input).
 * share_mode="none"       — each branch re-reads the source. Right for
   columnar inputs where branches prune different columns: N cheap
   pruned scans beat one fat cached scan.
 
 ``run_job`` is one function: the split confs live in one
-``session.scoped_conf``, one ``finally`` unpersists the cached scan
-however the job ends, and every concurrent wave (phase-1 map writes,
-final branch writes) runs through ``_each_branch`` — one thread pool,
-each branch in its own FAIR scheduler pool, polled from the calling
-thread with ``completed i/N`` progress lines.
+``session.scoped_conf``, one ``finally`` unpersists a cached scan
+however the job ends, and the final branch writes run through
+``_each_branch`` — one thread pool, each branch in its own FAIR
+scheduler pool, polled from the calling thread with ``completed i/N``
+progress lines.
 
 Failure isolation: one branch failing does not kill its siblings; per
 -branch success/fail is reported at the end and the job exit code
 reflects any failure (MultiStreamJobRunner.java:109-124, O4). A
-phase-1 mapper failure fails the job.
+phase-1 pipe mapper failure is recorded for its branch instead of
+failing (and retrying) the Spark task: the siblings' intermediates
+still commit, then ``run_job`` raises the first failure in branch
+order, so a ``resume`` run is the retry and redoes only the failed
+branches.
 """
 
 from __future__ import annotations
 
-import os
 import time
 from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..functions.kv import join_key_val, to_lines, with_key_val
 from ..operators.aggregate import aggregate_reduce
-from ..operators.pipe import make_counters, pipe_map, pipe_reduce, read_counters
+from ..operators.pipe import (
+    make_counters,
+    pipe_fanout,
+    pipe_map,
+    pipe_reduce,
+    read_counters,
+)
 from ..sources.io import (
+    HadoopFS,
     read_key_value_text,
     read_table,
     read_text,
     ship_files,
+    write_demux,
     write_kv_text,
     write_table,
 )
@@ -266,16 +281,75 @@ def _each_branch(spark: SparkSession, branches: list[Branch], fn, progress_inter
     return [f.result() for f in futures]
 
 
+def _map_phase(spark: SparkSession, spec: JobSpec, branches: list[Branch], counters) -> None:
+    """Phase 1 as one job over one scan, the reference's map-only job:
+    every input split feeds all pipe mappers through one fence
+    (``pipe_fanout``), native and identity mappers run beside it, and
+    one demux write sends each branch's lines, re-framed with
+    splitKeyVal and the job's separator, to ``b=<i>`` of a hidden
+    staging dir (an integer index, so no dirKey needs escaping). After
+    the commit each ``b=<i>`` becomes ``mapoutput/<dirKey>/`` with a
+    ``_SUCCESS`` marker (PartitionByKeyField.java:6-17).
+
+    A pipe mapper's failure is recorded for its branch, not raised in
+    the task: its staging dir is dropped, its siblings still commit,
+    and the first failure in branch order raises here, so a resumed
+    run redoes only the failed branches."""
+    out = f"{spec.output}/mapoutput"
+    staging = f"{out}/.staging"
+    scan = _load_input(spark, spec)  # a missing input fails before any delete
+    fs = HadoopFS(spark, out)
+    for b in branches:
+        target = f"{out}/{b.dir_key}"
+        if fs.exists(target):
+            if not (spec.overwrite or spec.resume):
+                raise FileExistsError(f"path {target} already exists")
+            fs.delete(target)
+    pipes = [b for b in branches if b.mapper is not None and not callable(b.mapper)]
+    others = [b for b in branches if b not in pipes]
+    order = pipes + others  # staging b=<i> holds order[i]'s lines
+    if bool(pipes) + len(others) > 1:  # more than one union child reads it
+        scan = scan.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        parts = [
+            _apply_mapper(b, scan, spec).select(F.lit(i).alias("b"), "key", "value")
+            for i, b in enumerate(others, start=len(pipes))
+        ]
+        if pipes:
+            fenced, failures = pipe_fanout(scan, [b.mapper for b in pipes], spec.pipe, counters)
+            parts.append(with_key_val(fenced, "line", spec.separator, spec.num_key_fields))
+        lines = [
+            p.select("b", join_key_val("key", "value", spec.separator).alias("line"))
+            for p in parts
+        ]
+        write_demux(reduce(DataFrame.union, lines), staging, "b", mode="overwrite")
+    finally:
+        if scan.is_cached:
+            scan.unpersist()
+    failed = failures.value if pipes else {}
+    for i, b in enumerate(order):
+        if i not in failed:
+            target = f"{out}/{b.dir_key}"
+            if fs.exists(f"{staging}/b={i}"):  # a branch with no lines has none
+                fs.rename(f"{staging}/b={i}", target)
+            fs.mark_success(target)
+    fs.delete(staging)
+    for b in branches:  # the first failure in branch order
+        if order.index(b) in failed:
+            raise IOError(failed[order.index(b)])
+
+
 def run_job(
     spark: SparkSession,
     spec: JobSpec,
     progress_interval: float = 10.0,
 ) -> JobResult:
     """Execute the fan-out. In materialize mode phase 1 writes every
-    branch's mapper output to ``out/mapoutput/<dirKey>/`` first (the
-    reference's phase 1: the cache can't hold a 100 TB input, but HDFS
-    can, and a resumed run reuses ``_SUCCESS``-marked intermediates);
-    then all branch writes run concurrently."""
+    branch's mapper output to ``out/mapoutput/<dirKey>/`` first, in one
+    job (``_map_phase``; the reference's phase 1: the cache can't hold
+    a 100 TB input, but HDFS can, and a resumed run reuses
+    ``_SUCCESS``-marked intermediates); then all branch writes run
+    concurrently."""
     t0 = time.monotonic()
     if spec.files or spec.archives:
         ship_files(spark, spec.files, spec.archives)
@@ -298,18 +372,6 @@ def run_job(
         "spark.sql.files.minPartitionNum": str(spec.min_input_partitions),
         "spark.sql.files.openCostInBytes": "1",
     } if spec.min_input_partitions else {}
-
-    def write_map_output(branch: Branch) -> None:
-        # one framing both ways: written and re-read with spec.separator
-        # and spec.num_key_fields (the reference normalizes to tab,
-        # MultiPipeMapRed.java:462, but re-splits with the job's own
-        # separator in phase 2)
-        write_kv_text(
-            _apply_mapper(branch, scan, spec, counters),
-            f"{spec.output}/mapoutput/{branch.dir_key}",
-            spec.separator,
-            mode="overwrite" if spec.resume else mode,
-        )
 
     def write_branch(branch: Branch) -> BranchResult:
         path = f"{spec.output}/{branch.dir_key}"
@@ -336,17 +398,17 @@ def run_job(
             if spec.share_mode == "materialize":
                 # resume: a _SUCCESS-marked intermediate survived a
                 # previous run — reuse it; half-written dirs rewrite
+                fs = HadoopFS(spark, spec.output)
                 reused = {
                     b.dir_key for b in spec.branches
                     if spec.resume
-                    and os.path.exists(f"{spec.output}/mapoutput/{b.dir_key}/_SUCCESS")
+                    and fs.exists(f"{spec.output}/mapoutput/{b.dir_key}/_SUCCESS")
                 }
                 if reused:
                     print(f"[runner] resume: reusing phase-1 intermediate for {sorted(reused)}")
                 todo = [b for b in spec.branches if b.dir_key not in reused]
                 if todo:
-                    scan = _load_input(spark, spec).persist(StorageLevel.MEMORY_AND_DISK)
-                    _each_branch(spark, todo, write_map_output, progress_interval)
+                    _map_phase(spark, spec, todo, counters)
                 plans = {
                     b.dir_key: _apply_reducer(
                         b,

@@ -111,6 +111,9 @@ def get_spark(
         # rep and read as a sustained 3-6x Arrow-row inflation
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
+        # no console progress bar: PySpark turns it on, and in a
+        # captured log it is mostly carriage-return redraws
+        .config("spark.ui.showConsoleProgress", "false")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),

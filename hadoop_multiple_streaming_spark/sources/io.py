@@ -153,11 +153,12 @@ def write_demux(
 ) -> None:
     """S7: demultiplexing sink — route each record to a subdirectory
     named by its key and DROP the routing key from file contents
-    (PartitionByKeyField.java:8-16). ``partitionBy`` writes
-    ``out/<dir_key_col>=<v>/``; to match the reference's bare
-    ``out/<v>/`` layout use materialize_intermediate in plans.runner,
-    which writes per-branch paths. This variant is the single-job
-    single-shuffle form for huge N."""
+    (PartitionByKeyField.java:8-16), in one job. ``partitionBy`` writes
+    ``out/<dir_key_col>=<v>/``; the materialize phase 1 of
+    ``plans.runner.run_job`` gets the reference's bare
+    ``mapoutput/<dirKey>/`` layout by demuxing on an integer branch
+    index into a staging dir and renaming each ``b=<i>`` after the
+    commit (``HadoopFS``)."""
     df.select(dir_key_col, line_col).write.mode(mode).partitionBy(dir_key_col).text(out)
 
 
@@ -372,6 +373,31 @@ def write_training_shards(
             )
         m.coalesce(1).write.mode("overwrite").parquet(f"{path}/_manifest")
         m.unpersist()
+
+
+class HadoopFS:
+    """The Hadoop FileSystem behind a path, driven from the driver
+    through the JVM: one API for plain local paths, ``file://`` URIs,
+    HDFS and object stores, where ``os.path`` sees only the first."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        self._path = spark._jvm.org.apache.hadoop.fs.Path
+        self._fs = self._path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+
+    def exists(self, path: str) -> bool:
+        return bool(self._fs.exists(self._path(path)))
+
+    def delete(self, path: str) -> None:
+        """Recursive; nothing there is not an error."""
+        self._fs.delete(self._path(path), True)
+
+    def rename(self, src: str, dst: str) -> None:
+        if not self._fs.rename(self._path(src), self._path(dst)):
+            raise IOError(f"rename {src} -> {dst} failed")
+
+    def mark_success(self, directory: str) -> None:
+        """Write an empty ``_SUCCESS`` into ``directory``, creating it."""
+        self._fs.create(self._path(f"{directory}/_SUCCESS"), True).close()
 
 
 def ship_files(

@@ -32,7 +32,7 @@ from pyspark.sql.types import (
 
 from ..plans.model import Branch, JobSpec
 from ..plans.runner import build_branches
-from ..sources.io import write_kv_text
+from ..sources.io import HadoopFS, write_kv_text
 
 
 def stream_fanout(
@@ -236,10 +236,7 @@ def _best_effort_delete(spark: SparkSession, path: str) -> None:
     failure — callers use this only where a later overwrite makes the
     delete redundant for correctness."""
     try:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(p, True)
+        HadoopFS(spark, path).delete(path)
     except Exception:
         pass
 

@@ -417,3 +417,42 @@ def test_binary_split_key_val_reference_semantics(spark):
     )
     # rows without a separator gain the always-written trailing sep
     assert back == sorted([b"k\tv", b"k only\t", b"\xe9\t\xff\t\x00", b"\tv"])
+
+
+def test_fanout_driver_feeds_every_command_whole():
+    # one feed thread, more subprocesses than cores, a short switch
+    # interval: every command's stdout comes back whole, in order and
+    # under its own index, and the failing one is reported without
+    # touching its siblings
+    import os
+    import threading
+
+    import pandas as pd
+
+    from hadoop_multiple_streaming_spark.operators.pipe import _pipe_partition
+
+    lines = [f"r{i}" for i in range(25_000)]
+    batches = [pd.DataFrame({"line": lines[i : i + 3000]}) for i in range(0, len(lines), 3000)]
+    n = 2 * (os.cpu_count() or 1) + 1
+    argvs = [["cat"]] * n + [["sh", "-c", "head -1; exit 3"]]
+    got: dict[int, list] = {}
+    failed: dict[int, str] = {}
+
+    def consume():
+        for i, chunk in _pipe_partition(
+            iter(batches), argvs, PipeOptions(), 0, {}, None, failed=failed.__setitem__
+        ):
+            got.setdefault(i, []).extend(chunk)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        t = threading.Thread(target=consume, daemon=True)
+        t.start()
+        t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not t.is_alive()
+    assert all(got[i] == lines for i in range(n))
+    assert got[n] == ["r0"]
+    assert list(failed) == [n] and "sh" in failed[n]

@@ -549,3 +549,139 @@ def test_run_job_outputformat_json(spark, textdir, tmp_path):
         if not f.endswith(".crc")
     ]
     assert len(data_files) == 1, data_files
+
+
+def _logging_mapper(tmp_path, name, log):
+    """A pipe mapper that logs its task partition to ``log`` once per
+    invocation, then emits ``word\\t<name>`` per word."""
+    script = tmp_path / f"{name}_map.py"
+    script.write_text(
+        "import os, sys\n"
+        f"open({str(log)!r}, 'a').write(os.environ['mapred_task_partition'] + '\\n')\n"
+        "for line in sys.stdin:\n"
+        "    for w in line.split():\n"
+        f"        print(w + '\\t{name}')\n"
+    )
+    return f"{sys.executable} {script}"
+
+
+def test_materialize_phase1_is_one_job(spark, textdir, tmp_path):
+    # phase 1 feeds all pipe mappers from one scan in one job; each
+    # map-only branch then writes its final output in one job
+    logs = {k: tmp_path / f"{k}.log" for k in ("A", "B", "C")}
+    spec = JobSpec(
+        inputs=[textdir],
+        output=str(tmp_path / "out"),
+        branches=[Branch(k, mapper=_logging_mapper(tmp_path, k, log)) for k, log in logs.items()],
+        share_mode="materialize",
+    )
+    partitions = spark.read.text(textdir).rdd.getNumPartitions()
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(None) or [-1])
+    assert run_job(spark, spec).succeeded
+    after = max(tracker.getJobIdsForGroup(None) or [-1])
+    assert after - before == 1 + len(logs)
+    for k, log in logs.items():
+        # one invocation per input partition, no retries
+        assert sorted(log.read_text().split()) == [str(p) for p in range(partitions)], k
+        assert read_out(f"{tmp_path}/out/{k}") == read_out(f"{tmp_path}/out/mapoutput/{k}")
+        assert f"quick\t{k}" in read_out(f"{tmp_path}/out/mapoutput/{k}")
+
+
+def test_materialize_mixed_mappers_match_persist(spark, textdir, scripts, tmp_path):
+    # pipe, native and identity mappers share the one phase-1 write;
+    # intermediates equal the persist-mode map output, finals equal the
+    # persist-mode finals
+    def native_upper(lines):
+        return lines.select(F.upper("line").alias("line"))
+
+    def count_values(kv):
+        return kv.groupBy("key").agg(F.count("*").cast("string").alias("value"))
+
+    def branches(reduced):
+        return [
+            Branch(
+                "WC",
+                mapper=f"{sys.executable} {scripts}/{WC_MAP}",
+                reducer=f"{sys.executable} {scripts}/{WC_RED}" if reduced else None,
+            ),
+            Branch("UP", mapper=native_upper, reducer=count_values if reduced else None),
+            Branch("CAT"),
+        ]
+
+    def run(name, share_mode, reduced=True):
+        out = str(tmp_path / name)
+        spec = JobSpec(
+            inputs=[textdir], output=out, branches=branches(reduced), share_mode=share_mode
+        )
+        assert run_job(spark, spec).succeeded
+        return out
+
+    mat = run("mat", "materialize")
+    per = run("per", "persist")
+    map_only = run("map_only", "persist", reduced=False)
+    for k in ("WC", "UP", "CAT"):
+        assert read_out(f"{mat}/mapoutput/{k}") == read_out(f"{map_only}/{k}"), k
+        assert read_out(f"{mat}/{k}") == read_out(f"{per}/{k}"), k
+    assert read_out(f"{mat}/WC") == EXPECTED_WC
+
+
+def test_materialize_zero_row_branch_succeeds_empty(spark, textdir, scripts, tmp_path):
+    out = str(tmp_path / "out")
+    spec = JobSpec(
+        inputs=[textdir],
+        output=out,
+        branches=[
+            Branch("Z", mapper="awk 'NF>99'", reducer=f"{sys.executable} {scripts}/{WC_RED}"),
+            Branch("CAT"),
+        ],
+        share_mode="materialize",
+    )
+    assert run_job(spark, spec).succeeded
+    assert os.path.exists(f"{out}/mapoutput/Z/_SUCCESS")
+    assert read_out(f"{out}/mapoutput/Z") == []
+    assert os.path.exists(f"{out}/Z/_SUCCESS")
+    assert read_out(f"{out}/Z") == []
+    assert len(read_out(f"{out}/CAT")) == 4
+
+
+def test_materialize_dir_key_with_equals_and_space(spark, textdir, tmp_path):
+    out = str(tmp_path / "out")
+    key = "k=v x"
+    spec = JobSpec(
+        inputs=[textdir],
+        output=out,
+        branches=[Branch(key, mapper="cat"), Branch("CAT")],
+        share_mode="materialize",
+    )
+    assert run_job(spark, spec).succeeded
+    assert sorted(os.listdir(f"{out}/mapoutput")) == ["CAT", key]
+    assert os.path.exists(f"{out}/mapoutput/{key}/_SUCCESS")
+    assert read_out(f"{out}/mapoutput/{key}") == read_out(f"{out}/mapoutput/CAT")
+    assert read_out(f"{out}/{key}") == read_out(f"{out}/CAT")
+    assert "the quick fox\t" in read_out(f"{out}/{key}")
+
+
+def test_materialize_resume_sees_file_uri_output(spark, textdir, tmp_path):
+    # the _SUCCESS marker of a file:// output is found through the
+    # Hadoop FileSystem, so the completed branch's mapper is not re-run
+    log = tmp_path / "good.log"
+    out = tmp_path / "out"
+
+    def spec(resume):
+        return JobSpec(
+            inputs=[textdir],
+            output=f"file://{out}",
+            branches=[Branch("GOOD", mapper=_logging_mapper(tmp_path, "G", log))],
+            share_mode="materialize",
+            overwrite=True,
+            resume=resume,
+        )
+
+    assert run_job(spark, spec(resume=False)).succeeded
+    calls = log.read_text().count("\n")
+    assert calls > 0
+    assert run_job(spark, spec(resume=True)).succeeded
+    assert log.read_text().count("\n") == calls
+    assert read_out(f"{out}/GOOD") == read_out(f"{out}/mapoutput/GOOD")
+    assert "fox\tG" in read_out(f"{out}/GOOD")

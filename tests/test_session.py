@@ -35,6 +35,13 @@ def test_engine_session_defaults(spark):
     assert conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
 
 
+def test_console_progress_bar_off(spark):
+    # PySpark switches the bar on; get_spark's session keeps it off
+    sc = spark.sparkContext
+    assert sc.getConf().get("spark.ui.showConsoleProgress") == "false"
+    assert not sc._jsc.sc().progressBar().isDefined()
+
+
 def test_extra_conf_overrides_defaults():
     # callers may override any engine default without a new session
     # actually being built here — check the builder path statically:
