@@ -37,7 +37,7 @@ import argparse
 import sys
 
 from .operators.pipe import PipeOptions
-from .plans.model import Branch, JobSpec
+from .plans.model import SHARE_MODES, Branch, JobSpec
 from .plans.runner import EXIT_INVALID_CONF, EXIT_USAGE, exit_code_for, run_job
 from .session import get_spark
 
@@ -108,7 +108,7 @@ def build_parser() -> argparse.ArgumentParser:
     # stream.num.map.output.key.fields, else the JobSpec default
     p.add_argument("-separator", default=None)
     p.add_argument("-numKeyFields", type=int, default=None)
-    p.add_argument("-shareMode", default="persist", choices=["persist", "materialize", "none"])
+    p.add_argument("-shareMode", default="persist", choices=SHARE_MODES)
     p.add_argument(
         "-minPartitions",
         type=int,

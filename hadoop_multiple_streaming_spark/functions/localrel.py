@@ -20,6 +20,9 @@ timestamp, arrays thereof), and FALLS BACK to ``createDataFrame``
 verbatim for anything else (empty row sets, exotic types, row counts
 past ``max_rows`` — a VALUES list is parser work, linear in text
 size, so huge relations stay on the RDD path).
+
+``collect_bounded`` is the other direction: a relation pulled to the
+driver only when it provably fits a row cap.
 """
 
 from __future__ import annotations
@@ -27,7 +30,7 @@ from __future__ import annotations
 import datetime as _dt
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -134,3 +137,17 @@ def local_relation(
         + f" AS _lr(_del, {', '.join(names)})"
     )
     return spark.sql(sql)
+
+
+def collect_bounded(df: DataFrame, cap: int) -> list[Row] | None:
+    """Guarded driver-materialisation probe (guide §5): ONE CollectLimit
+    job bounded at ``cap + 1`` rows. Returns the rows when ``df`` has at
+    most ``cap`` of them, else None; the caller keeps its distributed
+    shape or raises its own error. Never collects more than ``cap + 1``
+    rows, whatever the relation's size; ``cap <= 0`` returns None
+    without running a job."""
+    cap = int(cap)
+    if cap <= 0:
+        return None
+    rows = df.limit(cap + 1).collect()
+    return None if len(rows) > cap else rows

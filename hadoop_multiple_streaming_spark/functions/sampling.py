@@ -230,7 +230,7 @@ def _grouped_hash_topk(
     from pyspark.sql.types import LongType, StructField, StructType
     from pyspark.sql.window import Window
 
-    from .localrel import local_relation
+    from .localrel import collect_bounded, local_relation
 
     spark = df.sparkSession
     gtype = df.schema[group_col].dataType
@@ -241,16 +241,13 @@ def _grouped_hash_topk(
     # quota arithmetic only need per-group totals, and the md5-free
     # count job is ~2x cheaper (0.37 s vs 0.65 s at sf0.1) — the
     # subgroup counts are fetched only when the skewed regime binds.
-    # cardinality-guarded collect (VERDICT r13 missing #4): limit(cap+1)
-    # bounds what ever reaches the driver, so an accidental near-unique
-    # group column fails with a clear message instead of a driver OOM
-    count_rows = (
-        df.groupBy(group_col)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .limit(_MAX_SAMPLE_GROUPS + 1)
-        .collect()
+    # cardinality-guarded collect (VERDICT r13 missing #4): an accidental
+    # near-unique group column fails with a clear message, not a driver OOM
+    count_rows = collect_bounded(
+        df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_n")),
+        _MAX_SAMPLE_GROUPS,
     )
-    if len(count_rows) > _MAX_SAMPLE_GROUPS:
+    if count_rows is None:
         raise ValueError(
             f"_grouped_hash_topk: group column {group_col!r} has more "
             f"than {_MAX_SAMPLE_GROUPS:,} distinct values — the sampler "
@@ -298,12 +295,10 @@ def _grouped_hash_topk(
     # |groups| x num_subgroups rows, the magnitude r12 broadcast anyway
     by_group: dict = {}
     _skew_cap = _max_skew_count_rows(num_subgroups)
-    sg_rows = (
-        _subgroup_counts(df, key_col, group_col, num_subgroups)
-        .limit(_skew_cap + 1)
-        .collect()
+    sg_rows = collect_bounded(
+        _subgroup_counts(df, key_col, group_col, num_subgroups), _skew_cap
     )
-    if len(sg_rows) > _skew_cap:
+    if sg_rows is None:
         raise ValueError(
             f"_grouped_hash_topk: group column {group_col!r} x "
             f"{num_subgroups} subgroups exceeds {_skew_cap:,} "

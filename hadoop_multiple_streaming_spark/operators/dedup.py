@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.localrel import collect_bounded
+
 # ------------------------------------------------------------------ exact
 
 
@@ -1043,8 +1045,8 @@ def auto_semantic_clusters(
     from pyspark.sql.window import Window
 
     from .similarity import (  # deferred: similarity imports dedup
+        _LOCAL_KMEANS_CAP,
         _lloyd_local_cents,
-        _try_collect_local,
         kmeans_assign_frame,
         kmeans_lloyd,
     )
@@ -1058,7 +1060,9 @@ def auto_semantic_clusters(
         # row_number seed pick, _lloyd_local_cents the update math.
         rows = local_rows
         if rows is None and _integral_id(quantized):
-            rows = _try_collect_local(quantized, ["id", "qv"])
+            rows = collect_bounded(
+                quantized.select("id", "qv"), _LOCAL_KMEANS_CAP
+            )
         if rows is not None:
             cent_rows = _local_seed_cents(rows, k)
             cent_rows = _lloyd_local_cents(
@@ -1567,10 +1571,10 @@ def semantic_dedup(
         # AND feeds the driver-local seed/Lloyd fast path downstream
         # (auto_semantic_clusters); at scale the probe early-stops and
         # every distributed shape is unchanged
-        from .similarity import _try_collect_local  # deferred
+        from .similarity import _LOCAL_KMEANS_CAP  # deferred
 
         local_rows = (
-            _try_collect_local(quantized, ["id", "qv"])
+            collect_bounded(quantized.select("id", "qv"), _LOCAL_KMEANS_CAP)
             if _integral_id(quantized)
             else None
         )

@@ -60,6 +60,7 @@ from ..functions.kv import (
     with_key_val_bytes,
 )
 from ..session import ensure_package_shipped
+from .shuffle import partition_sort
 
 LINE_SCHEMA = StructType([StructField("line", StringType(), True)])
 BINARY_LINE_SCHEMA = StructType([StructField("line", BinaryType(), True)])
@@ -99,12 +100,13 @@ class PipeOptions:
     tmpdir: str | None = None
 
 
-def split_args(cmd: str) -> list[str]:
+def split_args(cmd: str | list[str]) -> list[str]:
     """Quoted command-line splitting (P4). The reference implements a
     hand-rolled quote-aware tokenizer (splitArgs,
     MultiPipeMapRed.java:107-151); shlex in POSIX mode matches its
-    observable behavior for '...'/"..." quoting."""
-    return shlex.split(cmd)
+    observable behavior for '...'/"..." quoting. An argv list is
+    already split and is returned as a copy."""
+    return shlex.split(cmd) if isinstance(cmd, str) else list(cmd)
 
 
 def _build_env(opts: PipeOptions, partition_id: int, spark_conf: dict[str, str]) -> dict[str, str]:
@@ -463,7 +465,7 @@ def pipe_lines(
     exactly as it would in Hadoop streaming.
     """
     opts = opts or PipeOptions()
-    argv = split_args(cmd) if isinstance(cmd, str) else list(cmd)
+    argv = split_args(cmd)
     if len(df.columns) != 1:
         raise ValueError(f"pipe_lines expects a single line column, got {df.columns}")
     col_type = df.schema[df.columns[0]].dataType
@@ -524,7 +526,7 @@ def pipe_fanout(
     start). A failing command does not fail the task: its siblings'
     lines still come out, and the caller drops the failed command's."""
     opts = opts or PipeOptions()
-    argvs = [split_args(c) if isinstance(c, str) else list(c) for c in cmds]
+    argvs = [split_args(c) for c in cmds]
     if len(df.columns) != 1:
         raise ValueError(f"pipe_fanout expects a single line column, got {df.columns}")
     failures = df.sparkSession.sparkContext.accumulator({}, _FirstFailure())
@@ -620,30 +622,24 @@ def pipe_reduce(
     """
     if set(df_kv.columns) != {"key", "value"}:
         raise ValueError(f"pipe_reduce expects (key, value) columns, got {df_kv.columns}")
+    if binary and (partition_fields or sort_fields):
+        raise ValueError(
+            "pipe_reduce(binary=True) does not support partition_fields/"
+            "sort_fields (text subfield semantics); pre-arrange the bytes"
+        )
     n = num_partitions or df_kv.sparkSession.sparkContext.defaultParallelism
+    arranged = partition_sort(df_kv, n, partition_fields, sort_fields, separator)
     if binary:
-        if partition_fields or sort_fields:
-            raise ValueError(
-                "pipe_reduce(binary=True) does not support partition_fields/"
-                "sort_fields (text subfield semantics); pre-arrange the bytes"
-            )
         sep_b = (
             separator.encode("iso-8859-1")
             if isinstance(separator, str)
             else bytes(separator)
         )
-        arranged = df_kv.repartition(n, "key").sortWithinPartitions("key")
         lines = arranged.select(
             join_key_val_bytes("key", "value", sep_b).alias("line")
         )
         out = pipe_lines(lines, cmd, opts=opts, counters=counters, binary=True)
         return with_key_val_bytes(out, "line", sep_b, num_key_fields)
-    if partition_fields or sort_fields:
-        from .shuffle import partition_sort
-
-        arranged = partition_sort(df_kv, n, partition_fields, sort_fields, separator)
-    else:
-        arranged = df_kv.repartition(n, "key").sortWithinPartitions("key")
     lines = arranged.select(join_key_val("key", "value", separator).alias("line"))
     out = pipe_lines(lines, cmd, opts=opts, counters=counters)
     return with_key_val(out, "line", separator, num_key_fields)
@@ -670,7 +666,7 @@ def grouped_pipe_reduce(
     group), stdout lines re-split by splitKeyVal.
     """
     opts = opts or PipeOptions()
-    argv = split_args(cmd) if isinstance(cmd, str) else list(cmd)
+    argv = split_args(cmd)
     conf_export = _conf_export(df_kv.sparkSession)
 
     def run_group(pdf):

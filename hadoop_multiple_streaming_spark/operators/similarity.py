@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.localrel import collect_bounded
 from .dedup import _dot
 
 #: Row cap for the guarded driver-local Lloyd fast path (optimization
@@ -51,18 +52,6 @@ _LOCAL_KMEANS_CAP = min(
     int(os.environ.get("SPARK_GRAFT_LOCAL_KMEANS_CAP", str(1 << 17))),
     _LOCAL_KMEANS_CAP_CEIL,
 )
-
-
-def _try_collect_local(df: DataFrame, cols: list, cap: int | None = None):
-    """Guarded driver-materialisation probe (guide §5): ONE CollectLimit
-    job bounded at cap+1 rows. Returns the rows when the relation fits
-    the cap, else None (caller keeps the distributed shape). Never
-    collects more than cap+1 rows regardless of corpus size."""
-    cap = _LOCAL_KMEANS_CAP if cap is None else int(cap)
-    if cap <= 0:
-        return None
-    rows = df.select(*cols).limit(cap + 1).collect()
-    return None if len(rows) > cap else rows
 
 
 def _lloyd_local_cents(qvs: list, cent_rows: list, iters: int, dim: int) -> list:
@@ -335,7 +324,9 @@ def kmeans_lloyd(
             (r["cluster"], list(r["c"])) for r in init_centroids.collect()
         )
         local = (
-            _try_collect_local(quantized, ["qv"]) if iters > 1 else None
+            collect_bounded(quantized.select("qv"), _LOCAL_KMEANS_CAP)
+            if iters > 1
+            else None
         )
         if local is not None:
             # r15 local fast path: the iters-1 update-round JOBS (each a

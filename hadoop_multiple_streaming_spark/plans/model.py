@@ -39,6 +39,8 @@ Transform = Callable  # DataFrame -> DataFrame
 
 NONE = "NONE"
 AGGREGATE = "aggregate"
+#: how the branches share the input scan (JobSpec.share_mode, -shareMode)
+SHARE_MODES = ("persist", "materialize", "none")
 
 
 @dataclass
@@ -108,11 +110,11 @@ class JobSpec:
     files: list[str] = field(default_factory=list)  # -file shipping (S10)
     #: -cacheArchive: archives unpacked into task working dirs (S10)
     archives: list[str] = field(default_factory=list)
-    #: "persist" = cache the scan in executors; "materialize" = one
-    #: map-only job over one scan writes every branch's
-    #: mapoutput/<dirKey>/, like the reference's phase 1 (right at
-    #: 100 TB, SURVEY §4.1); "none" = re-scan per branch (input
-    #: already fast/columnar and branches prune differently).
+    #: one of SHARE_MODES. "persist" = cache the scan in executors;
+    #: "materialize" = one map-only job over one scan writes every
+    #: branch's mapoutput/<dirKey>/, like the reference's phase 1
+    #: (right at 100 TB, SURVEY §4.1); "none" = re-scan per branch
+    #: (input already fast/columnar and branches prune differently).
     share_mode: str = "persist"
     #: S9 (-outputformat, RedStreamJob.java:785-797): final sink format
     #: per branch output. "text" = the reference's TextOutputFormat
@@ -136,3 +138,8 @@ class JobSpec:
         keys = [b.dir_key for b in self.branches]
         if len(set(keys)) != len(keys):
             raise ValueError(f"duplicate branch dirKeys: {keys}")
+        if self.share_mode not in SHARE_MODES:
+            raise ValueError(
+                f"share_mode must be one of {', '.join(SHARE_MODES)}; "
+                f"got {self.share_mode!r}"
+            )

@@ -16,8 +16,6 @@ output file count in the reference).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -203,16 +201,15 @@ def compact_table(
     ~= total_bytes / 128 MB). Streaming sinks and per-branch fan-out
     writes accrete small files; scheduled compaction keeps scan
     parallelism aligned with data size instead of file count. Writes
-    to a temp sibling then swaps, so readers never see a half-written
-    table."""
-    import shutil
-    import tempfile
-
+    to a hidden sibling, then swaps it in through ``HadoopFS``, so the
+    table is never half-written and any filesystem URI works."""
+    head, sep, name = path.rstrip("/").rpartition("/")
+    tmp = f"{head}{sep}.{name}.compact"
     df = spark.read.format(fmt).load(path)
-    tmp = tempfile.mkdtemp(prefix="compact_", dir=os.path.dirname(path) or ".")
     df.repartition(target_partitions).write.format(fmt).mode("overwrite").save(tmp)
-    shutil.rmtree(path)
-    os.replace(tmp, path)
+    fs = HadoopFS(spark, path)
+    fs.delete(path)
+    fs.rename(tmp, path)
 
 
 def write_sized(

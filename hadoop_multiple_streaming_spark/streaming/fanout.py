@@ -18,6 +18,7 @@ shuffle partitions size the stateful store.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -80,9 +81,20 @@ def stream_fanout(
         finally:
             shared.unpersist()
 
-    writer = (
-        stream_df.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint)
+    return _start_foreach_batch(stream_df, process_batch, checkpoint, available_now)
+
+
+def _start_foreach_batch(
+    stream_df: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    available_now: bool,
+):
+    """Start ``stream_df`` through a checkpointed foreachBatch sink
+    calling ``process(batch_df, batch_id)``; ``available_now`` drains
+    what is there and stops."""
+    writer = stream_df.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
@@ -241,6 +253,47 @@ def _best_effort_delete(spark: SparkSession, path: str) -> None:
         pass
 
 
+def _prior_store(
+    spark: SparkSession, store_path: str, batch_id: int
+) -> DataFrame | None:
+    """The batch-keyed store as every batch but ``batch_id`` left it,
+    or None when there is no store yet.
+
+    The current batch's own subdir is EXCLUDED: a replay of batch N
+    that crashed after its store write must not collide with itself
+    (it would overwrite its survivors empty). ``batch_id`` is the hive
+    partition column, so this prunes the N subdir before any file IO.
+
+    ONLY an empty store means "first batch": a missing path, or a
+    pre-created dir with no parquet yet (UNABLE_TO_INFER_SCHEMA). Any
+    other failure (permissions, corrupt footer, transient FS, a dir
+    without the ``batch_id=`` layout) fails the batch, so the streaming
+    engine retries it instead of silently ingesting dups with
+    cross-batch screening disabled. Match on the stable error class
+    (Spark 3.4+ error framework; getCondition is the 4.x name, with
+    getErrorClass the pre-4.0 spelling), falling back to message
+    substrings for builds that don't populate it."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(store_path).where(
+            F.col("batch_id") != F.lit(int(batch_id))
+        )
+    except AnalysisException as e:
+        _get = getattr(e, "getCondition", None) or getattr(
+            e, "getErrorClass", None
+        )
+        klass = (_get() or "") if _get else ""
+        msg = str(e)
+        empty_store = klass in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA") or (
+            not klass
+            and ("Path does not exist" in msg or "Unable to infer schema" in msg)
+        )
+        if not empty_store:
+            raise
+        return None
+
+
 def ingest_minhash_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -256,8 +309,6 @@ def ingest_minhash_batch(
     module-level so the replay/crash-recovery contract is directly
     testable (tests re-invoke a batch_id to simulate the engine's
     retry). Semantics and layout: see streaming_incremental_minhash."""
-    from pyspark.errors import AnalysisException
-
     from ..operators.dedup import (
         minhash_band_buckets,
         minhash_signatures,
@@ -282,42 +333,11 @@ def ingest_minhash_batch(
     # it would recompute end-to-end for the second write
     buckets = minhash_band_buckets(sig, rows_per_band=rows_per_band).persist()
     try:
-        try:
-            store = (
-                spark.read.parquet(store_path)
-                # EXCLUDE this batch's own keys: a replay of batch N
-                # that crashed after the store write must not collide
-                # with itself (it would overwrite its survivors empty).
-                # batch_id is the hive partition column, so this prunes
-                # the N subdir before any file IO.
-                .where(F.col("batch_id") != F.lit(int(batch_id)))
-                .select("band", "bucket")
-            )
-        except AnalysisException as e:
-            # ONLY an empty store means "first batch": a missing
-            # path, or a pre-created dir with no parquet yet
-            # (UNABLE_TO_INFER_SCHEMA). Any other failure
-            # (permissions, corrupt footer, transient FS) must fail
-            # the batch so the streaming engine retries instead of
-            # silently ingesting dups with cross-batch screening
-            # disabled. Match on the stable error class (Spark 3.4+
-            # error framework; getCondition is the 4.x name, with
-            # getErrorClass the pre-4.0 spelling), falling back to
-            # message substrings for builds that don't populate it.
-            _get = getattr(e, "getCondition", None) or getattr(
-                e, "getErrorClass", None
-            )
-            klass = (_get() or "") if _get else ""
-            msg = str(e)
-            empty_store = klass in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA") or (
-                not klass
-                and ("Path does not exist" in msg or "Unable to infer schema" in msg)
-            )
-            if not empty_store:
-                raise
-            store = None
+        store = _prior_store(spark, store_path, batch_id)
         cross = (
-            buckets.join(store, ["band", "bucket"], "left_semi").select("id")
+            buckets.join(
+                store.select("band", "bucket"), ["band", "bucket"], "left_semi"
+            ).select("id")
             if store is not None
             else buckets.select("id").limit(0)
         )
@@ -394,27 +414,17 @@ def streaming_incremental_minhash(
     parquet on `bucket` so the per-batch probe joins without
     re-shuffling the store side, and compact old batch_id subdirs
     (sources.io.compact_table) on a schedule."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_minhash_batch(
-            batch_df,
-            batch_id,
-            store_path,
-            output_path,
-            text_col=text_col,
-            id_col=id_col,
-            num_hashes=num_hashes,
-            rows_per_band=rows_per_band,
-            shingle_n=shingle_n,
-        )
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
+    process = functools.partial(
+        ingest_minhash_batch,
+        store_path=store_path,
+        output_path=output_path,
+        text_col=text_col,
+        id_col=id_col,
+        num_hashes=num_hashes,
+        rows_per_band=rows_per_band,
+        shingle_n=shingle_n,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, process, checkpoint, available_now)
 
 
 def ingest_bloom_batch(
@@ -429,8 +439,6 @@ def ingest_bloom_batch(
 ) -> None:
     """One micro-batch of the streaming Bloom ingest gate (foreachBatch
     body; replay-safe — see streaming_bloom_screen)."""
-    from pyspark.errors import AnalysisException
-
     from ..operators.bloom import (
         BloomFilterSpec,
         bloom_screen,
@@ -443,17 +451,8 @@ def ingest_bloom_batch(
     # heal a torn replay (same rule as ingest_minhash_batch: this
     # batch's subdir has exactly one writer — us, at the end)
     _best_effort_delete(spark, f"{store_path}/batch_id={int(batch_id)}")
-    try:
-        rows = (
-            spark.read.parquet(store_path)
-            # EXCLUDE this batch's own bitmap: a replay that crashed
-            # after the store write would otherwise screen out its own
-            # survivors and overwrite them empty
-            .where(F.col("batch_id") != int(batch_id))
-            .collect()
-        )
-    except AnalysisException:
-        rows = []
+    store = _prior_store(spark, store_path, batch_id)
+    rows = store.collect() if store is not None else []
     blooms = [
         BloomFilterSpec(
             words=list(r["words"]),
@@ -521,23 +520,13 @@ def streaming_bloom_screen(
     changes answers. Geometry is FIXED by the operator args: size
     num_bits for the total ingested-corpus cardinality, not the batch
     (fpp is driven by total set bits)."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_bloom_batch(
-            batch_df,
-            batch_id,
-            store_path,
-            output_path,
-            key_col=key_col,
-            id_col=id_col,
-            num_bits=num_bits,
-            num_hashes=num_hashes,
-        )
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
+    process = functools.partial(
+        ingest_bloom_batch,
+        store_path=store_path,
+        output_path=output_path,
+        key_col=key_col,
+        id_col=id_col,
+        num_bits=num_bits,
+        num_hashes=num_hashes,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream_df, process, checkpoint, available_now)

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.localrel import local_relation
+from ..functions.localrel import collect_bounded, local_relation
 from ..operators.dedup import quantize_embeddings
 from ..operators.similarity import cosine_topk, ivf_topk
 from . import register
@@ -581,12 +581,12 @@ def semantic_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Lloyd update round, replacing the init-aggregate job plus one
     # update-round job. Past the cap the original two-job shape runs.
     from ..operators.similarity import (
+        _LOCAL_KMEANS_CAP,
         _lloyd_local_cents,
-        _try_collect_local,
         kmeans_assign_frame,
     )
 
-    rows = _try_collect_local(q, ["label", "qv"])
+    rows = collect_bounded(q.select("label", "qv"), _LOCAL_KMEANS_CAP)
     if rows is not None:
         sums: dict = {}
         for r in rows:

@@ -5,7 +5,10 @@ the same rows as a zero-task LocalTableScan)."""
 
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from hadoop_multiple_streaming_spark.functions.localrel import local_relation
+from hadoop_multiple_streaming_spark.functions.localrel import (
+    collect_bounded,
+    local_relation,
+)
 
 
 def _assert_parity(spark, rows, schema):
@@ -47,3 +50,14 @@ def test_local_relation_falls_back_for_unsupported(spark):
     assert df.collect()[0][0] == {"a": 1}
     # empty row set -> fallback too
     assert local_relation(spark, [], "a int").count() == 0
+
+
+def test_collect_bounded_cap(spark):
+    df = spark.range(5)
+    assert [r.id for r in collect_bounded(df, 5)] == list(range(5))
+    assert collect_bounded(df, 4) is None  # one past the cap: no rows
+    assert collect_bounded(df.limit(0), 3) == []
+    tracker = spark.sparkContext.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup(None) or [-1])
+    assert collect_bounded(df, 0) is None and collect_bounded(df, -1) is None
+    assert max(tracker.getJobIdsForGroup(None) or [-1]) == last_job  # no job

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hadoop_multiple_streaming_spark.cli import main as cli_main
-from hadoop_multiple_streaming_spark.plans.model import Branch, JobSpec
+from hadoop_multiple_streaming_spark.plans.model import SHARE_MODES, Branch, JobSpec
 from hadoop_multiple_streaming_spark.plans.runner import (
     EXIT_BAD_INPUT,
     EXIT_OK,
@@ -194,6 +194,17 @@ def test_branch_parse():
     assert b.is_map_only
     with pytest.raises(ValueError):
         Branch.parse("|cat|wc")
+
+
+def test_jobspec_rejects_unknown_share_mode():
+    # a typo used to run silently as "none" (no cache, no mapoutput/)
+    with pytest.raises(ValueError, match="persist, materialize, none"):
+        JobSpec(
+            inputs=["in"], output="out", branches=[Branch("CAT")],
+            share_mode="materialise",
+        )
+    for mode in SHARE_MODES:
+        JobSpec(inputs=["in"], output="out", branches=[Branch("CAT")], share_mode=mode)
 
 
 def test_plan_branches_is_inspectable(spark, textdir):

@@ -755,7 +755,7 @@ def test_local_lloyd_matches_distributed_rounds(spark, monkeypatch):
     assert run_auto() == local_a
     # and a cap below the corpus size also falls back (probe returns None)
     monkeypatch.setattr(S, "_LOCAL_KMEANS_CAP", 10)
-    assert S._try_collect_local(q, ["qv"]) is None
+    assert S.collect_bounded(q.select("qv"), S._LOCAL_KMEANS_CAP) is None
 
 
 def test_local_kmeans_cap_env_clamped(monkeypatch):

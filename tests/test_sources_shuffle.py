@@ -285,7 +285,8 @@ def test_partitioned_write_prunes(spark, tmp_path):
     assert any("lang" in l for l in plan.splitlines() if "PartitionFilters" in l)
 
 
-def test_compact_table_roundtrip(spark, tmp_path):
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "uri"])
+def test_compact_table_roundtrip(spark, tmp_path, as_uri):
     from hadoop_multiple_streaming_spark.sources.io import compact_table
 
     out = str(tmp_path / "fragmented")
@@ -294,7 +295,8 @@ def test_compact_table_roundtrip(spark, tmp_path):
     import glob
 
     assert len(glob.glob(f"{out}/*.parquet")) == 16
-    compact_table(spark, out, target_partitions=2)
+    compact_table(spark, f"file://{out}" if as_uri else out, target_partitions=2)
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["fragmented"]
     assert len(glob.glob(f"{out}/*.parquet")) == 2
     back = spark.read.parquet(out)
     assert back.count() == 1000

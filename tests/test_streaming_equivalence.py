@@ -639,6 +639,27 @@ def test_streaming_incremental_minhash_corrupt_store_fails_batch(spark, tmp_path
         raise AssertionError("query should have failed on the corrupt store")
 
 
+@pytest.mark.parametrize("ingest", ["ingest_minhash_batch", "ingest_bloom_batch"])
+def test_ingest_batch_fails_on_unreadable_store(spark, tmp_path, ingest):
+    """A store dir that holds parquet but not the ``batch_id=`` layout
+    is not an empty store: both ingest bodies must fail the batch (so
+    the engine retries it) and write no survivors."""
+    from pyspark.errors import AnalysisException
+
+    from hadoop_multiple_streaming_spark.streaming import fanout
+
+    store_path = str(tmp_path / "store")
+    out_path = str(tmp_path / "out")
+    spark.range(3).write.parquet(store_path)
+    batch = spark.createDataFrame(
+        [(1, "one two three four five six"), (2, "seven eight nine ten eleven")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(AnalysisException, match="batch_id"):
+        getattr(fanout, ingest)(batch, 0, store_path, out_path)
+    assert not os.path.exists(out_path)
+
+
 def test_streaming_bloom_screen_exact_dedup_across_batches(spark, tmp_path):
     """The Bloom ingest gate: exact duplicates of already-ingested keys
     drop across micro-batches (no false negatives), within-batch dups
