@@ -279,6 +279,10 @@ def main() -> int:
     times: dict[str, float] = {}
     reps: dict[str, list[float]] = {}
     ctrl: dict[str, list[float]] = {}
+    # a failed warm pass is recorded, not hidden: the timed reps may
+    # still succeed (a first-run-only failure), so the sidecar is the
+    # only place it shows
+    warm_errors: dict[str, str] = {}
     for name in names:
         # warm pass (Janino compiles, shuffle init for the plan
         # shapes), then an ADAPTIVE min-of-k (k=2..4): the host shares
@@ -293,8 +297,9 @@ def main() -> int:
             workloads.QUERIES[name](spark, sf_dir).write.mode("overwrite").format(
                 "noop"
             ).save()
-        except Exception:
-            pass
+        except Exception as e:
+            warm_errors[name] = f"{type(e).__name__}: {str(e)[:500]}"
+            print(f"[bench] {name} warm pass FAILED: {str(e)[:200]}", file=sys.stderr)
         samples: list[float] = []
         controls: list[float] = []
         try:
@@ -358,6 +363,7 @@ def main() -> int:
                     "reps": reps,
                     "ctrl": ctrl,
                     "ctrl_ref": ctrl_ref,
+                    "warm_errors": warm_errors,
                 },
                 fh,
                 indent=1,

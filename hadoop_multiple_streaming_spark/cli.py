@@ -173,7 +173,7 @@ def parse_job(argv: list[str]) -> tuple[JobSpec, dict[str, str], str | None]:
     sort_fields = None
     part_opts = conf.pop("mapred.text.key.partitioner.options", None)
     if part_opts:
-        partition_fields = [i for i, _ in parse_key_field_options(part_opts)]
+        partition_fields = [f[0] for f in parse_key_field_options(part_opts)]
     comp_opts = conf.pop("mapred.text.key.comparator.options", None)
     if comp_opts:
         sort_fields = parse_key_field_options(comp_opts)

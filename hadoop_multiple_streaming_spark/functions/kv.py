@@ -95,14 +95,27 @@ def join_key_val(
     return F.when(v == "", k).otherwise(joined)
 
 
+def _separator_bytes(separator: str | bytes) -> bytes:
+    """The byte form of a KV separator: a str is encoded ISO-8859-1
+    (one byte per char, the lossless byte↔char bijection below)."""
+    sep = (
+        separator.encode("iso-8859-1")
+        if isinstance(separator, str)
+        else bytes(separator)
+    )
+    if not sep:
+        raise ValueError("KV separator must be non-empty")
+    return sep
+
+
 def split_key_val_bytes(
     line: Column | str,
-    separator: bytes = b"\t",
+    separator: str | bytes = b"\t",
     num_key_fields: int = 1,
 ) -> tuple[Column, Column]:
     """Byte-faithful splitKeyVal over a BINARY line column — the
     reference's ``Text``-is-bytes KV contract extended past
-    ``pipe_lines(binary=True)`` to the full map→shuffle→reduce chain
+    ``pipe_lines`` over a binary column to the full map→shuffle→reduce chain
     (its splitKeyVal scans RAW BYTES for the separator,
     MultiPipeMapRed.java:403-425: first-k-separators loop :409-413,
     empty-value branch :414-418), so a latin-1 or mixed-binary key
@@ -117,11 +130,7 @@ def split_key_val_bytes(
     ``(key: binary, value: binary)``.
     """
     col = F.col(line) if isinstance(line, str) else line
-    if not isinstance(separator, (bytes, bytearray)) or len(separator) == 0:
-        raise ValueError(
-            f"split_key_val_bytes: separator must be non-empty bytes, got {separator!r}"
-        )
-    sep_s = bytes(separator).decode("iso-8859-1")
+    sep_s = _separator_bytes(separator).decode("iso-8859-1")
     s = F.decode(col, "ISO-8859-1")
     key_s, val_s = split_key_val(s, sep_s, num_key_fields)
     return (
@@ -133,7 +142,7 @@ def split_key_val_bytes(
 def with_key_val_bytes(
     df: DataFrame,
     line_col: str = "line",
-    separator: bytes = b"\t",
+    separator: str | bytes = b"\t",
     num_key_fields: int = 1,
     drop_line: bool = True,
 ) -> DataFrame:
@@ -146,14 +155,14 @@ def with_key_val_bytes(
 def join_key_val_bytes(
     key: Column | str,
     value: Column | str,
-    separator: bytes = b"\t",
+    separator: str | bytes = b"\t",
 ) -> Column:
     """Serialize BINARY (key, value) back to a binary line — the
     separator always written (Hadoop TextOutputFormat contract, as in
     :func:`join_key_val`); plain binary concat, no decode anywhere."""
     k = F.col(key) if isinstance(key, str) else key
     v = F.col(value) if isinstance(value, str) else value
-    return F.concat(k, F.lit(bytes(separator)), v)
+    return F.concat(k, F.lit(_separator_bytes(separator)), v)
 
 
 def to_lines(

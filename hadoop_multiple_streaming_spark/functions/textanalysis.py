@@ -159,7 +159,6 @@ def grouped_token_partials(
     df: DataFrame,
     group_col: str,
     text_col: str = "text",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Per-group PARTIAL sums of the whitespace-segment token count
     (``spaces + 1`` — empty segments included, the dashboard formula
@@ -169,25 +168,13 @@ def grouped_token_partials(
     exact totals; NULL text contributes nothing on either engine (the
     kernel nulls it out; SUM skips nulls).
 
-    ``impl='arrow'`` (default) counts spaces with pyarrow's
-    ``count_substring`` — a memchr-speed C kernel over the Arrow
-    buffers — and pre-aggregates per batch, so only group-cardinality
-    partials return to the JVM. Measured 1.4x over the best
-    whole-stage-codegen form at sf4.0 (0.88 s vs 1.24 s for
-    length-replace; string search in UTF8String is the JVM's cost,
-    not the regex — see CROSSOVER.md r13). ``impl='expr'`` is the
-    pure-JVM twin (``size(split(t, ' ', -1))`` — -1 keeps trailing
-    empties, preserving the spaces+1 identity), asserted identical in
-    tests; prefer it where a Python worker pool is unavailable.
+    Spaces are counted with pyarrow's ``count_substring`` — a
+    memchr-speed C kernel over the Arrow buffers — and pre-aggregated
+    per batch, so only group-cardinality partials return to the JVM.
+    Measured 1.4x over the best whole-stage-codegen form at sf4.0
+    (0.88 s vs 1.24 s for length-replace; string search in UTF8String
+    is the JVM's cost, not the regex — see CROSSOVER.md r13).
     """
-    if impl == "expr":
-        t = F.col(text_col)
-        return df.select(
-            F.col(group_col),
-            F.size(F.split(t, " ", -1)).cast("long").alias("_tok"),
-        )
-    if impl != "arrow":
-        raise ValueError(f"grouped_token_partials: unknown impl {impl!r}")
 
     def gen(it):
         import pandas as pd

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..functions.localrel import collect_bounded
@@ -108,28 +109,20 @@ def word_shingles(
 # -------------------------------------------------------------- minhash
 
 
-def minhash_signatures(
-    shingles: DataFrame, num_hashes: int = 16, family: str = "md5"
-) -> DataFrame:
-    """(id, sig): MinHash signature ARRAY.
-
-    family="md5" (default): one full md5 per seed — element s =
-    lexicographic min over the doc's shingles of
+def minhash_signatures(shingles: DataFrame, num_hashes: int = 16) -> DataFrame:
+    """(id, sig): MinHash signature ARRAY — one full md5 per seed:
+    element s = lexicographic min over the doc's shingles of
     md5(shingle + '#' + s), truncated to 16 hex chars (64 bits,
     collision-free at any realistic corpus size).
 
-    family="split": each md5 digest split into FOUR 32-bit hashes
-    (128 bits / 32), costing ceil(num_hashes/4) md5 calls per shingle.
-    Measured SLOWER than family="md5" at sf0.1 (1.3s vs 0.9s warm for
-    the signature stage): the conv(hex, 16, 10) string->long parse
-    costs more than the md5 calls it saves, and signatures are <20% of
-    the pipeline anyway. Kept as the fallback for md5-rate-limited
-    environments. (A Kirsch-Mitzenmacher h1+s*h2 family was also
-    tried and rejected: its correlated slots inflate LSH candidate
-    pairs ~6x — every slot's argmin shingle is biased toward small
-    (h1, h2).)
+    Rejected alternatives: splitting each md5 digest into four 32-bit
+    hashes measured SLOWER at sf0.1 (1.3 s vs 0.9 s warm for the
+    signature stage — the conv(hex, 16, 10) string->long parse costs
+    more than the md5 calls it saves); a Kirsch-Mitzenmacher h1+s*h2
+    family inflates LSH candidate pairs ~6x (its correlated slots bias
+    every slot's argmin shingle toward small (h1, h2)).
 
-    Both are planned as: materialize the per-shingle digest array in
+    Planned as: materialize the per-shingle digest array in
     its own projection (a lambda calling md5 inline would recompute it
     per array element), then ONE groupBy(id) with num_hashes separate
     MIN aggregates (one per seed), re-assembled into the signature
@@ -139,29 +132,11 @@ def minhash_signatures(
     MINs partial-aggregate map-side with CONSTANT memory per group: a
     pathological many-shingle document costs 16 slots, not
     |shingles| x 16 buffered entries."""
-    if family == "split":
-        n_md5 = (num_hashes + 3) // 4
-        base = shingles.select(
-            "id",
-            F.expr(
-                f"transform(sequence(0, {n_md5 - 1}), "
-                "k -> md5(concat(shingle, '#', cast(k as string))))"
-            ).alias("ms"),
-        )
-        hashes = F.expr(
-            f"transform(sequence(0, {num_hashes - 1}), s -> cast(conv(substr("
-            "element_at(ms, cast(s div 4 as int) + 1), (s % 4) * 8 + 1, 8), "
-            "16, 10) as bigint))"
-        )
-        rows = base.select("id", hashes.alias("hs"))
-    elif family == "md5":
-        hashes = F.expr(
-            f"transform(sequence(0, {num_hashes - 1}), "
-            "s -> substring(md5(concat(shingle, '#', cast(s as string))), 1, 16))"
-        )
-        rows = shingles.select("id", hashes.alias("hs"))
-    else:  # pragma: no cover - guarded by callers
-        raise ValueError(f"unknown minhash family {family!r}")
+    hashes = F.expr(
+        f"transform(sequence(0, {num_hashes - 1}), "
+        "s -> substring(md5(concat(shingle, '#', cast(s as string))), 1, 16))"
+    )
+    rows = shingles.select("id", hashes.alias("hs"))
     mins = rows.groupBy("id").agg(
         *[F.min(F.expr(f"hs[{s}]")).alias(f"_m{s}") for s in range(num_hashes)]
     )
@@ -243,14 +218,19 @@ def fused_minhash_signatures(
                 continue
             yield pd.DataFrame(
                 {
-                    "id": pd.Series(ids, dtype="int64"),
+                    "id": pd.Series(ids),
                     "sig": pd.Series(sigs, dtype="object"),
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(
-        fn, "id long, sig array<string>"
+    # the id keeps its input type (minhash_signatures' groupBy does too)
+    out_schema = T.StructType(
+        [
+            T.StructField("id", df.schema[id_col].dataType),
+            T.StructField("sig", T.ArrayType(T.StringType())),
+        ]
     )
+    return df.select(id_col, text_col).mapInPandas(fn, out_schema)
 
 
 def minhash_band_buckets(
@@ -1024,7 +1004,6 @@ def auto_semantic_clusters(
     k: int,
     kmeans_iters: int = 2,
     dim: int = 64,
-    impl: str = "arrow",
     carry: list[str] | None = None,
     local_rows: list | None = None,
 ) -> DataFrame:
@@ -1051,26 +1030,21 @@ def auto_semantic_clusters(
         kmeans_lloyd,
     )
 
-    carry_cols = [c for c in (carry or []) if c != "id"]
-    if impl == "arrow":
-        # r15 local fast path (guide §1.2 step 1): seeds + every Lloyd
-        # update round computed on the driver from ONE bounded collect —
-        # replaces the seed-collect job and the per-round aggregate jobs.
-        # Bit-identical: _local_seed_cents replays the hash-ordered
-        # row_number seed pick, _lloyd_local_cents the update math.
-        rows = local_rows
-        if rows is None and _integral_id(quantized):
-            rows = collect_bounded(
-                quantized.select("id", "qv"), _LOCAL_KMEANS_CAP
-            )
-        if rows is not None:
-            cent_rows = _local_seed_cents(rows, k)
-            cent_rows = _lloyd_local_cents(
-                [list(r["qv"]) for r in rows], cent_rows, kmeans_iters, dim
-            )
-            return kmeans_assign_frame(
-                quantized, cent_rows, dim, carry=carry_cols
-            )
+    carry = [c for c in (carry or []) if c != "id"]
+    # r15 local fast path (guide §1.2 step 1): seeds + every Lloyd
+    # update round computed on the driver from ONE bounded collect —
+    # replaces the seed-collect job and the per-round aggregate jobs.
+    # Bit-identical: _local_seed_cents replays the hash-ordered
+    # row_number seed pick, _lloyd_local_cents the update math.
+    rows = local_rows
+    if rows is None and _integral_id(quantized):
+        rows = collect_bounded(quantized.select("id", "qv"), _LOCAL_KMEANS_CAP)
+    if rows is not None:
+        cent_rows = _local_seed_cents(rows, k)
+        cent_rows = _lloyd_local_cents(
+            [list(r["qv"]) for r in rows], cent_rows, kmeans_iters, dim
+        )
+        return kmeans_assign_frame(quantized, cent_rows, dim, carry=carry)
 
     seeds = (
         quantized.select(
@@ -1083,13 +1057,12 @@ def auto_semantic_clusters(
         (F.row_number().over(Window.orderBy("_h", "id")) - 1).alias("cluster"),
         F.expr("transform(qv, x -> cast(x as double))").alias("c"),
     )
-    carry = [c for c in (carry or []) if c != "id"]
     return kmeans_lloyd(
         quantized.select("id", "qv", *[c for c in carry if c != "qv"]),
         init,
         iters=kmeans_iters,
         dim=dim,
-        impl=impl,
+        impl="arrow",
         carry=carry,
     )
 
@@ -1232,7 +1205,7 @@ def hierarchical_semantic_clusters(
     pairing's max_cluster_size guard is unaffected."""
     k1 = coarse_cluster_count(k)
     coarse = auto_semantic_clusters(
-        quantized, k1, kmeans_iters=kmeans_iters, dim=dim, impl="arrow",
+        quantized, k1, kmeans_iters=kmeans_iters, dim=dim,
         carry=["qv"] + [c for c in (carry or []) if c not in ("id", "qv")],
         local_rows=local_rows,
     ).withColumnRenamed("cluster", "coarse")

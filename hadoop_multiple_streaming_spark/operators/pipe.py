@@ -444,37 +444,29 @@ def pipe_lines(
     cmd: str | list[str],
     opts: PipeOptions | None = None,
     counters=None,
-    binary: bool = False,
 ) -> DataFrame:
-    """DataFrame[line:string] -> DataFrame[line:string] through ``cmd``.
+    """DataFrame[line] -> DataFrame[line] through ``cmd``.
 
     One subprocess per partition (the reference spawns one per map task
     per branch, MultiPipeMapRed.java:171-221). The input DataFrame must
-    have exactly one string column.
+    have exactly one column; its type picks the record path.
 
-    NOTE (byte fidelity): the default string path encodes stdin as
-    UTF-8 and decodes stdout with ``errors='replace'`` — a subprocess
-    emitting non-UTF-8 bytes (latin-1 logs, mixed binary) gets its
-    bytes U+FFFD-mangled SILENTLY. The reference passes raw bytes
+    A BINARY column is the byte-faithful path, as in the reference
     (Text is bytes; BytesWritable passthrough,
-    MultiPipeMapRed.java:729-746); for that contract pass
-    ``binary=True`` with a single BINARY column — lines then round-trip
-    bit-exactly and the result column is ``line: binary``. Line framing
-    still applies in binary mode (records are newline-separated, as in
-    the reference): a 0x0A byte INSIDE a record splits it on read-back,
-    exactly as it would in Hadoop streaming.
+    MultiPipeMapRed.java:729-746): lines round-trip bit-exactly and
+    the result column is ``line: binary``. Line framing still applies
+    (records are newline-separated, as in the reference): a 0x0A byte
+    INSIDE a record splits it on read-back, exactly as it would in
+    Hadoop streaming. Any other column type is rendered as text:
+    stdin is UTF-8 and stdout is decoded with ``errors='replace'``, so
+    a subprocess emitting non-UTF-8 bytes (latin-1 logs, mixed binary)
+    gets them U+FFFD-mangled — read such input as binary.
     """
     opts = opts or PipeOptions()
     argv = split_args(cmd)
     if len(df.columns) != 1:
         raise ValueError(f"pipe_lines expects a single line column, got {df.columns}")
-    col_type = df.schema[df.columns[0]].dataType
-    if binary and not isinstance(col_type, BinaryType):
-        raise TypeError(
-            f"pipe_lines(binary=True) expects a single BINARY column, got "
-            f"{col_type.simpleString()} — cast string lines with "
-            f"encode(col, 'UTF-8') or read raw bytes"
-        )
+    binary = isinstance(df.schema[0].dataType, BinaryType)
 
     conf_export = _conf_export(df.sparkSession)
 
@@ -524,11 +516,13 @@ def pipe_fanout(
     frame has run, holds ``{b: message}`` for every command that failed
     (P8 write error, P9 non-zero exit, or a command that could not
     start). A failing command does not fail the task: its siblings'
-    lines still come out, and the caller drops the failed command's."""
+    lines still come out, and the caller drops the failed command's.
+    The line column's type picks the record path, as in :func:`pipe_lines`."""
     opts = opts or PipeOptions()
     argvs = [split_args(c) for c in cmds]
     if len(df.columns) != 1:
         raise ValueError(f"pipe_fanout expects a single line column, got {df.columns}")
+    binary = isinstance(df.schema[0].dataType, BinaryType)
     failures = df.sparkSession.sparkContext.accumulator({}, _FirstFailure())
     conf_export = _conf_export(df.sparkSession)
 
@@ -539,11 +533,12 @@ def pipe_fanout(
         import pandas as pd
 
         for i, lines in _pipe_partition(
-            batches, argvs, opts, _partition_id(), conf_export, counters, failed=record
+            batches, argvs, opts, _partition_id(), conf_export, counters, binary, record
         ):
             yield pd.DataFrame({"b": i, "line": lines})
 
-    return df.toDF("line").mapInPandas(run, schema="b int, line string"), failures
+    schema = "b int, line binary" if binary else "b int, line string"
+    return df.toDF("line").mapInPandas(run, schema=schema), failures
 
 
 def _partition_id() -> int:
@@ -560,7 +555,6 @@ def pipe_map(
     num_key_fields: int = 1,
     opts: PipeOptions | None = None,
     counters=None,
-    binary: bool = False,
 ) -> DataFrame:
     """Pipe-map (P1 for one branch): lines -> subprocess -> (key, value).
 
@@ -569,22 +563,15 @@ def pipe_map(
     (MultiPipeMapRed.java:458-463); we keep (key, value) columns — the
     normalization happens if/when serialized by join_key_val.
 
-    ``binary=True`` (r15): the byte-faithful KV path — input is a
-    single BINARY line column, the subprocess sees raw bytes, and the
-    stdout split scans bytes exactly as the reference's splitKeyVal
-    does (MultiPipeMapRed.java:403-425), returning
-    ``(key: binary, value: binary)`` — latin-1 keys survive bit-exact
-    through the whole map→shuffle→reduce chain. ``separator`` is then
-    interpreted as bytes (a str separator is encoded latin-1)."""
-    out = pipe_lines(df_lines, cmd, opts=opts, counters=counters, binary=binary)
-    if binary:
-        sep_b = (
-            separator.encode("iso-8859-1")
-            if isinstance(separator, str)
-            else bytes(separator)
-        )
-        return with_key_val_bytes(out, "line", sep_b, num_key_fields)
-    return with_key_val(out, "line", separator, num_key_fields)
+    A BINARY line column is the byte-faithful KV path: the subprocess
+    sees raw bytes, and the stdout split scans bytes exactly as the
+    reference's splitKeyVal does (MultiPipeMapRed.java:403-425),
+    returning ``(key: binary, value: binary)`` — latin-1 keys survive
+    bit-exact through the whole map→shuffle→reduce chain."""
+    out = pipe_lines(df_lines, cmd, opts=opts, counters=counters)
+    binary = isinstance(out.schema[0].dataType, BinaryType)
+    split = with_key_val_bytes if binary else with_key_val
+    return split(out, "line", separator, num_key_fields)
 
 
 def pipe_reduce(
@@ -596,8 +583,7 @@ def pipe_reduce(
     opts: PipeOptions | None = None,
     counters=None,
     partition_fields: list[int] | None = None,
-    sort_fields: list[tuple[int, bool]] | None = None,
-    binary: bool = False,
+    sort_fields: list[tuple] | None = None,
 ) -> DataFrame:
     """Pipe-reduce (P2/G1): hash-partition by key, sort by key within
     partitions, stream the whole sorted partition (`key\\tvalue` lines)
@@ -612,37 +598,38 @@ def pipe_reduce(
 
     Returns (key, value) columns split from the reducer's stdout.
 
-    ``binary=True`` (r15): byte-faithful reduce — (key, value) are
-    BINARY columns, the shuffle hash-partitions and sorts on raw bytes
-    (Spark's BinaryType ordering is unsigned-lexicographic, the same
-    order Hadoop's Text/BytesWritable comparators use), lines are
-    rebuilt by binary concat, and the reducer's stdout re-splits on
-    bytes (MultiPipeMapRed.java:403-425). partition_fields/sort_fields
-    are a text-subfield surface and are not supported in binary mode.
+    BINARY (key, value) is the byte-faithful reduce: the shuffle
+    hash-partitions and sorts on raw bytes (Spark's BinaryType ordering
+    is unsigned-lexicographic, the same order Hadoop's
+    Text/BytesWritable comparators use), lines are rebuilt by binary
+    concat, and the reducer's stdout re-splits on bytes
+    (MultiPipeMapRed.java:403-425). Key and value must then both be
+    binary, and partition_fields/sort_fields (a text-subfield surface)
+    are not supported.
     """
     if set(df_kv.columns) != {"key", "value"}:
         raise ValueError(f"pipe_reduce expects (key, value) columns, got {df_kv.columns}")
+    binary = isinstance(df_kv.schema["key"].dataType, BinaryType)
+    if binary != isinstance(df_kv.schema["value"].dataType, BinaryType):
+        raise ValueError(
+            "pipe_reduce: key and value must both be binary or both not, got "
+            f"key {df_kv.schema['key'].dataType.simpleString()}, value "
+            f"{df_kv.schema['value'].dataType.simpleString()}"
+        )
     if binary and (partition_fields or sort_fields):
         raise ValueError(
-            "pipe_reduce(binary=True) does not support partition_fields/"
-            "sort_fields (text subfield semantics); pre-arrange the bytes"
+            "pipe_reduce over binary (key, value) does not support "
+            "partition_fields/sort_fields (text subfield semantics); "
+            "pre-arrange the bytes"
         )
     n = num_partitions or df_kv.sparkSession.sparkContext.defaultParallelism
     arranged = partition_sort(df_kv, n, partition_fields, sort_fields, separator)
-    if binary:
-        sep_b = (
-            separator.encode("iso-8859-1")
-            if isinstance(separator, str)
-            else bytes(separator)
-        )
-        lines = arranged.select(
-            join_key_val_bytes("key", "value", sep_b).alias("line")
-        )
-        out = pipe_lines(lines, cmd, opts=opts, counters=counters, binary=True)
-        return with_key_val_bytes(out, "line", sep_b, num_key_fields)
-    lines = arranged.select(join_key_val("key", "value", separator).alias("line"))
+    join, split = (
+        (join_key_val_bytes, with_key_val_bytes) if binary else (join_key_val, with_key_val)
+    )
+    lines = arranged.select(join("key", "value", separator).alias("line"))
     out = pipe_lines(lines, cmd, opts=opts, counters=counters)
-    return with_key_val(out, "line", separator, num_key_fields)
+    return split(out, "line", separator, num_key_fields)
 
 
 def grouped_pipe_reduce(

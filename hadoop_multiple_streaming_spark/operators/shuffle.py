@@ -32,14 +32,17 @@ def partition_sort(
     df_kv: DataFrame,
     num_partitions: int,
     partition_fields: list[int] | None = None,
-    sort_fields: list[tuple[int, bool]] | None = None,
+    sort_fields: list[tuple] | None = None,
     separator: str = "\t",
 ) -> DataFrame:
     """G1+G2+G5 in one Exchange+Sort: hash-partition on the chosen key
     subfields (default: whole key), then sort within partitions on the
     chosen subfields (default: whole key ascending).
 
-    sort_fields: [(field_index, ascending), ...]
+    sort_fields: [(field_index, ascending[, numeric]), ...]. A numeric
+    field (``-kN,Nn``) sorts as a double; a value that does not parse
+    as a number is null, so it sorts first ascending and last
+    descending.
 
     This reproduces Hadoop secondary sort: partition on field 1, sort
     on fields 1+2 => reducer sees each key's values ordered by field 2.
@@ -50,10 +53,12 @@ def partition_sort(
         else [F.col("key")]
     )
     if sort_fields:
-        sort_cols = [
-            key_field("key", i, separator).asc() if asc else key_field("key", i, separator).desc()
-            for i, asc in sort_fields
-        ]
+        sort_cols = []
+        for i, asc, *numeric in sort_fields:
+            col = key_field("key", i, separator)
+            if numeric and numeric[0]:
+                col = col.cast("double")
+            sort_cols.append(col.asc() if asc else col.desc())
     else:
         sort_cols = [F.col("key").asc()]
     return df_kv.repartition(num_partitions, *part_cols).sortWithinPartitions(*sort_cols)
@@ -154,15 +159,24 @@ def salted_join(
     return salted_fact.join(replicated_dim, [*keys, "_salt"], how).drop("_salt")
 
 
-def parse_key_field_options(options: str) -> list[tuple[int, bool]]:
+def parse_key_field_options(options: str) -> list[tuple[int, bool, bool]]:
     """Parse the ``-k pos1[,pos2][opts]`` subset of
-    mapred.text.key.comparator.options, e.g. "-k1,1 -k2,2nr" ->
-    [(1, True), (2, False)]. 'r' reverses; 'n' (numeric) is accepted —
-    callers cast the derived column when numeric sorting matters."""
-    fields: list[tuple[int, bool]] = []
-    for m in re.finditer(r"-k\s*(\d+)(?:\.\d+)?(?:,\d+(?:\.\d+)?)?([a-z]*)", options):
-        idx = int(m.group(1))
-        fields.append((idx, "r" not in m.group(2)))
+    mapred.text.key.{comparator,partitioner}.options into
+    (field, ascending, numeric) triples, one per field of each range:
+    "-k1,2 -k3,3nr" -> [(1, True, False), (2, True, False),
+    (3, False, True)]. 'r' reverses; 'n' sorts numerically (see
+    :func:`partition_sort`); a range without pos2 is its first field;
+    character offsets (``.c``) are ignored."""
+    fields: list[tuple[int, bool, bool]] = []
+    for m in re.finditer(
+        r"-k\s*(\d+)(?:\.\d+)?(?:,(\d+)(?:\.\d+)?)?([a-z]*)", options
+    ):
+        first = int(m.group(1))
+        last = max(first, int(m.group(2) or first))
+        flags = m.group(3)
+        fields.extend(
+            (i, "r" not in flags, "n" in flags) for i in range(first, last + 1)
+        )
     if not fields:
         raise ValueError(f"no -k fields in {options!r}")
     return fields

@@ -77,7 +77,7 @@ def _lloyd_local_cents(qvs: list, cent_rows: list, iters: int, dim: int) -> list
     Mf = Mi.astype(np.float64)
     for _ in range(iters - 1):
         clusters = [c for c, _ in cent_rows]
-        cents = [list(map(float, v)) for _, v in cent_rows]
+        cents = np.asarray([v for _, v in cent_rows], dtype=np.float64)
         assign = _assign_argmin_np(Mf, clusters, cents)
         new_rows = []
         for c in np.unique(assign):  # ascending, like the sorted() below
@@ -164,24 +164,35 @@ def ivf_topk(
     )
 
 
-def _assign_argmin_np(M, clusters, cents):
-    """Shared argmin core for the Arrow assignment kernels: squared-L2
-    accumulated dim-by-dim, left-to-right (vectorized across rows,
-    SEQUENTIAL across dims — the exact IEEE fold order of the
-    zip_with/aggregate expression), centroid blocking for L3 residency,
-    first-min tie rule = smallest cluster id (``cent_rows`` sorted).
-    See _kmeans_assign_arrow's docstring for the full contract."""
+def _assign_argmin_np(M, ids, C):
+    """The one argmin core of every Arrow assignment kernel: for each
+    row of ``M`` (n x dim), the entry of ``ids`` whose row of ``C``
+    (k x dim, same dtype as ``M``) is nearest by squared L2.
+
+    The distance is accumulated in the arrays' own dtype, dim-by-dim
+    and left-to-right (vectorized across rows, SEQUENTIAL across dims):
+    int64 is exact, and float64 follows the exact IEEE fold order of
+    the zip_with/aggregate expression, so either way the result is
+    bit-identical to the SQL replay. Centroid BLOCKING: the naive
+    (rows x k) accumulator is swept once per dim — at k=800 that is
+    ~64 MB of DRAM traffic per pass per 10k-row batch (the auto-sized
+    SemDeDup path measured 126 s at sf8.0, memory-bound). Processing
+    <=128 centroids at a time keeps the accumulator and diff temp
+    L3-resident (10k x 128 doubles ~ 10 MB) without changing the
+    per-(row, centroid) order. Tie rule: ``ids`` ascending, np.argmin
+    takes the first minimum within a block and the strict ``<`` keeps
+    the earlier block across blocks, so exact ties go to the smallest
+    id — the (dist, id) lexicographic rule."""
     import numpy as np
 
-    C = np.asarray(cents, dtype=np.float64)  # k x dim
-    ids = np.asarray(clusters, dtype=np.int64)
+    ids = np.asarray(ids, dtype=np.int64)
     kc = 128
     best_d = None
     best_i = None
     rows = np.arange(M.shape[0])
     for j0 in range(0, C.shape[0], kc):
         Cb = C[j0 : j0 + kc]
-        db = np.zeros((M.shape[0], Cb.shape[0]), dtype=np.float64)
+        db = np.zeros((M.shape[0], Cb.shape[0]), dtype=M.dtype)
         for d in range(C.shape[1]):  # sequential over dims: exact fold order
             diff = M[:, d : d + 1] - Cb[None, :, d]
             db += diff * diff
@@ -206,10 +217,11 @@ def _kmeans_assign_arrow(cent_rows: list, dim: int):
     cluster id; np.argmin takes the FIRST minimum = the smallest
     cluster id on exact ties, matching the (dist, cluster)
     lexicographic rule (test-asserted impl equivalence)."""
+    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     clusters = [c for c, _ in cent_rows]
-    cents = [list(map(float, v)) for _, v in cent_rows]
+    cents = np.asarray([v for _, v in cent_rows], dtype=np.float64)
 
     @pandas_udf("long")
     def assign_udf(qv):
@@ -219,20 +231,6 @@ def _kmeans_assign_arrow(cent_rows: list, dim: int):
         if len(qv) == 0:
             return pd.Series([], dtype="int64")
         M = np.vstack(qv.map(np.asarray).to_numpy()).astype(np.float64)
-        # Centroid BLOCKING (inside _assign_argmin_np): the naive
-        # (rows x k) accumulator is swept dim-by-dim 64 times — at
-        # k=800 that is ~64 MB of DRAM traffic per pass per 10k-row
-        # batch and the auto-sized SemDeDup path (k ~ n/200) measured
-        # 126 s at sf8.0, memory-bound. Processing <=128 centroids at
-        # a time keeps the accumulator and diff temp L3-resident
-        # (10k x 128 doubles ~ 10 MB) while leaving the per-(row,
-        # centroid) accumulation order UNCHANGED (dim-sequential,
-        # left-to-right — the exact IEEE fold the SQL replay
-        # evaluates, still bit-identical). Cross-block merge keeps the
-        # FIRST minimum: within a block np.argmin is first-min, and
-        # the strict `<` comparison keeps the earlier (smaller-id)
-        # block on exact ties, so the global winner is the smallest
-        # cluster id — same rule as before.
         return pd.Series(_assign_argmin_np(M, clusters, cents))
 
     return assign_udf
@@ -407,36 +405,13 @@ _L2 = (
 )
 
 
-def assign_centroids(
-    quantized: DataFrame, centroids: DataFrame, impl: str = "expr"
-) -> DataFrame:
+def assign_centroids(quantized: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: (id, qv, n2) x (cluster, c) ->
     (id, qv, n2, cluster). The k centroids fold into ONE broadcast row
     (array of (cluster, c) structs) and the argmin runs inside each
     data row — a pure projection, zero corpus shuffle (the same shape
     kmeans_lloyd uses; ties break to the smaller cluster id via the
-    lexicographic (dist, cluster) sort, deterministic).
-
-    ``impl="arrow"``: same trade as kmeans_lloyd — collects the
-    centroid table (eager, k rows) and assigns via the bit-identical
-    dim-sequential numpy kernel; use it for corpus-scale index builds
-    where the interpreted fold dominates (integral cluster ids,
-    emitted as bigint)."""
-    if impl == "arrow":
-        cent_rows = sorted(
-            (r["cluster"], list(r["c"])) for r in centroids.collect()
-        )
-        dim = len(cent_rows[0][1]) if cent_rows else 0
-        return quantized.select(
-            "id",
-            "qv",
-            "n2",
-            _kmeans_assign_arrow(cent_rows, dim)(F.col("qv")).alias("cluster"),
-        )
-    if impl != "expr":
-        raise ValueError(
-            f"assign_centroids: impl must be 'expr' or 'arrow', got {impl!r}"
-        )
+    lexicographic (dist, cluster) sort, deterministic)."""
     cent_arr = centroids.agg(
         F.collect_list(F.struct("cluster", "c")).alias("_cents")
     )
@@ -526,9 +501,7 @@ def read_ivf_norm_bounds(spark, path: str) -> tuple[int, int] | None:
     return (int(row[0]["min_n2"]), int(row[0]["max_n2"]))
 
 
-def append_ivf_index(
-    new_quantized: DataFrame, path: str, impl: str = "expr"
-) -> None:
+def append_ivf_index(new_quantized: DataFrame, path: str) -> None:
     """Incremental IVF index maintenance: assign ARRIVING vectors to
     the index's EXISTING centroids and append them to the partitioned
     corpus — no retrain, no rewrite of the at-rest lists. This is how
@@ -544,7 +517,7 @@ def append_ivf_index(
     distribution."""
     spark = new_quantized.sparkSession
     cent = spark.read.parquet(f"{path}/centroids")
-    assign_centroids(new_quantized, cent, impl=impl).write.mode(
+    assign_centroids(new_quantized, cent).write.mode(
         "append"
     ).partitionBy("cluster").parquet(f"{path}/corpus")
     # keep the norm-bounds meta current: min/max merge with the
@@ -706,10 +679,11 @@ def _assign_cells_arrow(cent_rows: list):
     zip_with/aggregate argmin is NOT whole-stage-codegen'd and costs
     ~1.8 s per evaluation — and ann_ivfpq_adc's plan evaluates it
     twice (bucket assignment + the residual path)."""
+    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     clusters = [int(c) for c, _ in cent_rows]
-    cents = [[int(x) for x in v] for _, v in cent_rows]
+    cents = np.asarray([v for _, v in cent_rows], dtype=np.int64)
 
     @pandas_udf("long")
     def assign_udf(qv):
@@ -719,27 +693,7 @@ def _assign_cells_arrow(cent_rows: list):
         if len(qv) == 0:
             return pd.Series([], dtype="int64")
         M = np.vstack(qv.map(np.asarray).to_numpy()).astype(np.int64)
-        C = np.asarray(cents, dtype=np.int64)  # k x dim
-        ids = np.asarray(clusters, dtype=np.int64)
-        kc = 128  # centroid blocking as in _assign_argmin_np
-        best_d = None
-        best_i = None
-        rows = np.arange(M.shape[0])
-        for j0 in range(0, C.shape[0], kc):
-            Cb = C[j0 : j0 + kc]
-            db = np.zeros((M.shape[0], Cb.shape[0]), dtype=np.int64)
-            for d in range(C.shape[1]):
-                diff = M[:, d : d + 1] - Cb[None, :, d]
-                db += diff * diff
-            bi = np.argmin(db, axis=1)
-            bd = db[rows, bi]
-            if best_d is None:
-                best_d, best_i = bd, ids[j0 + bi]
-            else:
-                better = bd < best_d
-                best_d = np.where(better, bd, best_d)
-                best_i = np.where(better, ids[j0 + bi], best_i)
-        return pd.Series(best_i)
+        return pd.Series(_assign_argmin_np(M, clusters, cents))
 
     return assign_udf
 
@@ -792,14 +746,19 @@ def _pq_encode_arrow(cb_rows: list, m: int, dim: int):
     hottest span in ann_ivfpq_adc's steady-state plan. The kernel does
     the same multiply-accumulates vectorized in one pass, and the
     explode + repartition + two aggregates disappear from the plan."""
+    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     sub = dim // m
-    by_sub: dict[int, tuple[list[int], list[list[int]]]] = {}
+    by_sub: dict[int, tuple[list[int], list]] = {}
     for s, code, cw in cb_rows:
-        by_sub.setdefault(int(s), ([], []))
-        by_sub[int(s)][0].append(int(code))
-        by_sub[int(s)][1].append([int(x) for x in cw])
+        codes, cws = by_sub.setdefault(int(s), ([], []))
+        codes.append(int(code))
+        cws.append(cw)
+    books = {
+        j: (codes, np.asarray(cws, dtype=np.int64))
+        for j, (codes, cws) in by_sub.items()
+    }
 
     @pandas_udf("array<bigint>")
     def encode_udf(qv):
@@ -812,14 +771,8 @@ def _pq_encode_arrow(cb_rows: list, m: int, dim: int):
         n = M.shape[0]
         out = np.empty((n, m), dtype=np.int64)
         for j in range(m):
-            codes_j = np.asarray(by_sub[j][0], dtype=np.int64)
-            CW = np.asarray(by_sub[j][1], dtype=np.int64)  # k x sub
-            Sub = M[:, j * sub : (j + 1) * sub]
-            db = np.zeros((n, CW.shape[0]), dtype=np.int64)
-            for t in range(sub):
-                diff = Sub[:, t : t + 1] - CW[None, :, t]
-                db += diff * diff
-            out[:, j] = codes_j[np.argmin(db, axis=1)]
+            codes, CW = books[j]  # CW: k x sub
+            out[:, j] = _assign_argmin_np(M[:, j * sub : (j + 1) * sub], codes, CW)
         return pd.Series([row.tolist() for row in out])
 
     return encode_udf

@@ -578,61 +578,43 @@ def rare_word_scores(
     )
 
 
-def word_frequencies(
-    df: DataFrame, text_col: str = "text", impl: str = "expr"
-) -> DataFrame:
+def word_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus word-frequency relation (w, f) — text split on single
     spaces, empty tokens dropped. The corpus-sized rollup every
     vocabulary-shaped operator starts from.
 
-    ``impl='expr'``: explode(split) then a codegen'd ``WHERE w <> ''``
-    — measured 2.2x over filtering inside a higher-order function
-    BEFORE the explode (the HOF filter runs interpreted per element,
-    outside whole-stage codegen; 5.64 s vs 2.58 s at sf8.0).
-    ``impl='arrow'``: a pyarrow split_pattern + value_counts kernel
-    pre-aggregates per batch, so only batch-vocabulary-sized (w, f)
-    partials cross the Python boundary and the one exchange carries
-    partial counts (1.63 s at sf8.0 — CROSSOVER.md r13). Identical
-    outputs, test-asserted."""
-    if impl == "arrow":
+    A pyarrow split_pattern + value_counts kernel pre-aggregates per
+    batch, so only batch-vocabulary-sized (w, f) partials cross the
+    Python boundary and the one exchange carries partial counts
+    (1.63 s at sf8.0, against 2.58 s for explode(split) + codegen'd
+    ``WHERE w <> ''`` — CROSSOVER.md r13)."""
 
-        def wc_partials(it):
-            import pandas as pd
-            import pyarrow as pa
-            import pyarrow.compute as pc
+    def wc_partials(it):
+        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-            for pdf in it:
-                # explicit type: all-null batches infer arrow 'null'
-                arr = pa.Array.from_pandas(pdf[text_col], type=pa.string())
-                toks = pc.drop_null(
-                    pc.list_flatten(pc.split_pattern(arr, " "))
-                )
-                vc = toks.value_counts()
-                out = pd.DataFrame(
-                    {
-                        "w": vc.field("values").to_pandas(),
-                        "f": vc.field("counts").to_pandas(),
-                    }
-                )
-                yield out[out["w"] != ""]
+        for pdf in it:
+            # explicit type: all-null batches infer arrow 'null'
+            arr = pa.Array.from_pandas(pdf[text_col], type=pa.string())
+            toks = pc.drop_null(pc.list_flatten(pc.split_pattern(arr, " ")))
+            vc = toks.value_counts()
+            out = pd.DataFrame(
+                {
+                    "w": vc.field("values").to_pandas(),
+                    "f": vc.field("counts").to_pandas(),
+                }
+            )
+            yield out[out["w"] != ""]
 
-        part = df.select(text_col).mapInPandas(wc_partials, "w string, f long")
-        return part.groupBy("w").agg(F.sum("f").alias("f"))
-    if impl != "expr":
-        raise ValueError(f"word_frequencies: unknown impl {impl!r}")
-    return (
-        df.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
-        .where(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("f"))
-    )
+    part = df.select(text_col).mapInPandas(wc_partials, "w string, f long")
+    return part.groupBy("w").agg(F.sum("f").alias("f"))
 
 
 def bpe_pair_counts(
     df: DataFrame,
     text_col: str = "text",
     top_k: int | None = None,
-    wf_impl: str = "expr",
 ) -> DataFrame:
     """One BPE merge-selection step at corpus scale (Sennrich et al.
     2016): count adjacent character pairs over the corpus, weighting
@@ -649,11 +631,8 @@ def bpe_pair_counts(
     tokenizer training tractable at scale, and it falls out of the
     plan for free. The final pair aggregate is alphabet^2-sized. With
     top_k the cut is a TakeOrderedAndProject (no global sort).
-    ``wf_impl`` selects the word-frequency stage form (see
-    :func:`word_frequencies` — 'arrow' for the batch-preaggregated
-    kernel, the corpus-dominated-scale choice).
     """
-    wf = word_frequencies(df, text_col, impl=wf_impl)
+    wf = word_frequencies(df, text_col)
     # char pairs of each distinct word; sequence() counts DOWN when
     # start > stop, so 1-char words need the explicit empty array
     pairs = wf.select(
@@ -681,7 +660,6 @@ def greedy_tokenize_counts(
     text_col: str = "text",
     vocab: tuple[str, ...] | list[str] = (),
     top_k: int | None = None,
-    impl: str = "fused",
 ) -> DataFrame:
     """Tokenizer APPLICATION — the step after bpe_pair_counts' merge
     selection: segment every word by WordPiece-style GREEDY
@@ -704,18 +682,12 @@ def greedy_tokenize_counts(
     byte) is the single-char fallback. One C-level pass per word vs
     len(w) x |vocab_lens| dict probes — measured 1.5x on the kernel.
 
-    ``impl='fused'`` (default): split + per-batch word value_counts +
-    segmentation run in ONE Arrow kernel emitting (token, f) partials
-    — token counts are additive over per-batch word counts, so the
-    plan has ONE Python fence and ONE exchange (on token, vocab-sized
-    partials). Per-batch word dedup bounds the greedy work at the
-    batch vocabulary (the same trade word_frequencies' arrow impl
-    already makes). ``impl='staged'``: the two-stage form — global
-    ``word_frequencies`` rollup, then segmentation over the
-    DISTINCT-WORD relation — segments each corpus-wide distinct word
-    exactly once at the cost of a second exchange + fence; prefer it
-    when the corpus vocabulary is tiny relative to batch count. Both
-    bit-identical (test-asserted). Final aggregate is vocab-sized;
+    Split + per-batch word value_counts + segmentation run in ONE
+    Arrow kernel emitting (token, f) partials — token counts are
+    additive over per-batch word counts, so the plan has ONE Python
+    fence and ONE exchange (on token, vocab-sized partials). Per-batch
+    word dedup bounds the greedy work at the batch vocabulary (the
+    same trade word_frequencies makes). Final aggregate is vocab-sized;
     with top_k the cut is a TakeOrderedAndProject.
 
     Text is segmented AS-IS: case-normalize upstream if the vocab is
@@ -730,71 +702,29 @@ def greedy_tokenize_counts(
     ordered = sorted(vocab_set, key=lambda v: (-len(v), v))
     pat_src = "|".join(_re.escape(v) for v in ordered if v) + "|."
 
-    def _segment_into(agg: dict, pat, pairs) -> None:
-        for w, f in pairs:
-            fi = int(f)
-            for tok in pat.findall(w):
-                agg[tok] = agg.get(tok, 0) + fi
+    def fused_partials(it):
+        import re
 
-    if impl == "fused":
+        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        def fused_partials(it):
-            import re
+        pat = re.compile(pat_src, re.DOTALL)
+        for pdf in it:
+            # explicit type: all-null batches infer arrow 'null'
+            arr = pa.Array.from_pandas(pdf[text_col], type=pa.string())
+            toks = pc.drop_null(pc.list_flatten(pc.split_pattern(arr, " ")))
+            vc = toks.value_counts()
+            agg: dict = {}
+            for w, f in zip(
+                vc.field("values").to_pylist(), vc.field("counts").to_pylist()
+            ):
+                if w != "":
+                    for tok in pat.findall(w):
+                        agg[tok] = agg.get(tok, 0) + f
+            yield pd.DataFrame({"token": list(agg.keys()), "f": list(agg.values())})
 
-            import pandas as pd
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            pat = re.compile(pat_src, re.DOTALL)
-            for pdf in it:
-                # explicit type: all-null batches infer arrow 'null'
-                arr = pa.Array.from_pandas(pdf[text_col], type=pa.string())
-                toks = pc.drop_null(
-                    pc.list_flatten(pc.split_pattern(arr, " "))
-                )
-                vc = toks.value_counts()
-                agg: dict = {}
-                _segment_into(
-                    agg,
-                    pat,
-                    (
-                        (w, f)
-                        for w, f in zip(
-                            vc.field("values").to_pylist(),
-                            vc.field("counts").to_pylist(),
-                        )
-                        if w != ""
-                    ),
-                )
-                yield pd.DataFrame(
-                    {"token": list(agg.keys()), "f": list(agg.values())}
-                )
-
-        toks = df.select(text_col).mapInPandas(
-            fused_partials, "token string, f long"
-        )
-    elif impl == "staged":
-        wf = word_frequencies(df, text_col, impl="arrow")
-
-        def seg_partials(it):
-            import re
-
-            import pandas as pd
-
-            pat = re.compile(pat_src, re.DOTALL)
-            for pdf in it:
-                agg: dict = {}
-                _segment_into(agg, pat, zip(pdf["w"], pdf["f"]))
-                yield pd.DataFrame(
-                    {"token": list(agg.keys()), "f": list(agg.values())}
-                )
-
-        toks = wf.mapInPandas(seg_partials, "token string, f long")
-    else:
-        raise ValueError(
-            f"greedy_tokenize_counts: impl must be 'fused' or 'staged', "
-            f"got {impl!r}"
-        )
+    toks = df.select(text_col).mapInPandas(fused_partials, "token string, f long")
     counts = toks.groupBy("token").agg(F.sum("f").alias("cnt"))
     if top_k is None:
         return counts

@@ -96,8 +96,8 @@ class JobSpec:
     #: these 1-based key subfields instead of the whole key
     partition_fields: list[int] | None = None
     #: G5 (KeyFieldBasedComparator): sort within partitions on these
-    #: (field, ascending) pairs — Hadoop secondary sort
-    sort_fields: list[tuple[int, bool]] | None = None
+    #: (field, ascending[, numeric]) tuples — Hadoop secondary sort
+    sort_fields: list[tuple] | None = None
     #: the (key, value) split of every line (splitKeyVal): this
     #: separator, and the key spans this many fields
     #: (stream.map.output.field.separator /

@@ -1672,7 +1672,7 @@ def text_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import bpe_pair_counts
 
     docs = load(spark, sf_dir, "documents")
-    return bpe_pair_counts(docs, "text", top_k=32, wf_impl="arrow")
+    return bpe_pair_counts(docs, "text", top_k=32)
 
 
 @register(

@@ -51,13 +51,6 @@ def test_minhash_lsh_pairs_identical_docs(spark):
     sigs = {r.id: r.sig for r in sig.collect()}
     assert sigs[1] == sigs[2] and len(sigs[1]) == 8
     assert all(len(h) == 16 for h in sigs[1])  # truncated md5s, no 'g' left
-    # split family (32-bit slots as longs): same semantics, long slots
-    split_sigs = {
-        r.id: r.sig
-        for r in minhash_signatures(sh, num_hashes=8, family="split").collect()
-    }
-    assert split_sigs[1] == split_sigs[2] and len(split_sigs[1]) == 8
-    assert all(isinstance(h, int) and 0 <= h < 2**32 for h in split_sigs[1])
     pairs = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(sig, rows_per_band=2).collect()}
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs
@@ -1163,3 +1156,24 @@ def test_fused_minhash_matches_expression_path(spark):
     assert got == want
     assert 4 not in got and 5 not in got and 8 not in got
     assert set(got) == {1, 2, 3, 6, 7}
+
+
+def test_fused_minhash_keeps_string_ids(spark):
+    # the id column keeps its type, as the expression path's groupBy does
+    from hadoop_multiple_streaming_spark.operators.dedup import (
+        fused_minhash_signatures,
+        minhash_signatures,
+        word_shingles,
+    )
+
+    docs = spark.createDataFrame(
+        [("doc-a", "the quick brown fox jumps"), ("doc-b", "x y z"),
+         ("doc-c", "too short"), ("doc-d", "the quick brown fox jumps")],
+        "doc_id string, text string",
+    )
+    fused = fused_minhash_signatures(docs, "text", "doc_id", n=3, num_hashes=8)
+    assert dict(fused.dtypes)["id"] == "string"
+    sh = word_shingles(docs, "text", "doc_id", n=3, distinct=False)
+    want = {r.id: list(r.sig) for r in minhash_signatures(sh, num_hashes=8).collect()}
+    assert {r.id: list(r.sig) for r in fused.collect()} == want
+    assert set(want) == {"doc-a", "doc-b", "doc-d"}

@@ -126,3 +126,40 @@ def test_spread_scan_is_local_mode_only(spark, monkeypatch):
     )
     assert T.spread_scan(df) is df  # cluster master: untouched
     assert real_master.startswith("local")
+
+
+def test_path_selectors_are_the_kept_set():
+    """Every public parameter that picks between two implementations
+    doubles the configurations the tests must cover, so the set is
+    pinned: each kept selector has a caller that runs both values, or
+    a value some input needs. A new ``impl``/``*_impl``/``family``/
+    ``binary`` parameter fails here until it earns a place."""
+    import importlib
+    import inspect
+    import pkgutil
+    import re
+
+    found = set()
+    for sub in ("operators", "functions", "streaming", "plans"):
+        pkg = importlib.import_module(f"hadoop_multiple_streaming_spark.{sub}")
+        for info in pkgutil.iter_modules(pkg.__path__):
+            mod = importlib.import_module(f"{pkg.__name__}.{info.name}")
+            for name, fn in inspect.getmembers(mod, inspect.isfunction):
+                if name.startswith("_") or fn.__module__ != mod.__name__:
+                    continue
+                found |= {
+                    f"{name}.{p}"
+                    for p in inspect.signature(fn).parameters
+                    if re.fullmatch(r"impl|\w+_impl|family|binary", p)
+                }
+    assert found == {
+        # catalog queries run both values
+        "kmeans_lloyd.impl",
+        "assign_cells.impl",
+        "pq_encode.impl",
+        # "expr" is the only path for non-integer ids
+        "embedding_lsh_pairs.sig_impl",
+        "semantic_dedup.pairs_impl",
+        # "auto" picks flat or hierarchical from n*k; two queries pin one each
+        "semantic_dedup.clusters_impl",
+    }

@@ -348,6 +348,31 @@ def test_kmeans_lloyd_impls_identical(spark):
         kmeans_lloyd(q, init, impl="wat")
 
 
+def test_assign_argmin_kernel_blocks_and_ties():
+    # the one argmin kernel behind every Arrow assignment: 300 centroids
+    # span three 128-wide blocks, and centroids 5 and 200 (and 7 and
+    # 260) are equal, so exact ties cross blocks and go to the smaller id
+    import numpy as np
+
+    from hadoop_multiple_streaming_spark.operators.similarity import (
+        _assign_argmin_np,
+    )
+
+    rng = np.random.default_rng(3)
+    C = rng.integers(-50, 50, (300, 3))
+    C[200], C[260] = C[5], C[7]
+    M = np.vstack([rng.integers(-60, 60, (40, 3)), C[[5, 7, 200, 299]]])
+    ids = np.arange(300) * 10
+    for dtype in (np.int64, np.float64):
+        got = _assign_argmin_np(M.astype(dtype), ids, C.astype(dtype))
+        want = [
+            min(range(300), key=lambda j: (int(((row - C[j]) ** 2).sum()), j)) * 10
+            for row in M
+        ]
+        assert got.tolist() == want, dtype
+    assert got[-4:].tolist() == [50, 70, 50, 2990]
+
+
 def test_assign_centroids_impls_identical(spark):
     import numpy as np
 
@@ -359,16 +384,21 @@ def test_assign_centroids_impls_identical(spark):
     rows = [
         (i, [int(x) for x in rng.integers(-900, 900, 4)], 0) for i in range(30)
     ]
+    # exact ties: [200]*4 is equidistant from clusters 0 and 2, and
+    # [-200]*4 from clusters 1 and 2 — both go to the smaller id
+    rows += [(30, [200] * 4, 0), (31, [-200] * 4, 0)]
     q = spark.createDataFrame(rows, "id long, qv array<long>, n2 long")
-    cent = spark.createDataFrame(
-        [(0, [400.0] * 4), (1, [-400.0] * 4), (2, [0.0] * 4)],
-        "cluster long, c array<double>",
-    )
-    expr = {r.id: r.cluster for r in assign_centroids(q, cent).collect()}
-    arrow = {
-        r.id: r.cluster for r in assign_centroids(q, cent, impl="arrow").collect()
+    cents = [(0, [400.0] * 4), (1, [-400.0] * 4), (2, [0.0] * 4)]
+    cent = spark.createDataFrame(cents, "cluster long, c array<double>")
+    got = {r.id: r.cluster for r in assign_centroids(q, cent).collect()}
+    want = {
+        i: min(
+            cents, key=lambda cc: (sum((x - m) ** 2 for x, m in zip(qv, cc[1])), cc[0])
+        )[0]
+        for i, qv, _ in rows
     }
-    assert arrow == expr and len(set(expr.values())) >= 2
+    assert got == want and len(set(want.values())) >= 2
+    assert got[30] == 0 and got[31] == 1
 
 
 def test_ivfpq_adc_restricts_to_probed_cells(spark):

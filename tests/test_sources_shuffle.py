@@ -105,8 +105,16 @@ def test_group_sorted_contract(spark):
 
 
 def test_parse_key_field_options():
-    assert parse_key_field_options("-k1,1 -k2,2nr") == [(1, True), (2, False)]
-    assert parse_key_field_options("-k3") == [(3, True)]
+    assert parse_key_field_options("-k1,1 -k2,2nr") == [
+        (1, True, False),
+        (2, False, True),
+    ]
+    assert parse_key_field_options("-k3") == [(3, True, False)]
+    assert parse_key_field_options("-k2,4r") == [
+        (2, False, False),
+        (3, False, False),
+        (4, False, False),
+    ]
     with pytest.raises(ValueError):
         parse_key_field_options("bogus")
 
@@ -144,8 +152,45 @@ def test_cli_partitioner_options(spark, tmp_path):
         ]
     )
     assert spec.partition_fields == [1]
-    assert spec.sort_fields == [(1, True), (2, False)]
+    assert spec.sort_fields == [(1, True, False), (2, False, True)]
     assert "mapred.text.key.partitioner.options" not in conf
+
+
+def _cli_sorted_lines(spark, tmp_path, lines, comparator_options):
+    # one cat reducer task, so its output file is the sorted stream
+    from hadoop_multiple_streaming_spark.cli import main as cli_main
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    (indir / "data.txt").write_text("".join(line + "\n" for line in lines))
+    rc = cli_main(
+        [
+            "-input", str(indir),
+            "-output", str(tmp_path / "out"),
+            "-mapred", "S|cat|cat",
+            "-numReduceTasks", "1",
+            "-D", "stream.num.map.output.key.fields=2",
+            "-D", f"mapred.text.key.comparator.options={comparator_options}",
+        ]
+    )
+    assert rc == 0
+    return [r.value for r in spark.read.text(str(tmp_path / "out" / "S")).collect()]
+
+
+def test_cli_numeric_key_field_sort(spark, tmp_path):
+    # -k2,2nr sorts field 2 as a number, descending: 100 > 10 > 9
+    # (as strings, descending would give 9, 100, 10)
+    got = _cli_sorted_lines(
+        spark, tmp_path, ["a\t9\tx", "a\t100\ty", "a\t10\tz"], "-k1,1 -k2,2nr"
+    )
+    assert got == ["a\t100\ty", "a\t10\tz", "a\t9\tx"]
+
+
+def test_cli_key_field_range_sorts_every_field(spark, tmp_path):
+    # -k1,2r covers fields 1 AND 2, both descending
+    lines = ["a\t1\tv", "b\t1\tv", "a\t2\tv", "b\t3\tv", "a\t3\tv"]
+    got = _cli_sorted_lines(spark, tmp_path, lines, "-k1,2r")
+    assert got == ["b\t3\tv", "b\t1\tv", "a\t3\tv", "a\t2\tv", "a\t1\tv"]
 
 
 def test_cli_stream_conf_keys_set_job_and_pipe_fields():

@@ -357,16 +357,15 @@ def test_grouped_token_partials_impls_identical(spark):
         "doc_id long, lang string, text string",
     )
     want = {("en", 4 + 4), ("de", 1), (None, 2)}
-    for impl in ("arrow", "expr"):
-        got = {
-            (r["lang"], r["s"])
-            for r in grouped_token_partials(df, "lang", "text", impl=impl)
-            .groupBy("lang")
-            .agg(F.sum("_tok").alias("s"))
-            .collect()
-        }
-        assert got == want, impl
-    # and both match the dashboard formula length - length(replace) + 1
+    got = {
+        (r["lang"], r["s"])
+        for r in grouped_token_partials(df, "lang", "text")
+        .groupBy("lang")
+        .agg(F.sum("_tok").alias("s"))
+        .collect()
+    }
+    assert got == want
+    # and it matches the dashboard formula length - length(replace) + 1
     formula = {
         (r["lang"], r["s"])
         for r in df.groupBy("lang")
@@ -390,12 +389,8 @@ def test_word_frequencies_impls_identical(spark):
         "doc_id long, text string",
     )
     want = {("ab", 2), ("a", 2), ("b", 1)}
-    for impl in ("expr", "arrow"):
-        got = {
-            (r["w"], r["f"])
-            for r in word_frequencies(df, "text", impl=impl).collect()
-        }
-        assert got == want, impl
+    got = {(r["w"], r["f"]) for r in word_frequencies(df, "text").collect()}
+    assert got == want
 
 
 def test_grouped_token_partials_int_group_col(spark):
@@ -496,13 +491,6 @@ def test_greedy_tokenize_counts_matches_python_reference(spark):
         (r.token, r.cnt)
         for r in greedy_tokenize_counts(df, "text", vocab=vocab).collect()
     }
-    staged = {
-        (r.token, r.cnt)
-        for r in greedy_tokenize_counts(
-            df, "text", vocab=vocab, impl="staged"
-        ).collect()
-    }
-    assert staged == got  # fused (1 fence/1 exchange) == staged (2/2)
 
     def ref(words):
         agg = {}
@@ -538,8 +526,6 @@ def test_greedy_tokenize_counts_matches_python_reference(spark):
 
     with pytest.raises(ValueError, match="vocab"):
         greedy_tokenize_counts(df, "text", vocab=())
-    with pytest.raises(ValueError, match="impl"):
-        greedy_tokenize_counts(df, "text", vocab=vocab, impl="wat")
 
 
 def test_greedy_token_counts_per_doc(spark):
