@@ -284,6 +284,46 @@ def save_bloom(spark, bloom: BloomFilterSpec, path: str) -> None:
     ).write.mode("overwrite").parquet(path)
 
 
+def _spec_from_row(r, words) -> BloomFilterSpec:
+    """A stored bitmap row's geometry and key count around ``words``."""
+    return BloomFilterSpec(
+        words=list(words),
+        num_bits=int(r["num_bits"]),
+        num_hashes=int(r["num_hashes"]),
+        n_keys=int(r["n_keys"]),
+    )
+
+
+def _fold_bitmaps(bitmaps: DataFrame, what: str) -> BloomFilterSpec | None:
+    """The OR of every stored bitmap in ``bitmaps`` (save_bloom rows),
+    folded on the executors: each bitmap explodes to (word index, word)
+    and a bit_or groupBy(index) merges them (the fold build_bloom
+    runs), so the driver only ever holds the ONE merged bitmap, however
+    many batches the store has. Geometry comes from a |geometries|-row
+    groupBy; more than one raises, as merge_blooms does (a mixed OR
+    would answer wrong). n_keys is the sum, an upper bound like
+    merge_blooms'. None when ``bitmaps`` is empty."""
+    geoms = (
+        bitmaps.groupBy("num_bits", "num_hashes")
+        .agg(F.sum("n_keys").alias("n_keys"))
+        .collect()
+    )
+    if not geoms:
+        return None
+    if len(geoms) != 1:
+        found = sorted((int(r["num_bits"]), int(r["num_hashes"])) for r in geoms)
+        raise ValueError(f"{what}: geometry mismatch across batches: {found}")
+    words = [0] * (int(geoms[0]["num_bits"]) // 64)
+    for r in (
+        bitmaps.select(F.posexplode("words").alias("_i", "_w"))
+        .groupBy("_i")
+        .agg(F.bit_or("_w").alias("_b"))
+        .collect()
+    ):
+        words[int(r["_i"])] = int(r["_b"])
+    return _spec_from_row(geoms[0], words)
+
+
 def compact_bloom_store(spark, store_path: str) -> BloomFilterSpec | None:
     """Fold a streaming ingest's per-batch bitmap subdirs
     (``store_path/batch_id=N/`` — streaming_bloom_screen's layout)
@@ -319,35 +359,9 @@ def compact_bloom_store(spark, store_path: str) -> BloomFilterSpec | None:
     fold_ids = set(batch_ids[:-1]) if newest >= 0 else set(batch_ids)
     if len(fold_ids) < 2:
         return None
-    # Distributed OR fold (VERDICT r13 missing #4): a long-neglected
-    # backlog x wide bitmaps must not be collected whole — explode each
-    # foldable bitmap to (word index, word) and bit_or-group by index
-    # (the same fold build_bloom runs), so the driver ever holds ONE
-    # merged bitmap, not |batches| of them. Geometry is validated from
-    # a |geometries|-row distinct, mirroring merge_blooms' check.
-    fold = store.where(F.col("batch_id").isin([int(b) for b in fold_ids]))
-    geoms = [
-        (int(r["num_bits"]), int(r["num_hashes"]))
-        for r in fold.select("num_bits", "num_hashes").distinct().collect()
-    ]
-    if len(geoms) != 1:
-        raise ValueError(
-            f"compact_bloom_store: geometry mismatch across batches: {sorted(geoms)}"
-        )
-    num_bits, num_hashes = geoms[0]
-    n_keys = int(
-        fold.agg(F.sum("n_keys").alias("_n")).collect()[0]["_n"]
-    )  # upper bound: duplicates across batches overcount (merge_blooms parity)
-    words = [0] * (num_bits // 64)
-    for r in (
-        fold.select(F.posexplode("words").alias("_i", "_w"))
-        .groupBy("_i")
-        .agg(F.bit_or("_w").alias("_b"))
-        .collect()
-    ):
-        words[int(r["_i"])] = int(r["_b"])
-    merged = BloomFilterSpec(
-        words=words, num_bits=num_bits, num_hashes=num_hashes, n_keys=n_keys
+    merged = _fold_bitmaps(
+        store.where(F.col("batch_id").isin([int(b) for b in fold_ids])),
+        "compact_bloom_store",
     )
     # fresh descending target (-1, then -2, ...) so the rename never
     # lands inside an existing compaction dir; dot-prefixed staging is
@@ -370,9 +384,4 @@ def compact_bloom_store(spark, store_path: str) -> BloomFilterSpec | None:
 
 def load_bloom(spark, path: str) -> BloomFilterSpec:
     r = spark.read.parquet(path).collect()[0]
-    return BloomFilterSpec(
-        words=list(r["words"]),
-        num_bits=int(r["num_bits"]),
-        num_hashes=int(r["num_hashes"]),
-        n_keys=int(r["n_keys"]),
-    )
+    return _spec_from_row(r, r["words"])

@@ -11,7 +11,10 @@ Cross-engine determinism (so a SQL oracle can replay the math):
     arithmetic;
   * embedding math quantizes floats to integers (round(x * 1e6)) so
     dot products and norms are EXACT (integer-valued doubles < 2^53
-    stay exact under any summation order).
+    stay exact under any summation order). That math — the cosine,
+    the argmin, Lloyd and Gram kernels, the hash-ordered seed pick —
+    lives once in operators.vectors; the k-means operators this module
+    clusters with come from operators.similarity.
 
 Scale notes (100 TB):
   * exact dedup = one hash-shuffle on the content hash (map-side
@@ -34,6 +37,16 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..functions.localrel import collect_bounded
+from . import similarity
+from .vectors import (
+    _assign_argmin_np,
+    _cosine,
+    _gram_cosine_blocks,
+    _hash_seeds,
+    _lloyd_rounds,
+    _quantize,
+    _sign_bits,
+)
 
 # ------------------------------------------------------------------ exact
 
@@ -656,15 +669,9 @@ def quantize_embeddings(
     engines and summation orders (values stay < 2^53)."""
     return df.select(
         F.col(id_col).alias("id"),
-        F.expr(
-            f"transform({vec_col}, x -> cast(round(cast(x as double) * {scale}) as bigint))"
-        ).alias("qv"),
+        _quantize(vec_col, scale).alias("qv"),
         *(keep_cols or []),
     ).withColumn("n2", F.expr("aggregate(qv, 0L, (a, x) -> a + x * x)"))
-
-
-def _dot(qa: str, qb: str) -> Column:
-    return F.expr(f"aggregate(zip_with({qa}, {qb}, (x, y) -> x * y), 0L, (a, x) -> a + x)")
 
 
 def dedup_clusters(pairs: DataFrame, max_iter: int = 10) -> DataFrame:
@@ -760,6 +767,15 @@ def planes_duckdb_literal(planes: list[list[int]]) -> str:
     ) + "]"
 
 
+def _band_explode(bands: int, rows_per_band: int) -> Column:
+    """posexplode of a ``sig`` bit string into (band, bucket): band b's
+    bucket is its rows_per_band-character slice."""
+    return F.expr(
+        f"posexplode(transform(sequence(0, {bands - 1}), "
+        f"b -> substring(sig, b * {rows_per_band} + 1, {rows_per_band})))"
+    )
+
+
 def _sign_signature_arrow(planes: list[list[int]]):
     """Arrow-batched sign-signature column: one int64 numpy matmul per
     batch (vectors x planes^T), sign bits rendered to the SAME '0'/'1'
@@ -813,29 +829,13 @@ def _bucket_verify_arrow(threshold: float):
         import numpy as np
         import pandas as pd
 
-        # Gram rows are computed in CHUNKS so peak memory is
-        # O(chunk * m), not O(m^2): a 100k-member bucket would need an
-        # 80 GB full Gram — chunked it is ~3 GB transient per 4096-row
-        # block. Within a chunk, only columns j > i survive (upper
-        # triangle), so each pair is emitted exactly once.
-        CHUNK = 4096
         out = []
         for bucket in members:
-            ids = np.asarray([m["id"] for m in bucket], dtype=np.int64)
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            M = np.vstack([np.asarray(bucket[i]["qv"]) for i in order]).astype(
-                np.int64, copy=False
-            )
-            n2 = np.asarray([bucket[i]["n2"] for i in order], dtype=np.float64)
-            norms = np.sqrt(n2)
-            m = len(ids)
+            ids, blocks = _gram_cosine_blocks(bucket)
             pairs = []
-            for lo in range(0, m, CHUNK):
-                hi = min(lo + CHUNK, m)
-                # rows lo..hi-1 against ALL columns, then mask j > i
-                block = (M[lo:hi] @ M.T).astype(np.float64)
-                cos = block / (norms[lo:hi, None] * norms[None, :])
+            for lo, cos in blocks:
+                # only columns j > i survive (upper triangle), so each
+                # pair is emitted exactly once
                 bi, bj = np.nonzero(cos >= threshold)
                 keep = bj > (bi + lo)
                 pairs.extend(
@@ -856,9 +856,10 @@ def _bucket_keep_arrow(threshold: float, max_cluster_size: int | None = None):
     threshold — instead of emitting pairs, distinct-ing the drop ids,
     and left-joining them back to the corpus (which consumed the
     members relation twice and cost two extra exchanges + a join).
-    The cosine math is byte-for-byte the _bucket_verify_arrow /
-    expression math: exact int64 Gram dot, correctly-rounded IEEE
-    double sqrt/multiply/divide (bit-identical, test-asserted).
+    The cosines come from the same Gram block generator as
+    _bucket_verify_arrow (vectors._gram_cosine_blocks: exact int64
+    dots, correctly-rounded IEEE double sqrt/multiply/divide —
+    bit-identical to the expression form, test-asserted).
     Clusters above ``max_cluster_size`` skip the Gram entirely and
     keep every member (the same skew guard the pairing path applies);
     singletons are trivially kept."""
@@ -869,26 +870,16 @@ def _bucket_keep_arrow(threshold: float, max_cluster_size: int | None = None):
         import numpy as np
         import pandas as pd
 
-        CHUNK = 4096  # bounds transient Gram blocks exactly as verify
         out = []
         for bucket in members:
-            ids = np.asarray([m["id"] for m in bucket], dtype=np.int64)
-            m = len(ids)
+            m = len(bucket)
             if m < 2 or (max_cluster_size is not None and m > max_cluster_size):
-                out.append([(int(i), True) for i in ids])
+                out.append([(int(x["id"]), True) for x in bucket])
                 continue
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            M = np.vstack([np.asarray(bucket[i]["qv"]) for i in order]).astype(
-                np.int64, copy=False
-            )
-            n2 = np.asarray([bucket[i]["n2"] for i in order], dtype=np.float64)
-            norms = np.sqrt(n2)
+            ids, blocks = _gram_cosine_blocks(bucket)
             keep = np.ones(m, dtype=bool)
-            for lo in range(0, m, CHUNK):
-                hi = min(lo + CHUNK, m)
-                block = (M[lo:hi] @ M.T).astype(np.float64)
-                cos = block / (norms[lo:hi, None] * norms[None, :])
+            for lo, cos in blocks:
+                hi = lo + cos.shape[0]
                 # member i is dropped iff any j < i (global id order)
                 # matches; columns j >= row's global index are masked
                 hit = cos >= threshold
@@ -983,20 +974,10 @@ def _integral_id(df: DataFrame) -> bool:
 
 def _local_seed_cents(rows: list, k: int) -> list:
     """The k hash-ordered seed centroids from collected (id, qv) rows —
-    replays ``row_number() OVER (ORDER BY md5(cast(id as string)), id)
-    <= k`` with cluster = rank-1. hashlib.md5 over the decimal id
-    string is Spark's md5(cast(bigint as string)) (the same replay
-    _fine_lloyd_cells pins); hex-string tuple sort == the engine's
-    ASCII string order."""
-    import hashlib
-
-    order = sorted(
-        (hashlib.md5(str(int(r["id"])).encode()).hexdigest(), int(r["id"]), r["qv"])
-        for r in rows
-    )[: int(k)]
-    return [
-        (rank, [float(x) for x in qv]) for rank, (_h, _i, qv) in enumerate(order)
-    ]
+    vectors._hash_seeds' replay of ``row_number() OVER (ORDER BY
+    md5(cast(id as string)), id) <= k``, with cluster = rank-1."""
+    seeds = _hash_seeds([r["id"] for r in rows], k)
+    return [(rank, [float(x) for x in rows[j]["qv"]]) for rank, j in enumerate(seeds)]
 
 
 def auto_semantic_clusters(
@@ -1021,15 +1002,6 @@ def auto_semantic_clusters(
     window over the k already-limited rows (k rows on one partition by
     design; never the corpus). Assignment itself is kmeans_lloyd's
     shuffle-free broadcast-centroid argmin projection."""
-    from pyspark.sql.window import Window
-
-    from .similarity import (  # deferred: similarity imports dedup
-        _LOCAL_KMEANS_CAP,
-        _lloyd_local_cents,
-        kmeans_assign_frame,
-        kmeans_lloyd,
-    )
-
     carry = [c for c in (carry or []) if c != "id"]
     # r15 local fast path (guide §1.2 step 1): seeds + every Lloyd
     # update round computed on the driver from ONE bounded collect —
@@ -1038,13 +1010,15 @@ def auto_semantic_clusters(
     # row_number seed pick, _lloyd_local_cents the update math.
     rows = local_rows
     if rows is None and _integral_id(quantized):
-        rows = collect_bounded(quantized.select("id", "qv"), _LOCAL_KMEANS_CAP)
+        rows = collect_bounded(
+            quantized.select("id", "qv"), similarity._LOCAL_KMEANS_CAP
+        )
     if rows is not None:
         cent_rows = _local_seed_cents(rows, k)
-        cent_rows = _lloyd_local_cents(
+        cent_rows = similarity._lloyd_local_cents(
             [list(r["qv"]) for r in rows], cent_rows, kmeans_iters, dim
         )
-        return kmeans_assign_frame(quantized, cent_rows, dim, carry=carry)
+        return similarity.kmeans_assign_frame(quantized, cent_rows, carry=carry)
 
     seeds = (
         quantized.select(
@@ -1057,7 +1031,7 @@ def auto_semantic_clusters(
         (F.row_number().over(Window.orderBy("_h", "id")) - 1).alias("cluster"),
         F.expr("transform(qv, x -> cast(x as double))").alias("c"),
     )
-    return kmeans_lloyd(
+    return similarity.kmeans_lloyd(
         quantized.select("id", "qv", *[c for c in carry if c != "qv"]),
         init,
         iters=kmeans_iters,
@@ -1085,77 +1059,37 @@ def coarse_cluster_count(k: int) -> int:
     return 1 << ((L + 1) // 2)
 
 
-def _fine_lloyd_cells(target_cluster_size: int, iters: int, dim: int, carry: list[str] | None = None):
+def _fine_lloyd_cells(target_cluster_size: int, iters: int, carry: list[str] | None = None):
     """Per-coarse-cell fine k-means for hierarchical_semantic_clusters
     — one Arrow stage per cell (applyInPandas), NO driver-side fine
     centroids (at 10^10 docs the fine codebook is GBs; keeping each
     cell's centroids inside its own task is the only shape that
     scales). The math replays the engine's oracle-exact Lloyd contract
-    bit for bit:
+    bit for bit, on the operators.vectors kernels:
 
       * seeds = the cell's k2 vectors with the smallest (md5(id), id),
         k2 = max(1, ceil(cell_n / target)) — SQL: row_number() OVER
-        (PARTITION BY coarse ORDER BY md5(id), id) <= k2;
-      * distance = dim-SEQUENTIAL squared-L2 accumulation (the exact
-        IEEE fold order list_aggregate/aggregate evaluates — same
-        kernel discipline as similarity._kmeans_assign_arrow,
-        including the <=128-centroid cache blocking);
-      * argmin ties -> smallest fine id (np.argmin first-min over
-        id-ordered centroids = ORDER BY dist, fine);
-      * means = exact int64 sums / count, one correctly-rounded double
-        division; empty fine clusters drop out naturally.
+        (PARTITION BY coarse ORDER BY md5(id), id) <= k2; fine id =
+        seed rank;
+      * ``iters - 1`` Lloyd rounds (_lloyd_rounds), then the final
+        assignment (_assign_argmin_np: dim-sequential squared-L2 fold,
+        ties to the smallest fine id); empty fine clusters drop out.
 
     Emits (id, cluster = coarse * 2^32 + fine) — the composite is
     collision-free (fine < 2^32 always; coarse < 2^31) and replayable
     as plain bigint arithmetic."""
 
     def fn(pdf):
-        import hashlib
-
         import numpy as np
         import pandas as pd
 
-        n_c = len(pdf)
         coarse = int(pdf["coarse"].iloc[0])
         ids = pdf["id"].to_numpy(dtype=np.int64)
         M = np.vstack(pdf["qv"].map(np.asarray).to_numpy()).astype(np.int64)
-        k2 = max(1, -(-n_c // target_cluster_size))
-        keys = [hashlib.md5(str(int(i)).encode()).hexdigest() for i in ids]
-        order = sorted(range(n_c), key=lambda j: (keys[j], int(ids[j])))
-        cents = M[order[:k2]].astype(np.float64)  # fine id = seed rank
-        cent_ids = np.arange(k2, dtype=np.int64)
-        Mf = M.astype(np.float64)
-        rows = np.arange(n_c)
-        assign = None
-        for it in range(iters):
-            kc = 128
-            best_d = None
-            best_i = None
-            for j0 in range(0, cents.shape[0], kc):
-                Cb = cents[j0 : j0 + kc]
-                db = np.zeros((n_c, Cb.shape[0]), dtype=np.float64)
-                for d in range(dim):  # sequential over dims: exact fold order
-                    diff = Mf[:, d : d + 1] - Cb[None, :, d]
-                    db += diff * diff
-                bi = np.argmin(db, axis=1)
-                bd = db[rows, bi]
-                if best_d is None:
-                    best_d, best_i = bd, cent_ids[j0 + bi]
-                else:
-                    better = bd < best_d
-                    best_d = np.where(better, bd, best_d)
-                    best_i = np.where(better, cent_ids[j0 + bi], best_i)
-            assign = best_i
-            if it == iters - 1:
-                break
-            new_ids, new_cents = [], []
-            for c in np.unique(assign):  # sorted -> first-min rule holds
-                mask = assign == c
-                s = M[mask].sum(axis=0)  # exact int64 sums
-                new_ids.append(c)
-                new_cents.append(s.astype(np.float64) / int(mask.sum()))
-            cent_ids = np.asarray(new_ids, dtype=np.int64)
-            cents = np.vstack(new_cents)
+        k2 = max(1, -(-len(pdf) // target_cluster_size))
+        seeds = M[_hash_seeds(ids, k2)].astype(np.float64)
+        cent_ids, cents = _lloyd_rounds(M, np.arange(k2), seeds, iters - 1)
+        assign = _assign_argmin_np(M.astype(np.float64), cent_ids, cents)
         out = {"id": ids, "cluster": (coarse << 32) + assign}
         for c in carry or []:  # column passthrough — same-row values
             out[c] = pdf[c].to_numpy()
@@ -1221,7 +1155,7 @@ def hierarchical_semantic_clusters(
         if f.name in carry
     )
     return coarse.groupBy("coarse").applyInPandas(
-        _fine_lloyd_cells(target_cluster_size, kmeans_iters, dim, carry=carry),
+        _fine_lloyd_cells(target_cluster_size, kmeans_iters, carry=carry),
         schema="id long, cluster long" + carry_ddl,
     )
 
@@ -1302,20 +1236,13 @@ def embedding_lsh_pairs(
     if sig_impl == "arrow":
         sig = _sign_signature_arrow(planes)(F.col("qv"))
     elif sig_impl == "expr":
-        sig = F.expr(
-            f"array_join(transform({planes_spark_literal(planes)}, pl -> "
-            "case when aggregate(zip_with(qv, pl, (x, c) -> x * c), 0L, "
-            "(a, x) -> a + x) > 0 then '1' else '0' end), '')"
-        )
+        sig = _sign_bits(planes_spark_literal(planes))
     else:
         raise ValueError(
             f"embedding_lsh_pairs: sig_impl must be 'arrow' or 'expr', "
             f"got {sig_impl!r}"
         )
-    band_expr = F.expr(
-        f"posexplode(transform(sequence(0, {bands - 1}), "
-        f"b -> substring(sig, b * {rows_per_band} + 1, {rows_per_band})))"
-    )
+    band_expr = _band_explode(bands, rows_per_band)
     if sig_impl == "arrow":
         # FUSED scale path: the vectors ride the one groupBy(band,
         # bucket) shuffle (int32 transport — quantized coordinates are
@@ -1379,9 +1306,7 @@ def embedding_lsh_pairs(
     b = quantized.select(
         F.col("id").alias("id_b"), F.col("qv").alias("qb"), F.col("n2").alias("nb2")
     )
-    cos = _dot("qa", "qb").cast("double") / (
-        F.sqrt(F.col("na2").cast("double")) * F.sqrt(F.col("nb2").cast("double"))
-    )
+    cos = _cosine("qa", "qb", "na2", "nb2")
     # dedup of pairs sharing several bands is DEFERRED past the verify:
     # re-verifying a duplicate pair is ~2µs of deterministic arithmetic
     # (identical output row), while distinct-ing the full candidate set
@@ -1417,18 +1342,9 @@ def embedding_lsh_buckets(
             f"divide num_planes {num_planes}"
         )
     bands = num_planes // rows_per_band
-    planes = rademacher_planes(num_planes, dim)
-    sig = F.expr(
-        f"array_join(transform({planes_spark_literal(planes)}, pl -> "
-        "case when aggregate(zip_with(qv, pl, (x, c) -> x * c), 0L, "
-        "(a, x) -> a + x) > 0 then '1' else '0' end), '')"
-    )
-    band_expr = F.expr(
-        f"posexplode(transform(sequence(0, {bands - 1}), "
-        f"b -> substring(sig, b * {rows_per_band} + 1, {rows_per_band})))"
-    )
+    sig = _sign_bits(planes_spark_literal(rademacher_planes(num_planes, dim)))
     return quantized.select("id", sig.alias("sig")).select(
-        "id", band_expr.alias("band", "bucket")
+        "id", _band_explode(bands, rows_per_band).alias("band", "bucket")
     )
 
 
@@ -1544,10 +1460,10 @@ def semantic_dedup(
         # AND feeds the driver-local seed/Lloyd fast path downstream
         # (auto_semantic_clusters); at scale the probe early-stops and
         # every distributed shape is unchanged
-        from .similarity import _LOCAL_KMEANS_CAP  # deferred
-
         local_rows = (
-            collect_bounded(quantized.select("id", "qv"), _LOCAL_KMEANS_CAP)
+            collect_bounded(
+                quantized.select("id", "qv"), similarity._LOCAL_KMEANS_CAP
+            )
             if _integral_id(quantized)
             else None
         )
@@ -1647,10 +1563,7 @@ def semantic_dedup(
             F.col("qv").alias("qb"),
             F.col("n2").alias("nb2"),
         )
-        cos = _dot("qa", "qb").cast("double") / (
-            F.sqrt(F.col("na2").cast("double"))
-            * F.sqrt(F.col("nb2").cast("double"))
-        )
+        cos = _cosine("qa", "qb", "na2", "nb2")
         pairs = (
             a.join(b, "cluster")
             .where(F.col("id_a") < F.col("id_b"))
@@ -1710,9 +1623,7 @@ def embedding_cosine_pairs(
             .drop("_guard_n")
         )
     a, b = quantized.alias("a"), quantized.alias("b")
-    cos = (_dot("a.qv", "b.qv").cast("double") / (
-        F.sqrt(F.col("a.n2").cast("double")) * F.sqrt(F.col("b.n2").cast("double"))
-    ))
+    cos = _cosine("a.qv", "b.qv", "a.n2", "b.n2")
     return (
         a.join(b, F.col("a.id") < F.col("b.id"))
         .select(

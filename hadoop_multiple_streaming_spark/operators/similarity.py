@@ -2,10 +2,11 @@
 brute-force cosine top-k as the exact baseline, and an IVF-style
 bucket-pruned variant as the scale path.
 
-Math rides the quantized-integer cosine from operators.dedup
-(exact, engine-independent). Everything is DataFrame expressions —
-the dot product is a zip_with/aggregate fold inside codegen, not a
-Python UDF.
+The arithmetic (quantized cosine, the float and bigint distance
+folds, the argmin and Lloyd kernels) lives once in operators.vectors;
+this module composes it into search, clustering and quantization
+operators. The exact paths are DataFrame expressions; the Arrow
+kernels are their bit-identical scale forms.
 
 Scale notes (100 TB of vectors):
   * brute force is O(|queries| x |corpus|); right only when queries
@@ -29,7 +30,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.localrel import collect_bounded
-from .dedup import _dot
+from .vectors import (
+    _ARGMIN,
+    _ARGMIN_INT,
+    _L2,
+    _L2_INT,
+    _argmin_udf,
+    _assign_argmin_np,
+    _cosine,
+    _dot,
+    _lloyd_rounds,
+)
 
 #: Row cap for the guarded driver-local Lloyd fast path (optimization
 #: r15, guide §1.2 step 1): below it the iterative k-means jobs
@@ -53,15 +64,32 @@ _LOCAL_KMEANS_CAP = min(
     _LOCAL_KMEANS_CAP_CEIL,
 )
 
+#: Row cap for the driver collect of a centroid or codebook table
+#: (kmeans_lloyd's init centroids, assign_cells' cells, pq_encode's
+#: codebooks). Those tables are k (or m x k) rows by design; 2^16 is
+#: the largest k any catalog path builds (dedup.auto_cluster_count's
+#: max_k). A larger table raises instead of landing on the driver.
+_CENTROID_CAP = 1 << 16
+
+
+def _collect_centroids(df: DataFrame, op: str) -> list:
+    """``df``'s rows through one bounded collect, or a ValueError that
+    names ``op`` and the cap."""
+    rows = collect_bounded(df, _CENTROID_CAP)
+    if rows is None:
+        raise ValueError(
+            f"{op}: the centroid table has more than {_CENTROID_CAP} rows, "
+            f"the cap on a driver-held centroid set"
+        )
+    return rows
+
 
 def _lloyd_local_cents(qvs: list, cent_rows: list, iters: int, dim: int) -> list:
     """``iters - 1`` Lloyd update rounds on the DRIVER over collected
     vectors — bit-identical to the distributed arrow loop: the same
-    blocked argmin kernel (:func:`_assign_argmin_np`, dim-sequential
-    IEEE fold), exact int64 per-cluster sums, and one Python int/int
-    correctly-rounded double division per mean (the cap bounds every
-    sum far below 2^53, where the distributed ``cast(s as double)/n``
-    and Python's exact-rational division provably agree)."""
+    rounds (:func:`vectors._lloyd_rounds`) whose mean
+    ``float64(exact int64 sum) / n`` is the driver's int/int division
+    for every sum below 2^53, which the cap guarantees."""
     import numpy as np
 
     if not qvs:
@@ -73,24 +101,19 @@ def _lloyd_local_cents(qvs: list, cent_rows: list, iters: int, dim: int) -> list
             raise ValueError(
                 f"kmeans_lloyd: dim={dim} but vectors have {len(qv)} elements"
             )
-    Mi = np.asarray(qvs, dtype=np.int64)
-    Mf = Mi.astype(np.float64)
-    for _ in range(iters - 1):
-        clusters = [c for c, _ in cent_rows]
-        cents = np.asarray([v for _, v in cent_rows], dtype=np.float64)
-        assign = _assign_argmin_np(Mf, clusters, cents)
-        new_rows = []
-        for c in np.unique(assign):  # ascending, like the sorted() below
-            mask = assign == c
-            s = Mi[mask].sum(axis=0)  # exact int64 sums
-            n = int(mask.sum())
-            new_rows.append((int(c), [int(s[d]) / n for d in range(dim)]))
-        cent_rows = sorted(new_rows)
-    return cent_rows
+    if iters <= 1:
+        return cent_rows
+    ids, cents = _lloyd_rounds(
+        np.asarray(qvs, dtype=np.int64),
+        [c for c, _ in cent_rows],
+        np.asarray([v for _, v in cent_rows], dtype=np.float64),
+        iters - 1,
+    )
+    return [(int(c), v) for c, v in zip(ids, cents.tolist())]
 
 
 def kmeans_assign_frame(
-    quantized: DataFrame, cent_rows: list, dim: int, carry: list | None = None
+    quantized: DataFrame, cent_rows: list, carry: list | None = None
 ) -> DataFrame:
     """The lazy tail of :func:`kmeans_lloyd`: in-plan Arrow argmin
     assignment of final driver-held centroids — (id, *carry, cluster)."""
@@ -98,7 +121,25 @@ def kmeans_assign_frame(
     return quantized.select(
         "id",
         *carry,
-        _kmeans_assign_arrow(cent_rows, dim)(F.col("qv")).alias("cluster"),
+        _argmin_udf(cent_rows, "float64")(F.col("qv")).alias("cluster"),
+    )
+
+
+def _cosine_topk(joined: DataFrame, k: int) -> DataFrame:
+    """The shared tail of every cosine search: score each row of
+    ``joined`` (query_id, q_qv, q_n2 against a candidate id, qv, n2) by
+    the quantized cosine and keep each query's k best, ties broken by
+    neighbor id -> (query_id, neighbor_id, rank, cosine)."""
+    scored = joined.select(
+        "query_id",
+        F.col("id").alias("neighbor_id"),
+        _cosine("q_qv", "qv", "q_n2", "n2").alias("cosine"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cosine")
     )
 
 
@@ -116,18 +157,7 @@ def cosine_topk(
         F.col("id").alias("query_id"), F.col("qv").alias("q_qv"), F.col("n2").alias("q_n2")
     )
     joined = corpus.join(F.broadcast(q), F.col("query_id") != F.col("id") if exclude_self else F.lit(True))
-    cos = _dot("q_qv", "qv").cast("double") / (
-        F.sqrt(F.col("q_n2").cast("double")) * F.sqrt(F.col("n2").cast("double"))
-    )
-    scored = joined.select(
-        "query_id", F.col("id").alias("neighbor_id"), cos.alias("cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _cosine_topk(joined, k)
 
 
 def ivf_topk(
@@ -150,90 +180,7 @@ def ivf_topk(
         F.broadcast(q),
         (F.col("q_bucket") == F.col(bucket_col)) & (F.col("query_id") != F.col("id")),
     )
-    cos = _dot("q_qv", "qv").cast("double") / (
-        F.sqrt(F.col("q_n2").cast("double")) * F.sqrt(F.col("n2").cast("double"))
-    )
-    scored = joined.select(
-        "query_id", F.col("id").alias("neighbor_id"), cos.alias("cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
-
-
-def _assign_argmin_np(M, ids, C):
-    """The one argmin core of every Arrow assignment kernel: for each
-    row of ``M`` (n x dim), the entry of ``ids`` whose row of ``C``
-    (k x dim, same dtype as ``M``) is nearest by squared L2.
-
-    The distance is accumulated in the arrays' own dtype, dim-by-dim
-    and left-to-right (vectorized across rows, SEQUENTIAL across dims):
-    int64 is exact, and float64 follows the exact IEEE fold order of
-    the zip_with/aggregate expression, so either way the result is
-    bit-identical to the SQL replay. Centroid BLOCKING: the naive
-    (rows x k) accumulator is swept once per dim — at k=800 that is
-    ~64 MB of DRAM traffic per pass per 10k-row batch (the auto-sized
-    SemDeDup path measured 126 s at sf8.0, memory-bound). Processing
-    <=128 centroids at a time keeps the accumulator and diff temp
-    L3-resident (10k x 128 doubles ~ 10 MB) without changing the
-    per-(row, centroid) order. Tie rule: ``ids`` ascending, np.argmin
-    takes the first minimum within a block and the strict ``<`` keeps
-    the earlier block across blocks, so exact ties go to the smallest
-    id — the (dist, id) lexicographic rule."""
-    import numpy as np
-
-    ids = np.asarray(ids, dtype=np.int64)
-    kc = 128
-    best_d = None
-    best_i = None
-    rows = np.arange(M.shape[0])
-    for j0 in range(0, C.shape[0], kc):
-        Cb = C[j0 : j0 + kc]
-        db = np.zeros((M.shape[0], Cb.shape[0]), dtype=M.dtype)
-        for d in range(C.shape[1]):  # sequential over dims: exact fold order
-            diff = M[:, d : d + 1] - Cb[None, :, d]
-            db += diff * diff
-        bi = np.argmin(db, axis=1)
-        bd = db[rows, bi]
-        if best_d is None:
-            best_d, best_i = bd, ids[j0 + bi]
-        else:
-            better = bd < best_d
-            best_d = np.where(better, bd, best_d)
-            best_i = np.where(better, ids[j0 + bi], best_i)
-    return best_i
-
-
-def _kmeans_assign_arrow(cent_rows: list, dim: int):
-    """Arrow-batched nearest-centroid assignment with BIT-IDENTICAL
-    results to the expression form: the squared-L2 accumulation runs
-    dim-by-dim, left-to-right (``acc += (x_d - m_d)^2`` — vectorized
-    across rows, SEQUENTIAL across dims), i.e. the exact IEEE
-    operation sequence the zip_with/aggregate fold evaluates, so even
-    near-tie argmins agree to the last ulp. ``cent_rows`` is sorted by
-    cluster id; np.argmin takes the FIRST minimum = the smallest
-    cluster id on exact ties, matching the (dist, cluster)
-    lexicographic rule (test-asserted impl equivalence)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    clusters = [c for c, _ in cent_rows]
-    cents = np.asarray([v for _, v in cent_rows], dtype=np.float64)
-
-    @pandas_udf("long")
-    def assign_udf(qv):
-        import numpy as np
-        import pandas as pd
-
-        if len(qv) == 0:
-            return pd.Series([], dtype="int64")
-        M = np.vstack(qv.map(np.asarray).to_numpy()).astype(np.float64)
-        return pd.Series(_assign_argmin_np(M, clusters, cents))
-
-    return assign_udf
+    return _cosine_topk(joined, k)
 
 
 def kmeans_lloyd(
@@ -319,7 +266,8 @@ def kmeans_lloyd(
     carry = [c for c in (carry or []) if c != "id"]
     if impl == "arrow":
         cent_rows = sorted(
-            (r["cluster"], list(r["c"])) for r in init_centroids.collect()
+            (r["cluster"], list(r["c"]))
+            for r in _collect_centroids(init_centroids, "kmeans_lloyd")
         )
         local = (
             collect_bounded(quantized.select("qv"), _LOCAL_KMEANS_CAP)
@@ -339,7 +287,7 @@ def kmeans_lloyd(
                 assigned_it = quantized.select(
                     "id",
                     "qv",
-                    _kmeans_assign_arrow(cent_rows, dim)(F.col("qv")).alias("cluster"),
+                    _argmin_udf(cent_rows, "float64")(F.col("qv")).alias("cluster"),
                 )
                 sums = assigned_it.groupBy("cluster").agg(
                     F.count(F.lit(1)).alias("n"),
@@ -351,7 +299,7 @@ def kmeans_lloyd(
                     (r["cluster"], [r[f"_s{i}"] / r["n"] for i in range(dim)])
                     for r in sums
                 )
-        return kmeans_assign_frame(quantized, cent_rows, dim, carry=carry)
+        return kmeans_assign_frame(quantized, cent_rows, carry=carry)
     if impl != "expr":
         raise ValueError(
             f"kmeans_lloyd: impl must be 'expr' or 'arrow', got {impl!r}"
@@ -369,13 +317,7 @@ def kmeans_lloyd(
     # array keys per row), leaving the centroid-mean groupBy as each
     # iteration's ONLY exchange. collect_list's nondeterministic order
     # is irrelevant: the sort is over (dist, cluster) values.
-    argmin = F.expr(
-        "element_at(array_sort(transform(_cents, s -> named_struct("
-        "'dist', aggregate(zip_with(qv, s.c, (x, m) -> "
-        "(cast(x as double) - m) * (cast(x as double) - m)), "
-        "cast(0 as double), (acc, d) -> acc + d), "
-        "'cluster', s.cluster))), 1).cluster"
-    )
+    argmin = F.expr(_ARGMIN)
     for _ in range(iters):
         cent_arr = cent.agg(
             F.collect_list(F.struct("cluster", "c")).alias("_cents")
@@ -399,12 +341,6 @@ def kmeans_lloyd(
     return assigned.select("id", *carry, "cluster")
 
 
-_L2 = (
-    "aggregate(zip_with(qv, c, (x, m) -> (cast(x as double) - m) * "
-    "(cast(x as double) - m)), cast(0 as double), (acc, d) -> acc + d)"
-)
-
-
 def assign_centroids(quantized: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: (id, qv, n2) x (cluster, c) ->
     (id, qv, n2, cluster). The k centroids fold into ONE broadcast row
@@ -415,15 +351,8 @@ def assign_centroids(quantized: DataFrame, centroids: DataFrame) -> DataFrame:
     cent_arr = centroids.agg(
         F.collect_list(F.struct("cluster", "c")).alias("_cents")
     )
-    argmin = F.expr(
-        "element_at(array_sort(transform(_cents, s -> named_struct("
-        "'dist', aggregate(zip_with(qv, s.c, (x, m) -> "
-        "(cast(x as double) - m) * (cast(x as double) - m)), "
-        "cast(0 as double), (acc, d) -> acc + d), "
-        "'cluster', s.cluster))), 1).cluster"
-    )
     return quantized.crossJoin(F.broadcast(cent_arr)).select(
-        "id", "qv", "n2", argmin.alias("cluster")
+        "id", "qv", "n2", F.expr(_ARGMIN).alias("cluster")
     )
 
 
@@ -439,7 +368,7 @@ def vector_norm_bounds(df: DataFrame, vec_col: str = "qv") -> tuple[int, int]:
     n2 = (
         F.col("n2")
         if "n2" in df.columns
-        else F.expr(_DOT_INT.format(a=vec_col, b=vec_col))
+        else _dot(vec_col, vec_col)
     )
     row = df.agg(F.min(n2).alias("mn"), F.max(n2).alias("mx")).collect()[0]
     if row["mn"] is None:
@@ -560,7 +489,7 @@ def probe_ivf_index(
         F.col("qv").alias("q_qv"),
         F.col("n2").alias("q_n2"),
         "cluster",
-        F.expr(_L2).alias("dist"),
+        F.expr(_L2.format(a="qv", b="c")).alias("dist"),
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("cluster"))
     probes = (
@@ -570,43 +499,7 @@ def probe_ivf_index(
     )
     cond = F.col("query_id") != F.col("id") if exclude_self else F.lit(True)
     joined = corpus.join(F.broadcast(probes), "cluster").where(cond)
-    cos = _dot("q_qv", "qv").cast("double") / (
-        F.sqrt(F.col("q_n2").cast("double")) * F.sqrt(F.col("n2").cast("double"))
-    )
-    scored = joined.select(
-        "query_id", F.col("id").alias("neighbor_id"), cos.alias("cosine")
-    )
-    wk = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
-
-
-#: exact integer L2 between two long arrays (no doubles anywhere —
-#: the fold stays bigint, so cross-engine sums are order-free exact)
-_L2_INT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-    "0L, (acc, d) -> acc + d)"
-)
-
-#: exact integer dot product between two long arrays (same bigint
-#: fold discipline as _L2_INT); {a}={b} gives the squared norm
-_DOT_INT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-    "0L, (acc, d) -> acc + d)"
-)
-
-
-#: bigint argmin over an inlined centroid array: distance fold then
-#: lexicographic (dist, cluster) sort — ties break to the smaller id
-_ARGMIN_INT = (
-    "element_at(array_sort(transform(_cents, s -> named_struct("
-    "'d', aggregate(zip_with(qv, s.cv, (x, c) -> (x - c) * (x - c)), "
-    "0L, (acc, y) -> acc + y), "
-    "'cluster', s.cluster))), 1).cluster"
-)
+    return _cosine_topk(joined, k)
 
 
 def ivf_train_int(
@@ -664,40 +557,6 @@ def ivf_train_int(
     return cent
 
 
-def _assign_cells_arrow(cent_rows: list):
-    """Arrow-batched integer nearest-cell assignment, BIT-IDENTICAL to
-    the ``_ARGMIN_INT`` expression (optimization r15, guide §4.2): all
-    arithmetic is exact int64 — (x-c)^2 summed over dims — so there is
-    no rounding to reason about at all (the expression fold is 0L-seeded
-    bigint too), and ``cent_rows`` is sorted by cluster id so
-    np.argmin's first-min IS the smallest-cluster tie rule of the
-    (d, cluster) lexicographic sort. Exactness bound: |x-c| <= ~3e9
-    before the int64 sum could overflow at dim 64 — quantized unit-norm
-    embeddings (1e6 scale) sit ~3 orders below that.
-
-    Motivation (measured, sf0.1, 2000x16x64): the interpreted
-    zip_with/aggregate argmin is NOT whole-stage-codegen'd and costs
-    ~1.8 s per evaluation — and ann_ivfpq_adc's plan evaluates it
-    twice (bucket assignment + the residual path)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    clusters = [int(c) for c, _ in cent_rows]
-    cents = np.asarray([v for _, v in cent_rows], dtype=np.int64)
-
-    @pandas_udf("long")
-    def assign_udf(qv):
-        import numpy as np
-        import pandas as pd
-
-        if len(qv) == 0:
-            return pd.Series([], dtype="int64")
-        M = np.vstack(qv.map(np.asarray).to_numpy()).astype(np.int64)
-        return pd.Series(_assign_argmin_np(M, clusters, cents))
-
-    return assign_udf
-
-
 def assign_cells(
     quantized: DataFrame, centroids: DataFrame, impl: str = "expr"
 ) -> DataFrame:
@@ -716,10 +575,11 @@ def assign_cells(
     contract as kmeans_lloyd impl='arrow')."""
     if impl == "arrow":
         cent_rows = sorted(
-            (int(r["cluster"]), list(r["cv"])) for r in centroids.collect()
+            (int(r["cluster"]), list(r["cv"]))
+            for r in _collect_centroids(centroids, "assign_cells")
         )
         return quantized.select(
-            "id", "qv", _assign_cells_arrow(cent_rows)(F.col("qv")).alias("cluster")
+            "id", "qv", _argmin_udf(cent_rows, "int64")(F.col("qv")).alias("cluster")
         ).select("id", "cluster")
     if impl != "expr":
         raise ValueError(
@@ -811,7 +671,7 @@ def pq_encode(
         # join, its repartition and both aggregates gone from the plan
         cb_rows = sorted(
             (int(r["subspace"]), int(r["code"]), list(r["cw"]))
-            for r in codebooks.collect()
+            for r in _collect_centroids(codebooks, "pq_encode")
         )
         subs = {s for s, _, _ in cb_rows}
         if subs != set(range(m)):
@@ -1163,9 +1023,9 @@ def ivfpq_adc_topk(
         # exact bigint sums (per-term |x*y| bounded well under 2^63 for
         # quantized components); only the final sqrt/divide is double.
         # Zero-norm vectors get distance 1.0 (no angular information).
-        dot = F.expr(_DOT_INT.format(a="_qa", b="_qb"))
-        na = F.expr(_DOT_INT.format(a="_qa", b="_qa"))
-        nb = F.expr(_DOT_INT.format(a="_qb", b="_qb"))
+        dot = _dot("_qa", "_qb")
+        na = _dot("_qa", "_qa")
+        nb = _dot("_qb", "_qb")
         exact_d = F.when(
             (na > 0) & (nb > 0),
             F.lit(1.0)

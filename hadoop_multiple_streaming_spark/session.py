@@ -83,10 +83,7 @@ def get_spark(
         # ~6-min passes). 5 min instead of the 30-min default bounds
         # that accumulation for exactly the session shape this engine
         # runs: one driver submitting many jobs back to back.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "5min"),
-        )
+        .config("spark.cleaner.periodicGC.interval", "5min")
         # lz4 (Spark's default) for shuffle/spill/broadcast blocks.
         # Round 10 defaulted this to zstd after it halved the sf8.0
         # ngram-Jaccard pair-shuffle disk footprint; a round-11
@@ -94,15 +91,12 @@ def get_spark(
         # (DEPLOY.md codec table) showed zstd costs ~6 s / +18% there —
         # family-shaped across 33/40 queries, i.e. a uniform per-stage
         # compression tax on floor-dominated work. lz4 is the right
-        # default for compute-bound single-node runs; flip to zstd via
-        # $SPARK_GRAFT_IO_CODEC (or spark.io.compression.codec on a
-        # cluster) when shuffle BYTES are the scarce resource — disk
-        # quotas, network-bound multi-node shuffles, the heavy-SF
-        # crossover harness (tools/bench_crossover.py does this).
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
+        # default for compute-bound single-node runs; pass
+        # extra_conf={"spark.io.compression.codec": "zstd"} (the CLI's
+        # -D) when shuffle BYTES are the scarce resource — disk quotas,
+        # network-bound multi-node shuffles, the heavy-SF crossover
+        # harness (tools/bench_crossover.py does this).
+        .config("spark.io.compression.codec", "lz4")
         # default-true, pinned EXPLICITLY (r13, the r12 verdict's
         # driver-host Arrow-inflation chase): every Arrow-fenced stage
         # (mapInPandas kernels, pandas_udfs) forks a Python worker per

@@ -439,34 +439,18 @@ def ingest_bloom_batch(
 ) -> None:
     """One micro-batch of the streaming Bloom ingest gate (foreachBatch
     body; replay-safe — see streaming_bloom_screen)."""
-    from ..operators.bloom import (
-        BloomFilterSpec,
-        bloom_screen,
-        build_bloom,
-        merge_blooms,
-        save_bloom,
-    )
+    from ..operators.bloom import _fold_bitmaps, bloom_screen, build_bloom, save_bloom
 
     spark = batch_df.sparkSession
     # heal a torn replay (same rule as ingest_minhash_batch: this
     # batch's subdir has exactly one writer — us, at the end)
     _best_effort_delete(spark, f"{store_path}/batch_id={int(batch_id)}")
     store = _prior_store(spark, store_path, batch_id)
-    rows = store.collect() if store is not None else []
-    blooms = [
-        BloomFilterSpec(
-            words=list(r["words"]),
-            num_bits=int(r["num_bits"]),
-            num_hashes=int(r["num_hashes"]),
-            n_keys=int(r["n_keys"]),
-        )
-        for r in rows
-    ]
-    fresh = (
-        bloom_screen(batch_df, key_col, merge_blooms(*blooms))
-        if blooms
-        else batch_df
+    # every prior bitmap ORed on the executors; the driver holds one
+    prior = (
+        _fold_bitmaps(store, "ingest_bloom_batch") if store is not None else None
     )
+    fresh = bloom_screen(batch_df, key_col, prior) if prior is not None else batch_df
     # within-batch exact dedup (batch-sized): min-id representative
     keep_ids = fresh.groupBy(key_col).agg(F.min(id_col).alias(id_col)).select(
         id_col
@@ -514,10 +498,11 @@ def streaming_bloom_screen(
     ingest), and the screen excludes the current batch's own bitmap,
     so a replayed batch makes the identical drop decision whichever
     side of a crash the store write landed on. The per-batch bitmaps
-    are num_bits/8 bytes each; on long streams, compact old subdirs
-    periodically (load_bloom each + merge_blooms + save_bloom to one
-    subdir) — the OR is exactly the union filter, so compaction never
-    changes answers. Geometry is FIXED by the operator args: size
+    are num_bits/8 bytes each and the screen ORs them on the executors
+    (the driver holds one merged bitmap); on long streams, fold old
+    subdirs periodically with operators.bloom.compact_bloom_store —
+    the OR is exactly the union filter, so compaction never changes
+    answers. Geometry is FIXED by the operator args: size
     num_bits for the total ingested-corpus cardinality, not the batch
     (fpp is driven by total set bits)."""
     process = functools.partial(

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from ..functions.localrel import collect_bounded, local_relation
 from ..operators.dedup import quantize_embeddings
 from ..operators.similarity import cosine_topk, ivf_topk
+from ..operators.vectors import _L2, _L2_INT, _cosine, _quantize
 from . import register
 from .dedup import _QUANT_CTE
 from .tables import load
@@ -143,9 +144,7 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     q = emb.select(
         "label",
-        F.expr(
-            "transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))"
-        ).alias("qv"),
+        _quantize("embedding").alias("qv"),
     )
     agg = _centroid_sums(q, "label", "label", "n_vectors")
     return agg.select(
@@ -210,18 +209,13 @@ def ivf_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.select(
         "vec_id",
         "label",
-        F.expr(
-            "transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))"
-        ).alias("qv"),
+        _quantize("embedding").alias("qv"),
     )
     cent = _centroid_sums(q, "label", "c_label", "n").select(
         "c_label",
         F.expr("transform(sums, s -> cast(s as double) / n)").alias("c"),
     )
-    dist = F.expr(
-        "aggregate(zip_with(qv, c, (x, m) -> (cast(x as double) - m) * (cast(x as double) - m)), "
-        "cast(0 as double), (acc, d) -> acc + d)"
-    )
+    dist = F.expr(_L2.format(a="qv", b="c"))
     scored = q.crossJoin(F.broadcast(cent)).select(
         "vec_id", "label", "c_label", dist.alias("dist")
     )
@@ -298,18 +292,13 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.select(
         "vec_id",
         "label",
-        F.expr(
-            "transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))"
-        ).alias("qv"),
+        _quantize("embedding").alias("qv"),
     ).withColumn("n2", F.expr("aggregate(zip_with(qv, qv, (a,b) -> a*b), 0L, (acc,x) -> acc+x)"))
     cent = _centroid_sums(q, "label", "c_label", "n").select(
         "c_label",
         F.expr("transform(sums, s -> cast(s as double) / n)").alias("c"),
     )
-    dist = F.expr(
-        "aggregate(zip_with(qv, c, (x, m) -> (cast(x as double) - m) * (cast(x as double) - m)), "
-        "cast(0 as double), (acc, d) -> acc + d)"
-    )
+    dist = F.expr(_L2.format(a="qv", b="c"))
     cdist = q.crossJoin(F.broadcast(cent)).select(
         "vec_id", "c_label", dist.alias("dist")
     )
@@ -330,9 +319,7 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = q.select(
         F.col("vec_id").alias("q_id"), F.col("qv").alias("q_qv"), F.col("n2").alias("q_n2")
     )
-    cos = F.expr(
-        "cast(aggregate(zip_with(q_qv, c_qv, (a,b) -> a*b), 0L, (acc,x) -> acc+x) as double)"
-    ) / (F.sqrt(F.col("q_n2").cast("double")) * F.sqrt(F.col("c_n2").cast("double")))
+    cos = _cosine("q_qv", "c_qv", "q_n2", "c_n2")
     # corpus and queries both scale with the embeddings table — no
     # broadcast hints (an earlier version hinted both; at 2B vectors
     # that is an executor OOM). AQE broadcasts the actually-small side
@@ -476,9 +463,7 @@ def kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.select(
         F.col("vec_id").alias("id"),
         "label",
-        F.expr(
-            "transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))"
-        ).alias("qv"),
+        _quantize("embedding").alias("qv"),
     )
     init = _centroid_sums(q, "label", "cluster", "n").select(
         "cluster",
@@ -554,9 +539,7 @@ def semantic_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.select(
         F.col("vec_id").alias("id"),
         "label",
-        F.expr(
-            "transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))"
-        ).alias("qv"),
+        _quantize("embedding").alias("qv"),
     )
     # impl="arrow": the MLlib-style driver-side-centroid scale path —
     # the interpreted HOF argmin was the measured wall-clock bottleneck
@@ -601,7 +584,7 @@ def semantic_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         cent_rows = _lloyd_local_cents(
             [list(r["qv"]) for r in rows], init_rows, 2, 64
         )
-        assigned = kmeans_assign_frame(quant, cent_rows, 64, carry=["qv", "n2"])
+        assigned = kmeans_assign_frame(quant, cent_rows, carry=["qv", "n2"])
     else:
         init = _centroid_sums(q, "label", "cluster", "n").select(
             "cluster",
@@ -851,17 +834,13 @@ def ann_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     q = emb.select(
         F.col("vec_id").alias("id"),
-        F.expr(
-            "transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))"
-        ).alias("qv"),
+        _quantize("embedding").alias("qv"),
     ).withColumn(
         "n2", F.expr("aggregate(zip_with(qv, qv, (a,b) -> a*b), 0L, (acc,x) -> acc+x)")
     )
     q2 = emb.select(
         "label",
-        F.expr(
-            "transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))"
-        ).alias("qv"),
+        _quantize("embedding").alias("qv"),
     )
     cent = _centroid_sums(q2, "label", "cluster", "n").select(
         "cluster",
@@ -934,9 +913,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.select(
         F.col("vec_id").alias("id"),
         "label",
-        F.expr(
-            "transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))"
-        ).alias("qv"),
+        _quantize("embedding").alias("qv"),
     )
     seeds = q.groupBy("label").agg(F.min("id").alias("mid")).select("mid")
     # id is unique, so joining on the min-id set alone picks exactly
@@ -1088,7 +1065,6 @@ def ann_pq_train_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoding 100 TB. All-bigint training (sums `div` counts) keeps
     even the iterative k-means hash-exact against the SQL replay."""
     from ..operators.similarity import (
-        _L2_INT,
         cosine_topk,
         pq_adc_topk,
         pq_encode,
@@ -1331,9 +1307,7 @@ def ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     vecs = emb.select(
         F.col("vec_id").alias("id"),
-        F.expr(
-            "transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))"
-        ).alias("qv"),
+        _quantize("embedding").alias("qv"),
     )
     cached = _IVFPQ_TRAIN_CACHE.get(sf_dir)
     if cached is None:
@@ -1372,10 +1346,7 @@ def ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = assign_cells(vecs, cent, impl="arrow").select(
         "id", F.col("cluster").alias("bucket")
     )
-    d2c = F.expr(
-        "aggregate(zip_with(qv, cv, (x, c) -> (x - c) * (x - c)), "
-        "0L, (acc, y) -> acc + y)"
-    )
+    d2c = F.expr(_L2_INT.format(a="qv", b="cv"))
     from pyspark.sql.window import Window as _W
 
     cdist = (

@@ -833,6 +833,64 @@ def test_semantic_dedup_auto_budget_routing(spark):
     assert run(clusters_impl="auto", flat_assign_budget=1) == hier
 
 
+def test_fine_lloyd_cells_matches_python_lloyd():
+    """One coarse cell with more than 128 fine seeds, so the argmin
+    runs over several centroid blocks, and planted exact ties: every
+    vector appears twice, so equal seeds sit on both sides of a block
+    boundary and the rows on them must go to the smaller fine id.
+    _fine_lloyd_cells equals a plain-Python Lloyd over the same
+    hash-ordered seeds (float fold left to right over dims, means as
+    exact int sum / n)."""
+    import hashlib
+
+    import numpy as np
+    import pandas as pd
+
+    from hadoop_multiple_streaming_spark.operators.dedup import _fine_lloyd_cells
+
+    rng = np.random.default_rng(11)
+    base = [[int(x) for x in rng.integers(-20, 20, 4)] for _ in range(160)]
+    ids = list(range(1000, 1320))
+    by_id = dict(zip(ids, base + base))  # ids 1000+i and 1160+i share a vector
+    coarse, target, iters = 5, 2, 3
+    k2 = -(-len(ids) // target)
+    seeds = sorted(ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))[:k2]
+    assert k2 > 128
+    assert any(
+        by_id[seeds[a]] == by_id[seeds[b]] for a in range(128) for b in range(128, k2)
+    )
+
+    cents = {f: [float(x) for x in by_id[i]] for f, i in enumerate(seeds)}
+
+    def nearest(v):
+        best = None
+        for f in sorted(cents):
+            acc = 0.0
+            for x, m in zip(v, cents[f]):
+                acc += (float(x) - m) * (float(x) - m)
+            if best is None or acc < best[0]:
+                best = (acc, f)
+        return best[1]
+
+    for it in range(iters):
+        assign = {i: nearest(by_id[i]) for i in ids}
+        if it == iters - 1:
+            break
+        members = {}
+        for i, f in assign.items():
+            members.setdefault(f, []).append(by_id[i])
+        cents = {f: [sum(c) / len(vs) for c in zip(*vs)] for f, vs in members.items()}
+
+    pdf = pd.DataFrame(
+        {"coarse": coarse, "id": ids, "qv": [by_id[i] for i in ids], "tag": ids}
+    )
+    got = _fine_lloyd_cells(target, iters, carry=["tag"])(pdf)
+    assert dict(zip(got["id"], got["cluster"])) == {
+        i: (coarse << 32) + f for i, f in assign.items()
+    }
+    assert got["tag"].tolist() == ids
+
+
 def test_semantic_dedup_hier_skewed_cell(spark):
     """Pathological skew: ~all rows collapse into ONE coarse cell (a
     tight blob + a few far outliers). _fine_lloyd_cells must stay

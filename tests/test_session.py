@@ -18,13 +18,9 @@ def test_engine_session_defaults(spark):
     conf = spark.conf
     # shuffle/spill/broadcast block codec: lz4 (round-11 full-bench A/B,
     # DEPLOY.md codec table — zstd's density is a ~18% family-shaped
-    # compute tax on floor-dominated work; flip via $SPARK_GRAFT_IO_CODEC
+    # compute tax on floor-dominated work; pass it via extra_conf / -D
     # where shuffle BYTES are scarce, e.g. the heavy-SF crossover runs)
-    import os
-
-    assert conf.get("spark.io.compression.codec") == os.environ.get(
-        "SPARK_GRAFT_IO_CODEC", "lz4"
-    )
+    assert conf.get("spark.io.compression.codec") == "lz4"
     # bounded completed-job state in long-lived sessions (measured
     # UNABLE_TO_ACQUIRE_MEMORY on the 3rd consecutive sf4.0 heavy run
     # at the 30-min default; A/B showed no cost at 5 min)

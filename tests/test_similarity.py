@@ -806,3 +806,80 @@ def test_local_kmeans_cap_env_clamped(monkeypatch):
     finally:
         monkeypatch.delenv("SPARK_GRAFT_LOCAL_KMEANS_CAP")
         importlib.reload(S)
+
+
+def test_similarity_does_not_import_dedup():
+    """operators.similarity builds on operators.vectors alone: in a
+    fresh interpreter, importing it leaves operators.dedup unloaded."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "import hadoop_multiple_streaming_spark.operators.similarity\n"
+        "print('hadoop_multiple_streaming_spark.operators.dedup' in sys.modules)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert out.stdout.strip() == "False"
+
+
+def test_kmeans_init_collect_is_capped(spark, monkeypatch):
+    # the driver-held centroid cap covers every k a catalog path builds
+    import pytest
+
+    from hadoop_multiple_streaming_spark.operators import similarity as S
+    from hadoop_multiple_streaming_spark.operators.dedup import auto_cluster_count
+
+    assert S._CENTROID_CAP >= auto_cluster_count(1 << 40)
+    q = spark.createDataFrame([(0, [1, 2]), (1, [3, 4])], "id long, qv array<long>")
+    init = spark.createDataFrame(
+        [(0, [1.0, 2.0]), (1, [3.0, 4.0])], "cluster long, c array<double>"
+    )
+    monkeypatch.setattr(S, "_CENTROID_CAP", 1)
+    with pytest.raises(ValueError, match="kmeans_lloyd: .* more than 1 rows"):
+        S.kmeans_lloyd(q, init, iters=1, dim=2, impl="arrow")
+    monkeypatch.setattr(S, "_CENTROID_CAP", 2)
+    got = {r.id: r.cluster for r in S.kmeans_lloyd(q, init, iters=1, dim=2, impl="arrow").collect()}
+    assert got == {0: 0, 1: 1}
+
+
+def test_assign_cells_collect_is_capped(spark, monkeypatch):
+    import pytest
+
+    from hadoop_multiple_streaming_spark.operators import similarity as S
+
+    q = spark.createDataFrame([(0, [1, 2]), (1, [9, 9])], "id long, qv array<long>")
+    cells = spark.createDataFrame(
+        [(0, [1, 2]), (1, [9, 9])], "cluster long, cv array<bigint>"
+    )
+    monkeypatch.setattr(S, "_CENTROID_CAP", 1)
+    with pytest.raises(ValueError, match="assign_cells: .* more than 1 rows"):
+        S.assign_cells(q, cells, impl="arrow")
+    monkeypatch.setattr(S, "_CENTROID_CAP", 2)
+    got = {r.id: r.cluster for r in S.assign_cells(q, cells, impl="arrow").collect()}
+    assert got == {0: 0, 1: 1}
+
+
+def test_pq_codebook_collect_is_capped(spark, monkeypatch):
+    import pytest
+
+    from hadoop_multiple_streaming_spark.operators import similarity as S
+
+    q = spark.createDataFrame([(0, [1, 2]), (1, [9, 9])], "id long, qv array<long>")
+    books = spark.createDataFrame(
+        [(0, 0, [1, 2]), (0, 1, [9, 9])], "subspace int, code int, cw array<bigint>"
+    )
+    monkeypatch.setattr(S, "_CENTROID_CAP", 1)
+    with pytest.raises(ValueError, match="pq_encode: .* more than 1 rows"):
+        S.pq_encode(q, books, m=1, dim=2, impl="arrow")
+    monkeypatch.setattr(S, "_CENTROID_CAP", 2)
+    got = {r.id: list(r.codes) for r in S.pq_encode(q, books, m=1, dim=2, impl="arrow").collect()}
+    assert got == {0: [0], 1: [1]}

@@ -722,6 +722,53 @@ def test_streaming_bloom_screen_exact_dedup_across_batches(spark, tmp_path):
     assert {"alpha", "beta", "gamma"} <= hits  # no false negatives
 
 
+def test_bloom_ingest_folds_prior_bitmaps_like_merge_blooms(spark, tmp_path):
+    """ingest_bloom_batch ORs the prior batches' bitmaps on the
+    executors: over three prior batches it keeps exactly what a
+    bloom_screen against merge_blooms of the same bitmaps keeps (then
+    the min id per key), and a prior batch of another geometry fails
+    the batch before anything is written."""
+    from hadoop_multiple_streaming_spark.operators.bloom import (
+        bloom_screen,
+        build_bloom,
+        load_bloom,
+        merge_blooms,
+        save_bloom,
+    )
+    from hadoop_multiple_streaming_spark.streaming.fanout import ingest_bloom_batch
+
+    def store_of(name, keysets, bits):
+        path = str(tmp_path / name)
+        for i, (keys, nb) in enumerate(zip(keysets, bits)):
+            keys_df = spark.createDataFrame([(k,) for k in keys], "text string")
+            save_bloom(spark, build_bloom(keys_df, "text", num_bits=nb), f"{path}/batch_id={i}")
+        return path
+
+    keysets = [["a", "b"], ["c"], ["d", "e"]]
+    store = store_of("store", keysets, [1024] * 3)
+    batch = spark.createDataFrame(
+        [(10, "a"), (11, "c"), (12, "e"), (13, "f"), (14, "f"), (15, "g")],
+        "doc_id long, text string",
+    )
+    out = str(tmp_path / "out")
+    ingest_bloom_batch(batch, 3, store, out, num_bits=1024)
+    got = sorted(
+        (r.doc_id, r.text) for r in spark.read.parquet(f"{out}/batch_id=3").collect()
+    )
+    merged = merge_blooms(*[load_bloom(spark, f"{store}/batch_id={i}") for i in range(3)])
+    screened = bloom_screen(batch, "text", merged).groupBy("text").agg(
+        F.min("doc_id").alias("doc_id")
+    )
+    assert got == sorted((r.doc_id, r.text) for r in screened.collect())
+    assert got == [(13, "f"), (15, "g")]
+
+    bad = store_of("bad", keysets, [1024, 2048, 1024])
+    bad_out = str(tmp_path / "bad_out")
+    with pytest.raises(ValueError, match="geometry mismatch"):
+        ingest_bloom_batch(batch, 3, bad, bad_out, num_bits=1024)
+    assert not os.path.exists(bad_out)
+
+
 def test_merge_blooms_rejects_geometry_mismatch(spark):
     from hadoop_multiple_streaming_spark.operators.bloom import (
         BloomFilterSpec,

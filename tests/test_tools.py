@@ -32,3 +32,37 @@ def test_cited_tools_exist():
         if not (ROOT / "tools" / f"{name}.py").exists()
     ]
     assert not dangling, dangling
+
+
+def test_normalize_plan_drops_only_run_noise():
+    """Two captures of one tree differ in expression ids, plan ids,
+    codegen ids, AQE query-stage ids and temp-dir names; normalising
+    makes them equal, and a changed operator still shows."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "capture_plans", ROOT / "tools" / "capture_plans.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    def capture(ids, codegen, stage, plan_id, tmp):
+        return (
+            f"(3) HashAggregate [codegen id : {codegen}]\n"
+            f"Input [2]: [k#{ids}L, v#{ids + 1}]\n"
+            f"Arguments: hashpartitioning(k#{ids}L, 4), ENSURE_REQUIREMENTS, "
+            f"[plan_id={plan_id}]\n"
+            "(5) ShuffleQueryStage\n"
+            f"Arguments: {stage}\n"
+            f"Location: InMemoryFileIndex [file:/tmp/{tmp}/index/corpus]\n"
+        )
+
+    a = capture(12, 2, 0, 519, "hms_ivf_index_k3x9_a")
+    b = capture(40, 5, 3, 1077, "hms_ivf_index_q81z_b")
+    assert a != b
+    assert mod.normalize_plan(a) == mod.normalize_plan(b)
+    changed = a.replace("HashAggregate", "SortAggregate")
+    assert mod.normalize_plan(changed) != mod.normalize_plan(a)
+    assert mod.normalize_plan(a.replace("4), ENSURE", "8), ENSURE")) != (
+        mod.normalize_plan(a)
+    )

@@ -310,15 +310,15 @@ def main() -> int:
     # heavy-SF crossover runs are shuffle-BYTES bound (the sf8.0 pair
     # shuffle brushed the host's 80 GB disk quota): zstd halves the
     # on-disk footprint there, which is worth its ~18% compute tax on
-    # floor-dominated work (DEPLOY.md codec A/B). Explicit env still
-    # overrides.
-    os.environ.setdefault("SPARK_GRAFT_IO_CODEC", "zstd")
+    # floor-dominated work (DEPLOY.md codec A/B).
+    conf = {"spark.io.compression.codec": "zstd"}
 
     workloads.load_all()
     spark = get_spark(
         app_name="hms-crossover",
         master=f"local[{cpus}]",
         shuffle_partitions=cpus,
+        extra_conf=conf,
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -344,6 +344,7 @@ def main() -> int:
             app_name="hms-crossover",
             master=f"local[{cpus}]",
             shuffle_partitions=cpus,
+            extra_conf=conf,
         )
         fresh.sparkContext.setLogLevel("ERROR")
         return fresh
