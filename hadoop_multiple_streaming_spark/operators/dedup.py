@@ -45,7 +45,6 @@ from .vectors import (
     _hash_seeds,
     _lloyd_rounds,
     _quantize,
-    _sign_bits,
 )
 
 # ------------------------------------------------------------------ exact
@@ -741,9 +740,9 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 10) -> DataFrame:
 def rademacher_planes(num_planes: int, dim: int) -> list[list[int]]:
     """Deterministic ±1 hyperplane matrix for sign-LSH, derived from
     md5(f"{p}#{i}") (low bit of the first hex nibble). Computed
-    driver-side ONCE and embedded as a literal constant in both the
-    Spark plan and the SQL oracle — the planes are query constants, so
-    no per-row hashing is ever paid for them."""
+    driver-side ONCE and embedded as a constant in both the Arrow
+    signature kernel and the SQL oracle — the planes are query
+    constants, so no per-row hashing is ever paid for them."""
     import hashlib
 
     return [
@@ -753,12 +752,6 @@ def rademacher_planes(num_planes: int, dim: int) -> list[list[int]]:
         ]
         for p in range(num_planes)
     ]
-
-
-def planes_spark_literal(planes: list[list[int]]) -> str:
-    return "array(" + ",".join(
-        "array(" + ",".join(str(c) for c in row) + ")" for row in planes
-    ) + ")"
 
 
 def planes_duckdb_literal(planes: list[list[int]]) -> str:
@@ -777,15 +770,13 @@ def _band_explode(bands: int, rows_per_band: int) -> Column:
 
 
 def _sign_signature_arrow(planes: list[list[int]]):
-    """Arrow-batched sign-signature column: one int64 numpy matmul per
-    batch (vectors x planes^T), sign bits rendered to the SAME '0'/'1'
-    string the expression form produces. Integer matmul is exact, so
-    the two implementations are bit-identical (test-asserted) and both
-    replay in the DuckDB oracle. Measured 20x faster than the
-    interpreted higher-order-function dot at 10k x 64 planes (0.8 s vs
-    16 s) — the documented 'vectorized Pandas UDF when built-ins can't
-    express it efficiently' case; ArrowEvalPython is an allowed plan
-    node (the hygiene gate bans only row-at-a-time BatchEvalPython)."""
+    """The sign-LSH signature of a ``qv`` column: one '1'/'0' per plane
+    (bit = exact int64 dot with the plane > 0), as one int64 numpy
+    matmul per Arrow batch (vectors x planes^T). Integer matmul is
+    exact, so the bits replay in the DuckDB oracle. Measured 20x
+    faster than the interpreted higher-order-function dot at 10k x 64
+    planes (0.8 s vs 16 s); ArrowEvalPython is an allowed plan node
+    (the hygiene gate bans only row-at-a-time BatchEvalPython)."""
     from pyspark.sql.functions import pandas_udf
 
     plane_rows = [list(pl) for pl in planes]
@@ -807,24 +798,32 @@ def _sign_signature_arrow(planes: list[list[int]]):
     return sig_udf
 
 
-def _bucket_verify_arrow(threshold: float):
+def _bucket_verify_arrow(threshold: float, id_type: T.DataType):
     """Fused in-bucket pairwise verify: ONE Arrow stage per bucket
-    stream replaces the candidate-expand + 2 vector joins + pair-level
-    cosine of the expression path. Each input row is a whole LSH
-    bucket (array of (id, qv int32, n2) members, already size-capped);
-    the kernel sorts members by id, computes the bucket's full pairwise
-    int64 Gram matrix with one numpy matmul, applies the SAME double
-    sqrt/multiply/divide the expression form evaluates (exact integer
-    dots + correctly-rounded IEEE ops -> bit-identical cosines,
-    test-asserted), and returns only the (id_a < id_b, cosine >=
-    threshold) survivors. Transport: each distinct vector crosses the
-    Arrow boundary once per bucket it belongs to — not once per
-    candidate PAIR, which is what made the old join-back path the
-    catalog's Python-fence hotspot (3 ArrowEvalPython nodes -> 2, no
-    verify joins at all)."""
+    stream. Each input row is a whole LSH bucket (array of (id, qv
+    int32, n2) members, already size-capped); the kernel sorts members
+    by id, computes the bucket's full pairwise int64 Gram matrix with
+    one numpy matmul, applies the SAME double sqrt/multiply/divide the
+    expression cosine evaluates (exact integer dots + correctly-rounded
+    IEEE ops -> bit-identical cosines, test-asserted against
+    embedding_cosine_pairs), and returns only the (id_a < id_b, cosine
+    >= threshold) survivors, ids of ``id_type``. Transport: each
+    distinct vector crosses the Arrow boundary once per bucket it
+    belongs to — not once per candidate PAIR, which is what made the
+    old join-back verify the catalog's Python-fence hotspot."""
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("array<struct<id_a:bigint,id_b:bigint,cosine:double>>")
+    @pandas_udf(
+        T.ArrayType(
+            T.StructType(
+                [
+                    T.StructField("id_a", id_type),
+                    T.StructField("id_b", id_type),
+                    T.StructField("cosine", T.DoubleType()),
+                ]
+            )
+        )
+    )
     def verify_udf(members):
         import numpy as np
         import pandas as pd
@@ -839,7 +838,7 @@ def _bucket_verify_arrow(threshold: float):
                 bi, bj = np.nonzero(cos >= threshold)
                 keep = bj > (bi + lo)
                 pairs.extend(
-                    (int(ids[i + lo]), int(ids[j]), float(cos[i, j]))
+                    (ids[i + lo], ids[j], float(cos[i, j]))
                     for i, j in zip(bi[keep], bj[keep])
                 )
             out.append(pairs)
@@ -848,24 +847,31 @@ def _bucket_verify_arrow(threshold: float):
     return verify_udf
 
 
-def _bucket_keep_arrow(threshold: float, max_cluster_size: int | None = None):
-    """Fused in-cluster keep computation for semantic_dedup's arrow
-    path (optimization r15, guide §2.4): ONE Arrow stage per cluster
-    stream computes each member's final keep flag directly — keep =
-    false iff some SAME-CLUSTER member with a SMALLER id has cosine >=
-    threshold — instead of emitting pairs, distinct-ing the drop ids,
-    and left-joining them back to the corpus (which consumed the
-    members relation twice and cost two extra exchanges + a join).
-    The cosines come from the same Gram block generator as
+def _bucket_keep_arrow(
+    threshold: float, max_cluster_size: int | None, id_type: T.DataType
+):
+    """Fused in-cluster keep computation for semantic_dedup
+    (optimization r15, guide §2.4): ONE Arrow stage per cluster stream
+    computes each member's final keep flag directly — keep = false iff
+    some SAME-CLUSTER member with a SMALLER id has cosine >= threshold
+    — instead of emitting pairs, distinct-ing the drop ids, and
+    left-joining them back to the corpus (which consumed the members
+    relation twice and cost two extra exchanges + a join). The
+    cosines come from the same Gram block generator as
     _bucket_verify_arrow (vectors._gram_cosine_blocks: exact int64
-    dots, correctly-rounded IEEE double sqrt/multiply/divide —
-    bit-identical to the expression form, test-asserted).
+    dots, correctly-rounded IEEE double sqrt/multiply/divide).
     Clusters above ``max_cluster_size`` skip the Gram entirely and
-    keep every member (the same skew guard the pairing path applies);
-    singletons are trivially kept."""
+    keep every member (a skew guard); singletons are trivially kept.
+    Ids are emitted as ``id_type``."""
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("array<struct<id:bigint,keep:boolean>>")
+    @pandas_udf(
+        T.ArrayType(
+            T.StructType(
+                [T.StructField("id", id_type), T.StructField("keep", T.BooleanType())]
+            )
+        )
+    )
     def keep_udf(members):
         import numpy as np
         import pandas as pd
@@ -874,7 +880,7 @@ def _bucket_keep_arrow(threshold: float, max_cluster_size: int | None = None):
         for bucket in members:
             m = len(bucket)
             if m < 2 or (max_cluster_size is not None and m > max_cluster_size):
-                out.append([(int(x["id"]), True) for x in bucket])
+                out.append([(x["id"], True) for x in bucket])
                 continue
             ids, blocks = _gram_cosine_blocks(bucket)
             keep = np.ones(m, dtype=bool)
@@ -886,7 +892,7 @@ def _bucket_keep_arrow(threshold: float, max_cluster_size: int | None = None):
                 col = np.arange(m)[None, :]
                 row = (np.arange(lo, hi))[:, None]
                 keep[lo:hi] &= ~(hit & (col < row)).any(axis=1)
-            out.append([(int(i), bool(k)) for i, k in zip(ids, keep)])
+            out.append([(i, bool(k)) for i, k in zip(ids, keep)])
         return pd.Series(out)
 
     return keep_udf
@@ -963,12 +969,14 @@ def auto_cluster_count(
     return k if max_k is None else min(max_k, k)
 
 
-def _integral_id(df: DataFrame) -> bool:
-    """True when df.id is an integer type — the precondition for the
-    driver-local seed replay (str(int) == Spark's long->string cast;
-    float/decimal renderings are engine-specific, so those fall back)."""
-    return df.schema["id"].dataType.simpleString() in (
-        "tinyint", "smallint", "int", "bigint"
+def _local_id(df: DataFrame) -> bool:
+    """True when df.id is an integer or string type — the precondition
+    for the driver-local seed replay (Python's str() of either is
+    Spark's cast(id as string); float/decimal renderings are
+    engine-specific, so those fall back to the distributed seeds)."""
+    return isinstance(
+        df.schema["id"].dataType,
+        (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.StringType),
     )
 
 
@@ -1009,7 +1017,7 @@ def auto_semantic_clusters(
     # Bit-identical: _local_seed_cents replays the hash-ordered
     # row_number seed pick, _lloyd_local_cents the update math.
     rows = local_rows
-    if rows is None and _integral_id(quantized):
+    if rows is None and _local_id(quantized):
         rows = collect_bounded(
             quantized.select("id", "qv"), similarity._LOCAL_KMEANS_CAP
         )
@@ -1028,7 +1036,7 @@ def auto_semantic_clusters(
         .limit(int(k))
     )
     init = seeds.select(
-        (F.row_number().over(Window.orderBy("_h", "id")) - 1).alias("cluster"),
+        (F.row_number().over(Window.orderBy("_h", "id")) - 1).cast("long").alias("cluster"),
         F.expr("transform(qv, x -> cast(x as double))").alias("c"),
     )
     return similarity.kmeans_lloyd(
@@ -1036,7 +1044,6 @@ def auto_semantic_clusters(
         init,
         iters=kmeans_iters,
         dim=dim,
-        impl="arrow",
         carry=carry,
     )
 
@@ -1084,7 +1091,7 @@ def _fine_lloyd_cells(target_cluster_size: int, iters: int, carry: list[str] | N
         import pandas as pd
 
         coarse = int(pdf["coarse"].iloc[0])
-        ids = pdf["id"].to_numpy(dtype=np.int64)
+        ids = pdf["id"].to_numpy()
         M = np.vstack(pdf["qv"].map(np.asarray).to_numpy()).astype(np.int64)
         k2 = max(1, -(-len(pdf) // target_cluster_size))
         seeds = M[_hash_seeds(ids, k2)].astype(np.float64)
@@ -1154,9 +1161,10 @@ def hierarchical_semantic_clusters(
         for f in quantized.schema.fields
         if f.name in carry
     )
+    id_ddl = quantized.schema["id"].dataType.simpleString()
     return coarse.groupBy("coarse").applyInPandas(
         _fine_lloyd_cells(target_cluster_size, kmeans_iters, carry=carry),
-        schema="id long, cluster long" + carry_ddl,
+        schema=f"id {id_ddl}, cluster long" + carry_ddl,
     )
 
 
@@ -1167,7 +1175,6 @@ def embedding_lsh_pairs(
     rows_per_band: int | None = None,
     dim: int = 64,
     max_bucket_size: int | None = None,
-    sig_impl: str = "expr",
     n: int | None = None,
 ) -> DataFrame:
     """Random-hyperplane (sign) LSH near-dup pairs over embeddings —
@@ -1177,11 +1184,17 @@ def embedding_lsh_pairs(
     expand candidate pairs in-bucket, then verify the EXACT quantized
     cosine only on candidates.
 
-    Plan shape: one projection computes all num_planes sign bits per
-    row (integer dots against literal plane constants — fully
-    codegen'd, no join for the sketch), one groupBy(band, bucket)
-    shuffle for candidates, one join back to the quantized vectors for
-    the verify. Measured on the synthetic 64-dim test embeddings
+    Plan shape: one Arrow projection computes all num_planes sign bits
+    per row (_sign_signature_arrow: one int64 numpy matmul per batch
+    against the plane constants, no join for the sketch), then the
+    verify is FUSED into the bucket aggregation — the vectors ride the
+    one groupBy(band, bucket) shuffle (int32 transport) and each
+    bucket's pairwise cosines come from a single numpy Gram matmul
+    inside one Arrow stage (_bucket_verify_arrow): 2 Python fences,
+    zero verify joins. Exact integer dots and correctly-rounded double
+    sqrt/multiply/divide make the cosines bit-identical to
+    embedding_cosine_pairs (test-asserted); ids keep their own type
+    (integers or strings). Measured on the synthetic 64-dim test embeddings
     (threshold 0.45, 32 planes, 8 bands x 4 rows): recall 13/14 at
     sf0.01 and 119/144 at sf0.1 vs the exact pairwise truth, with
     candidates at ~40% of the brute-force pair space; real near-dup
@@ -1207,21 +1220,8 @@ def embedding_lsh_pairs(
     can embed the matching plane literal).
 
     ``max_bucket_size`` is the same viral-bucket skew guard as
-    lsh_candidate_pairs (a bucket of m members expands m(m-1)/2 pairs
-    in one task).
-
-    ``sig_impl``: "expr" (default) keeps the whole plan pure-JVM
-    expression forms — no Python workers, no pandas/pyarrow executor
-    dependency. "arrow" is the measured scale path the catalog/bench
-    queries opt into: the plane-dot signatures run as one Arrow int64
-    numpy matmul per batch (20x the interpreted HOF dot), and the
-    verify is FUSED into the bucket aggregation — vectors ride the one
-    groupBy shuffle (int32 transport) and each bucket's pairwise
-    cosines come from a single numpy Gram matmul inside one Arrow
-    stage, so the plan has 2 Python fences total (was 3) and ZERO
-    verify joins. Both impls are bit-identical (exact integer dots;
-    correctly-rounded double sqrt/multiply/divide; test-asserted).
-    The arrow fused path requires integral ids (emitted as bigint)."""
+    lsh_candidate_pairs (a bucket of m members compares m(m-1)/2 pairs
+    in one task)."""
     if (num_planes is None) != (rows_per_band is None):
         raise ValueError(
             "embedding_lsh_pairs: give BOTH num_planes and rows_per_band, "
@@ -1233,93 +1233,31 @@ def embedding_lsh_pairs(
         num_planes, rows_per_band, _recall = auto_band_params(n, threshold)
     planes = rademacher_planes(num_planes, dim)
     bands = num_planes // rows_per_band
-    if sig_impl == "arrow":
-        sig = _sign_signature_arrow(planes)(F.col("qv"))
-    elif sig_impl == "expr":
-        sig = _sign_bits(planes_spark_literal(planes))
-    else:
-        raise ValueError(
-            f"embedding_lsh_pairs: sig_impl must be 'arrow' or 'expr', "
-            f"got {sig_impl!r}"
-        )
-    band_expr = _band_explode(bands, rows_per_band)
-    if sig_impl == "arrow":
-        # FUSED scale path: the vectors ride the one groupBy(band,
-        # bucket) shuffle (int32 transport — quantized coordinates are
-        # round(x * 1e6) of unit-normalized floats, so |v| < 2^31
-        # always; the kernel upcasts to int64 before the dot, keeping
-        # it exact), and the whole candidate-expand + verify happens
-        # per bucket inside ONE Arrow stage. Each distinct vector
-        # crosses the Python boundary once per band instead of once
-        # per candidate pair; no verify joins exist at all. Duplicate
-        # pairs from buckets sharing several bands re-verify (~2µs of
-        # deterministic arithmetic, identical row) and collapse in the
-        # tiny post-filter distinct.
-        buckets = quantized.select(
-            "id",
-            F.col("qv").cast("array<int>").alias("qv"),
-            "n2",
-            sig.alias("sig"),
-        ).select("id", "qv", "n2", band_expr.alias("band", "bucket"))
-        grouped = buckets.groupBy("band", "bucket").agg(
-            F.collect_list(F.struct("id", "qv", "n2")).alias("members")
-        )
-        keep = F.size("members") >= 2
-        if max_bucket_size is not None:
-            keep = keep & (F.size("members") <= max_bucket_size)
-        return (
-            grouped.where(keep)
-            .select(
-                F.explode(
-                    _bucket_verify_arrow(threshold)(F.col("members"))
-                ).alias("p")
-            )
-            .select("p.id_a", "p.id_b", "p.cosine")
-            .distinct()
-        )
-    # pure-JVM path: ids-only bucket shuffle, in-bucket candidate
-    # expansion, join back to the vectors, expression cosine
-    buckets = quantized.select("id", sig.alias("sig")).select(
-        "id", band_expr.alias("band", "bucket")
-    )
+    # the vectors ride the one groupBy(band, bucket) shuffle as int32
+    # (quantized coordinates are round(x * 1e6) of unit-normalized
+    # floats, so |v| < 2^31 always; the kernel upcasts to int64 before
+    # the dot, keeping it exact). Each distinct vector crosses the
+    # Python boundary once per band instead of once per candidate
+    # pair. Duplicate pairs from buckets sharing several bands
+    # re-verify (~2µs of deterministic arithmetic, identical row) and
+    # collapse in the tiny post-filter distinct.
+    buckets = quantized.select(
+        "id",
+        F.col("qv").cast("array<int>").alias("qv"),
+        "n2",
+        _sign_signature_arrow(planes)(F.col("qv")).alias("sig"),
+    ).select("id", "qv", "n2", _band_explode(bands, rows_per_band).alias("band", "bucket"))
     grouped = buckets.groupBy("band", "bucket").agg(
-        F.expr("array_sort(collect_list(id))").alias("ids")
+        F.collect_list(F.struct("id", "qv", "n2")).alias("members")
     )
-    keep = F.size("ids") >= 2
+    keep = F.size("members") >= 2
     if max_bucket_size is not None:
-        keep = keep & (F.size("ids") <= max_bucket_size)
-    cand = (
-        grouped.where(keep)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids)), y -> struct(x, y))))"
-                )
-            ).alias("p")
-        )
-        .select(F.col("p.x").alias("id_a"), F.col("p.y").alias("id_b"))
-    )
-    a = quantized.select(
-        F.col("id").alias("id_a"), F.col("qv").alias("qa"), F.col("n2").alias("na2")
-    )
-    b = quantized.select(
-        F.col("id").alias("id_b"), F.col("qv").alias("qb"), F.col("n2").alias("nb2")
-    )
-    cos = _cosine("qa", "qb", "na2", "nb2")
-    # dedup of pairs sharing several bands is DEFERRED past the verify:
-    # re-verifying a duplicate pair is ~2µs of deterministic arithmetic
-    # (identical output row), while distinct-ing the full candidate set
-    # is a shuffle of the whole pair stream — measured 1.6s of 3.7s at
-    # sf0.1. The post-filter distinct handles a vanishing row count.
-    # (An unrolled 64-term element_at dot was measured 2.5x SLOWER than
-    # this lambda — per-element null/bounds checks outweigh the
-    # interpreted-HOF overhead.)
+        keep = keep & (F.size("members") <= max_bucket_size)
+    verify = _bucket_verify_arrow(threshold, quantized.schema["id"].dataType)
     return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", cos.alias("cosine"))
-        .where(F.col("cosine") >= threshold)
+        grouped.where(keep)
+        .select(F.explode(verify(F.col("members"))).alias("p"))
+        .select("p.id_a", "p.id_b", "p.cosine")
         .distinct()
     )
 
@@ -1334,15 +1272,15 @@ def embedding_lsh_buckets(
     embedding_lsh_pairs computes internally, exposed so an INCREMENTAL
     pipeline can persist it as the at-rest key store (the embedding
     analog of minhash_band_buckets; bucket = rows_per_band sign bits
-    as a bit string). Pure-JVM expression plan: one projection, no
-    Python, no shuffle."""
+    as a bit string). One Arrow projection (the same signature kernel
+    as embedding_lsh_pairs), no shuffle."""
     if num_planes % rows_per_band != 0:
         raise ValueError(
             f"embedding_lsh_buckets: rows_per_band {rows_per_band} must "
             f"divide num_planes {num_planes}"
         )
     bands = num_planes // rows_per_band
-    sig = _sign_bits(planes_spark_literal(rademacher_planes(num_planes, dim)))
+    sig = _sign_signature_arrow(rademacher_planes(num_planes, dim))(F.col("qv"))
     return quantized.select("id", sig.alias("sig")).select(
         "id", _band_explode(bands, rows_per_band).alias("band", "bucket")
     )
@@ -1392,12 +1330,10 @@ def semantic_dedup(
     clusters: DataFrame | None = None,
     threshold: float = 0.9,
     max_cluster_size: int | None = None,
-    pairs_impl: str = "expr",
     target_cluster_size: int = 200,
     kmeans_iters: int = 2,
     n: int | None = None,
     dim: int = 64,
-    clusters_impl: str = "auto",
     flat_assign_budget: int = FLAT_ASSIGN_BUDGET,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (public method: Abbas et
@@ -1425,12 +1361,12 @@ def semantic_dedup(
     low-centroid-similarity exemplars; min-id is the hash-stable
     equivalent and what exact_dedup uses).
 
-    Plan shape: pairing is keyed by ``cluster`` — the expr path is a
-    same-cluster self-equi-join (shuffle on cluster, never a cartesian
-    product); the arrow path reuses the fused bucket-verify kernel
-    (one groupBy(cluster) shuffle carrying int32 vectors, per-cluster
-    numpy Gram matmul in a single Arrow stage, no joins). Both are
-    bit-identical (exact integer dots, correctly-rounded IEEE verify).
+    Plan shape: pairing is keyed by ``cluster`` — one groupBy(cluster)
+    shuffle carrying int32 vectors, then one Arrow stage per cluster
+    stream computes every member's keep flag from a numpy Gram matmul
+    (_bucket_keep_arrow: exact integer dots, correctly-rounded IEEE
+    cosine, the SQL replay's value bit for bit) — no joins, never a
+    cartesian product. Ids keep their own type (integers or strings).
 
     SCALE RULE: k must grow with the corpus (k ~ n / target_cluster
     _size; the paper runs 50k clusters on LAION) — in-cluster pairing
@@ -1441,16 +1377,16 @@ def semantic_dedup(
     now opt-in, exactly like embedding_lsh_pairs after
     auto_band_params.
 
-    ``clusters_impl`` (ignored when ``clusters`` is given): "flat" =
-    single-level k-means with k centroids (assignment work n*k —
-    fine until k grows with the corpus, superlinear past it);
-    "hierarchical" = coarse-fine two-level clustering
-    (hierarchical_semantic_clusters, ~2*n*sqrt(k)); "auto" (default)
-    = flat while n*k <= ``flat_assign_budget``, hierarchical past it
+    Automatic clustering (``clusters`` not given) is single-level
+    k-means with k centroids (auto_semantic_clusters; assignment work
+    n*k — fine until k grows with the corpus, superlinear past it)
+    while n*k <= ``flat_assign_budget``, and coarse-fine two-level
+    clustering (hierarchical_semantic_clusters, ~2*n*sqrt(k)) past it
     — the in-operator guard that keeps the default path off the
     superlinear curve at ANY corpus size (a 10^10-doc corpus at
     target 200 implies k = 5*10^7: flat assignment would be 5*10^17
-    multiply-accumulates; the budget reroutes it). The hierarchical
+    multiply-accumulates; the budget reroutes it); a budget of 0 sends
+    every non-empty corpus down the two-level path. The hierarchical
     path derives k UNCAPPED (auto_cluster_count max_k=None): the
     65536 cap exists to bound flat's driver codebook and n*k work,
     and honoring it here would grow coarse cells linearly with n —
@@ -1464,7 +1400,7 @@ def semantic_dedup(
             collect_bounded(
                 quantized.select("id", "qv"), similarity._LOCAL_KMEANS_CAP
             )
-            if _integral_id(quantized)
+            if _local_id(quantized)
             else None
         )
         if n is not None:
@@ -1474,15 +1410,7 @@ def semantic_dedup(
         else:
             n_rows = quantized.count()
         k = auto_cluster_count(n_rows, target_cluster_size)
-        if clusters_impl not in ("auto", "flat", "hierarchical"):
-            raise ValueError(
-                "semantic_dedup: clusters_impl must be 'auto', 'flat' or "
-                f"'hierarchical', got {clusters_impl!r}"
-            )
-        use_hier = clusters_impl == "hierarchical" or (
-            clusters_impl == "auto" and n_rows * k > flat_assign_budget
-        )
-        if use_hier:
+        if n_rows * k > flat_assign_budget:
             # UNCAPPED k for the two-level path: auto_cluster_count's
             # max_k bounds flat's driver codebook / n*k work, neither
             # of which the hierarchical path has. Keeping the cap here
@@ -1520,67 +1448,20 @@ def semantic_dedup(
         members = clusters.select("id", "qv", "n2", "cluster")
     else:
         members = quantized.select("id", "qv", "n2").join(clusters, "id")
-    if pairs_impl == "arrow":
-        # FUSED single-pass shape (r15, guide §2.4): the per-cluster
-        # kernel emits each member's final keep flag directly, so the
-        # members relation is consumed ONCE and the pair explode, the
-        # drops DISTINCT exchange and the final left join all vanish
-        # (plan: 3 Exchanges + 3 joins -> 1 Exchange + 0 joins). Same
-        # math, same rows: keep = false iff a smaller-id same-cluster
-        # member clears the cosine threshold (bit-identical cosines,
-        # test-asserted vs the expr path).
-        grouped = members.select(
-            "cluster",
-            F.struct(
-                "id", F.col("qv").cast("array<int>").alias("qv"), "n2"
-            ).alias("_m"),
-        ).groupBy("cluster").agg(F.collect_list("_m").alias("members"))
-        return grouped.select(
-            "cluster",
-            F.explode(
-                _bucket_keep_arrow(threshold, max_cluster_size)(
-                    F.col("members")
-                )
-            ).alias("_r"),
-        ).select(F.col("_r.id").alias("id"), "cluster", F.col("_r.keep").alias("keep"))
-    elif pairs_impl == "expr":
-        pool = members
-        if max_cluster_size is not None:
-            sizes = members.groupBy("cluster").agg(F.count(F.lit(1)).alias("_sz"))
-            pool = members.join(
-                sizes.where(F.col("_sz") <= max_cluster_size).select("cluster"),
-                "cluster",
-            )
-        a = pool.select(
-            "cluster",
-            F.col("id").alias("id_a"),
-            F.col("qv").alias("qa"),
-            F.col("n2").alias("na2"),
-        )
-        b = pool.select(
-            "cluster",
-            F.col("id").alias("id_b"),
-            F.col("qv").alias("qb"),
-            F.col("n2").alias("nb2"),
-        )
-        cos = _cosine("qa", "qb", "na2", "nb2")
-        pairs = (
-            a.join(b, "cluster")
-            .where(F.col("id_a") < F.col("id_b"))
-            .where(cos >= threshold)
-            .select("id_a", "id_b")
-        )
-    else:
-        raise ValueError(
-            f"semantic_dedup: pairs_impl must be 'arrow' or 'expr', "
-            f"got {pairs_impl!r}"
-        )
-    drops = pairs.select(F.col("id_b").alias("id")).distinct().withColumn(
-        "_drop", F.lit(True)
+    # FUSED single-pass shape (r15, guide §2.4): the per-cluster kernel
+    # emits each member's final keep flag directly, so the members
+    # relation is consumed ONCE — 1 Exchange, 0 joins (a pair explode,
+    # a drops DISTINCT and a left join back cost 3 Exchanges + 3 joins)
+    grouped = members.select(
+        "cluster",
+        F.struct("id", F.col("qv").cast("array<int>").alias("qv"), "n2").alias("_m"),
+    ).groupBy("cluster").agg(F.collect_list("_m").alias("members"))
+    keep = _bucket_keep_arrow(
+        threshold, max_cluster_size, members.schema["id"].dataType
     )
-    return members.join(drops, "id", "left").select(
-        "id", "cluster", F.col("_drop").isNull().alias("keep")
-    )
+    return grouped.select(
+        "cluster", F.explode(keep(F.col("members"))).alias("_r")
+    ).select(F.col("_r.id").alias("id"), "cluster", F.col("_r.keep").alias("keep"))
 
 
 def embedding_cosine_pairs(

@@ -5,8 +5,10 @@ bucket-pruned variant as the scale path.
 The arithmetic (quantized cosine, the float and bigint distance
 folds, the argmin and Lloyd kernels) lives once in operators.vectors;
 this module composes it into search, clustering and quantization
-operators. The exact paths are DataFrame expressions; the Arrow
-kernels are their bit-identical scale forms.
+operators. Search and training are DataFrame expressions; every
+nearest-centroid assignment over a driver-held centroid set (k-means,
+IVF cells, PQ codes) is one Arrow kernel that replays the same math
+bit for bit and emits ids of the centroid frame's own type.
 
 Scale notes (100 TB of vectors):
   * brute force is O(|queries| x |corpus|); right only when queries
@@ -23,16 +25,14 @@ Scale notes (100 TB of vectors):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType
 from pyspark.sql.window import Window
 
 from ..functions.localrel import collect_bounded
 from .vectors import (
     _ARGMIN,
-    _ARGMIN_INT,
     _L2,
     _L2_INT,
     _argmin_udf,
@@ -51,18 +51,13 @@ from .vectors import (
 #: vector payload on the driver — well under the broadcast-relation
 #: budget the samplers already allow. At scale the probe costs one
 #: early-stopping CollectLimit (reads ~1 partition) and falls back to
-#: the distributed rounds. Env-parameterised; <= 0 disables the path.
-#: Driver-memory formula: the probe holds cap rows x dim int64 coords
-#: plus Row overhead — roughly cap * dim * 8 bytes of payload with a
-#: few-x Python object overhead (2^17 rows x 64 dims ~ 67 MB payload).
-#: The env value is CLAMPED to 2^20 (r16, VERDICT task 8): past that
-#: the probe becomes a multi-GB driver collect — on a corpus that size
-#: the distributed rounds are the correct shape, not a bigger collect.
-_LOCAL_KMEANS_CAP_CEIL = 1 << 20
-_LOCAL_KMEANS_CAP = min(
-    int(os.environ.get("SPARK_GRAFT_LOCAL_KMEANS_CAP", str(1 << 17))),
-    _LOCAL_KMEANS_CAP_CEIL,
-)
+#: the distributed rounds; <= 0 disables the path. Driver-memory
+#: formula: the probe holds cap rows x dim int64 coords plus Row
+#: overhead — roughly cap * dim * 8 bytes of payload with a few-x
+#: Python object overhead. A bigger cap would make the probe a
+#: multi-GB driver collect; on a corpus that size the distributed
+#: rounds are the correct shape.
+_LOCAL_KMEANS_CAP = 1 << 17
 
 #: Row cap for the driver collect of a centroid or codebook table
 #: (kmeans_lloyd's init centroids, assign_cells' cells, pq_encode's
@@ -116,12 +111,17 @@ def kmeans_assign_frame(
     quantized: DataFrame, cent_rows: list, carry: list | None = None
 ) -> DataFrame:
     """The lazy tail of :func:`kmeans_lloyd`: in-plan Arrow argmin
-    assignment of final driver-held centroids — (id, *carry, cluster)."""
+    assignment of final driver-held centroids — (id, *carry, cluster),
+    with cluster ids (the ``cent_rows`` keys) emitted as bigint."""
+    return _assign_frame(quantized, cent_rows, LongType(), carry)
+
+
+def _assign_frame(quantized, cent_rows, cluster_type, carry) -> DataFrame:
     carry = [c for c in (carry or []) if c != "id"]
     return quantized.select(
         "id",
         *carry,
-        _argmin_udf(cent_rows, "float64")(F.col("qv")).alias("cluster"),
+        _argmin_udf(cent_rows, "float64", cluster_type)(F.col("qv")).alias("cluster"),
     )
 
 
@@ -188,13 +188,13 @@ def kmeans_lloyd(
     init_centroids: DataFrame,
     iters: int = 2,
     dim: int = 64,
-    impl: str = "expr",
     carry: list[str] | None = None,
 ) -> DataFrame:
     """Lloyd's k-means over quantized embedding vectors: ``iters``
     rounds of (assign every vector to its nearest centroid by squared
     L2, recompute centroids as cluster means). Returns the final
-    assignment (id, cluster).
+    assignment (id, cluster), cluster of ``init_centroids``' cluster
+    type.
 
     Inputs: ``quantized`` = (id, qv array<long>) from
     dedup.quantize_embeddings; ``init_centroids`` = (cluster,
@@ -207,35 +207,23 @@ def kmeans_lloyd(
     left-to-right over dims in every engine, argmin ties broken by
     cluster id. Fixed iteration count — no data-dependent stopping —
     so an engine replaying the same math lands on identical clusters.
+    Empty clusters drop out (no row from the mean groupBy), matching
+    the SQL replay.
 
-    Scale shape per round: centroids are tiny (k x dim) -> they fold
-    into ONE broadcast row (array of (cluster, c) structs) and the
-    argmin is a per-row projection — ZERO corpus shuffle for
-    assignment; the mean recompute is groupBy(cluster) with 64 per-dim
-    SUM buffers — map-side partial agg, constant memory per group, the
-    only exchange each iteration pays. Empty clusters drop out
-    naturally (no row from the groupBy), matching the SQL replay.
-
-    ``impl``: "expr" (default) keeps the whole plan LAZY and pure-JVM
-    (zero jobs at construction — test-asserted). The distance fold is
-    an interpreted higher-order function though, which at 20k+ vectors
-    dominates wall-clock (n x k x dim interpreted lambda steps).
-    "arrow" is the measured scale path and the MLlib pattern: the
-    centroids live on the DRIVER between iterations (iters-1 small
-    aggregate jobs run at CALL time — eager by design, like
-    pyspark.ml's own KMeans) and the assignment is an Arrow numpy
-    kernel whose dim-sequential accumulation replays the expression
-    fold's exact IEEE operation order — bit-identical clusters,
-    test-asserted; requires integral cluster ids (emitted as bigint).
-    (r14 measured and REJECTED a third "inplan" impl — expr's lazy
-    single-job structure with the Arrow argmin fed centroids through a
-    broadcast _cents column: the per-row nested-struct replication
-    through the Arrow boundary made it ~2x SLOWER than "arrow" even
-    standalone at sf0.1 (4.0-4.5 s vs 1.9-2.2 s interleaved), and 3-10x
-    slower inside semantic_dedup where the assignment tree is consumed
-    twice. The eager collect jobs are the cheaper shape; don't re-add
-    it without beating that A/B.) The returned assignment frame itself
-    stays lazy in both impls.
+    Shape (the MLlib pattern): the centroids live on the DRIVER between
+    rounds, so the iters-1 update rounds run at CALL time — eager by
+    design, like pyspark.ml's own KMeans — and the returned assignment
+    frame is lazy. Each assignment is an Arrow NumPy kernel whose
+    dim-sequential accumulation replays the SQL fold's IEEE operation
+    order (vectors._assign_argmin_np). Below ``_LOCAL_KMEANS_CAP``
+    rows one bounded collect of the vectors replaces the update-round
+    jobs and the rounds run in NumPy on the driver; past it each round
+    is one scan + Arrow assignment + per-dim SUM groupBy + collect.
+    (r14 measured and REJECTED a lazy in-plan form that fed the
+    centroids to the Arrow argmin through a broadcast _cents column:
+    the per-row nested-struct replication through the Arrow boundary
+    made it ~2x SLOWER standalone at sf0.1 and 3-10x slower inside
+    semantic_dedup, where the assignment is consumed twice.)
 
     ``carry`` (optimization r15, guide §2.4): extra columns of
     ``quantized`` to pass through into the returned frame — (id,
@@ -245,12 +233,10 @@ def kmeans_lloyd(
     instead of joining the (id, cluster) result BACK to the corpus on
     id — that join was a whole extra exchange/broadcast of the corpus
     (and re-evaluated the assignment inside the build side)."""
-    # dim must match the data: a mismatch makes zip_with pad with
-    # nulls, every distance NULL, and the argmin silently collapse to
-    # the smallest cluster id — fail loudly instead. The check is a
-    # column expression evaluated inside the first iteration's scan
-    # (raise_error at the first bad row), NOT a driver-side .first()
-    # job, so iterative callers stay job-count-clean.
+    # dim must match the data: a mismatch would feed ragged rows to the
+    # kernel — fail loudly instead, with the offending size. The check
+    # is a column expression evaluated inside the scan that feeds the
+    # kernel (raise_error at the first bad row), not a separate job.
     quantized = quantized.withColumn(
         "qv",
         F.when(F.size("qv") == dim, F.col("qv")).otherwise(
@@ -263,90 +249,46 @@ def kmeans_lloyd(
             )
         ),
     )
-    carry = [c for c in (carry or []) if c != "id"]
-    if impl == "arrow":
-        cent_rows = sorted(
-            (r["cluster"], list(r["c"]))
-            for r in _collect_centroids(init_centroids, "kmeans_lloyd")
+    cluster_type = init_centroids.schema["cluster"].dataType
+    cent_rows = sorted(
+        (r["cluster"], list(r["c"]))
+        for r in _collect_centroids(init_centroids, "kmeans_lloyd")
+    )
+    local = (
+        collect_bounded(quantized.select("qv"), _LOCAL_KMEANS_CAP)
+        if iters > 1
+        else None
+    )
+    if local is not None:
+        # r15 local fast path: the iters-1 update-round JOBS (each a
+        # scan + ArrowEval + 64-sum aggregate + collect) collapse into
+        # this one bounded qv collect; math bit-identical (see
+        # _lloyd_local_cents)
+        cent_rows = _lloyd_local_cents(
+            [list(r["qv"]) for r in local], cent_rows, iters, dim
         )
-        local = (
-            collect_bounded(quantized.select("qv"), _LOCAL_KMEANS_CAP)
-            if iters > 1
-            else None
-        )
-        if local is not None:
-            # r15 local fast path: the iters-1 update-round JOBS (each a
-            # scan + ArrowEval + 64-sum aggregate + collect) collapse
-            # into this one bounded qv collect; math bit-identical (see
-            # _lloyd_local_cents)
-            cent_rows = _lloyd_local_cents(
-                [list(r["qv"]) for r in local], cent_rows, iters, dim
+    else:
+        for _ in range(iters - 1):
+            assigned = _assign_frame(quantized, cent_rows, cluster_type, ["qv"])
+            sums = assigned.groupBy("cluster").agg(
+                F.count(F.lit(1)).alias("n"),
+                *[F.sum(F.col("qv")[i]).alias(f"_s{i}") for i in range(dim)],
+            ).collect()
+            # driver-side means: exact bigint sums / count — the same
+            # correctly-rounded double division the SQL replay performs
+            cent_rows = sorted(
+                (r["cluster"], [r[f"_s{i}"] / r["n"] for i in range(dim)])
+                for r in sums
             )
-        else:
-            for _ in range(iters - 1):
-                assigned_it = quantized.select(
-                    "id",
-                    "qv",
-                    _argmin_udf(cent_rows, "float64")(F.col("qv")).alias("cluster"),
-                )
-                sums = assigned_it.groupBy("cluster").agg(
-                    F.count(F.lit(1)).alias("n"),
-                    *[F.sum(F.col("qv")[i]).alias(f"_s{i}") for i in range(dim)],
-                ).collect()
-                # driver-side means: exact bigint sums / count — the same
-                # correctly-rounded double division the SQL replay performs
-                cent_rows = sorted(
-                    (r["cluster"], [r[f"_s{i}"] / r["n"] for i in range(dim)])
-                    for r in sums
-                )
-        return kmeans_assign_frame(quantized, cent_rows, carry=carry)
-    if impl != "expr":
-        raise ValueError(
-            f"kmeans_lloyd: impl must be 'expr' or 'arrow', got {impl!r}"
-        )
-    cent = init_centroids
-    assigned = None
-    # Assignment is a PROJECTION, not a join+aggregate: the k
-    # centroids collapse into ONE broadcast row carrying an
-    # array<struct(cluster, c)>, and the argmin runs inside each data
-    # row — transform computes the same left-to-right L2 fold per
-    # centroid, array_sort orders by (dist, cluster) (lexicographic
-    # struct order == ORDER BY dist, cluster, the oracle's rule) and
-    # element 1 wins. This removes the per-iteration n-row shuffle the
-    # old crossJoin+groupBy(id, qv) argmin paid (hashing 64-element
-    # array keys per row), leaving the centroid-mean groupBy as each
-    # iteration's ONLY exchange. collect_list's nondeterministic order
-    # is irrelevant: the sort is over (dist, cluster) values.
-    argmin = F.expr(_ARGMIN)
-    for _ in range(iters):
-        cent_arr = cent.agg(
-            F.collect_list(F.struct("cluster", "c")).alias("_cents")
-        )
-        assigned = quantized.crossJoin(F.broadcast(cent_arr)).select(
-            "id",
-            "qv",
-            *[c for c in carry if c != "qv"],
-            argmin.alias("cluster"),
-        )
-        sums = assigned.groupBy("cluster").agg(
-            F.count(F.lit(1)).alias("n"),
-            *[F.sum(F.col("qv")[i]).alias(f"_s{i}") for i in range(dim)],
-        )
-        cent = sums.select(
-            "cluster",
-            F.array(
-                *[(F.col(f"_s{i}").cast("double") / F.col("n")) for i in range(dim)]
-            ).alias("c"),
-        )
-    return assigned.select("id", *carry, "cluster")
+    return _assign_frame(quantized, cent_rows, cluster_type, carry)
 
 
 def assign_centroids(quantized: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: (id, qv, n2) x (cluster, c) ->
     (id, qv, n2, cluster). The k centroids fold into ONE broadcast row
     (array of (cluster, c) structs) and the argmin runs inside each
-    data row — a pure projection, zero corpus shuffle (the same shape
-    kmeans_lloyd uses; ties break to the smaller cluster id via the
+    data row — a pure, lazy projection with zero corpus shuffle and no
+    driver collect (ties break to the smaller cluster id via the
     lexicographic (dist, cluster) sort, deterministic)."""
     cent_arr = centroids.agg(
         F.collect_list(F.struct("cluster", "c")).alias("_cents")
@@ -525,10 +467,12 @@ def ivf_train_int(
     ties to the smaller cluster id, fixed iteration count. Clusters
     that lose all members drop out (matching the SQL replay).
 
-    Scale shape per round: centroids are k x dim -> ONE broadcast row;
-    assignment is a per-row projection (zero corpus shuffle); the
-    update is a groupBy(cluster) with dim SUM buffers — map-side
-    partials, the round's only exchange."""
+    Scale shape per round: the k x dim centroids are collected to the
+    driver (eager, like kmeans_lloyd) and the assignment is the exact
+    int64 Arrow kernel of :func:`assign_cells` — a per-row projection,
+    zero corpus shuffle; the update is a groupBy(cluster) with dim SUM
+    buffers — map-side partials, the round's only exchange. The
+    returned centroid frame is the last round's lazy update."""
     from pyspark.sql.window import Window as _W
 
     w_init = _W.orderBy("id")
@@ -540,10 +484,8 @@ def ivf_train_int(
         .select(F.col("cluster").cast("long").alias("cluster"), F.col("qv").alias("cv"))
     )
     for _ in range(iters):
-        assigned = assign_cells(quantized, cent)
         cent = (
-            quantized.select("id", "qv")
-            .join(assigned, "id")
+            quantized.select("qv", _cell_argmin(cent, "ivf_train_int"))
             .groupBy("cluster")
             .agg(
                 F.count(F.lit(1)).alias("n"),
@@ -557,70 +499,47 @@ def ivf_train_int(
     return cent
 
 
-def assign_cells(
-    quantized: DataFrame, centroids: DataFrame, impl: str = "expr"
-) -> DataFrame:
+def _cell_argmin(centroids: DataFrame, op: str):
+    """The ``cluster`` column of exact-int64 nearest-cell assignment:
+    ``centroids`` (cluster, cv array<long>) collected once, ids kept
+    in their own type."""
+    cent_rows = sorted(
+        (r["cluster"], list(r["cv"])) for r in _collect_centroids(centroids, op)
+    )
+    udf = _argmin_udf(cent_rows, "int64", centroids.schema["cluster"].dataType)
+    return udf(F.col("qv")).alias("cluster")
+
+
+def assign_cells(quantized: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest-cell assignment by exact bigint L2 (ties to the smaller
-    cluster id): (id, cluster). The centroids collapse into ONE
-    broadcast row and the argmin runs inside each data row — zero
-    corpus shuffle (the kmeans_lloyd projection trick, integer
-    flavor).
-
-    ``impl="arrow"`` collects the (tiny) centroid table and assigns
-    via an exact-int64 numpy kernel — bit-identical by integer math
-    (test-asserted impl equivalence), ~30x faster than the interpreted
-    zip_with fold at sf0.1. Cluster ids are emitted as bigint (the
-    expr path's struct sort preserves the input cluster type; callers
-    that need the arrow path must use integral cluster ids, same
-    contract as kmeans_lloyd impl='arrow')."""
-    if impl == "arrow":
-        cent_rows = sorted(
-            (int(r["cluster"]), list(r["cv"]))
-            for r in _collect_centroids(centroids, "assign_cells")
-        )
-        return quantized.select(
-            "id", "qv", _argmin_udf(cent_rows, "int64")(F.col("qv")).alias("cluster")
-        ).select("id", "cluster")
-    if impl != "expr":
-        raise ValueError(
-            f"assign_cells: impl must be 'expr' or 'arrow', got {impl!r}"
-        )
-    cent_arr = centroids.agg(
-        F.collect_list(F.struct("cluster", "cv")).alias("_cents")
-    )
-    return quantized.select("id", "qv").crossJoin(F.broadcast(cent_arr)).select(
-        "id", F.expr(_ARGMIN_INT).alias("cluster")
-    )
+    cluster id): (id, cluster), cluster of the centroid frame's type.
+    The (tiny) centroid table is collected to the driver at call time
+    and every row is assigned by an exact-int64 NumPy kernel in one
+    Arrow projection — zero corpus shuffle, bit-identical to the
+    integer SQL replay, ~30x the interpreted zip_with fold at sf0.1."""
+    return quantized.select("id", _cell_argmin(centroids, "assign_cells"))
 
 
-def _pq_encode_arrow(cb_rows: list, m: int, dim: int):
-    """Arrow-batched PQ encode, BIT-IDENTICAL to the expr path
-    (optimization r15, guide §4.2): exact int64 subvector distances,
-    first-min argmin over code-ascending codewords = the min-of-struct
-    (d2, code) tie rule. ``cb_rows`` is (subspace, code, cw) sorted by
-    (subspace, code).
-
-    Motivation (measured, sf0.1): the expr path's broadcast join
-    explodes |corpus| x m x k rows (256k at 2000 docs) through an
-    interpreted zip_with/aggregate distance — ~1.8 s, the single
-    hottest span in ann_ivfpq_adc's steady-state plan. The kernel does
-    the same multiply-accumulates vectorized in one pass, and the
-    explode + repartition + two aggregates disappear from the plan."""
+def _pq_encode_arrow(cb_rows: list, m: int, dim: int, code_type):
+    """Arrow-batched PQ encode: exact int64 subvector distances,
+    first-min argmin over code-ascending codewords (ties to the smaller
+    code). ``cb_rows`` is (subspace, code, cw) sorted by (subspace,
+    code); codes are emitted as array<``code_type``>."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     sub = dim // m
-    by_sub: dict[int, tuple[list[int], list]] = {}
+    by_sub: dict[int, tuple[list, list]] = {}
     for s, code, cw in cb_rows:
         codes, cws = by_sub.setdefault(int(s), ([], []))
-        codes.append(int(code))
+        codes.append(code)
         cws.append(cw)
     books = {
         j: (codes, np.asarray(cws, dtype=np.int64))
         for j, (codes, cws) in by_sub.items()
     }
 
-    @pandas_udf("array<bigint>")
+    @pandas_udf(ArrayType(code_type))
     def encode_udf(qv):
         import numpy as np
         import pandas as pd
@@ -628,12 +547,13 @@ def _pq_encode_arrow(cb_rows: list, m: int, dim: int):
         if len(qv) == 0:
             return pd.Series([], dtype=object)
         M = np.vstack(qv.map(np.asarray).to_numpy()).astype(np.int64)
-        n = M.shape[0]
-        out = np.empty((n, m), dtype=np.int64)
-        for j in range(m):
-            codes, CW = books[j]  # CW: k x sub
-            out[:, j] = _assign_argmin_np(M[:, j * sub : (j + 1) * sub], codes, CW)
-        return pd.Series([row.tolist() for row in out])
+        out = np.column_stack(
+            [
+                _assign_argmin_np(M[:, j * sub : (j + 1) * sub], *books[j])
+                for j in range(m)
+            ]
+        )
+        return pd.Series(out.tolist())
 
     return encode_udf
 
@@ -643,74 +563,41 @@ def pq_encode(
     codebooks: DataFrame,
     m: int = 8,
     dim: int = 64,
-    impl: str = "expr",
 ) -> DataFrame:
     """Product-quantization encode (the FAISS PQ compressor): split
     each ``dim``-long integer vector into ``m`` subvectors and replace
     each with the id of its nearest codeword in that subspace's
-    codebook -> (id, codes array<long> of length m). 64 dims x 8 bytes
-    become m small ints — the 100 TB memory story for ANN re-rank.
+    codebook -> (id, codes array<code> of length m, code of the
+    codebook's type). 64 dims x 8 bytes become m small ints — the
+    100 TB memory story for ANN re-rank.
 
     ``codebooks`` = (subspace, code, cw array<long> of dim/m) with
     INTEGER codewords: every distance is an exact bigint, so encodes
     are bit-identical across engines (a float codebook would make the
     argmin order-sensitive). Ties break to the smaller code id.
 
-    Plan: subvector explode (no shuffle) -> broadcast join with the
-    (m x k)-row codebook -> argmin via min-of-struct — and ONE
-    repartition(id) exchange serves both the per-(id, subspace) argmin
-    and the final per-id code assembly (subset-of-group-keys
-    clustering, map-side partials intact)."""
+    Plan: the (m x k)-row codebook (tiny by PQ's design) is collected
+    to the driver at call time and every vector is encoded in one
+    exact-int64 NumPy pass inside one Arrow projection — no explode,
+    no codebook join, no exchange (an explode-and-join encode moves
+    |corpus| x m x k rows through an interpreted distance)."""
     sub = dim // m
     if sub * m != dim:
         raise ValueError(f"pq_encode: dim={dim} not divisible by m={m}")
-    if impl == "arrow":
-        # collect the (m x k)-row codebook (tiny by PQ's design) and
-        # encode in one exact-int64 numpy pass; bit-identical to the
-        # expr path (test-asserted), with the |corpus| x m x k explode
-        # join, its repartition and both aggregates gone from the plan
-        cb_rows = sorted(
-            (int(r["subspace"]), int(r["code"]), list(r["cw"]))
-            for r in _collect_centroids(codebooks, "pq_encode")
-        )
-        subs = {s for s, _, _ in cb_rows}
-        if subs != set(range(m)):
-            raise ValueError(
-                f"pq_encode: arrow impl needs codebooks for subspaces "
-                f"0..{m - 1}, got {sorted(subs)}"
-            )
-        return quantized.select(
-            "id",
-            _pq_encode_arrow(cb_rows, m, dim)(F.col("qv")).alias("codes"),
-        )
-    if impl != "expr":
+    cb_rows = sorted(
+        (int(r["subspace"]), r["code"], list(r["cw"]))
+        for r in _collect_centroids(codebooks, "pq_encode")
+    )
+    subs = {s for s, _, _ in cb_rows}
+    if subs != set(range(m)):
         raise ValueError(
-            f"pq_encode: impl must be 'expr' or 'arrow', got {impl!r}"
+            f"pq_encode: needs codebooks for subspaces 0..{m - 1}, "
+            f"got {sorted(subs)}"
         )
-    pieces = quantized.select(
+    code_type = codebooks.schema["code"].dataType
+    return quantized.select(
         "id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}), "
-                f"j -> slice(qv, j * {sub} + 1, {sub}))"
-            )
-        ).alias("subspace", "sub_qv"),
-    )
-    d2 = F.expr(_L2_INT.format(a="sub_qv", b="cw"))
-    scored = pieces.join(F.broadcast(codebooks), "subspace").select(
-        "id", "subspace", "code", d2.alias("d2")
-    )
-    best = (
-        scored.repartition(F.col("id"))
-        .groupBy("id", "subspace")
-        .agg(F.min(F.struct("d2", "code")).alias("_m"))
-        .select("id", "subspace", F.col("_m.code").alias("code"))
-    )
-    return best.groupBy("id").agg(
-        F.expr(
-            "transform(array_sort(collect_list(struct(subspace, code))), "
-            "s -> s.code)"
-        ).alias("codes")
+        _pq_encode_arrow(cb_rows, m, dim, code_type)(F.col("qv")).alias("codes"),
     )
 
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 # ---------------------------------------------------- expression forms
 
@@ -46,14 +47,12 @@ _L2 = (
 )
 
 #: argmin of ``qv`` over an inlined centroid array ``_cents``: the
-#: distance {dist} per centroid, then the lexicographic ({key}, cluster)
+#: float distance per centroid, then the lexicographic (dist, cluster)
 #: sort — exact ties go to the smaller cluster id
-_ARGMIN_OF = (
+_ARGMIN = (
     "element_at(array_sort(transform(_cents, s -> named_struct("
-    "'{key}', {dist}, 'cluster', s.cluster))), 1).cluster"
+    "'dist', " + _L2.format(a="qv", b="s.c") + ", 'cluster', s.cluster))), 1).cluster"
 )
-_ARGMIN = _ARGMIN_OF.format(key="dist", dist=_L2.format(a="qv", b="s.c"))
-_ARGMIN_INT = _ARGMIN_OF.format(key="d", dist=_L2_INT.format(a="qv", b="s.cv"))
 
 
 def _quantize(vec_col: str, scale: int = 1_000_000) -> Column:
@@ -74,14 +73,6 @@ def _cosine(qa: str, qb: str, na2: str, nb2: str) -> Column:
         F.sqrt(F.col(na2).cast("double")) * F.sqrt(F.col(nb2).cast("double"))
     )
 
-
-def _sign_bits(planes_literal: str) -> Column:
-    """Sign-LSH signature of ``qv``: one '1'/'0' per plane of the
-    literal plane array (bit = exact int64 dot with the plane > 0)."""
-    return F.expr(
-        f"array_join(transform({planes_literal}, pl -> "
-        f"case when {_DOT.format(a='qv', b='pl')} > 0 then '1' else '0' end), '')"
-    )
 
 
 # ------------------------------------------------------- NumPy kernels
@@ -105,10 +96,11 @@ def _assign_argmin_np(M, ids, C):
     per-(row, centroid) order. Tie rule: ``ids`` ascending, np.argmin
     takes the first minimum within a block and the strict ``<`` keeps
     the earlier block across blocks, so exact ties go to the smallest
-    id — the (dist, id) lexicographic rule."""
+    id — the (dist, id) lexicographic rule. ``ids`` may be of any
+    sortable type (integers, strings); the result has their dtype."""
     import numpy as np
 
-    ids = np.asarray(ids, dtype=np.int64)
+    ids = np.asarray(ids)
     kc = 128
     best_d = None
     best_i = None
@@ -130,26 +122,27 @@ def _assign_argmin_np(M, ids, C):
     return best_i
 
 
-def _argmin_udf(cent_rows: list, dtype):
+def _argmin_udf(cent_rows: list, dtype, cluster_type: DataType):
     """Arrow-batched nearest-centroid assignment of a ``qv`` column
     over driver-held ``cent_rows`` ((cluster, vector), sorted by
     cluster): :func:`_assign_argmin_np` in ``dtype`` — float64 replays
-    the ``_ARGMIN`` fold, int64 the exact ``_ARGMIN_INT`` one, both bit
-    for bit (the first-minimum over id-ascending centroids is the
-    smaller-cluster tie rule). Cluster ids are emitted as bigint."""
+    the ``_ARGMIN`` fold bit for bit, int64 is the exact integer L2
+    (the first-minimum over id-ascending centroids is the
+    smaller-cluster tie rule). Cluster ids are emitted as
+    ``cluster_type``, the type of the centroid frame they came from."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    clusters = [int(c) for c, _ in cent_rows]
+    clusters = [c for c, _ in cent_rows]
     cents = np.asarray([v for _, v in cent_rows], dtype=dtype)
 
-    @pandas_udf("long")
+    @pandas_udf(cluster_type)
     def assign_udf(qv):
         import numpy as np
         import pandas as pd
 
         if len(qv) == 0:
-            return pd.Series([], dtype="int64")
+            return pd.Series([], dtype=object)
         M = np.vstack(qv.map(np.asarray).to_numpy()).astype(dtype)
         return pd.Series(_assign_argmin_np(M, clusters, cents))
 
@@ -181,18 +174,19 @@ def _lloyd_rounds(M, cent_ids, cents, rounds: int):
 def _hash_seeds(ids, k: int) -> list[int]:
     """Positions of the ``k`` ids with the smallest (md5(id), id) —
     replays ``row_number() OVER (ORDER BY md5(cast(id as string)), id)
-    <= k``. hashlib.md5 over the decimal id string is Spark's
-    md5(cast(bigint as string)), and the hex-string sort is the
-    engine's ASCII string order."""
+    <= k`` for integer or string ids: ``str`` of an integer is Spark's
+    decimal cast, ``str`` of a string is the string itself, and the
+    hex-string and id sorts are the engine's code-point order."""
     import hashlib
 
-    keys = [(hashlib.md5(str(int(i)).encode()).hexdigest(), int(i)) for i in ids]
+    keys = [(hashlib.md5(str(i).encode()).hexdigest(), i) for i in ids]
     return sorted(range(len(keys)), key=keys.__getitem__)[: int(k)]
 
 
 def _gram_cosine_blocks(bucket, chunk: int = 4096):
     """Pairwise cosines of one bucket of (id, qv, n2) members, ids
-    ascending: returns (ids, blocks), where blocks yields (lo, cos) and
+    ascending (ids of any sortable type, returned as a list in that
+    order): returns (ids, blocks), where blocks yields (lo, cos) and
     ``cos`` holds rows lo..lo+chunk of the member x member matrix. The
     dot is an exact int64 Gram matmul, then the same correctly rounded
     double sqrt/multiply/divide the expression form evaluates, so the
@@ -201,9 +195,8 @@ def _gram_cosine_blocks(bucket, chunk: int = 4096):
     would need an 80 GB full Gram, ~3 GB per 4096-row block."""
     import numpy as np
 
-    ids = np.asarray([m["id"] for m in bucket], dtype=np.int64)
-    order = np.argsort(ids, kind="stable")
-    ids = ids[order]
+    order = sorted(range(len(bucket)), key=lambda i: bucket[i]["id"])
+    ids = [bucket[i]["id"] for i in order]
     M = np.vstack([np.asarray(bucket[i]["qv"]) for i in order]).astype(
         np.int64, copy=False
     )

@@ -287,18 +287,12 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import embedding_lsh_pairs
 
     # repartition: the test table is one small parquet file (1 scan
-    # partition); the per-row sign-bit computation (a higher-order
-    # function — CodegenFallback, interpreted) must spread across
-    # cores. At 100 TB the scan itself yields enough partitions.
+    # partition); the per-row quantize and sign-bit kernel must spread
+    # across cores. At 100 TB the scan itself yields enough partitions.
     emb = spread_scan(load(spark, sf_dir, "embeddings"))
     q = quantize_embeddings(emb, "embedding", "vec_id")
-    # sig_impl="arrow" is the explicit scale-path opt-in (fused
-    # bucket-side verify, 2 Arrow fences, no verify joins); the
-    # operator default stays "expr" so plain callers get a
-    # Python-free plan
     return embedding_lsh_pairs(
-        q, threshold=0.45, num_planes=32, rows_per_band=4, dim=64,
-        sig_impl="arrow",
+        q, threshold=0.45, num_planes=32, rows_per_band=4, dim=64
     )
 
 
@@ -386,9 +380,7 @@ def dedup_embedding_lsh_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     allq = q.select(F.explode(pair).alias("r")).select("r.id", "r.qv", "r.n2")
     n0 = table_count(spark, sf_dir, "embeddings")
-    return embedding_lsh_pairs(
-        allq, threshold=0.95, n=2 * n0, sig_impl="arrow"
-    )
+    return embedding_lsh_pairs(allq, threshold=0.95, n=2 * n0)
 
 
 # shared oracle CTE: 64-bit simhash fingerprints (same math as

@@ -35,6 +35,20 @@ def _ivf_index_root(sf_dir: str) -> str:
     return root
 
 
+def _codebook_literal(spark: SparkSession, cb: DataFrame) -> DataFrame:
+    """A (subspace, code, cw) codebook collected ONCE into a JVM
+    LocalRelation: pq_encode collects its codebook at call time, so a
+    lazy codebook plan (a pq_train loop, an exemplar join) read again
+    by the ADC and error stages would otherwise be recomputed by each."""
+    from ..operators.similarity import _collect_centroids
+
+    rows = [
+        (r["subspace"], r["code"], list(r["cw"]))
+        for r in _collect_centroids(cb, "codebook")
+    ]
+    return local_relation(spark, rows, cb.schema)
+
+
 def _centroid_sums(q: DataFrame, group: str, out_group: str, n_name: str) -> DataFrame:
     """groupBy(group) -> (out_group, n_name, sums array<long>).
 
@@ -541,17 +555,6 @@ def semantic_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         _quantize("embedding").alias("qv"),
     )
-    # impl="arrow": the MLlib-style driver-side-centroid scale path —
-    # the interpreted HOF argmin was the measured wall-clock bottleneck
-    # past 10k vectors (bit-identical results, test-asserted). r14
-    # measured the tempting alternative and REJECTED it: the lazy
-    # single-job "inplan" impl looked like a 3-jobs-to-1 shave, but
-    # semantic_dedup consumes the assignment TWICE (pairing branch +
-    # final keep join), so the in-plan Lloyd tree evaluates twice and
-    # the per-row nested-struct _cents transfer dominates — interleaved
-    # A/B at sf0.1: inplan 8.2-42.5 s vs arrow 3.5-6.1 s (control
-    # dedup_exact equal on both sides). The eager collect jobs ARE the
-    # cheaper shape here.
     # carry (qv, n2) through the assignment projection so
     # semantic_dedup's members come straight off the same rows — no
     # corpus self-join on id (r15; quantize_embeddings' qv is the
@@ -586,14 +589,13 @@ def semantic_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assigned = kmeans_assign_frame(quant, cent_rows, carry=["qv", "n2"])
     else:
+        # bigint cluster ids, as kmeans_assign_frame emits above
         init = _centroid_sums(q, "label", "cluster", "n").select(
-            "cluster",
+            F.col("cluster").cast("long").alias("cluster"),
             F.expr("transform(sums, s -> cast(s as double) / n)").alias("c"),
         )
-        assigned = kmeans_lloyd(
-            quant, init, iters=2, impl="arrow", carry=["qv", "n2"]
-        )
-    return semantic_dedup(quant, assigned, threshold=0.45, pairs_impl="arrow")
+        assigned = kmeans_lloyd(quant, init, iters=2, carry=["qv", "n2"])
+    return semantic_dedup(quant, assigned, threshold=0.45)
 
 
 @register(
@@ -660,19 +662,16 @@ def semantic_dedup_auto_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes stay ~target regardless of corpus size, so in-cluster
     pairing work is LINEAR in n.
 
-    clusters_impl is PINNED "flat" so this oracle stays the flat
-    path's hash-proof at every SF on the crossover curve; the
-    operator's real default is "auto" (flat below FLAT_ASSIGN_BUDGET
-    n*k cells, coarse-fine past it), and the hierarchical branch has
-    its own always-hierarchical catalog row + oracle
-    (semantic_dedup_hier)."""
+    flat_assign_budget is PINNED above any n*k so this oracle stays
+    the flat path's hash-proof at every SF on the crossover curve; the
+    operator's default budget (FLAT_ASSIGN_BUDGET n*k cells) goes
+    coarse-fine past it, and the hierarchical branch has its own
+    always-hierarchical catalog row + oracle (semantic_dedup_hier)."""
     from ..operators.dedup import semantic_dedup
 
     emb = load(spark, sf_dir, "embeddings")
     quant = quantize_embeddings(emb, "embedding", "vec_id")
-    return semantic_dedup(
-        quant, threshold=0.45, pairs_impl="arrow", clusters_impl="flat"
-    )
+    return semantic_dedup(quant, threshold=0.45, flat_assign_budget=1 << 62)
 
 
 # squared-L2 of a member qv against a centroid array c, evaluated as
@@ -753,8 +752,9 @@ _HIER_DIST = (
 )
 def semantic_dedup_hier_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup with COARSE-FINE (hierarchical) clustering — the 100 TB
-    path of operators.dedup.semantic_dedup (what clusters_impl="auto"
-    runs past FLAT_ASSIGN_BUDGET n*k assignment cells): level 1 = the
+    path of operators.dedup.semantic_dedup (what it runs past
+    flat_assign_budget n*k assignment cells; budget 0 pins it here at
+    every SF): level 1 = the
     same hash-ordered-seed Lloyd as semantic_dedup_auto but at
     k1 = 2^ceil(ceil_log2(k)/2) ~ sqrt(k) centroids (the oracle derives
     the SAME k1 from count(*): 1 << ((LENGTH(bin(k-1)) + 1) // 2)),
@@ -767,9 +767,7 @@ def semantic_dedup_hier_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     quant = quantize_embeddings(emb, "embedding", "vec_id")
-    return semantic_dedup(
-        quant, threshold=0.45, pairs_impl="arrow", clusters_impl="hierarchical"
-    )
+    return semantic_dedup(quant, threshold=0.45, flat_assign_budget=0)
 
 
 @register(
@@ -921,12 +919,12 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb64 = q.join(seeds, q.id == seeds.mid).select(
         F.col("label").cast("long").alias("code"), F.col("qv").alias("cw64")
     )
-    cb = cb64.select(
+    cb = _codebook_literal(spark, cb64.select(
         "code",
         F.posexplode(
             F.expr("transform(sequence(0, 7), j -> slice(cw64, j * 8 + 1, 8))")
         ).alias("subspace", "cw"),
-    ).select("subspace", "code", "cw")
+    ).select("subspace", "code", "cw"))
     vecs = q.select("id", "qv")
     codes = pq_encode(vecs, cb, m=8, dim=64)
     out = pq_adc_topk(
@@ -1083,13 +1081,15 @@ def ann_pq_train_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb64 = q.join(seeds, q.id == seeds.mid).select(
         F.col("label").cast("long").alias("code"), F.col("qv").alias("cw64")
     )
-    cb_ex = cb64.select(
+    cb_ex = _codebook_literal(spark, cb64.select(
         "code",
         F.posexplode(
             F.expr("transform(sequence(0, 7), j -> slice(cw64, j * 8 + 1, 8))")
         ).alias("subspace", "cw"),
-    ).select("subspace", "code", "cw")
-    cb_tr = pq_train(vecs, m=8, dim=64, iters=2, init_codebooks=cb_ex)
+    ).select("subspace", "code", "cw"))
+    cb_tr = _codebook_literal(
+        spark, pq_train(vecs, m=8, dim=64, iters=2, init_codebooks=cb_ex)
+    )
 
     pieces = vecs.select(
         "id",
@@ -1339,11 +1339,7 @@ def ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pure Python-worker round-trips per rep at sf0.1 (guide §4)
     cent = local_relation(spark, cent_rows, "cluster long, cv array<bigint>")
     cb = local_relation(spark, cb_rows, "subspace int, code int, cw array<bigint>")
-    # arrow impls (r15): the interpreted zip_with/aggregate argmin and
-    # the |corpus| x m x k encode join were the two hottest spans of
-    # this plan (~1.8 s each at sf0.1); the exact-int64 kernels are
-    # bit-identical (tests/test_similarity.py impl-equivalence pins)
-    buckets = assign_cells(vecs, cent, impl="arrow").select(
+    buckets = assign_cells(vecs, cent).select(
         "id", F.col("cluster").alias("bucket")
     )
     d2c = F.expr(_L2_INT.format(a="qv", b="cv"))
@@ -1365,7 +1361,7 @@ def ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cent.select(F.col("cluster").alias("bucket"), "cv"), "bucket")
         .select("id", F.zip_with("qv", "cv", lambda x, c: x - c).alias("qv"))
     )
-    codes = pq_encode(residuals, cb, m=8, dim=64, impl="arrow")
+    codes = pq_encode(residuals, cb, m=8, dim=64)
     out = ivfpq_adc_topk(
         codes,
         buckets,

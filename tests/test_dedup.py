@@ -386,12 +386,41 @@ def test_minhash_store_hits_flags_near_dups_of_store(spark):
     assert hits == {1: 4}
 
 
-def test_embedding_lsh_sig_impls_identical(spark):
-    """The Arrow matmul signature path must produce exactly the pairs
-    of the pure-expression path (bit-identical sign bits)."""
-    import numpy as np
+def _py_lsh_pairs(qv: dict, threshold: float, num_planes: int, rows_per_band: int):
+    """Plain-Python sign-LSH replay over quantized vectors ``qv`` (id ->
+    int list): sign bits against rademacher_planes, band buckets,
+    in-bucket pairs (id_a < id_b), and the quantized cosine — the
+    exact int dot, then one double sqrt/multiply/divide."""
+    import math
 
-    from hadoop_multiple_streaming_spark.operators.dedup import embedding_lsh_pairs
+    from hadoop_multiple_streaming_spark.operators.dedup import rademacher_planes
+
+    def dot(a, b):
+        return sum(x * y for x, y in zip(a, b))
+
+    planes = rademacher_planes(num_planes, len(next(iter(qv.values()))))
+    sig = {i: "".join("1" if dot(v, p) > 0 else "0" for p in planes) for i, v in qv.items()}
+    buckets = {}
+    for i, s in sig.items():
+        for b in range(num_planes // rows_per_band):
+            key = (b, s[b * rows_per_band : (b + 1) * rows_per_band])
+            buckets.setdefault(key, []).append(i)
+    out = set()
+    for ids in buckets.values():
+        for a in ids:
+            for b in ids:
+                if a < b:
+                    cos = float(dot(qv[a], qv[b])) / (
+                        math.sqrt(float(dot(qv[a], qv[a]))) * math.sqrt(float(dot(qv[b], qv[b])))
+                    )
+                    if cos >= threshold:
+                        out.add((a, b, cos))
+    return sorted(out)
+
+
+def _lsh_rows():
+    """30 random 16-dim vectors, every fifth one near a shared base."""
+    import numpy as np
 
     rng = np.random.default_rng(3)
     rows = []
@@ -399,18 +428,48 @@ def test_embedding_lsh_sig_impls_identical(spark):
     for i in range(30):
         v = base + 0.02 * rng.normal(size=16) if i % 5 == 0 else rng.normal(size=16)
         rows.append((i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return rows
+
+
+def test_embedding_lsh_sig_impls_identical(spark):
+    """The Arrow signature + fused bucket-verify path produces exactly
+    the pairs (and bit-identical cosines) of a plain-Python sign-LSH
+    replay over the same quantized vectors."""
+    from hadoop_multiple_streaming_spark.operators.dedup import embedding_lsh_pairs
+
+    df = spark.createDataFrame(_lsh_rows(), "vec_id long, embedding array<float>")
     q = quantize_embeddings(df, "embedding", "vec_id")
+    got = sorted(
+        (r.id_a, r.id_b, r.cosine)
+        for r in embedding_lsh_pairs(
+            q, threshold=0.5, num_planes=16, rows_per_band=4, dim=16
+        ).collect()
+    )
+    qv = {r.id: list(r.qv) for r in q.collect()}
+    assert got == _py_lsh_pairs(qv, 0.5, 16, 4) and got
+
+
+def test_embedding_lsh_pairs_string_ids(spark):
+    """String ids take the same path as integer ids: zero-padded
+    string ids (whose order is the integer order) give the integer-id
+    run's pairs and cosines, mapped through the padding."""
+    from hadoop_multiple_streaming_spark.operators.dedup import embedding_lsh_pairs
+
+    rows = _lsh_rows()
     kw = dict(threshold=0.5, num_planes=16, rows_per_band=4, dim=16)
-    arrow = sorted(
-        (r.id_a, r.id_b, r.cosine)
-        for r in embedding_lsh_pairs(q, sig_impl="arrow", **kw).collect()
+    ints = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    strs = spark.createDataFrame(
+        [(f"{i:05d}", v) for i, v in rows], "vec_id string, embedding array<float>"
     )
-    expr = sorted(
-        (r.id_a, r.id_b, r.cosine)
-        for r in embedding_lsh_pairs(q, sig_impl="expr", **kw).collect()
+    want = sorted(
+        (f"{r.id_a:05d}", f"{r.id_b:05d}", r.cosine)
+        for r in embedding_lsh_pairs(
+            quantize_embeddings(ints, "embedding", "vec_id"), **kw
+        ).collect()
     )
-    assert arrow == expr and arrow
+    out = embedding_lsh_pairs(quantize_embeddings(strs, "embedding", "vec_id"), **kw)
+    assert out.schema["id_a"].dataType.simpleString() == "string"
+    assert sorted((r.id_a, r.id_b, r.cosine) for r in out.collect()) == want and want
 
 
 def test_auto_band_params_bits_grow_with_corpus():
@@ -473,9 +532,10 @@ def test_embedding_lsh_auto_mode(spark):
 
 
 def test_semantic_dedup_impls_and_min_id_rule(spark):
-    """Both pair impls agree; keep=false exactly for members with a
-    smaller-id same-cluster near-duplicate; cross-cluster near-dups
-    are NOT pruned; max_cluster_size skips oversized clusters."""
+    """The fused keep kernel matches a NumPy keep replay over the same
+    clustering: keep=false exactly for members with a smaller-id
+    same-cluster near-duplicate; cross-cluster near-dups are NOT
+    pruned; max_cluster_size skips oversized clusters."""
     import numpy as np
 
     from hadoop_multiple_streaming_spark.operators.dedup import semantic_dedup
@@ -495,26 +555,65 @@ def test_semantic_dedup_impls_and_min_id_rule(spark):
         "vec_id long, embedding array<float>",
     )
     q = quantize_embeddings(df, "embedding", "vec_id")
-    clusters = spark.createDataFrame(
-        [(1, 0), (2, 0), (3, 1), (4, 1), (5, 0)], "id long, cluster int"
-    )
+    assign = {1: 0, 2: 0, 3: 1, 4: 1, 5: 0}
+    clusters = spark.createDataFrame(list(assign.items()), "id long, cluster int")
+    qv = {r.id: np.asarray(r.qv, dtype=np.int64) for r in q.collect()}
+
+    def cos(a, b):
+        return float(qv[a] @ qv[b]) / (
+            np.sqrt(float(qv[a] @ qv[a])) * np.sqrt(float(qv[b] @ qv[b]))
+        )
+
+    replay = {
+        i: (c, not any(assign[j] == c and cos(j, i) >= 0.99 for j in assign if j < i))
+        for i, c in assign.items()
+    }
     want = {1: (0, True), 2: (0, False), 3: (1, True), 4: (1, True), 5: (0, True)}
-    for impl in ("expr", "arrow"):
-        got = {
-            r.id: (r.cluster, r.keep)
-            for r in semantic_dedup(
-                q, clusters, threshold=0.99, pairs_impl=impl
-            ).collect()
-        }
-        assert got == want, impl
+    assert replay == want
+    got = {
+        r.id: (r.cluster, r.keep)
+        for r in semantic_dedup(q, clusters, threshold=0.99).collect()
+    }
+    assert got == want
     # skew guard: cluster 0 (3 members) skipped -> everything kept
     capped = {
         r.id: r.keep
         for r in semantic_dedup(
-            q, clusters, threshold=0.99, max_cluster_size=2, pairs_impl="arrow"
+            q, clusters, threshold=0.99, max_cluster_size=2
         ).collect()
     }
     assert capped == {1: True, 2: True, 3: True, 4: True, 5: True}
+
+
+def test_semantic_dedup_string_ids_local_and_distributed(spark, monkeypatch):
+    """Zero-padded string ids take the driver-local seed and Lloyd
+    replay, and it returns the same (id, cluster, keep) rows as the
+    distributed seeds and rounds (local k-means cap patched to 0)."""
+    import numpy as np
+
+    from hadoop_multiple_streaming_spark.operators import similarity as S
+    from hadoop_multiple_streaming_spark.operators.dedup import _local_id, semantic_dedup
+
+    rng = np.random.default_rng(7)
+    rows = [(f"{i:04d}", [float(x) for x in rng.normal(size=16)]) for i in range(60)]
+    rows.append(("0060", [x * 1.0001 for x in rows[13][1]]))  # near-dup of 0013
+    df = spark.createDataFrame(rows, "vec_id string, embedding array<float>")
+    q = quantize_embeddings(df, "embedding", "vec_id")
+    assert _local_id(q)
+
+    def run():
+        return sorted(
+            (r.id, r.cluster, r.keep)
+            for r in semantic_dedup(q, threshold=0.99, target_cluster_size=8, dim=16).collect()
+        )
+
+    local = run()
+    monkeypatch.setattr(S, "_LOCAL_KMEANS_CAP", 0)
+    assert run() == local
+    got = {i: (c, k) for i, c, k in local}
+    assert len(got) == 61
+    assert got["0060"][1] is False and got["0013"][1] is True
+    assert len({c for c, _ in got.values()}) > 1
 
 
 def test_auto_cluster_count_law():
@@ -559,7 +658,7 @@ def test_semantic_dedup_auto_default_recovers_planted_twin(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = quantize_embeddings(df, "embedding", "vec_id")
     out = semantic_dedup(
-        q, threshold=0.99, pairs_impl="arrow", target_cluster_size=8, dim=16
+        q, threshold=0.99, target_cluster_size=8, dim=16
     ).collect()
     got = {r.id: (r.cluster, r.keep) for r in out}
     assert len(got) == 61  # every input id, exactly once
@@ -570,7 +669,7 @@ def test_semantic_dedup_auto_default_recovers_planted_twin(spark):
     assert len({c for c, _ in got.values()}) <= 8
     # n= opt-out skips the eager count and produces identical output
     out2 = semantic_dedup(
-        q, threshold=0.99, pairs_impl="arrow", target_cluster_size=8,
+        q, threshold=0.99, target_cluster_size=8,
         dim=16, n=61,
     ).collect()
     assert {r.id: (r.cluster, r.keep) for r in out2} == got
@@ -707,7 +806,7 @@ def test_semantic_dedup_auto_tiny_inputs(spark):
         df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
         q = quantize_embeddings(df, "embedding", "vec_id")
         out = {r.id: r.keep for r in semantic_dedup(
-            q, threshold=0.99, pairs_impl="arrow", dim=16
+            q, threshold=0.99, dim=16
         ).collect()}
         assert len(out) == len(rows)
         assert out[1] is True  # min-id representative always kept
@@ -717,7 +816,7 @@ def test_semantic_dedup_auto_tiny_inputs(spark):
     )
     q = quantize_embeddings(df, "embedding", "vec_id")
     out = {r.id: r.keep for r in semantic_dedup(
-        q, threshold=0.99, pairs_impl="arrow", dim=16
+        q, threshold=0.99, dim=16
     ).collect()}
     assert out == {1: True, 2: False}
 
@@ -766,7 +865,7 @@ def _hier_fixture(spark, n=120, seed=3, target=10):
 
 
 def test_semantic_dedup_hier_planted_twin_and_composite_ids(spark):
-    """clusters_impl="hierarchical": every id exactly once, the
+    """flat_assign_budget=0 (two-level clustering): every id exactly once, the
     planted near-twin is dropped with its min-id representative kept
     in the SAME composite cluster, composite ids decode to
     coarse < k1 and fine < 2^32 with no (coarse, fine) collisions,
@@ -782,8 +881,8 @@ def test_semantic_dedup_hier_planted_twin_and_composite_ids(spark):
 
     q, n = _hier_fixture(spark)
     out = semantic_dedup(
-        q, threshold=0.99, pairs_impl="arrow", target_cluster_size=10,
-        dim=16, clusters_impl="hierarchical",
+        q, threshold=0.99, target_cluster_size=10, dim=16,
+        flat_assign_budget=0,
     ).collect()
     got = {r.id: (r.cluster, r.keep) for r in out}
     assert len(got) == n + 1  # every id, exactly once
@@ -812,13 +911,18 @@ def test_semantic_dedup_hier_planted_twin_and_composite_ids(spark):
 
 
 def test_semantic_dedup_auto_budget_routing(spark):
-    """clusters_impl="auto" routes by n*k vs flat_assign_budget: a
-    huge budget reproduces the flat path bit-for-bit, a tiny budget
-    reproduces the hierarchical path bit-for-bit."""
-    from hadoop_multiple_streaming_spark.operators.dedup import semantic_dedup
+    """semantic_dedup routes by n*k vs flat_assign_budget: under the
+    budget it reproduces the flat auto_semantic_clusters clustering
+    bit-for-bit, past it the hierarchical one."""
+    from hadoop_multiple_streaming_spark.operators.dedup import (
+        auto_cluster_count,
+        auto_semantic_clusters,
+        hierarchical_semantic_clusters,
+        semantic_dedup,
+    )
 
-    q, _ = _hier_fixture(spark)
-    kw = dict(threshold=0.99, pairs_impl="arrow", target_cluster_size=10, dim=16)
+    q, n = _hier_fixture(spark)
+    kw = dict(threshold=0.99, target_cluster_size=10, dim=16)
 
     def run(**extra):
         return sorted(
@@ -826,11 +930,24 @@ def test_semantic_dedup_auto_budget_routing(spark):
             for r in semantic_dedup(q, **kw, **extra).collect()
         )
 
-    flat = run(clusters_impl="flat")
-    hier = run(clusters_impl="hierarchical")
+    def clusters(frame):
+        return sorted((r.id, r.cluster) for r in frame.collect())
+
+    k = auto_cluster_count(n + 1, 10)
+    flat = run(flat_assign_budget=1 << 60)
+    hier = run(flat_assign_budget=1)
     assert flat != hier  # the two clusterings genuinely differ here
-    assert run(clusters_impl="auto", flat_assign_budget=1 << 60) == flat
-    assert run(clusters_impl="auto", flat_assign_budget=1) == hier
+    assert run() == flat  # 121 x 13 cells is far under the default budget
+    assert [(i, c) for i, c, _ in flat] == clusters(
+        auto_semantic_clusters(q, k, dim=16)
+    )
+    assert [(i, c) for i, c, _ in hier] == clusters(
+        hierarchical_semantic_clusters(
+            q, auto_cluster_count(n + 1, 10, max_k=None), target_cluster_size=10, dim=16
+        )
+    )
+    assert run(flat_assign_budget=(n + 1) * k) == flat  # the bound is inclusive
+    assert run(flat_assign_budget=(n + 1) * k - 1) == hier
 
 
 def test_fine_lloyd_cells_matches_python_lloyd():
@@ -915,8 +1032,8 @@ def test_semantic_dedup_hier_skewed_cell(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = quantize_embeddings(df, "embedding", "vec_id")
     out = semantic_dedup(
-        q, threshold=0.99, pairs_impl="arrow", target_cluster_size=10,
-        dim=16, clusters_impl="hierarchical",
+        q, threshold=0.99, target_cluster_size=10, dim=16,
+        flat_assign_budget=0,
     ).collect()
     got = {r.id: (r.cluster, r.keep) for r in out}
     assert len(got) == 96

@@ -131,9 +131,10 @@ def test_spread_scan_is_local_mode_only(spark, monkeypatch):
 def test_path_selectors_are_the_kept_set():
     """Every public parameter that picks between two implementations
     doubles the configurations the tests must cover, so the set is
-    pinned: each kept selector has a caller that runs both values, or
-    a value some input needs. A new ``impl``/``*_impl``/``family``/
-    ``binary`` parameter fails here until it earns a place."""
+    pinned — and it is empty: each operator has one path, chosen from
+    what it observes (input size, column types), never from an option.
+    A new ``impl``/``*_impl``/``family``/``binary`` parameter fails
+    here until it earns a place."""
     import importlib
     import inspect
     import pkgutil
@@ -152,14 +153,4 @@ def test_path_selectors_are_the_kept_set():
                     for p in inspect.signature(fn).parameters
                     if re.fullmatch(r"impl|\w+_impl|family|binary", p)
                 }
-    assert found == {
-        # catalog queries run both values
-        "kmeans_lloyd.impl",
-        "assign_cells.impl",
-        "pq_encode.impl",
-        # "expr" is the only path for non-integer ids
-        "embedding_lsh_pairs.sig_impl",
-        "semantic_dedup.pairs_impl",
-        # "auto" picks flat or hierarchical from n*k; two queries pin one each
-        "semantic_dedup.clusters_impl",
-    }
+    assert found == set()

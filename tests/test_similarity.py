@@ -103,33 +103,34 @@ def test_quantize_sq8_roundtrip_bounds(spark):
 
 def test_kmeans_lloyd_rejects_dim_mismatch(spark):
     # a wrong dim must fail loudly, not silently collapse every vector
-    # into the tie-break cluster (zip_with pads with nulls). The check
-    # is a raise_error column inside the plan (no extra driver job), so
-    # the failure surfaces at action time, not at call time.
+    # into one cluster. The check is a raise_error column inside the
+    # plan that feeds the kernel: with iters > 1 the update rounds run
+    # at call time, so the call itself raises.
     import pytest as _pytest
 
     from hadoop_multiple_streaming_spark.operators.similarity import kmeans_lloyd
 
     q = spark.createDataFrame([(1, [1, 2, 3])], "id long, qv array<long>")
     init = spark.createDataFrame([(0, [0.0, 0.0, 0.0])], "cluster long, c array<double>")
-    df = kmeans_lloyd(q, init)  # default dim=64 vs 3-dim data
     with _pytest.raises(Exception, match="dim=64 but vectors have 3"):
-        df.collect()
+        kmeans_lloyd(q, init).collect()  # default dim=64 vs 3-dim data
 
 
 def test_kmeans_lloyd_dim_check_adds_no_job(spark):
-    # the guard must live in the plan: building the kmeans DataFrame
-    # runs ZERO jobs (the old .first() guard ran one per call, which
-    # multiplies in iterative callers)
+    # the guard must live in the plan: with no update round to run,
+    # building the kmeans DataFrame runs exactly ONE job — the
+    # centroid collect (the old .first() guard added one per call,
+    # which multiplies in iterative callers)
     from hadoop_multiple_streaming_spark.operators.similarity import kmeans_lloyd
 
     q = spark.createDataFrame([(1, [1, 2])], "id long, qv array<long>")
     init = spark.createDataFrame([(0, [0.0, 0.0])], "cluster long, c array<double>")
+    init = init.coalesce(1)  # one partition: the bounded collect is one job
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or [])
     kmeans_lloyd(q, init, iters=1, dim=2)
     after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after == before
+    assert after == before + 1
 
 
 def test_ivf_index_roundtrip_and_partition_pruning(spark, tmp_path):
@@ -310,10 +311,37 @@ def test_pq_train_reduces_quantization_error(spark):
     assert quant_err(cb3) <= quant_err(cb2)
 
 
+def _py_lloyd(vecs: dict, cents: dict, iters: int) -> dict:
+    """Plain-Python Lloyd replay: ``iters`` assignments of the int
+    vectors ``vecs`` (id -> list) to float centroids ``cents`` (cluster
+    -> list) — squared L2 folded left to right over dims, exact ties to
+    the smaller cluster id — with means ``exact int sum / n`` between
+    rounds (empty clusters drop out). Returns id -> cluster."""
+    for it in range(iters):
+        assign = {}
+        for i, v in vecs.items():
+            best = None
+            for c in sorted(cents):
+                acc = 0.0
+                for x, m in zip(v, cents[c]):
+                    acc += (float(x) - m) * (float(x) - m)
+                if best is None or acc < best[0]:
+                    best = (acc, c)
+            assign[i] = best[1]
+        if it < iters - 1:
+            members = {}
+            for i, c in assign.items():
+                members.setdefault(c, []).append(vecs[i])
+            cents = {
+                c: [sum(col) / len(vs) for col in zip(*vs)] for c, vs in members.items()
+            }
+    return assign
+
+
 def test_kmeans_lloyd_impls_identical(spark):
-    """impl='arrow' (driver-side centroids + dim-sequential numpy
-    fold) must reproduce impl='expr' (lazy interpreted fold)
-    bit-for-bit, including the smaller-cluster-id tie rule."""
+    """kmeans_lloyd (driver-side centroids + dim-sequential numpy
+    fold) reproduces a plain-Python Lloyd bit for bit, including the
+    smaller-cluster-id tie rule, and keeps the init's cluster type."""
     import numpy as np
 
     from hadoop_multiple_streaming_spark.operators.similarity import kmeans_lloyd
@@ -327,25 +355,18 @@ def test_kmeans_lloyd_impls_identical(spark):
     init = spark.createDataFrame(
         [(0, [500.0] * 8), (1, [-500.0] * 8)], "cluster long, c array<double>"
     )
-    expr = {r.id: r.cluster for r in kmeans_lloyd(q, init, iters=3, dim=8).collect()}
-    arrow = {
-        r.id: r.cluster
-        for r in kmeans_lloyd(q, init, iters=3, dim=8, impl="arrow").collect()
-    }
-    assert arrow == expr and len(set(expr.values())) == 2
-    # exact-tie: equidistant vector goes to the SMALLER cluster id in
-    # both impls
+    got = {r.id: r.cluster for r in kmeans_lloyd(q, init, iters=3, dim=8).collect()}
+    want = _py_lloyd(dict(rows), {0: [500.0] * 8, 1: [-500.0] * 8}, 3)
+    assert got == want and len(set(want.values())) == 2
+    # exact-tie: an equidistant vector goes to the SMALLER cluster id,
+    # and an int cluster column comes back as int
     tie_q = spark.createDataFrame([(7, [0] * 8)], "id long, qv array<long>")
     tie_init = spark.createDataFrame(
-        [(3, [2.0] * 8), (9, [-2.0] * 8)], "cluster long, c array<double>"
+        [(9, [-2.0] * 8), (3, [2.0] * 8)], "cluster int, c array<double>"
     )
-    for impl in ("expr", "arrow"):
-        got = kmeans_lloyd(tie_q, tie_init, iters=1, dim=8, impl=impl).collect()
-        assert got[0].cluster == 3, impl
-    import pytest
-
-    with pytest.raises(ValueError, match="impl"):
-        kmeans_lloyd(q, init, impl="wat")
+    out = kmeans_lloyd(tie_q, tie_init, iters=1, dim=8)
+    assert out.schema["cluster"].dataType.simpleString() == "int"
+    assert out.collect()[0].cluster == 3
 
 
 def test_assign_argmin_kernel_blocks_and_ties():
@@ -684,62 +705,58 @@ def test_mixed_norm_guard_and_stored_bounds(spark, tmp_path):
 
 
 def test_assign_cells_impl_equivalence(spark):
-    """r15 optimization pin: the exact-int64 Arrow kernel must agree
-    with the _ARGMIN_INT expression fold on every row — including
-    EXACT ties, where both must keep the smallest cluster id."""
+    """r15 optimization pin: the exact-int64 Arrow kernel agrees with a
+    plain-Python exact integer L2 argmin on every row — including
+    EXACT ties, where it must keep the smallest cluster id."""
     from hadoop_multiple_streaming_spark.operators.similarity import assign_cells
 
-    cent = spark.createDataFrame(
-        [(0, [0, 0, 0, 0]), (1, [10, 0, 0, 0]), (2, [10, 0, 0, 0])],
-        "cluster long, cv array<bigint>",
-    )
-    vecs = spark.createDataFrame(
-        [
-            (1, [0, 1, 0, 0]),
-            (2, [9, 0, 0, 0]),
-            (3, [5, 0, 0, 0]),   # exact tie between cluster 0 and 1/2
-            (4, [10, 0, 0, 0]),  # exact tie between cluster 1 and 2
-            (5, [1000000, -1000000, 1000000, -1000000]),
-        ],
-        "id long, qv array<bigint>",
-    )
+    cells = {2: [10, 0, 0, 0], 0: [0, 0, 0, 0], 1: [10, 0, 0, 0]}
+    cent = spark.createDataFrame(list(cells.items()), "cluster long, cv array<bigint>")
+    rows = [
+        (1, [0, 1, 0, 0]),
+        (2, [9, 0, 0, 0]),
+        (3, [5, 0, 0, 0]),   # exact tie between cluster 0 and 1/2
+        (4, [10, 0, 0, 0]),  # exact tie between cluster 1 and 2
+        (5, [1000000, -1000000, 1000000, -1000000]),
+    ]
+    vecs = spark.createDataFrame(rows, "id long, qv array<bigint>")
     want = {
-        (r.id, r.cluster) for r in assign_cells(vecs, cent, impl="expr").collect()
+        i: min(sorted(cells), key=lambda c: sum((x - y) ** 2 for x, y in zip(v, cells[c])))
+        for i, v in rows
     }
-    got = {
-        (r.id, r.cluster) for r in assign_cells(vecs, cent, impl="arrow").collect()
-    }
+    got = {r.id: r.cluster for r in assign_cells(vecs, cent).collect()}
     assert got == want
-    assert dict(got)[3] == 0 and dict(got)[4] == 1  # smallest-id ties
+    assert got[3] == 0 and got[4] == 1  # smallest-id ties
 
 
 def test_pq_encode_impl_equivalence(spark):
-    """r15 optimization pin: the Arrow encode kernel must reproduce
-    the expr path's codes bit for bit — exact int64 distances, ties to
-    the smaller code id."""
+    """r15 optimization pin: the Arrow encode kernel reproduces a
+    plain-Python per-subspace argmin bit for bit — exact integer
+    distances, ties to the smaller code id — with codes of the
+    codebook's code type."""
     from hadoop_multiple_streaming_spark.operators.similarity import pq_encode
 
-    cb = spark.createDataFrame(
-        [
-            (0, 0, [0, 0]), (0, 1, [10, 10]), (0, 2, [10, 10]),  # 1/2 tie
-            (1, 0, [0, 0]), (1, 1, [6, 8]),
-        ],
-        "subspace int, code long, cw array<long>",
-    )
-    vecs = spark.createDataFrame(
-        [
-            (1, [0, 0, 10, 10]),
-            (2, [9, 9, 0, 0]),
-            (3, [10, 10, 3, 4]),  # subspace-1 exact tie: |(3,4)| to both
-            (4, [5, 5, 3, 4]),    # subspace-0 exact tie between 0 and 1/2
-        ],
-        "id long, qv array<long>",
-    )
-    want = {r.id: list(r.codes) for r in pq_encode(vecs, cb, m=2, dim=4).collect()}
-    got = {
-        r.id: list(r.codes)
-        for r in pq_encode(vecs, cb, m=2, dim=4, impl="arrow").collect()
-    }
+    books = [
+        (0, 0, [0, 0]), (0, 1, [10, 10]), (0, 2, [10, 10]),  # 1/2 tie
+        (1, 0, [0, 0]), (1, 1, [6, 8]),
+    ]
+    cb = spark.createDataFrame(books, "subspace int, code long, cw array<long>")
+    rows = [
+        (1, [0, 0, 10, 10]),
+        (2, [9, 9, 0, 0]),
+        (3, [10, 10, 3, 4]),  # subspace-1 exact tie: |(3,4)| to both
+        (4, [5, 5, 3, 4]),    # subspace-0 exact tie between 0 and 1/2
+    ]
+    vecs = spark.createDataFrame(rows, "id long, qv array<long>")
+
+    def nearest(j, sub):
+        cands = sorted((code, cw) for s, code, cw in books if s == j)
+        return min(cands, key=lambda cc: sum((x - y) ** 2 for x, y in zip(sub, cc[1])))[0]
+
+    want = {i: [nearest(j, v[2 * j : 2 * j + 2]) for j in range(2)] for i, v in rows}
+    out = pq_encode(vecs, cb, m=2, dim=4)
+    assert out.schema["codes"].dataType.simpleString() == "array<bigint>"
+    got = {r.id: list(r.codes) for r in out.collect()}
     assert got == want
     assert got[3][1] == 0  # tie in subspace 1 -> smaller code
 
@@ -769,7 +786,7 @@ def test_local_lloyd_matches_distributed_rounds(spark, monkeypatch):
     def run_lloyd():
         return {
             r.id: r.cluster
-            for r in S.kmeans_lloyd(q, init, iters=4, dim=8, impl="arrow").collect()
+            for r in S.kmeans_lloyd(q, init, iters=4, dim=8).collect()
         }
 
     def run_auto():
@@ -786,26 +803,6 @@ def test_local_lloyd_matches_distributed_rounds(spark, monkeypatch):
     # and a cap below the corpus size also falls back (probe returns None)
     monkeypatch.setattr(S, "_LOCAL_KMEANS_CAP", 10)
     assert S.collect_bounded(q.select("qv"), S._LOCAL_KMEANS_CAP) is None
-
-
-def test_local_kmeans_cap_env_clamped(monkeypatch):
-    """The env override is clamped to the 2^20 ceiling (r16, VERDICT
-    task 8): a runaway SPARK_GRAFT_LOCAL_KMEANS_CAP must not turn the
-    bounded probe into a multi-GB driver collect."""
-    import importlib
-
-    from hadoop_multiple_streaming_spark.operators import similarity as S
-
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_KMEANS_CAP", str(1 << 24))
-    try:
-        importlib.reload(S)
-        assert S._LOCAL_KMEANS_CAP == S._LOCAL_KMEANS_CAP_CEIL == 1 << 20
-        monkeypatch.setenv("SPARK_GRAFT_LOCAL_KMEANS_CAP", "4096")
-        importlib.reload(S)
-        assert S._LOCAL_KMEANS_CAP == 4096  # below the ceiling: honored
-    finally:
-        monkeypatch.delenv("SPARK_GRAFT_LOCAL_KMEANS_CAP")
-        importlib.reload(S)
 
 
 def test_similarity_does_not_import_dedup():
@@ -845,9 +842,9 @@ def test_kmeans_init_collect_is_capped(spark, monkeypatch):
     )
     monkeypatch.setattr(S, "_CENTROID_CAP", 1)
     with pytest.raises(ValueError, match="kmeans_lloyd: .* more than 1 rows"):
-        S.kmeans_lloyd(q, init, iters=1, dim=2, impl="arrow")
+        S.kmeans_lloyd(q, init, iters=1, dim=2)
     monkeypatch.setattr(S, "_CENTROID_CAP", 2)
-    got = {r.id: r.cluster for r in S.kmeans_lloyd(q, init, iters=1, dim=2, impl="arrow").collect()}
+    got = {r.id: r.cluster for r in S.kmeans_lloyd(q, init, iters=1, dim=2).collect()}
     assert got == {0: 0, 1: 1}
 
 
@@ -862,9 +859,9 @@ def test_assign_cells_collect_is_capped(spark, monkeypatch):
     )
     monkeypatch.setattr(S, "_CENTROID_CAP", 1)
     with pytest.raises(ValueError, match="assign_cells: .* more than 1 rows"):
-        S.assign_cells(q, cells, impl="arrow")
+        S.assign_cells(q, cells)
     monkeypatch.setattr(S, "_CENTROID_CAP", 2)
-    got = {r.id: r.cluster for r in S.assign_cells(q, cells, impl="arrow").collect()}
+    got = {r.id: r.cluster for r in S.assign_cells(q, cells).collect()}
     assert got == {0: 0, 1: 1}
 
 
@@ -879,7 +876,7 @@ def test_pq_codebook_collect_is_capped(spark, monkeypatch):
     )
     monkeypatch.setattr(S, "_CENTROID_CAP", 1)
     with pytest.raises(ValueError, match="pq_encode: .* more than 1 rows"):
-        S.pq_encode(q, books, m=1, dim=2, impl="arrow")
+        S.pq_encode(q, books, m=1, dim=2)
     monkeypatch.setattr(S, "_CENTROID_CAP", 2)
-    got = {r.id: list(r.codes) for r in S.pq_encode(q, books, m=1, dim=2, impl="arrow").collect()}
+    got = {r.id: list(r.codes) for r in S.pq_encode(q, books, m=1, dim=2).collect()}
     assert got == {0: [0], 1: [1]}

@@ -36,8 +36,9 @@ def test_cited_tools_exist():
 
 def test_normalize_plan_drops_only_run_noise():
     """Two captures of one tree differ in expression ids, plan ids,
-    codegen ids, AQE query-stage ids and temp-dir names; normalising
-    makes them equal, and a changed operator still shows."""
+    codegen ids, AQE query-stage ids, lambda-variable and common-
+    subexpression counters and temp-dir names; normalising makes them
+    equal, and a changed operator still shows."""
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -48,6 +49,8 @@ def test_normalize_plan_drops_only_run_noise():
 
     def capture(ids, codegen, stage, plan_id, tmp):
         return (
+            f"(2) Project [transform(v#{ids}, lambdafunction(lambda x_{ids}#{ids}L))]\n"
+            f"Output [1]: [(v#{ids} > 50) AS _common_expr_{stage}#{ids}]\n"
             f"(3) HashAggregate [codegen id : {codegen}]\n"
             f"Input [2]: [k#{ids}L, v#{ids + 1}]\n"
             f"Arguments: hashpartitioning(k#{ids}L, 4), ENSURE_REQUIREMENTS, "
@@ -66,3 +69,34 @@ def test_normalize_plan_drops_only_run_noise():
     assert mod.normalize_plan(a.replace("4), ENSURE", "8), ENSURE")) != (
         mod.normalize_plan(a)
     )
+
+
+def test_plan_diff_flags_only_disjoint_captures(tmp_path, capsys):
+    """A query captured twice per side is CHANGED only when no capture
+    on one side equals any capture on the other: a plan that flips
+    between two shapes at one commit is not reported as a change."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "capture_plans", ROOT / "tools" / "capture_plans.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    assert not mod.plan_changed(["A", "B"], ["B"])  # unstable before, one shape after
+    assert not mod.plan_changed(["A"], ["B", "A"])
+    assert mod.plan_changed(["A", "B"], ["C"])
+    assert mod.plan_changed(["A"], [])  # query gone on one side
+
+    for name, text in {
+        "q8_before": "A", "q8_before.alt": "B", "q8_after": "B",
+        "q1_before": "X", "q1_after": "Y",
+    }.items():
+        (tmp_path / f"{name}.txt").write_text(text)
+    assert mod.captures(str(tmp_path), "q8", "before") == ["A", "B"]
+    assert mod.captures(str(tmp_path), "q1", "after") == ["Y"]
+    mod.diff(str(tmp_path), "before", "after")
+    assert capsys.readouterr().out.splitlines() == [
+        "CHANGED q1",
+        "1 of 2 queries changed plan",
+    ]

@@ -100,8 +100,7 @@ def _scaled_embedding_lsh():
         emb = load(spark, sf_dir, "embeddings")
         qz = quantize_embeddings(emb, "embedding", "vec_id")
         return embedding_lsh_pairs(
-            qz, threshold=0.8, num_planes=64, rows_per_band=8, dim=64,
-            sig_impl="arrow",
+            qz, threshold=0.8, num_planes=64, rows_per_band=8, dim=64
         )
 
     pl = planes_duckdb_literal(rademacher_planes(64, 64))
@@ -158,11 +157,9 @@ def _scaled_semantic_dedup():
             "cluster",
             F.expr("transform(sums, s -> cast(s as double) / n)").alias("c"),
         )
-        assigned = kmeans_lloyd(
-            base.select("id", "qv"), init, iters=2, impl="arrow"
-        )
+        assigned = kmeans_lloyd(base.select("id", "qv"), init, iters=2)
         quant = quantize_embeddings(emb, "embedding", "vec_id")
-        return semantic_dedup(quant, assigned, threshold=0.45, pairs_impl="arrow")
+        return semantic_dedup(quant, assigned, threshold=0.45)
 
     nibbles = " + ".join(
         f"(strpos('0123456789abcdef', substr(md5(CAST(id AS VARCHAR)), {i + 1}, 1)) - 1) * {16 ** (5 - i)}"
