@@ -74,7 +74,6 @@ def _cosine(qa: str, qb: str, na2: str, nb2: str) -> Column:
     )
 
 
-
 # ------------------------------------------------------- NumPy kernels
 
 

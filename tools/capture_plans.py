@@ -121,6 +121,7 @@ def main() -> int:
         shuffle_partitions=int(cpus),
     )
     spark.sparkContext.setLogLevel("ERROR")
+
     def capture(name: str) -> str:
         df = workloads.QUERIES[name](spark, sf_dir)
         # collect() finalizes THIS Dataset's AQE plan in place (a noop
