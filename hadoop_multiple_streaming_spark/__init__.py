@@ -24,6 +24,12 @@ subprocess semantics are required.
 
 __version__ = "0.2.0"
 
+# first, so a reused Python worker installs it on its first task that
+# unpickles a function from this package (see _zipcache)
+from . import _zipcache  # noqa: E402
+
+_zipcache.install()
+
 from .operators.asof import asof_join, interval_join  # noqa: E402,F401
 from .operators.pipe import grouped_pipe_reduce, pipe_map, pipe_reduce  # noqa: E402,F401
 from .plans.model import AGGREGATE, NONE, Branch, JobSpec  # noqa: E402,F401

@@ -873,8 +873,13 @@ def ivfpq_adc_topk(
     # id under a query probing both cells would double-count the same
     # way — dedupe upstream if your coarse assignment is multi-valued).
     probes = probes_df.select("query_id", "bucket").distinct()
-    cands = probes.join(codes_df.join(buckets_df, "id"), "bucket").select(
-        "query_id", "bucket", "id", "codes"
+    # broadcast the probe list (nprobe rows per query, fewer than the
+    # dtable broadcast below): left to AQE, this join was a shuffle on
+    # some runs and a broadcast on others, by which stage finished first
+    cands = (
+        F.broadcast(probes)
+        .join(codes_df.join(buckets_df, "id"), "bucket")
+        .select("query_id", "bucket", "id", "codes")
     )
     doc_codes = cands.select(
         "query_id", "bucket", "id", F.posexplode("codes").alias("subspace", "code")

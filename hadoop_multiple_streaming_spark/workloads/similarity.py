@@ -1311,37 +1311,34 @@ def ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cached = _IVFPQ_TRAIN_CACHE.get(sf_dir)
     if cached is None:
-        cent = ivf_train_int(vecs, k=16, iters=2, dim=64)
-        # materialize the tiny centroid relation once; assignment,
-        # residuals, and probe ranking all reuse the literal
-        cent_rows = [(int(r["cluster"]), list(r["cv"])) for r in cent.collect()]
-        buckets0 = assign_cells(vecs, local_relation(
-            spark, cent_rows, "cluster long, cv array<bigint>"
-        )).select("id", F.col("cluster").alias("bucket"))
-        cent_lit = local_relation(
-            spark, cent_rows, "cluster long, cv array<bigint>"
-        )
-        residuals0 = (
-            vecs.join(buckets0, "id")
-            .join(cent_lit.select(F.col("cluster").alias("bucket"), "cv"), "bucket")
-            .select("id", F.zip_with("qv", "cv", lambda x, c: x - c).alias("qv"))
-        )
-        cb_rows = [
-            (int(r["subspace"]), int(r["code"]), list(r["cw"]))
-            for r in pq_train(residuals0, k=16, m=8, dim=64, iters=2).collect()
+        cent_rows = [
+            (int(r["cluster"]), list(r["cv"]))
+            for r in ivf_train_int(vecs, k=16, iters=2, dim=64).collect()
         ]
-        cached = (cent_rows, cb_rows)
-        _IVFPQ_TRAIN_CACHE[sf_dir] = cached
-    cent_rows, cb_rows = cached
+    else:
+        cent_rows, cb_rows = cached
     # JVM LocalRelations, NOT createDataFrame (functions.localrel): the
     # Python-RDD literal path made every one of this plan's SIX
     # broadcast builds a 32-task Python scan — measured ~42 CPU-s of
     # pure Python-worker round-trips per rep at sf0.1 (guide §4)
+    # one centroid literal serves assignment, residuals (which the PQ
+    # codebooks also train on) and probe ranking
     cent = local_relation(spark, cent_rows, "cluster long, cv array<bigint>")
-    cb = local_relation(spark, cb_rows, "subspace int, code int, cw array<bigint>")
     buckets = assign_cells(vecs, cent).select(
         "id", F.col("cluster").alias("bucket")
     )
+    residuals = (
+        vecs.join(buckets, "id")
+        .join(cent.select(F.col("cluster").alias("bucket"), "cv"), "bucket")
+        .select("id", F.zip_with("qv", "cv", lambda x, c: x - c).alias("qv"))
+    )
+    if cached is None:
+        cb_rows = [
+            (int(r["subspace"]), int(r["code"]), list(r["cw"]))
+            for r in pq_train(residuals, k=16, m=8, dim=64, iters=2).collect()
+        ]
+        _IVFPQ_TRAIN_CACHE[sf_dir] = (cent_rows, cb_rows)
+    cb = local_relation(spark, cb_rows, "subspace int, code int, cw array<bigint>")
     d2c = F.expr(_L2_INT.format(a="qv", b="cv"))
     from pyspark.sql.window import Window as _W
 
@@ -1355,11 +1352,6 @@ def ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         cdist.withColumn("rn", F.row_number().over(wq))
         .where(F.col("rn") <= 4)
         .select(F.col("id").alias("query_id"), F.col("cluster").alias("bucket"))
-    )
-    residuals = (
-        vecs.join(buckets, "id")
-        .join(cent.select(F.col("cluster").alias("bucket"), "cv"), "bucket")
-        .select("id", F.zip_with("qv", "cv", lambda x, c: x - c).alias("qv"))
     )
     codes = pq_encode(residuals, cb, m=8, dim=64)
     out = ivfpq_adc_topk(

@@ -97,3 +97,99 @@ def test_worker_boundary_ops_run_with_foreign_cwd(tmp_path):
         env={**os.environ, "PYTHONPATH": ""},
     )
     assert "SHIP_OK 8" in out.stdout, out.stdout[-2000:] + out.stderr[-2000:]
+
+
+def _run_script(tmp_path, body, timeout):
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "drive.py"
+    script.write_text(f"import sys\nsys.path.insert(0, {repo!r})\n" + body)
+    return subprocess.run(
+        [sys.executable, str(script)],
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=timeout,
+        env={**os.environ, "PYTHONPATH": ""},
+    )
+
+
+def test_zip_directory_kept_until_archive_changes(tmp_path):
+    """_zipcache in a fresh interpreter, so the patch stays out of this
+    session: repeated invalidations re-read no zip directory, and a zip
+    rewritten in place is read again, once."""
+    out = _run_script(
+        tmp_path,
+        "import importlib, zipfile, zipimport\n"
+        "import os\n"
+        "zp = os.path.abspath('mods.zip')\n"
+        "with zipfile.ZipFile(zp, 'w') as zf:\n"
+        "    zf.writestr('a.py', 'A = 1\\n')\n"
+        "sys.path.insert(0, zp)\n"
+        "import a\n"
+        "import hadoop_multiple_streaming_spark  # installs the shim\n"
+        "reads = []\n"
+        "eager = zipimport._read_directory\n"
+        "def counted(path):\n"
+        "    reads.append(path)\n"
+        "    return eager(path)\n"
+        "zipimport._read_directory = counted\n"
+        "for _ in range(5):\n"
+        "    importlib.invalidate_caches()\n"
+        "assert reads == [], reads\n"
+        "with zipfile.ZipFile(zp, 'w') as zf:\n"
+        "    zf.writestr('a.py', 'A = 1\\n')\n"
+        "    zf.writestr('b.py', 'B = 2\\n')\n"
+        "importlib.invalidate_caches()\n"
+        "if sys.version_info < (3, 13):\n"
+        "    assert len(reads) == 1, reads\n"
+        "import b\n"
+        "assert b.B == 2 and len(reads) == 1, reads\n"
+        "print('ZIP_OK')\n",
+        timeout=120,
+    )
+    assert "ZIP_OK" in out.stdout, out.stdout[-2000:] + out.stderr[-2000:]
+
+
+def test_reused_worker_reads_no_zip_directory_per_task(tmp_path):
+    """Six one-partition tasks on a local[1] session run in one reused
+    worker; from the second task on, the per-task
+    importlib.invalidate_caches() must re-read no zip (without the
+    shim, each task re-reads 22 zip directories, 12 of them
+    pyspark.zip's)."""
+    out = _run_script(
+        tmp_path,
+        "import json\n"
+        "from hadoop_multiple_streaming_spark.session import get_spark\n"
+        "spark = get_spark(app_name='zip-reuse-test', master='local[1]',"
+        " shuffle_partitions=1)\n"
+        "def probe(rows):\n"
+        "    import os, zipimport\n"
+        "    import hadoop_multiple_streaming_spark  # noqa: F401\n"
+        "    reads = getattr(zipimport, '_probe_reads', None)\n"
+        "    if reads is None:\n"
+        "        reads = zipimport._probe_reads = [0]\n"
+        "        eager = zipimport._read_directory\n"
+        "        def counted(path):\n"
+        "            reads[0] += 1\n"
+        "            return eager(path)\n"
+        "        zipimport._read_directory = counted\n"
+        "    for _ in rows:\n"
+        "        pass  # a task that leaves input unread loses its worker\n"
+        "    yield os.getpid(), reads[0]\n"
+        "rdd = spark.sparkContext.parallelize([0], 1)\n"
+        "runs = [rdd.mapPartitions(probe).collect()[0] for _ in range(6)]\n"
+        "print('PROBE', json.dumps(runs))\n",
+        timeout=180,
+    )
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("PROBE ")]
+    assert lines, out.stdout[-2000:] + out.stderr[-2000:]
+    import json
+
+    runs = json.loads(lines[-1][len("PROBE "):])
+    assert len(runs) == 6
+    assert len({pid for pid, _ in runs}) == 1, runs
+    assert [n for _, n in runs[1:]] == [0] * 5, runs
