@@ -59,47 +59,10 @@ def test_default_driver_memory_is_machine_sized():
     assert 4 <= int(m.group(1)) <= 64
 
 
-def test_worker_boundary_ops_run_with_foreign_cwd(tmp_path):
-    """r12 regression: module-level Arrow closures (mapInPandas feature
-    extraction) unpickle BY REFERENCE to engine modules, so a Python
-    worker whose cwd is NOT the repo needs the engine shipped via
-    sc.addPyFile. get_spark/tune_session now ship unconditionally —
-    this drives a worker-boundary operator from a foreign cwd in a
-    fresh interpreter (its own JVM; ~20 s) to pin the contract a real
-    cluster depends on."""
-    import os
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    script = tmp_path / "drive.py"
-    script.write_text(
-        "import sys\n"
-        f"sys.path.insert(0, {repo!r})\n"
-        "from pyspark.sql import functions as F\n"
-        "from hadoop_multiple_streaming_spark.session import get_spark\n"
-        "from hadoop_multiple_streaming_spark.operators.multimodal import (\n"
-        "    extract_features, fake_decode_meta)\n"
-        "spark = get_spark(app_name='ship-test', master='local[2]', shuffle_partitions=2)\n"
-        "df = spark.range(8).select(F.col('id'),"
-        " F.lit('image').alias('modality'),"
-        " F.encode(F.col('id').cast('string'), 'utf-8').alias('content'))\n"
-        "n = extract_features(df, decoder=fake_decode_meta).count()\n"
-        "assert n == 8, n\n"
-        "print('SHIP_OK', n)\n"
-    )
-    out = subprocess.run(
-        [sys.executable, str(script)],
-        cwd=str(tmp_path),  # NOT the repo — the worker cannot rely on cwd
-        capture_output=True,
-        text=True,
-        timeout=180,
-        env={**os.environ, "PYTHONPATH": ""},
-    )
-    assert "SHIP_OK 8" in out.stdout, out.stdout[-2000:] + out.stderr[-2000:]
-
-
 def _run_script(tmp_path, body, timeout):
+    """Run ``body`` as a script in a fresh interpreter whose cwd is
+    ``tmp_path`` (not the repo) and whose only path to the engine is
+    the repo put on ``sys.path`` by the script itself."""
     import os
     import subprocess
     import sys
@@ -117,14 +80,39 @@ def _run_script(tmp_path, body, timeout):
     )
 
 
+def test_worker_boundary_ops_run_with_foreign_cwd(tmp_path):
+    """r12 regression: module-level Arrow closures (mapInPandas feature
+    extraction) unpickle BY REFERENCE to engine modules, so a Python
+    worker whose cwd is NOT the repo needs the engine shipped via
+    sc.addPyFile. get_spark/tune_session now ship unconditionally —
+    this drives a worker-boundary operator from a foreign cwd in a
+    fresh interpreter (its own JVM; ~20 s) to pin the contract a real
+    cluster depends on."""
+    out = _run_script(
+        tmp_path,
+        "from pyspark.sql import functions as F\n"
+        "from hadoop_multiple_streaming_spark.session import get_spark\n"
+        "from hadoop_multiple_streaming_spark.operators.multimodal import (\n"
+        "    extract_features, fake_decode_meta)\n"
+        "spark = get_spark(app_name='ship-test', master='local[2]', shuffle_partitions=2)\n"
+        "df = spark.range(8).select(F.col('id'),"
+        " F.lit('image').alias('modality'),"
+        " F.encode(F.col('id').cast('string'), 'utf-8').alias('content'))\n"
+        "n = extract_features(df, decoder=fake_decode_meta).count()\n"
+        "assert n == 8, n\n"
+        "print('SHIP_OK', n)\n",
+        timeout=180,
+    )
+    assert "SHIP_OK 8" in out.stdout, out.stdout[-2000:] + out.stderr[-2000:]
+
+
 def test_zip_directory_kept_until_archive_changes(tmp_path):
     """_zipcache in a fresh interpreter, so the patch stays out of this
     session: repeated invalidations re-read no zip directory, and a zip
     rewritten in place is read again, once."""
     out = _run_script(
         tmp_path,
-        "import importlib, zipfile, zipimport\n"
-        "import os\n"
+        "import importlib, os, zipfile, zipimport\n"
         "zp = os.path.abspath('mods.zip')\n"
         "with zipfile.ZipFile(zp, 'w') as zf:\n"
         "    zf.writestr('a.py', 'A = 1\\n')\n"
