@@ -13,6 +13,12 @@ Flag surface mirrors the reference (usage text MapStreamJob.java:445-570):
 input path, 3 invalid conf, 4 output exists, 5 IO
 (MapStreamJob.java:997-1027).
 
+Reducer count (G3): ``-numReduceTasks N`` (or ``-D
+mapred.reduce.tasks=N``; the flag wins) runs exactly N reducers per
+branch and writes exactly N part files. Unset, AQE sizes each branch's
+reduce shuffle from its bytes, capped at ``spark.sql.shuffle.partitions``
+(one reducer and one file for a small branch).
+
 The branch delimiter is '|' (the README's advertised encoding); the
 reference's actual '/' encoding is auto-detected for specs without '|'
 — fixing the bug where commands containing absolute paths could not be
@@ -149,10 +155,17 @@ def parse_job(argv: list[str]) -> tuple[JobSpec, dict[str, str], str | None]:
         k, v = kv.split("=", 1)
         conf[k] = v
     branches = [Branch.parse(s) for s in args.branches]
-    if args.numReduceTasks is not None:
+    # G3: -numReduceTasks, else -D mapred.reduce.tasks (the same JobConf
+    # key, RedStreamJob.java:809-815), sizes every branch not already
+    # sized; unset leaves the reduce shuffle to AQE
+    reduce_tasks = args.numReduceTasks
+    conf_reduce_tasks = conf.pop("mapred.reduce.tasks", None)
+    if reduce_tasks is None and conf_reduce_tasks is not None:
+        reduce_tasks = int(conf_reduce_tasks)
+    if reduce_tasks is not None:
         for b in branches:
             if b.num_reduce_tasks is None:
-                b.num_reduce_tasks = args.numReduceTasks
+                b.num_reduce_tasks = reduce_tasks
     # the reference's stream.* JobConf keys route to the job and its
     # pipes, not Spark conf (O6: -D passthrough,
     # MapStreamJob.java:325-332); an explicit flag wins over its key

@@ -383,5 +383,14 @@ def compact_bloom_store(spark, store_path: str) -> BloomFilterSpec | None:
 
 
 def load_bloom(spark, path: str) -> BloomFilterSpec:
-    r = spark.read.parquet(path).collect()[0]
-    return _spec_from_row(r, r["words"])
+    """The bitmap save_bloom wrote at ``path``. A path that does not
+    hold exactly one bitmap row (an empty dir, or a whole
+    ``batch_id=`` store root) raises rather than pick one."""
+    rows = spark.read.parquet(path).limit(2).collect()
+    if len(rows) != 1:
+        raise ValueError(
+            f"load_bloom: {path} holds {'no' if not rows else 'more than one'} "
+            "bitmap row; point it at one save_bloom path, or fold a store "
+            "with compact_bloom_store"
+        )
+    return _spec_from_row(rows[0], rows[0]["words"])

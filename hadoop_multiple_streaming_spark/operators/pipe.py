@@ -596,6 +596,10 @@ def pipe_reduce(
     chosen key subfields, sort within partitions on chosen subfields —
     one Exchange + one Sort either way.
 
+    num_partitions is the reducer count (G3): N runs exactly N reducer
+    subprocesses; None lets AQE size the shuffle (at most
+    ``spark.sql.shuffle.partitions`` reducers, one for a small one).
+
     Returns (key, value) columns split from the reducer's stdout.
 
     BINARY (key, value) is the byte-faithful reduce: the shuffle
@@ -622,8 +626,7 @@ def pipe_reduce(
             "partition_fields/sort_fields (text subfield semantics); "
             "pre-arrange the bytes"
         )
-    n = num_partitions or df_kv.sparkSession.sparkContext.defaultParallelism
-    arranged = partition_sort(df_kv, n, partition_fields, sort_fields, separator)
+    arranged = partition_sort(df_kv, num_partitions, partition_fields, sort_fields, separator)
     join, split = (
         (join_key_val_bytes, with_key_val_bytes) if binary else (join_key_val, with_key_val)
     )

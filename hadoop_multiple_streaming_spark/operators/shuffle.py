@@ -30,7 +30,7 @@ def key_field(key: Column | str, index: int, separator: str = "\t") -> Column:
 
 def partition_sort(
     df_kv: DataFrame,
-    num_partitions: int,
+    num_partitions: int | None = None,
     partition_fields: list[int] | None = None,
     sort_fields: list[tuple] | None = None,
     separator: str = "\t",
@@ -38,6 +38,12 @@ def partition_sort(
     """G1+G2+G5 in one Exchange+Sort: hash-partition on the chosen key
     subfields (default: whole key), then sort within partitions on the
     chosen subfields (default: whole key ascending).
+
+    num_partitions (G3, ``-numReduceTasks``): N gives exactly N
+    partitions (Hadoop's one file per reducer). None lets the shuffle
+    size itself: a by-column exchange that AQE may coalesce, up to
+    ``spark.sql.shuffle.partitions`` wide. Coalescing merges whole hash
+    partitions, so every key still lands in one partition either way.
 
     sort_fields: [(field_index, ascending[, numeric]), ...]. A numeric
     field (``-kN,Nn``) sorts as a double; a value that does not parse
@@ -61,7 +67,8 @@ def partition_sort(
             sort_cols.append(col.asc() if asc else col.desc())
     else:
         sort_cols = [F.col("key").asc()]
-    return df_kv.repartition(num_partitions, *part_cols).sortWithinPartitions(*sort_cols)
+    width = [num_partitions] if num_partitions else []
+    return df_kv.repartition(*width, *part_cols).sortWithinPartitions(*sort_cols)
 
 
 def group_sorted(
@@ -69,9 +76,9 @@ def group_sorted(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Plain G1 (the Hadoop shuffle contract) for native reducers:
-    every row of a key lands in one partition, keys sorted within it."""
-    n = num_partitions or df_kv.sparkSession.sparkContext.defaultParallelism
-    return partition_sort(df_kv, n)
+    every row of a key lands in one partition, keys sorted within it
+    (num_partitions as in :func:`partition_sort`)."""
+    return partition_sort(df_kv, num_partitions)
 
 
 def salted_aggregate(

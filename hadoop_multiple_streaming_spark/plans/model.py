@@ -48,7 +48,8 @@ class Branch:
     dir_key: str
     mapper: PipeCmd | Transform | None = None
     reducer: PipeCmd | Transform | None = None
-    #: reducer parallelism == number of output files (G3)
+    #: reducer parallelism == number of output files (G3); None lets AQE
+    #: size the reduce shuffle (at most spark.sql.shuffle.partitions)
     num_reduce_tasks: int | None = None
 
     @classmethod

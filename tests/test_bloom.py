@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -220,3 +222,27 @@ def test_compact_bloom_store_geometry_mismatch_raises(spark, tmp_path):
         save_bloom(spark, bl, f"{store}/batch_id={i}")
     with pytest.raises(ValueError, match="geometry mismatch"):
         compact_bloom_store(spark, store)
+
+
+def test_load_bloom_requires_exactly_one_row(spark, tmp_path):
+    # a multi-batch store root holds one bitmap per batch: loading it
+    # must fail naming the path, not screen with whichever row comes
+    # first; a path with no row fails the same way
+    from hadoop_multiple_streaming_spark.operators.bloom import load_bloom, save_bloom
+
+    store = str(tmp_path / "bstore")
+    blooms = [
+        build_bloom(spark.createDataFrame([(k,)], "k string"), "k", num_bits=1024)
+        for k in ("a", "b")
+    ]
+    for i, bl in enumerate(blooms):
+        save_bloom(spark, bl, f"{store}/batch_id={i}")
+    assert load_bloom(spark, f"{store}/batch_id=1") == blooms[1]
+    with pytest.raises(ValueError, match=re.escape(f"{store} holds more than one")):
+        load_bloom(spark, store)
+    empty = str(tmp_path / "empty")
+    spark.createDataFrame(
+        [], "words array<bigint>, num_bits long, num_hashes int, n_keys long"
+    ).write.parquet(empty)
+    with pytest.raises(ValueError, match=re.escape(f"{empty} holds no")):
+        load_bloom(spark, empty)

@@ -696,3 +696,42 @@ def test_materialize_resume_sees_file_uri_output(spark, textdir, tmp_path):
     assert log.read_text().count("\n") == calls
     assert read_out(f"{out}/GOOD") == read_out(f"{out}/mapoutput/GOOD")
     assert "fox\tG" in read_out(f"{out}/GOOD")
+
+
+@pytest.mark.parametrize("share_mode", ["persist", "materialize"])
+def test_unset_reduce_tasks_sized_by_shuffle(spark, tmp_path, share_mode):
+    # G3: with no reducer count a branch's small reduce shuffle runs
+    # one reducer subprocess and writes one file; num_reduce_tasks=3
+    # keeps exactly 3 of each; the outputs are the same lines
+    indir = tmp_path / "in"
+    indir.mkdir()
+    lines = {f"k{i}\t{i}" for i in range(200)}
+    (indir / "part-0.txt").write_text("".join(f"{line}\n" for line in lines))
+
+    def run(name, num_reduce_tasks):
+        spec = JobSpec(
+            inputs=[str(indir)],
+            output=str(tmp_path / name),
+            branches=[
+                Branch(
+                    k,
+                    reducer=f"sh -c 'echo reporter:counter:t,reducers_{k},1 >&2; cat'",
+                    num_reduce_tasks=num_reduce_tasks,
+                )
+                for k in ("A", "B")
+            ],
+            share_mode=share_mode,
+        )
+        res = run_job(spark, spec)
+        assert res.succeeded, res.results
+        return res
+
+    auto = run("auto", None)
+    fixed = run("fixed", 3)
+    for k in ("A", "B"):
+        assert auto.counters[f"t.reducers_{k}"] == 1, auto.counters
+        assert fixed.counters[f"t.reducers_{k}"] == 3, fixed.counters
+        for name, files in (("auto", 1), ("fixed", 3)):
+            out = f"{tmp_path}/{name}/{k}"
+            assert len([f for f in os.listdir(out) if f.startswith("part-")]) == files
+            assert set(read_out(out)) == lines, (name, k)

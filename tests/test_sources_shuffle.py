@@ -98,10 +98,13 @@ def test_group_sorted_contract(spark):
     df = spark.createDataFrame(
         [(k, str(i)) for i, k in enumerate("bacbac")], "key string, value string"
     )
-    parts = group_sorted(df, 3).rdd.glom().collect()
-    for part in parts:
-        keys = [r.key for r in part]
-        assert keys == sorted(keys)
+    for n in (3, None):  # None: the shuffle sizes itself
+        parts = group_sorted(df, n).rdd.glom().collect()
+        for part in parts:
+            keys = [r.key for r in part]
+            assert keys == sorted(keys)
+        homes = [{r.key for r in part} for part in parts]
+        assert sum(len(h) for h in homes) == len(set().union(*homes)) == 3
 
 
 def test_parse_key_field_options():
@@ -154,6 +157,22 @@ def test_cli_partitioner_options(spark, tmp_path):
     assert spec.partition_fields == [1]
     assert spec.sort_fields == [(1, True, False), (2, False, True)]
     assert "mapred.text.key.partitioner.options" not in conf
+
+
+def test_cli_reduce_tasks_conf_key_sizes_branches():
+    # G3: -D mapred.reduce.tasks sizes every branch like
+    # -numReduceTasks and leaves the Spark conf; the flag wins over it
+    from hadoop_multiple_streaming_spark.cli import parse_job
+
+    base = ["-input", "in", "-output", "out", "-mapred", "X|cat|cat", "-mapred", "Y|cat|cat"]
+    spec, conf, _ = parse_job(base)
+    assert [b.num_reduce_tasks for b in spec.branches] == [None, None]
+    spec, conf, _ = parse_job([*base, "-D", "mapred.reduce.tasks=5", "-D", "spark.x=1"])
+    assert [b.num_reduce_tasks for b in spec.branches] == [5, 5]
+    assert conf == {"spark.x": "1"}
+    spec, conf, _ = parse_job([*base, "-D", "mapred.reduce.tasks=5", "-numReduceTasks", "2"])
+    assert [b.num_reduce_tasks for b in spec.branches] == [2, 2]
+    assert conf == {}
 
 
 def _cli_sorted_lines(spark, tmp_path, lines, comparator_options):
