@@ -17,7 +17,9 @@ Reducer count (G3): ``-numReduceTasks N`` (or ``-D
 mapred.reduce.tasks=N``; the flag wins) runs exactly N reducers per
 branch and writes exactly N part files. Unset, AQE sizes each branch's
 reduce shuffle from its bytes, capped at ``spark.sql.shuffle.partitions``
-(one reducer and one file for a small branch).
+(one reducer and one file for a small branch). ``-numReduceTasks 0`` is
+Hadoop's map-only job: every branch skips its reducer and writes one
+file per map task.
 
 The branch delimiter is '|' (the README's advertised encoding); the
 reference's actual '/' encoding is auto-detected for specs without '|'
@@ -41,6 +43,7 @@ from __future__ import annotations
 
 import argparse
 import sys
+from dataclasses import replace
 
 from .operators.pipe import PipeOptions
 from .plans.model import SHARE_MODES, Branch, JobSpec
@@ -154,18 +157,16 @@ def parse_job(argv: list[str]) -> tuple[JobSpec, dict[str, str], str | None]:
             raise ValueError(f"-D wants key=value, got {kv!r}")
         k, v = kv.split("=", 1)
         conf[k] = v
-    branches = [Branch.parse(s) for s in args.branches]
     # G3: -numReduceTasks, else -D mapred.reduce.tasks (the same JobConf
-    # key, RedStreamJob.java:809-815), sizes every branch not already
-    # sized; unset leaves the reduce shuffle to AQE
+    # key, RedStreamJob.java:809-815), sizes every branch; unset leaves
+    # the reduce shuffle to AQE, 0 runs every branch map-only
     reduce_tasks = args.numReduceTasks
     conf_reduce_tasks = conf.pop("mapred.reduce.tasks", None)
     if reduce_tasks is None and conf_reduce_tasks is not None:
         reduce_tasks = int(conf_reduce_tasks)
-    if reduce_tasks is not None:
-        for b in branches:
-            if b.num_reduce_tasks is None:
-                b.num_reduce_tasks = reduce_tasks
+    branches = [
+        replace(Branch.parse(s), num_reduce_tasks=reduce_tasks) for s in args.branches
+    ]
     # the reference's stream.* JobConf keys route to the job and its
     # pipes, not Spark conf (O6: -D passthrough,
     # MapStreamJob.java:325-332); an explicit flag wins over its key

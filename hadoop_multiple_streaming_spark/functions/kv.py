@@ -18,6 +18,7 @@ import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType
 
 
 def split_key_val(
@@ -62,12 +63,15 @@ def split_key_val(
 def with_key_val(
     df: DataFrame,
     line_col: str = "line",
-    separator: str = "\t",
+    separator: str | bytes = "\t",
     num_key_fields: int = 1,
     drop_line: bool = True,
 ) -> DataFrame:
-    """Add ``key``/``value`` columns to a line DataFrame."""
-    key, value = split_key_val(F.col(line_col), separator, num_key_fields)
+    """Add ``key``/``value`` columns to a line DataFrame: strings for a
+    string line, BINARY for a binary line (:func:`split_key_val_bytes`)."""
+    binary = isinstance(df.schema[line_col].dataType, BinaryType)
+    split = split_key_val_bytes if binary else split_key_val
+    key, value = split(F.col(line_col), separator, num_key_fields)
     out = df.withColumn("key", key).withColumn("value", value)
     return out.drop(line_col) if drop_line else out
 
@@ -137,19 +141,6 @@ def split_key_val_bytes(
         F.encode(key_s, "ISO-8859-1"),
         F.encode(val_s, "ISO-8859-1"),
     )
-
-
-def with_key_val_bytes(
-    df: DataFrame,
-    line_col: str = "line",
-    separator: str | bytes = b"\t",
-    num_key_fields: int = 1,
-    drop_line: bool = True,
-) -> DataFrame:
-    """Add BINARY ``key``/``value`` columns to a binary line DataFrame."""
-    key, value = split_key_val_bytes(F.col(line_col), separator, num_key_fields)
-    out = df.withColumn("key", key).withColumn("value", value)
-    return out.drop(line_col) if drop_line else out
 
 
 def join_key_val_bytes(

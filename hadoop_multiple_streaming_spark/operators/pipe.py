@@ -53,12 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
-from ..functions.kv import (
-    join_key_val,
-    join_key_val_bytes,
-    with_key_val,
-    with_key_val_bytes,
-)
+from ..functions.kv import join_key_val, join_key_val_bytes, with_key_val
 from ..session import ensure_package_shipped
 from .shuffle import partition_sort
 
@@ -569,9 +564,7 @@ def pipe_map(
     returning ``(key: binary, value: binary)`` — latin-1 keys survive
     bit-exact through the whole map→shuffle→reduce chain."""
     out = pipe_lines(df_lines, cmd, opts=opts, counters=counters)
-    binary = isinstance(out.schema[0].dataType, BinaryType)
-    split = with_key_val_bytes if binary else with_key_val
-    return split(out, "line", separator, num_key_fields)
+    return with_key_val(out, "line", separator, num_key_fields)
 
 
 def pipe_reduce(
@@ -627,12 +620,10 @@ def pipe_reduce(
             "pre-arrange the bytes"
         )
     arranged = partition_sort(df_kv, num_partitions, partition_fields, sort_fields, separator)
-    join, split = (
-        (join_key_val_bytes, with_key_val_bytes) if binary else (join_key_val, with_key_val)
-    )
+    join = join_key_val_bytes if binary else join_key_val
     lines = arranged.select(join("key", "value", separator).alias("line"))
     out = pipe_lines(lines, cmd, opts=opts, counters=counters)
-    return split(out, "line", separator, num_key_fields)
+    return with_key_val(out, "line", separator, num_key_fields)
 
 
 def grouped_pipe_reduce(

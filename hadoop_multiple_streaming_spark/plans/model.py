@@ -49,8 +49,17 @@ class Branch:
     mapper: PipeCmd | Transform | None = None
     reducer: PipeCmd | Transform | None = None
     #: reducer parallelism == number of output files (G3); None lets AQE
-    #: size the reduce shuffle (at most spark.sql.shuffle.partitions)
+    #: size the reduce shuffle (at most spark.sql.shuffle.partitions);
+    #: 0 makes the branch map-only, one file per map task
+    #: (RedStreamJob.java:813-815)
     num_reduce_tasks: int | None = None
+
+    def __post_init__(self) -> None:
+        if self.num_reduce_tasks is not None and self.num_reduce_tasks < 0:
+            raise ValueError(
+                f"branch {self.dir_key!r}: num_reduce_tasks must be >= 0, "
+                f"got {self.num_reduce_tasks}"
+            )
 
     @classmethod
     def parse(cls, spec: str, delimiter: str = "|") -> "Branch":
@@ -72,7 +81,7 @@ class Branch:
 
     @property
     def is_map_only(self) -> bool:
-        return self.reducer is None or self.reducer == NONE
+        return self.reducer is None or self.reducer == NONE or self.num_reduce_tasks == 0
 
 
 @dataclass

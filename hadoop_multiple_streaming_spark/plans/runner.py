@@ -378,13 +378,13 @@ def run_job(
         bt0 = time.monotonic()
         try:
             df = plans[branch.dir_key]
+            if branch.num_reduce_tasks:  # G3: reducer count == file count
+                df = df.coalesce(branch.num_reduce_tasks)
             if spec.output_format == "text":
-                write_kv_text(df, path, spec.separator, branch.num_reduce_tasks, mode)
+                write_kv_text(df, path, spec.separator, mode)
             else:
                 # S9: typed final sink (-outputformat, the reference's
                 # reflective OutputFormat load RedStreamJob.java:785-797)
-                if branch.num_reduce_tasks is not None:
-                    df = df.coalesce(branch.num_reduce_tasks)  # G3 parity
                 write_table(df, path, fmt=spec.output_format, mode=mode)
             return BranchResult(branch.dir_key, True, path, seconds=time.monotonic() - bt0)
         except Exception as e:  # failure isolation: siblings keep going

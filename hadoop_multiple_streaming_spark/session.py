@@ -94,8 +94,7 @@ def get_spark(
         # default for compute-bound single-node runs; pass
         # extra_conf={"spark.io.compression.codec": "zstd"} (the CLI's
         # -D) when shuffle BYTES are the scarce resource — disk quotas,
-        # network-bound multi-node shuffles, the heavy-SF crossover
-        # harness (tools/bench_crossover.py does this).
+        # network-bound multi-node shuffles, heavy-SF crossover runs.
         .config("spark.io.compression.codec", "lz4")
         # default-true, pinned EXPLICITLY (r13, the r12 verdict's
         # driver-host Arrow-inflation chase): every Arrow-fenced stage

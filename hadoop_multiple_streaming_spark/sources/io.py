@@ -10,8 +10,9 @@ harness uses.
 Scale notes: text scans split by spark.sql.files.maxPartitionBytes —
 at 100 TB that is the parallelism lever. Globs and multi-path are
 native to the DataFrame reader (S2). Output partitioning: one file per
-partition, so sinks honor a ``num_files`` (G3 — reducer count ==
-output file count in the reference).
+partition, so a sink writes as many files as its frame has partitions
+(G3 — reducer count == output file count in the reference; the batch
+runner coalesces to the branch's reducer count before the sink).
 """
 
 from __future__ import annotations
@@ -130,15 +131,12 @@ def write_kv_text(
     df_kv: DataFrame,
     path: str,
     separator: str = "\t",
-    num_files: int | None = None,
     mode: str = "error",
 ) -> None:
-    """S8: final text sink — ``key SEP value`` lines (TextOutputFormat).
-    ``mode='error'`` preserves the reference's output-exists failure
-    (exit code 4, O4)."""
+    """S8: final text sink — ``key SEP value`` lines (TextOutputFormat),
+    one file per partition. ``mode='error'`` preserves the reference's
+    output-exists failure (exit code 4, O4)."""
     lines = df_kv.select(join_key_val("key", "value", separator).alias("line"))
-    if num_files is not None:
-        lines = lines.coalesce(num_files)
     lines.write.mode(mode).text(path)
 
 

@@ -631,11 +631,9 @@ def text_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _curation_oracle(stage: str = "full") -> str:
-    """DuckDB replay of the curation pipeline. ``stage`` lets the
-    capstone bench (tools/bench_curation.py) time per-stage prefixes
-    on the oracle engine too: 'kept' (quality score + filter), 'rep'
-    (exact dedup representatives), 'full' (split + corpus stats)."""
+def _curation_oracle() -> str:
+    """DuckDB replay of the curation pipeline: quality score + filter,
+    exact dedup representatives, split, per-(split, lang) stats."""
     from ..functions.sampling import SPACE
 
     nibbles = " + ".join(
@@ -644,14 +642,7 @@ def _curation_oracle(stage: str = "full") -> str:
     )
     t_train = int(0.8 * SPACE)
     t_val = int((0.8 + 0.1) * SPACE)
-    final = {
-        "kept": "SELECT doc_id, lang, n_words, q FROM kept",
-        "rep": "SELECT doc_id, lang, n_words FROM rep",
-        "full": None,  # the shipped oracle below
-    }
-    if stage not in final:
-        raise ValueError(f"stage must be one of {sorted(final)}, got {stage!r}")
-    prefix = f"""
+    return f"""
     WITH feat AS (
         SELECT doc_id, lang, text,
                len({_TOKS}) AS n_words,
@@ -682,8 +673,7 @@ def _curation_oracle(stage: str = "full") -> str:
         SELECT lang, n_words, {nibbles} AS v
         FROM (SELECT lang, n_words, md5(CAST(doc_id AS VARCHAR)) AS h FROM rep)
     )
-    """
-    tail = final[stage] or f"""
+    
     SELECT CASE WHEN v < {t_train} THEN 'train'
                 WHEN v < {t_val} THEN 'val'
                 ELSE 'test' END AS split,
@@ -691,8 +681,7 @@ def _curation_oracle(stage: str = "full") -> str:
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_words) AS BIGINT) AS total_tokens
     FROM split GROUP BY 1, 2
-    """
-    return (prefix + tail).replace("{stops}", _stop_list_sql())
+    """.replace("{stops}", _stop_list_sql())
 
 
 @register("curation_pipeline", oracle=_curation_oracle())

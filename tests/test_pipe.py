@@ -398,7 +398,7 @@ def test_binary_split_key_val_reference_semantics(spark):
     preserved verbatim."""
     from hadoop_multiple_streaming_spark.functions.kv import (
         join_key_val_bytes,
-        with_key_val_bytes,
+        with_key_val,
     )
 
     rows = [
@@ -410,7 +410,7 @@ def test_binary_split_key_val_reference_semantics(spark):
     df = spark.createDataFrame([(b,) for b in rows], "line binary")
     got = {
         i: (bytes(r.key), bytes(r.value))
-        for i, r in enumerate(with_key_val_bytes(df, "line").collect())
+        for i, r in enumerate(with_key_val(df, "line").collect())
     }
     # row order within createDataFrame collect is stable for local data
     vals = sorted(got.values())
@@ -421,11 +421,11 @@ def test_binary_split_key_val_reference_semantics(spark):
     df2 = spark.createDataFrame([(b"a\tb\tc\td",), (b"a\tb",)], "line binary")
     out2 = sorted(
         (bytes(r.key), bytes(r.value))
-        for r in with_key_val_bytes(df2, "line", num_key_fields=2).collect()
+        for r in with_key_val(df2, "line", num_key_fields=2).collect()
     )
     assert out2 == sorted([(b"a\tb", b"c\td"), (b"a\tb", b"")])
     # join round-trip is bit-exact
-    kv = with_key_val_bytes(df, "line")
+    kv = with_key_val(df, "line")
     back = sorted(
         bytes(r[0])
         for r in kv.select(join_key_val_bytes("key", "value")).collect()

@@ -12,6 +12,7 @@ from hadoop_multiple_streaming_spark.cli import main as cli_main
 from hadoop_multiple_streaming_spark.plans.model import SHARE_MODES, Branch, JobSpec
 from hadoop_multiple_streaming_spark.plans.runner import (
     EXIT_BAD_INPUT,
+    EXIT_INVALID_CONF,
     EXIT_OK,
     EXIT_OUTPUT_EXISTS,
     plan_branches,
@@ -735,3 +736,38 @@ def test_unset_reduce_tasks_sized_by_shuffle(spark, tmp_path, share_mode):
             out = f"{tmp_path}/{name}/{k}"
             assert len([f for f in os.listdir(out) if f.startswith("part-")]) == files
             assert set(read_out(out)) == lines, (name, k)
+
+
+def test_cli_zero_reduce_tasks_is_map_only(spark, tmp_path):
+    # -numReduceTasks 0 is Hadoop's map-only job (RedStreamJob.java:813-815):
+    # every branch skips its reducer and writes its mapper's lines, one
+    # file per map task (a reduce would leave this small input one
+    # file); a negative count is an invalid conf
+    indir = tmp_path / "in"
+    indir.mkdir()
+    lines = [f"k{i % 7}\tv{i}" for i in range(50)]
+    (indir / "part-0.txt").write_text("".join(f"{line}\n" for line in lines))
+
+    def run(name, reduce_tasks):
+        return cli_main(
+            [
+                "-input", str(indir),
+                "-output", str(tmp_path / name),
+                "-mapred", "A|cat|cat",
+                "-mapred", "B|cat|NONE",
+                "-numReduceTasks", reduce_tasks,
+                "-minPartitions", "3",
+            ]
+        )
+
+    assert run("out", "0") == EXIT_OK
+    for k in ("A", "B"):
+        assert read_out(f"{tmp_path}/out/{k}") == sorted(lines), k
+    files = [
+        len([f for f in os.listdir(f"{tmp_path}/out/{k}") if f.startswith("part-")])
+        for k in ("A", "B")
+    ]
+    assert files[0] == files[1] >= 2, files
+    assert run("neg", "-1") == EXIT_INVALID_CONF
+    with pytest.raises(ValueError, match="num_reduce_tasks must be >= 0"):
+        Branch("X", num_reduce_tasks=-1)

@@ -1,5 +1,5 @@
 """tools/: every script compiles, and every ``tools/<name>.py`` that a
-live doc or a package source cites exists. The history docs
+live doc, a package source, a tool or bench.py cites exists. The history docs
 (BASELINE.md, CROSSOVER.md, VERDICT.md, OPTIMIZATION_r*.md) record
 tools as they were and are not scanned."""
 
@@ -25,6 +25,7 @@ def test_tool_compiles(path, tmp_path):
 def test_cited_tools_exist():
     sources = [ROOT / d for d in LIVE_DOCS if (ROOT / d).exists()]
     sources += sorted((ROOT / "hadoop_multiple_streaming_spark").rglob("*.py"))
+    sources += TOOLS + [ROOT / "bench.py"]
     dangling = [
         f"{src.relative_to(ROOT)}: tools/{name}.py"
         for src in sources

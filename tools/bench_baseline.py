@@ -25,9 +25,7 @@ import duckdb
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from hadoop_multiple_streaming_spark.workloads.tables import TABLES  # noqa: E402
 
 
 def main() -> int:
